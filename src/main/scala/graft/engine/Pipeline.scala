@@ -7,7 +7,8 @@ import Runner._
 
 /** The concrete reference pipeline: 4 raw tables → preprocess → 7 core
   * tables → 5 marts, in the reference's declared order
-  * (etl_layer_transfer.py:35-41,57-61).
+  * (etl_layer_transfer.py:35-41,57-61). Each spec names the tables its
+  * transform reads; [[Runner.runLoad]] runs the specs by that lineage.
   *
   * Raw tables are provided by the caller under the names below; everything
   * downstream is derived. Declared schemas come from meta.etl_col
@@ -19,6 +20,9 @@ object Pipeline {
   val RawMovieMeta = "movie_raw_data_metacritic"
   val RawActorImdb = "actor_raw_data_imdb"
   val RawActorMeta = "actor_raw_data_metacritic"
+
+  private val RawMovies = Seq(RawMovieImdb, RawMovieMeta)
+  private val RawActors = Seq(RawActorImdb, RawActorMeta)
 
   private def s(fields: (String, DataType)*): StructType =
     StructType(fields.map { case (n, t) => StructField(n, t) })
@@ -35,18 +39,18 @@ object Pipeline {
     TableSpec("genre_hub",
       s("genre_id" -> StringType, "genre_nm" -> StringType),
       pk = Seq("genre_id"), attrs = Seq("genre_nm"),
-      InsertOnlyNew,
+      InsertOnlyNew, RawMovies,
       wh => CoreQueries.genreHub(wh(RawMovieImdb), wh(RawMovieMeta))),
     TableSpec("employee_hub",
       s("emp_id" -> StringType, "emp_nm" -> StringType),
       pk = Seq("emp_id"), attrs = Seq("emp_nm"),
-      InsertOnlyNew,
+      InsertOnlyNew, RawActors,
       wh => { val (ai, am) = actors(wh); CoreQueries.employeeHub(ai, am) }),
     TableSpec("movie_hub",
       s("movie_id" -> StringType, "movie_nm" -> StringType,
         "movie_duration" -> IntegerType),
       pk = Seq("movie_id"), attrs = Seq("movie_nm", "movie_duration"),
-      InsertOnlyNew,
+      InsertOnlyNew, RawMovies,
       wh => CoreQueries.movieHub(wh(RawMovieImdb), wh(RawMovieMeta))),
     TableSpec("movie_info_sat",
       s("title_item_id" -> StringType, "movie_id" -> StringType,
@@ -57,21 +61,21 @@ object Pipeline {
       pk = Seq("title_item_id"),
       attrs = Seq("movie_id", "original_name", "year", "certificate",
         "rating", "budget", "gross_worldwide", "scr_nm", "url"),
-      Scd2Merge,
+      Scd2Merge, RawMovies :+ "movie_hub",
       wh => CoreQueries.movieInfoSat(wh(RawMovieImdb), wh(RawMovieMeta),
         wh("movie_hub"))),
     TableSpec("movie_genre_link",
       s("mv_gen_link_id" -> StringType, "movie_id" -> StringType,
         "genre_id" -> StringType),
       pk = Seq("mv_gen_link_id"), attrs = Seq("movie_id", "genre_id"),
-      Scd2Merge,
+      Scd2Merge, RawMovies ++ Seq("movie_hub", "genre_hub"),
       wh => CoreQueries.movieGenreLink(wh(RawMovieImdb), wh(RawMovieMeta),
         wh("movie_hub"), wh("genre_hub"))),
     TableSpec("movie_emp_link",
       s("movie_emp_link_id" -> StringType, "movie_id" -> StringType,
         "emp_id" -> StringType),
       pk = Seq("movie_emp_link_id"), attrs = Seq("movie_id", "emp_id"),
-      Scd2Merge,
+      Scd2Merge, RawActors ++ Seq("employee_hub", "movie_hub"),
       wh => { val (ai, am) = actors(wh)
         CoreQueries.movieEmpLink(ai, am, wh("employee_hub"),
           wh("movie_hub")) }),
@@ -80,7 +84,7 @@ object Pipeline {
         "description" -> StringType, "role" -> StringType),
       pk = Seq("movie_emp_role_id"),
       attrs = Seq("movie_emp_link_id", "description", "role"),
-      Scd2Merge,
+      Scd2Merge, RawActors :+ "movie_emp_link",
       wh => { val (ai, am) = actors(wh)
         CoreQueries.empMovieLSat(ai, am,
           wh("movie_emp_link")) }),
@@ -93,6 +97,7 @@ object Pipeline {
       s("movie_emp_role_id" -> StringType, "name" -> StringType,
         "role" -> StringType, "role_description" -> StringType),
       pk = Seq("movie_emp_role_id"), attrs = Nil, InsertOnlyNew,
+      Seq("employee_hub", "movie_emp_link", "emp_movie_l_sat"),
       wh => MartQueries.employeeData(wh("employee_hub"),
         wh("movie_emp_link"), wh("emp_movie_l_sat"))),
     TableSpec("movie_data",
@@ -102,11 +107,13 @@ object Pipeline {
         "budget" -> StringType, "worldwide_gross" -> StringType,
         "rating_source" -> StringType, "url" -> StringType),
       pk = Seq("title_item_id"), attrs = Nil, InsertOnlyNew,
+      Seq("movie_hub", "movie_info_sat"),
       wh => MartQueries.movieData(wh("movie_hub"), wh("movie_info_sat"))),
     TableSpec("movie_employee_link",
       s("movie_emp_link_id" -> StringType, "movie_nm" -> StringType,
         "movie_duration" -> IntegerType, "emp_nm" -> StringType),
       pk = Seq("movie_emp_link_id"), attrs = Nil, InsertOnlyNew,
+      Seq("movie_hub", "movie_emp_link", "employee_hub"),
       wh => MartQueries.movieEmployeeLink(wh("movie_hub"),
         wh("movie_emp_link"), wh("employee_hub"))),
     TableSpec("genre_metrics",
@@ -115,6 +122,7 @@ object Pipeline {
         "best_rated_movie" -> StringType, "average_rating" -> DoubleType,
         "genre_movie_quant" -> IntegerType),
       pk = Seq("genre_id"), attrs = Nil, InsertOnlyNew,
+      Seq("movie_info_sat", "movie_hub", "movie_genre_link", "genre_hub"),
       wh => MartQueries.genreMetrics(wh("movie_info_sat"), wh("movie_hub"),
         wh("movie_genre_link"), wh("genre_hub"))),
     TableSpec("rating_slide",
@@ -122,6 +130,7 @@ object Pipeline {
         "duration" -> IntegerType, "current_rating" -> DoubleType,
         "current_place" -> IntegerType),
       pk = Seq("movie_id"), attrs = Nil, InsertOnlyNew,
+      Seq("movie_hub", "movie_info_sat"),
       wh => MartQueries.ratingSlide(wh("movie_hub"), wh("movie_info_sat"))),
   )
 
@@ -142,14 +151,17 @@ object Pipeline {
 
   /** [[allSpecs]] with `name`'s transform swapped for registered SQL text
     * run via [[Runner.sqlTransform]] — the SQL-text registry execution
-    * path. */
+    * path. The spec's inputs become the tables the text reads, so the
+    * load schedules it after their producers. */
   def withSqlTransform(name: String, sqlText: String): Seq[TableSpec] =
     allSpecs.map { sp =>
-      if (sp.name == name) sp.copy(transform = Runner.sqlTransform(sqlText))
+      if (sp.name == name) sp.copy(inputs = Runner.sqlInputs(sqlText),
+        transform = Runner.sqlTransform(sqlText))
       else sp
     }
 
-  /** One full load: raw tables in, core + marts merged. */
+  /** One full load: raw tables in, core + marts merged, independent
+    * specs concurrently. */
   def runLoad(wh: Warehouse, loadTs: String): Warehouse =
     Runner.runLoad(wh, allSpecs, loadTs)
 }

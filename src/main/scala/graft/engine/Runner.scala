@@ -1,6 +1,9 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnresolvedWith}
 import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable
@@ -16,9 +19,14 @@ import scala.collection.mutable
   * SCD2 iff the name doesn't contain 'hub' and the schema isn't 'data_mart' —
   * here an explicit enum, same assignments.
   *
-  * The runner executes specs in declared order (links/sats join hubs loaded
-  * moments earlier — core/movie_emp_link.sql:26-27 — and emp_movie_l_sat
-  * joins the just-loaded movie_emp_link, core/emp_movie_l_sat.sql:41).
+  * The reference runs its scripts one after another, but the data only
+  * needs the hub → link → satellite → mart lineage (links/sats join hubs
+  * loaded moments earlier — core/movie_emp_link.sql:26-27 — and
+  * emp_movie_l_sat joins the just-loaded movie_emp_link,
+  * core/emp_movie_l_sat.sql:41). Each spec declares the tables its
+  * transform reads, and the runner loads the specs as that dependency
+  * graph: a spec starts once every earlier spec producing one of its
+  * inputs has finished, so independent specs run concurrently.
   */
 object Runner {
 
@@ -35,17 +43,23 @@ object Runner {
       pk: Seq[String],
       attrs: Seq[String],           // change-predicate columns (SCD2 only)
       mode: LoadMode,
+      inputs: Seq[String],          // warehouse tables `transform` reads
       transform: Warehouse => DataFrame)
 
   /** The warehouse: named tables, in memory or parquet-backed. Plays the
-    * role of the stg/data_mart schemas. */
-  final class Warehouse(val spark: SparkSession,
-                        persistDir: Option[String] = None) {
+    * role of the stg/data_mart schemas. Safe for concurrent loads: specs
+    * running side by side read and replace entries of the one table map. */
+  class Warehouse(val spark: SparkSession,
+                  persistDir: Option[String] = None) {
     private val tables = mutable.LinkedHashMap.empty[String, DataFrame]
 
-    def apply(name: String): DataFrame = tables(name)
-    def get(name: String): Option[DataFrame] = tables.get(name)
-    def names: Seq[String] = tables.keys.toSeq
+    def apply(name: String): DataFrame = tables.synchronized(tables(name))
+    def get(name: String): Option[DataFrame] =
+      tables.synchronized(tables.get(name))
+    /** A snapshot of the table names, in first-load order. */
+    def names: Seq[String] = tables.synchronized(tables.keys.toList)
+    private def update(name: String, df: DataFrame): Unit =
+      tables.synchronized(tables(name) = df)
 
     def put(name: String, df: DataFrame): Unit = persistDir match {
       case Some(dir) =>
@@ -70,9 +84,10 @@ object Runner {
         // the swap happened behind Spark's back — drop the shared file
         // listing cache for the path or a later scan serves dead files
         spark.catalog.refreshByPath(dst.toString)
-        tables(name) = spark.read.parquet(dst.toString)
+        // read back with the schema just written: no footer-inference job
+        update(name, spark.read.schema(df.schema).parquet(dst.toString))
       case None =>
-        tables(name) = df.localCheckpoint(eager = true)
+        update(name, df.localCheckpoint(eager = true))
     }
 
     /** SCD2 leg of `put`: history partitioned by the `valid_to` DATE, so
@@ -104,7 +119,7 @@ object Runner {
         // process wrote), the merge treated the snapshot as all-new and a
         // partition-scoped write would leave the previous process's closed
         // partitions on disk as orphaned history. Full rewrite heals that.
-        if (!tables.contains(name) || !fs.exists(dst)) {
+        if (get(name).isEmpty || !fs.exists(dst)) {
           val tmp = new org.apache.hadoop.fs.Path(s"$dir/.$name.staging")
           withPart.write.partitionBy("valid_to_date")
             .mode("overwrite").parquet(tmp.toString)
@@ -125,9 +140,12 @@ object Runner {
             .parquet(dst.toString)
         }
         spark.catalog.refreshByPath(dst.toString)
-        tables(name) = spark.read.parquet(dst.toString).drop("valid_to_date")
+        // the written schema also reads a table whose rows all fell away:
+        // a zero-row partitioned write leaves no part file to infer from
+        update(name, spark.read.schema(withPart.schema)
+          .parquet(dst.toString).drop("valid_to_date"))
       case None =>
-        tables(name) = df.localCheckpoint(eager = true)
+        update(name, df.localCheckpoint(eager = true))
     }
   }
 
@@ -136,53 +154,142 @@ object Runner {
     * (ddl.py:559-570). The programmatic `transform` closure is the
     * preferred Spark mapping (SURVEY.md §2 H56); this constructor adds
     * mechanism-level parity for registries that hold SQL text: every
-    * table currently loaded in the warehouse is registered as a temp
-    * view, then the text runs through `spark.sql` — Catalyst compiles it
-    * to the same optimized plan the equivalent DataFrame code would
-    * build (same optimizer rules, same physical strategies), so a
-    * SQL-text registry row is a first-class [[TableSpec]] transform. */
-  def sqlTransform(sqlText: String): Warehouse => DataFrame = wh => {
-    wh.names.foreach(n => wh(n).createOrReplaceTempView(n))
-    // RDD boundary = the reference's CREATE TEMP TABLE temp_ step: the
-    // text's result becomes a standalone relation with fresh attribute
-    // ids, not a live view subtree — necessary because the merge unions
-    // the snapshot with a target derived from the same lineage (shared
-    // expression ids crash Union's constraint rewrite), and faithful
-    // because dynamic SQL in the reference lands in a temp table before
-    // the merge reads it. Lazy (nothing runs until the load consumes
-    // it); the row-conversion cost is the temp-table write this models.
-    val df = wh.spark.sql(sqlText)
-    wh.spark.createDataFrame(df.rdd, df.schema)
+    * table the text reads ([[sqlInputs]]) is registered as a temp view,
+    * then the text runs through `spark.sql` — Catalyst compiles it to the
+    * same optimized plan the equivalent DataFrame code would build (same
+    * optimizer rules, same physical strategies), so a SQL-text registry
+    * row is a first-class [[TableSpec]] transform. */
+  def sqlTransform(sqlText: String): Warehouse => DataFrame = {
+    val inputs = sqlInputs(sqlText)
+    wh =>
+      // temp views are session-wide: concurrent SQL specs must not
+      // re-point a view between another spec's registration and its
+      // analysis
+      SqlViews.synchronized {
+        inputs.foreach(n => wh(n).createOrReplaceTempView(n))
+        // RDD boundary = the reference's CREATE TEMP TABLE temp_ step: the
+        // text's result becomes a standalone relation with fresh attribute
+        // ids, not a live view subtree — necessary because the merge
+        // unions the snapshot with a target derived from the same lineage
+        // (shared expression ids crash Union's constraint rewrite), and
+        // faithful because dynamic SQL in the reference lands in a temp
+        // table before the merge reads it. Lazy (nothing runs until the
+        // load consumes it); the row-conversion cost is the temp-table
+        // write this models.
+        val df = wh.spark.sql(sqlText)
+        wh.spark.createDataFrame(df.rdd, df.schema)
+      }
+  }
+  private object SqlViews
+
+  /** The warehouse tables a SQL text reads — the `inputs` of a SQL-text
+    * spec: every relation its parsed plan names, in subqueries and CTE
+    * bodies too, minus the text's own CTE names. */
+  def sqlInputs(sqlText: String): Seq[String] = {
+    // CTE bodies are inner children, which `collect` does not enter
+    def nodes(plan: LogicalPlan): Seq[LogicalPlan] =
+      plan.collectWithSubqueries {
+        case w: UnresolvedWith => w +: w.cteRelations.flatMap(c => nodes(c._2))
+        case p => Seq(p)
+      }.flatten
+    val all = nodes(CatalystSqlParser.parsePlan(sqlText))
+    val ctes = all.collect { case w: UnresolvedWith => w.cteRelations.map(_._1) }
+      .flatten.toSet
+    all.collect { case r: UnresolvedRelation => r.multipartIdentifier.mkString(".") }
+      .filterNot(ctes).distinct
   }
 
-  /** Run one load cycle (= one `etl_layer_transfer.py` run) over the specs.
+  /** Run one load cycle (= one `etl_layer_transfer.py` run) over the specs
+    * as a dependency graph: a spec starts once every earlier spec that
+    * produces one of its `inputs` has finished; specs with no such
+    * dependency between them run concurrently, each on a thread of its
+    * own.
+    *
+    * On the first failure no further spec starts. The Spark jobs running
+    * at that moment are cancelled through a job tag of this load
+    * (callers' job groups are left alone); a sibling that is between jobs
+    * runs on to its end. Once every started spec has stopped, the
+    * original exception is rethrown. Tables the load did not reach keep
+    * their previous version.
     *
     * @param loadTs frozen once per run — PG current_timestamp is
     *               transaction-stable (SURVEY.md H49)
     */
   def runLoad(wh: Warehouse, specs: Seq[TableSpec], loadTs: String): Warehouse = {
-    specs.foreach { spec =>
-      val snapshot = Scd2.reconcile(spec.transform(wh), spec.schema)
-      spec.mode match {
-        case Scd2Merge =>
-          val target = wh.get(spec.name).getOrElse(
-            emptyTarget(wh.spark, spec))
-          val merged = Scd2.merge(target, snapshot, spec.pk, spec.attrs,
-            loadTs)
-          // the merge can only touch the open sentinel partition and the
-          // partition of rows it closes at loadTs — everything else is
-          // frozen history (see Warehouse.putScd2)
-          wh.putScd2(spec.name, merged,
-            Seq(loadTs.take(10), "9999-12-31"))
-        case InsertOnlyNew =>
-          val merged = wh.get(spec.name) match {
-            case Some(target) => Scd2.insertOnlyNew(target, snapshot, spec.pk)
-            case None => snapshot
-          }
-          wh.put(spec.name, merged)
-      }
+    val producer = specs.map(_.name).zipWithIndex.toMap
+    require(producer.size == specs.size, "duplicate spec names: " +
+      specs.groupBy(_.name).collect { case (n, ss) if ss.size > 1 => n }
+        .mkString(", "))
+    val deps = specs.zipWithIndex.map { case (sp, i) =>
+      sp.inputs.flatMap(in => producer.get(in).filter(_ != i).map { j =>
+        require(j < i, s"${sp.name} reads $in, which a later spec produces")
+        j
+      }).toSet
     }
+    runGraph(wh, specs, deps, loadTs)
     wh
+  }
+
+  /** Runs `specs(i)` on a new thread once every spec in `deps(i)` has
+    * finished. The threads are created by the caller, so each inherits
+    * the caller's Spark local properties. Every dependency points to an
+    * earlier spec, so the earliest waiting spec is always startable and
+    * the loop cannot stall. */
+  private def runGraph(wh: Warehouse, specs: Seq[TableSpec],
+                       deps: Seq[Set[Int]], loadTs: String): Unit = {
+    val sc = wh.spark.sparkContext
+    val tag = s"graft-load-${java.util.UUID.randomUUID()}"
+    val finished =
+      new java.util.concurrent.LinkedBlockingQueue[(Int, Option[Throwable])]
+    val threads = mutable.ArrayBuffer.empty[Thread]
+    var waiting = specs.indices.toVector
+    var done = Set.empty[Int]
+    var failure: Option[Throwable] = None
+    try {
+      while (failure.isEmpty && done.size < specs.size) {
+        val (ready, blocked) = waiting.partition(deps(_).subsetOf(done))
+        waiting = blocked
+        ready.foreach { i =>
+          val t = new Thread(() => finished.put(i -> (
+            try { sc.addJobTag(tag); loadSpec(wh, specs(i), loadTs); None }
+            catch { case e: Throwable => Some(e) })),
+            s"graft-load-${specs(i).name}")
+          t.setDaemon(true)
+          threads += t
+          t.start()
+        }
+        val (i, err) = finished.take()
+        done += i
+        failure = err
+      }
+    } finally {
+      if (failure.nonEmpty || done.size < specs.size)
+        sc.cancelJobsWithTag(tag)
+      threads.foreach(_.join())
+    }
+    failure.foreach(throw _)
+  }
+
+  private def loadSpec(wh: Warehouse, spec: TableSpec, loadTs: String): Unit = {
+    val snapshot = Scd2.reconcile(spec.transform(wh), spec.schema)
+    spec.mode match {
+      case Scd2Merge =>
+        val target = wh.get(spec.name).getOrElse(
+          emptyTarget(wh.spark, spec))
+        val merged = Scd2.merge(target, snapshot, spec.pk, spec.attrs,
+          loadTs)
+        // the merge can only touch the open sentinel partition and the
+        // partition of rows it closes at loadTs — everything else is
+        // frozen history (see Warehouse.putScd2)
+        wh.putScd2(spec.name, merged,
+          Seq(loadTs.take(10), "9999-12-31"))
+      case InsertOnlyNew =>
+        val merged = wh.get(spec.name) match {
+          case Some(target) => Scd2.insertOnlyNew(target, snapshot, spec.pk)
+          case None => snapshot
+        }
+        wh.put(spec.name, merged)
+    }
   }
 
   private def emptyTarget(spark: SparkSession, spec: TableSpec): DataFrame = {
