@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR
   * and prints ONE JSON line as the LAST line of stdout.
@@ -62,42 +61,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // NOTE (r19, measured): AQE bytes-based coalescing
-      // (coalescePartitions.parallelismFirst=false + a 64m advisory)
-      // was A/B-tested here and REJECTED — total 335→383s. This
-      // catalog's shuffles are byte-small but compute-dense (winnowing
-      // fingerprints, Hilbert codes, JPEG refinement, jaccard pairs),
-      // so sizing reducers by bytes serializes CPU-bound stages
-      // (q_dedup_substring 7.1→13.3s, q_layout_hilbert_prune
-      // 2.6→8.8s). The default parallelism-first coalescing is the
-      // right call for this workload shape; see OPTIMIZATION_r19.md.
-      // Partition-dir discovery: the persisted indexes' datasets fan out
-      // to 16-64 hive leaves, and the default threshold (32 paths)
-      // launches a DISTRIBUTED listing job for anything wider — one
-      // extra Spark job per read of a 64-leaf dataset, far slower than
-      // the driver listing a local/fast filesystem. Raised so listing
-      // stays driver-side up to 1024 dirs (env-overridable for object
-      // stores where distributed listing pays).
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LISTING_THRESHOLD", "1024"))
-      // AQE toggle, env-overridable for A/B runs (r20): AQE materializes
-      // every shuffle stage as its own job and re-plans at each boundary
-      // — per-stage driver latency that dominates sub-second queries on
-      // this latency-bound catalog. Default measured in r20 (see
-      // OPTIMIZATION_r20.md); production clusters with real data volumes
-      // want AQE on (skew splitting, runtime coalescing), so the switch
-      // is a conf, not a code fork.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // untimed warmup: JIT + codegen + parquet footer caches, so the first
     // timed query isn't charged ~3s of JVM cold start. The extra shapes
     // (shuffled join, window, tiny label propagation) pre-compile the
@@ -213,6 +177,7 @@ object Bench {
             Thread.sleep(80) // let the async listener bus drain
             val gc1 = gcNow()
             val ct1 = cpuTicks()
+            val cg1 = codegenStat()
             val d = ct1.zip(ct0).map { case (a, b) => a - b }
             val heapUsed = (Runtime.getRuntime.totalMemory -
               Runtime.getRuntime.freeMemory) / (1 << 20)
@@ -221,7 +186,7 @@ object Bench {
               s" heapMb=$heapUsed" +
               s" tkUser=${d(0)} tkSys=${d(1)} tkIdle=${d(2)}" +
               s" tkIo=${d(3)} tkSteal=${d(4)}" +
-              f" cgN=${codegenStat()._1 - cg0._1} cgMeanMs=${cg0._2}%.1f")
+              f" cgN=${cg1._1 - cg0._1} cgMeanMs=${cg1._2}%.1f")
           }
           dt
         }

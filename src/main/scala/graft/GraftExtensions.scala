@@ -1,93 +1,16 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-
-import graft.expressions.{BpeTokenCount, Builders, HashEmbed, HyperplaneSig64, LangId, MaxMatchCount, MaxMatchEncode, MinHash, MinHashSig, MinHashUnion, MultiMatchCount, NfcNorm, NfkcNorm, QualityScore, RollingHash64, SimHash64, StripAccents, StripInvisible, UnigramCost, UnigramEncode, VecMean, WinnowFingerprintPos, WinnowFingerprints, WordShingles, ZOrder62}
-
-/** SparkSessionExtensions entry point: registers the engine's native
-  * expressions for sessions built with
+/** SparkSessionExtensions entry point: installs the [[Functions]] table
+  * and the range-join rewrite for sessions built with
   * `spark.sql.extensions=graft.GraftExtensions`. Sessions the engine does
-  * not construct (the driver's) can call `SimHash64.register(spark)` /
-  * `RollingHash64.register(spark)` directly — both paths install the same
-  * function builders.
+  * not construct call [[Functions.ensure]] instead; both read the one
+  * table.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("simhash64"), SimHash64.info,
-      Builders.arity("simhash64", 1)(children => SimHash64(children.head))))
-    ext.injectFunction((FunctionIdentifier("rolling_hash64"),
-      RollingHash64.info, Builders.arity("rolling_hash64", 1)(children => RollingHash64(children.head))))
-    ext.injectFunction((FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      Builders.arity("word_shingles", 2)(children => WordShingles(children.head,
-        MinHash.intArg(children(1), "shingle size k")))))
-    ext.injectFunction((FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      Builders.arity("minhash_sig", 2)(children => MinHashSig(children.head,
-        MinHash.intArg(children(1), "signature size m")))))
-    ext.injectFunction((FunctionIdentifier("hash_embed"),
-      HashEmbed.info, Builders.arity("hash_embed", 2)(children =>
-        HashEmbed(children.head,
-          MinHash.intArg(children(1), "embedding dims d")))))
-    ext.injectFunction((FunctionIdentifier("hyperplane_sig64"),
-      HyperplaneSig64.info, Builders.arity("hyperplane_sig64", 1)(children => HyperplaneSig64(children.head))))
-    ext.injectFunction((FunctionIdentifier("lang_id"),
-      new ExpressionInfo(classOf[LangId].getName, "lang_id"),
-      Builders.arity("lang_id", 1)(children => LangId(children.head))))
-    ext.injectFunction((FunctionIdentifier("quality_score"),
-      new ExpressionInfo(classOf[QualityScore].getName, "quality_score"),
-      Builders.arity("quality_score", 1)(children => QualityScore(children.head))))
-    ext.injectFunction((FunctionIdentifier("zorder62"), ZOrder62.info,
-      Builders.arity("zorder62", 2)(children => ZOrder62(children.head, children(1)))))
-    ext.injectFunction((FunctionIdentifier("minhash_union"),
-      MinHashUnion.info, Builders.arity("minhash_union", 1)(children => MinHashUnion(children.head))))
-    ext.injectFunction((FunctionIdentifier("nfc_norm"),
-      new ExpressionInfo(classOf[NfcNorm].getName, "nfc_norm"),
-      Builders.arity("nfc_norm", 1)(children => NfcNorm(children.head))))
-    ext.injectFunction((FunctionIdentifier("strip_accents"),
-      new ExpressionInfo(classOf[StripAccents].getName, "strip_accents"),
-      Builders.arity("strip_accents", 1)(children => StripAccents(children.head))))
-    ext.injectFunction((FunctionIdentifier("winnow_fingerprints"),
-      new ExpressionInfo(classOf[WinnowFingerprints].getName,
-        "winnow_fingerprints"),
-      Builders.arity("winnow_fingerprints", 3)(children => WinnowFingerprints(children(0), children(1), children(2)))))
-    ext.injectFunction((FunctionIdentifier("winnow_fingerprint_pos"),
-      new ExpressionInfo(classOf[WinnowFingerprintPos].getName,
-        "winnow_fingerprint_pos"),
-      Builders.arity("winnow_fingerprint_pos", 3)(children => WinnowFingerprintPos(children(0), children(1),
-        children(2)))))
-    ext.injectFunction((FunctionIdentifier("bpe_token_count"),
-      new ExpressionInfo(classOf[BpeTokenCount].getName, "bpe_token_count"),
-      Builders.arity("bpe_token_count", 2)(children => BpeTokenCount(children.head, children(1)))))
-    ext.injectFunction((FunctionIdentifier("vec_mean"),
-      new ExpressionInfo(classOf[VecMean].getName, "vec_mean"),
-      Builders.arity("vec_mean", 1)(children => VecMean(children.head))))
-    ext.injectFunction((FunctionIdentifier("nfkc_norm"),
-      new ExpressionInfo(classOf[NfkcNorm].getName, "nfkc_norm"),
-      Builders.arity("nfkc_norm", 1)(children => NfkcNorm(children.head))))
-    ext.injectFunction((FunctionIdentifier("strip_invisible"),
-      new ExpressionInfo(classOf[StripInvisible].getName, "strip_invisible"),
-      Builders.arity("strip_invisible", 1)(children => StripInvisible(children.head))))
-    ext.injectFunction((FunctionIdentifier("multi_match_count"),
-      new ExpressionInfo(classOf[MultiMatchCount].getName,
-        "multi_match_count"),
-      Builders.arity("multi_match_count", 2)(children => MultiMatchCount(children.head, children(1)))))
-    ext.injectFunction((FunctionIdentifier("max_match_encode"),
-      new ExpressionInfo(classOf[MaxMatchEncode].getName,
-        "max_match_encode"),
-      Builders.arity("max_match_encode", 2)(children => MaxMatchEncode(children.head, children(1)))))
-    ext.injectFunction((FunctionIdentifier("max_match_count"),
-      new ExpressionInfo(classOf[MaxMatchCount].getName, "max_match_count"),
-      Builders.arity("max_match_count", 2)(children => MaxMatchCount(children.head, children(1)))))
-    ext.injectFunction((FunctionIdentifier("unigram_encode"),
-      new ExpressionInfo(classOf[UnigramEncode].getName, "unigram_encode"),
-      Builders.arity("unigram_encode", 2)(children => UnigramEncode(children.head, children(1)))))
-    ext.injectFunction((FunctionIdentifier("unigram_cost"),
-      new ExpressionInfo(classOf[UnigramCost].getName, "unigram_cost"),
-      Builders.arity("unigram_cost", 2)(children => UnigramCost(children.head, children(1)))))
+    Functions.all.foreach(f => ext.injectFunction((f.id, f.info, f.builder)))
     // pure time-range inner joins → bucketed equi joins (no nested loop)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinBucketing)
   }

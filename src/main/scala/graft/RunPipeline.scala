@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.engine.{Pipeline, Runner}
 import graft.queries.VaultQueries
 
@@ -19,14 +17,7 @@ object RunPipeline {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val whDir = if (args.length > 1) args(1)
                 else java.nio.file.Files.createTempDirectory("graft-wh").toString
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4)
 
     val wh = new Runner.Warehouse(spark, Some(whDir))
 

@@ -1,20 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev smoke runner mirroring the driver's t1 check: SparkEntry.entry at
   * sf0.001 must return >0 rows. Prints the count and the first rows.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(4)
     val df = SparkEntry.entry(spark)
     println(s"[smoke] entry rows = ${df.count()}")
     df.show(5, truncate = false)

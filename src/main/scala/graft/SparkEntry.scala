@@ -25,10 +25,18 @@ object SparkEntry {
     * it at 12× its isolated floor for exactly this reason). Catalog
     * order groups families and builds staging bottom-up (hubs → links →
     * sats → marts), so each gate pays its own incremental cost and the
-    * attribution is stable when gates are added or renamed. */
+    * attribution is stable when gates are added or renamed.
+    *
+    * Every gate first runs [[Functions.ensure]] on its session, so gate
+    * bodies use the native SQL functions without registering them. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     scala.collection.immutable.SeqMap.from(
-      Catalog.queries.map(q => q.name -> q.fn))
+      Catalog.queries.map { q =>
+        q.name -> { (s: SparkSession, dir: String) =>
+          Functions.ensure(s)
+          q.fn(s, dir)
+        }
+      })
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted entries → weaker rows-only check. */

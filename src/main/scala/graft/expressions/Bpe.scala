@@ -5,11 +5,9 @@ import java.nio.file.{Files, Paths}
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -249,39 +247,21 @@ case class BpeEncode(first: Expression, second: Expression,
 
 object Bpe {
 
-  /** Column form of `bpe_token_count` (requires [[register]] first) —
-    * drop-in replacement for `TextFunctions.bpeTokenCount` where a real
+  /** Column form of `bpe_token_count` (requires
+    * [[graft.Functions.ensure]] first) — drop-in replacement for `TextFunctions.bpeTokenCount` where a real
     * merges vocabulary is available. */
   def tokenCount(text: org.apache.spark.sql.Column,
                  mergesPath: String): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.call_function("bpe_token_count", text,
       org.apache.spark.sql.functions.lit(mergesPath))
 
-  /** Column form of `bpe_encode` (requires [[register]] first). */
+  /** Column form of `bpe_encode` (requires [[graft.Functions.ensure]]
+    * first). */
   def encodeIds(text: org.apache.spark.sql.Column, mergesPath: String,
                 vocabPath: String): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.call_function("bpe_encode", text,
       org.apache.spark.sql.functions.lit(mergesPath),
       org.apache.spark.sql.functions.lit(vocabPath))
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("bpe_token_count"),
-      new ExpressionInfo(classOf[BpeTokenCount].getName, "bpe_token_count"),
-      Builders.arity("bpe_token_count", 2)(children =>
-        BpeTokenCount(children.head, children(1))))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("bpe_encode"),
-      new ExpressionInfo(classOf[BpeEncode].getName, "bpe_encode"),
-      Builders.arity("bpe_encode", 3)(children =>
-        BpeEncode(children.head, children(1), children(2))))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("bpe_encode_ls"),
-      new ExpressionInfo(classOf[BpeEncode].getName, "bpe_encode_ls"),
-      Builders.arity("bpe_encode_ls", 3)(children =>
-        BpeEncode(children.head, children(1), children(2),
-          spaceAware = true)))
-  }
 
   /** Offline merge learning on a bounded driver-side sample — the same
     * train-on-sample contract as the IVF k-means fit (Similarity.scala):

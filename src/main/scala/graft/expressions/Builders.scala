@@ -2,8 +2,8 @@ package graft.expressions
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Shared arity validation for function builders (both registration
-  * paths: per-object `register(spark)` and [[graft.GraftExtensions]]).
+/** Shared arity validation for the function builders of the
+  * [[graft.Functions]] table.
   *
   * Function builders receive `Seq[Expression]` straight from the
   * analyzer; indexing it blindly turns a user's wrong argument count

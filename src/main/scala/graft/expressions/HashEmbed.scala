@@ -1,10 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
@@ -53,8 +51,7 @@ object HashEmbedUtil {
   * bridge: documents flow into the embedding stack (near-dup, ANN,
   * the persisted indexes) with no external embedder and no vocabulary
   * fit. `d` must be an integer literal (like minhash_sig's m).
-  * Codegen'd native expression; register via [[HashEmbed.register]]
-  * or [[graft.GraftExtensions]].
+  * Codegen'd native expression, registered from [[graft.Functions]].
   */
 case class HashEmbed(child: Expression, d: Int) extends UnaryExpression {
   require(d > 0 && d <= 4096,
@@ -79,15 +76,4 @@ case class HashEmbed(child: Expression, d: Int) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): HashEmbed =
     copy(child = newChild)
-}
-
-object HashEmbed {
-  val info = new ExpressionInfo(classOf[HashEmbed].getName, "hash_embed")
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("hash_embed"), info,
-      Builders.arity("hash_embed", 2)(children =>
-        HashEmbed(children.head,
-          MinHash.intArg(children(1), "embedding dims d"))))
 }

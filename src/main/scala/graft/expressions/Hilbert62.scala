@@ -1,10 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Static helper the generated code calls (object → static forwarders). */
@@ -80,13 +78,4 @@ case class Hilbert62(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Hilbert62 =
     copy(left = newLeft, right = newRight)
-}
-
-object Hilbert62 {
-  val info = new ExpressionInfo(classOf[Hilbert62].getName, "hilbert62")
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("hilbert62"), info,
-      Builders.arity("hilbert62", 2)(children => Hilbert62(children.head, children(1))))
 }

@@ -5,11 +5,9 @@ import java.nio.file.{Files, Paths}
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
@@ -107,13 +105,6 @@ object LinearTextScore {
                weightsPath: String): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.call_function("hashed_logit", text,
       org.apache.spark.sql.functions.lit(weightsPath))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("hashed_logit"),
-      new ExpressionInfo(classOf[HashedLogit].getName, "hashed_logit"),
-      Builders.arity("hashed_logit", 2)(children =>
-        HashedLogit(children.head, children(1))))
 
   /** Offline logistic-regression fit on a bounded driver-side sample —
     * the same train-on-sample contract as the IVF/PQ fits: fixed epoch

@@ -5,11 +5,9 @@ import java.nio.file.{Files, Paths}
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -148,18 +146,4 @@ object MaxMatch {
                  vocabPath: String): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.call_function("max_match_count", text,
       org.apache.spark.sql.functions.lit(vocabPath))
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("max_match_encode"),
-      new ExpressionInfo(classOf[MaxMatchEncode].getName,
-        "max_match_encode"),
-      Builders.arity("max_match_encode", 2)(children =>
-        MaxMatchEncode(children.head, children(1))))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("max_match_count"),
-      new ExpressionInfo(classOf[MaxMatchCount].getName, "max_match_count"),
-      Builders.arity("max_match_count", 2)(children =>
-        MaxMatchCount(children.head, children(1))))
-  }
 }

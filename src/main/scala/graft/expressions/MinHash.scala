@@ -3,11 +3,9 @@ package graft.expressions
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -110,8 +108,8 @@ object MinHashUtil {
 
 /** `word_shingles(text, k) -> array<string>` — codegen'd shingling for the
   * MinHash/Jaccard dedup path (reference: near-dup candidate unit; cf.
-  * Broder's shingling). Register via [[MinHash.register]] or
-  * [[graft.GraftExtensions]]. */
+  * Broder's shingling). Registered from
+  * [[graft.Functions]]. */
 case class WordShingles(child: Expression, k: Int) extends UnaryExpression {
   require(k > 0, s"shingle size must be positive, got $k")
 
@@ -164,28 +162,11 @@ case class MinHashSig(child: Expression, m: Int) extends UnaryExpression {
 }
 
 object MinHash {
-  /** Validated integer-literal argument for function builders (shared with
-    * GraftExtensions so both registration paths reject bad arity/types with
-    * the same descriptive error). */
+  /** Validated integer-literal argument for the [[graft.Functions]]
+    * builders: a non-literal size is a descriptive error at analysis. */
   private[graft] def intArg(e: Expression, what: String): Int = e.eval() match {
     case i: Int => i
     case other => throw new IllegalArgumentException(
       s"$what must be an integer literal, got $other")
-  }
-
-  /** Register `word_shingles` / `minhash_sig` on an existing session (the
-    * driver owns session construction; GraftExtensions covers
-    * spark.sql.extensions users). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("word_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-      Builders.arity("word_shingles", 2)(children =>
-        WordShingles(children.head, intArg(children(1), "shingle size k"))))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
-      Builders.arity("minhash_sig", 2)(children =>
-        MinHashSig(children.head, intArg(children(1), "signature size m"))))
   }
 }

@@ -3,12 +3,10 @@ package graft.expressions
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
@@ -144,13 +142,4 @@ case class MinHashUnion(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(
       newChild: Expression): MinHashUnion = copy(child = newChild)
-}
-
-object MinHashUnion {
-  val info = new ExpressionInfo(classOf[MinHashUnion].getName, "minhash_union")
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("minhash_union"), info,
-      Builders.arity("minhash_union", 1)(children => MinHashUnion(children.head)))
 }

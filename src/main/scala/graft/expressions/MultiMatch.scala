@@ -5,11 +5,9 @@ import java.nio.file.{Files, Paths}
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -156,17 +154,9 @@ case class MultiMatchCount(left: Expression, right: Expression)
 
 object MultiMatch {
 
-  /** Column form of `multi_match_count` (requires [[register]] first). */
+  /** Column form of `multi_match_count` (requires [[graft.Functions.ensure]] first). */
   def countCol(text: org.apache.spark.sql.Column,
                phrasesPath: String): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.call_function("multi_match_count", text,
       org.apache.spark.sql.functions.lit(phrasesPath))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("multi_match_count"),
-      new ExpressionInfo(classOf[MultiMatchCount].getName,
-        "multi_match_count"),
-      Builders.arity("multi_match_count", 2)(children =>
-        MultiMatchCount(children.head, children(1))))
 }

@@ -1,10 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -48,8 +46,7 @@ object RollingHashUtil {
 }
 
 /** `rolling_hash64(string) -> bigint`: codegen'd Rabin-Karp fingerprint.
-  * Registered alongside simhash64 via [[graft.GraftExtensions]] or
-  * [[RollingHash64.register]]. */
+  * Registered alongside simhash64 from [[graft.Functions]]. */
 case class RollingHash64(child: Expression) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -71,14 +68,4 @@ case class RollingHash64(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): RollingHash64 =
     copy(child = newChild)
-}
-
-object RollingHash64 {
-  val info = new ExpressionInfo(classOf[RollingHash64].getName,
-    "rolling_hash64")
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("rolling_hash64"), info,
-      Builders.arity("rolling_hash64", 1)(children => RollingHash64(children.head)))
 }

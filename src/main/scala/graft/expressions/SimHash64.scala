@@ -1,10 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
@@ -59,8 +57,8 @@ object SimHashUtil {
 
 /** `simhash64(array<string>) -> bigint` as a native Catalyst expression:
   * codegen'd (no UDF serialization, no Row boxing), null-safe, foldable
-  * under constant inputs. Register per session via [[SimHash64.register]]
-  * or through [[graft.GraftExtensions]].
+  * under constant inputs. Registered from
+  * [[graft.Functions]].
   */
 case class SimHash64(child: Expression) extends UnaryExpression {
 
@@ -83,17 +81,4 @@ case class SimHash64(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): SimHash64 =
     copy(child = newChild)
-}
-
-object SimHash64 {
-  val info = new ExpressionInfo(classOf[SimHash64].getName, "simhash64")
-
-  /** Make `simhash64` callable from SQL / `expr()` on an existing session
-    * (the driver owns session construction, so runtime registration is the
-    * portable path; GraftExtensions covers spark.sql.extensions users).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("simhash64"), info,
-      Builders.arity("simhash64", 1)(children => SimHash64(children.head)))
 }

@@ -1,10 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -115,17 +113,4 @@ case class QualityScore(child: Expression) extends UnaryExpression {
       c => s"graft.expressions.TextScoreUtil.qualityScore($c)")
   override protected def withNewChildInternal(newChild: Expression): QualityScore =
     copy(child = newChild)
-}
-
-object TextScore {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("lang_id"),
-      new ExpressionInfo(classOf[LangId].getName, "lang_id"),
-      Builders.arity("lang_id", 1)(children => LangId(children.head)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("quality_score"),
-      new ExpressionInfo(classOf[QualityScore].getName, "quality_score"),
-      Builders.arity("quality_score", 1)(children => QualityScore(children.head)))
-  }
 }

@@ -2,11 +2,9 @@ package graft.expressions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -140,25 +138,4 @@ case class StripInvisible(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(
       newChild: Expression): StripInvisible =
     copy(child = newChild)
-}
-
-object UnicodeNorm {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("nfc_norm"),
-      new ExpressionInfo(classOf[NfcNorm].getName, "nfc_norm"),
-      Builders.arity("nfc_norm", 1)(children => NfcNorm(children.head)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("strip_accents"),
-      new ExpressionInfo(classOf[StripAccents].getName, "strip_accents"),
-      Builders.arity("strip_accents", 1)(children => StripAccents(children.head)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("nfkc_norm"),
-      new ExpressionInfo(classOf[NfkcNorm].getName, "nfkc_norm"),
-      Builders.arity("nfkc_norm", 1)(children => NfkcNorm(children.head)))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("strip_invisible"),
-      new ExpressionInfo(classOf[StripInvisible].getName, "strip_invisible"),
-      Builders.arity("strip_invisible", 1)(children => StripInvisible(children.head)))
-  }
 }

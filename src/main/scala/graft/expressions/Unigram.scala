@@ -5,11 +5,9 @@ import java.nio.file.{Files, Paths}
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -187,19 +185,6 @@ object Unigram {
                   vocabPath: String): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.call_function("unigram_cost", text,
       org.apache.spark.sql.functions.lit(vocabPath))
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("unigram_encode"),
-      new ExpressionInfo(classOf[UnigramEncode].getName, "unigram_encode"),
-      Builders.arity("unigram_encode", 2)(children =>
-        UnigramEncode(children.head, children(1))))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("unigram_cost"),
-      new ExpressionInfo(classOf[UnigramCost].getName, "unigram_cost"),
-      Builders.arity("unigram_cost", 2)(children =>
-        UnigramCost(children.head, children(1))))
-  }
 
   /** Offline unigram-LM vocabulary fitting on a bounded driver-side
     * sample — the same train-on-sample contract as `Bpe.learnMerges`

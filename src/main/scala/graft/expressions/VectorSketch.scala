@@ -1,10 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
@@ -90,14 +88,4 @@ case class HyperplaneSig64(child: Expression) extends UnaryExpression {
 
   override protected def withNewChildInternal(newChild: Expression): HyperplaneSig64 =
     copy(child = newChild)
-}
-
-object HyperplaneSig64 {
-  val info = new ExpressionInfo(classOf[HyperplaneSig64].getName,
-    "hyperplane_sig64")
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("hyperplane_sig64"), info,
-      Builders.arity("hyperplane_sig64", 1)(children => HyperplaneSig64(children.head)))
 }

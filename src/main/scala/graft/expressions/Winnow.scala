@@ -1,10 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -232,21 +230,4 @@ case class WinnowFingerprintPos(first: Expression, second: Expression,
   override protected def withNewChildrenInternal(
       f: Expression, s: Expression, t: Expression): WinnowFingerprintPos =
     copy(first = f, second = s, third = t)
-}
-
-object Winnow {
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("winnow_fingerprints"),
-      new ExpressionInfo(classOf[WinnowFingerprints].getName,
-        "winnow_fingerprints"),
-      Builders.arity("winnow_fingerprints", 3)(children =>
-        WinnowFingerprints(children(0), children(1), children(2))))
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("winnow_fingerprint_pos"),
-      new ExpressionInfo(classOf[WinnowFingerprintPos].getName,
-        "winnow_fingerprint_pos"),
-      Builders.arity("winnow_fingerprint_pos", 3)(children =>
-        WinnowFingerprintPos(children(0), children(1), children(2))))
-  }
 }

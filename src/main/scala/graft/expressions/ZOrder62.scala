@@ -1,10 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** Static helper the generated code calls (object → static forwarders). */
@@ -67,13 +65,4 @@ case class ZOrder62(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ZOrder62 =
     copy(left = newLeft, right = newRight)
-}
-
-object ZOrder62 {
-  val info = new ExpressionInfo(classOf[ZOrder62].getName, "zorder62")
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier("zorder62"), info,
-      Builders.arity("zorder62", 2)(children => ZOrder62(children.head, children(1))))
 }

@@ -84,7 +84,7 @@ object Analyze {
     * integer-exact. */
   def keySkew(df: DataFrame, keyCol: String, nBuckets: Int): DataFrame = {
     require(nBuckets >= 1, s"nBuckets must be positive: $nBuckets")
-    graft.expressions.RollingHash64.register(df.sparkSession)
+    graft.Functions.ensure(df.sparkSession)
     val perKey = df.select(col(keyCol).cast("string").as("key"))
       .where(col("key").isNotNull)
       .groupBy("key").agg(count(lit(1)).as("cnt"))

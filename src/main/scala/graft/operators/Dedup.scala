@@ -64,7 +64,7 @@ object Dedup extends TrackedCaches {
     // to avoid; a non-divisor silently drops signature entries.
     require(bands > 0 && bands <= m && m % bands == 0,
       s"bands ($bands) must divide the signature size ($m)")
-    graft.expressions.MinHash.register(df.sparkSession)
+    graft.Functions.ensure(df.sparkSession)
     // Shingles and the m-entry signature are codegen'd native expressions
     // (graft.expressions.{WordShingles, MinHashSig}) — one tight loop per
     // document, NOT interpreted higher-order transforms and NOT an
@@ -126,7 +126,7 @@ object Dedup extends TrackedCaches {
     * or re-signs what is already there — see [[incrementalLshPairs]]. */
   def signatureIndex(df: DataFrame, idCol: String, textCol: String,
                      k: Int = 5, m: Int = 8): DataFrame = {
-    graft.expressions.MinHash.register(df.sparkSession)
+    graft.Functions.ensure(df.sparkSession)
     df.select(col(idCol).as("id"),
         expr(s"word_shingles(${q(textCol)}, $k)").as("sh"))
       .select(col("id"), col("sh"), expr(s"minhash_sig(sh, $m)").as("sig"))
@@ -211,7 +211,7 @@ object Dedup extends TrackedCaches {
                         maxDocs: Int = 200): DataFrame = {
     // deterministic COUNT cap (lowest maxDocs ids), not an id-value filter
     // — sparse or offset id spaces would otherwise silently select nothing.
-    graft.expressions.MinHash.register(df.sparkSession)
+    graft.Functions.ensure(df.sparkSession)
     val sh = df.orderBy(col(idCol)).limit(maxDocs)
       .select(col(idCol).as("id"),
         expr(s"word_shingles(${q(textCol)}, $k)").as("sh"))
@@ -328,7 +328,7 @@ object Dedup extends TrackedCaches {
     require(k > 0 && w > 0, s"k ($k) and w ($w) must be positive")
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
     require(maxBucket >= 2, s"maxBucket must be >= 2, got $maxBucket")
-    graft.expressions.Winnow.register(df.sparkSession)
+    graft.Functions.ensure(df.sparkSession)
     // spread the raw rows BEFORE the winnow explode: a single-split
     // corpus (one parquet file = one partition) would otherwise
     // fingerprint on one core of 32 — the q_text_novelty /
@@ -406,7 +406,7 @@ object Dedup extends TrackedCaches {
   def winnowPosFingerprints(df: DataFrame, idCol: String, textCol: String,
                             k: Int = 12, w: Int = 8): DataFrame = {
     require(k > 0 && w > 0, s"k ($k) and w ($w) must be positive")
-    graft.expressions.Winnow.register(df.sparkSession)
+    graft.Functions.ensure(df.sparkSession)
     // same single-split spread as substringDupPairs (see note there)
     df.select(col(idCol).as("id"), col(textCol).as("__t"))
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
@@ -686,7 +686,7 @@ object Dedup extends TrackedCaches {
                    maxHamming: Int = 3): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 64,
       s"maxHamming must be in [0, 63], got $maxHamming")
-    graft.expressions.SimHash64.register(df.sparkSession)
+    graft.Functions.ensure(df.sparkSession)
     // persist: the banded self-join consumes the signatures twice
     val sigs = df.select(col(idCol).as("id"),
         expr(s"simhash64(${tokensSql(textCol)})").as("sig"))
@@ -706,7 +706,7 @@ object Dedup extends TrackedCaches {
                         maxHamming: Int = 3, maxDocs: Int = 300): DataFrame = {
     require(maxHamming >= 0 && maxHamming < 64,
       s"maxHamming must be in [0, 63], got $maxHamming")
-    graft.expressions.SimHash64.register(df.sparkSession)
+    graft.Functions.ensure(df.sparkSession)
     val sigs = df.orderBy(col(idCol)).limit(maxDocs)
       .select(col(idCol).as("id"),
         expr(s"simhash64(${tokensSql(textCol)})").as("sig"))
@@ -781,7 +781,7 @@ object Dedup extends TrackedCaches {
     import graft.functions.VectorFunctions._
     require(maxHamming >= 0 && maxHamming < 64,
       s"maxHamming must be in [0, 63], got $maxHamming")
-    graft.expressions.HyperplaneSig64.register(df.sparkSession)
+    graft.Functions.ensure(df.sparkSession)
     // vectors feed the sketch AND the two verify joins; sketches feed the
     // banded self-join twice
     val vecs = df.select(col(idCol).as("id"), asDouble(col(vecCol)).as("vec"))
@@ -813,8 +813,7 @@ object Dedup extends TrackedCaches {
   def groupMinhashSimilarity(df: DataFrame, groupCol: String,
                              textCol: String, k: Int = 3,
                              m: Int = 16): DataFrame = {
-    graft.expressions.MinHash.register(df.sparkSession)
-    graft.expressions.MinHashUnion.register(df.sparkSession)
+    graft.Functions.ensure(df.sparkSession)
     // per-doc signatures stay scan-local; the custom minhash_union
     // aggregate (element-wise min = union sketch) shuffles ONE m-wide
     // array per (group, map task) — m× fewer rows than exploding the

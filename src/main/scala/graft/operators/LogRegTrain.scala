@@ -69,7 +69,7 @@ object LogRegTrain {
     require(d > 0 && epochs >= 0 && lr > 0.0,
       s"need d > 0, epochs >= 0, lr > 0; got d=$d epochs=$epochs lr=$lr")
     val spark = docs.sparkSession
-    LinearTextScore.register(spark)
+    graft.Functions.ensure(spark)
 
     var bias = 0.0
     var w = Array.fill(d)(0.0)
@@ -138,7 +138,7 @@ object LogRegTrain {
   def logLossMilli(docs: DataFrame, textCol: String, labelCol: String,
                    m: Model): DataFrame = {
     val spark = docs.sparkSession
-    LinearTextScore.register(spark)
+    graft.Functions.ensure(spark)
     val sig = MessageDigest.getInstance("MD5")
       .digest((m.bias.toString + m.weights.mkString(",")).getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
@@ -163,7 +163,7 @@ object LogRegTrain {
   def logLoss(docs: DataFrame, textCol: String, labelCol: String,
               m: Model): Double = {
     val spark = docs.sparkSession
-    LinearTextScore.register(spark)
+    graft.Functions.ensure(spark)
     val sig = MessageDigest.getInstance("MD5")
       .digest((m.bias.toString + m.weights.mkString(",")).getBytes("UTF-8"))
       .map("%02x".format(_)).mkString

@@ -189,7 +189,7 @@ object Similarity {
       s"shortlist ($shortlist) must stay within the WindowGroupLimit " +
         "threshold (1000) — above it the per-query rank filter loses " +
         "its partial pre-exchange pass and every sketch row shuffles")
-    graft.expressions.HyperplaneSig64.register(candidates.sparkSession)
+    graft.Functions.ensure(candidates.sparkSession)
     val c = candidates.select(col("vec_id").as("cand_id"),
         asDouble(col("embedding")).as("cand_vec"))
       .withColumn("csig", expr("hyperplane_sig64(cand_vec)"))

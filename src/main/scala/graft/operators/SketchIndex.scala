@@ -58,7 +58,7 @@ object SketchIndex {
   val Buckets = 64
 
   private def withSketch(vectors: DataFrame): DataFrame = {
-    graft.expressions.HyperplaneSig64.register(vectors.sparkSession)
+    graft.Functions.ensure(vectors.sparkSession)
     vectors.select(col("vec_id").cast("long").as("vec_id"),
         asDouble(col("embedding")).as("vec"))
       .withColumn("sig", expr("hyperplane_sig64(vec)"))
@@ -193,7 +193,7 @@ object SketchIndex {
     require(shortlist <= 1000,
       s"shortlist ($shortlist) must stay within the WindowGroupLimit " +
         "threshold (1000)")
-    graft.expressions.HyperplaneSig64.register(spark)
+    graft.Functions.ensure(spark)
     val q = queries.select(col("vec_id").cast("long").as("query_id"),
         asDouble(col("embedding")).as("query_vec"))
       .withColumn("qsig", expr("hyperplane_sig64(query_vec)"))

@@ -132,7 +132,7 @@ object Sketches {
     require(mBits > 0 && mBits % BloomWordBits == 0,
       s"mBits must be a positive multiple of $BloomWordBits: $mBits")
     require(kHashes >= 1 && kHashes <= 16, s"kHashes out of range: $kHashes")
-    graft.expressions.RollingHash64.register(keys.sparkSession)
+    graft.Functions.ensure(keys.sparkSession)
     keys.select(col(keyCol).as("key")).where(col("key").isNotNull)
       .distinct()
       .select(explode(bloomPositions(col("key"), mBits, kHashes)).as("pos"))
@@ -152,7 +152,7 @@ object Sketches {
                         kHashes: Int): DataFrame = {
     require(mBits > 0 && mBits % BloomWordBits == 0,
       s"mBits must be a positive multiple of $BloomWordBits: $mBits")
-    graft.expressions.RollingHash64.register(probes.sparkSession)
+    graft.Functions.ensure(probes.sparkSession)
     probes.select(col(keyCol).as("key")).where(col("key").isNotNull)
       .distinct()
       .select(col("key"),

@@ -41,8 +41,9 @@ import org.apache.spark.sql.types.{LongType, TimestampType}
   * the probe side is not scanned twice — asserted by
   * RangeJoinBucketingSpec on the final adaptive plan.
   *
-  * Installed via `SparkSessionExtensions.injectOptimizerRule`
-  * ([[graft.GraftExtensions]]) or `spark.experimental.extraOptimizations`.
+  * Installed via `SparkSessionExtensions.injectOptimizerRule` (by
+  * [[graft.GraftExtensions]], beside the [[graft.Functions]] table) or
+  * `spark.experimental.extraOptimizations`.
   * Bucket width comes from `graft.rangeJoin.bucketSeconds` (default 900,
   * non-positive values fall back to the default — a zero width would make
   * IntegralDivide return null and silently empty the join);

@@ -791,7 +791,6 @@ object CurationQueries {
          |SELECT doc_id, expected AS cleaned, expected <> raw AS changed
          |FROM aug ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      graft.expressions.UnicodeNorm.register(s)
       val p0 = " ﬁle Ａ１ ①"
       val p1 = " ｶﾀｶﾅ ㎒"
       val p2 = " a\u200Bb\u200C\u200Dc\uFEFF x\u00ADy\u200Ez"
@@ -830,7 +829,6 @@ object CurationQueries {
          |       $perPhrase > 0 AS flagged
          |FROM l ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      graft.expressions.MultiMatch.register(s)
       val hits = graft.expressions.MultiMatch
         .countCol(lower(col("text")), blocklistPath)
       t(s, dir, "documents")
@@ -1117,7 +1115,6 @@ object CurationQueries {
          |WHERE sh IN (SELECT sh FROM bsh)
          |ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      graft.expressions.MinHash.register(s)
       val d = t(s, dir, "documents")
       val bench = d.where(col("doc_id") < 5).select("doc_id", "text")
       val train = d.where(col("doc_id") >= 5).select("doc_id", "text")
@@ -1679,7 +1676,6 @@ object CurationQueries {
   private def exportChunks(s: org.apache.spark.sql.SparkSession,
                            dir: String): org.apache.spark.sql.DataFrame = {
       import graft.functions.TextFunctions
-      graft.expressions.TextScore.register(s)
       // tracked (not raw .persist): released with the operator caches
       // after each Verify/Bench gate, so 200+-gate sessions don't pin it
       val scored = graft.operators.StagingCaches.cache(
@@ -1722,7 +1718,6 @@ object CurationQueries {
          |                      ORDER BY quality, doc_id) AS phase
          |FROM q ORDER BY doc_id""".stripMargin) { (s, dir) =>
       import org.apache.spark.sql.expressions.Window
-      graft.expressions.TextScore.register(s)
       t(s, dir, "documents")
         .selectExpr("doc_id", "lang", "quality_score(text) AS quality")
         .withColumn("phase", ntile(4).over(
@@ -1826,7 +1821,6 @@ object CurationQueries {
          |         AS gcum FROM surv)
          |SELECT doc_id, lang, n_chars, qs FROM s2 WHERE gcum <= 50000
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      graft.expressions.TextScore.register(s)
       val docs = t(s, dir, "documents")
         .selectExpr("doc_id", "lang", "n_chars",
           "quality_score(text) AS qs")

@@ -205,7 +205,6 @@ object FunctionQueries {
         |           * (1::BIGINT << (2*i + 1)))) AS BIGINT) AS zkey
         |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin) {
       (s, dir) =>
-        graft.expressions.ZOrder62.register(s)
         t(s, dir, "lineitem")
           .selectExpr("l_orderkey", "l_linenumber",
             "zorder62(l_partkey, l_suppkey) AS zkey")
@@ -267,7 +266,6 @@ object FunctionQueries {
          |SELECT * FROM zos UNION ALL SELECT * FROM lcs
          |ORDER BY layout, pred_id""".stripMargin
     }) { (s, dir) =>
-      graft.expressions.ZOrder62.register(s)
       val li = t(s, dir, "lineitem")
       val ranges = Seq(
         (1, lit(100L), lit(300L), lit(10L), lit(30L)),
@@ -319,7 +317,6 @@ object FunctionQueries {
         |SELECT l_orderkey, l_linenumber, d AS hkey
         |FROM h WHERE s = 0
         |ORDER BY l_orderkey, l_linenumber""".stripMargin) { (s, dir) =>
-      graft.expressions.Hilbert62.register(s)
       t(s, dir, "lineitem")
         .selectExpr("l_orderkey", "l_linenumber",
           "hilbert62(l_partkey, l_suppkey) AS hkey")
@@ -398,8 +395,6 @@ object FunctionQueries {
          |SELECT * FROM his UNION ALL SELECT * FROM zos
          |ORDER BY layout, pred_id""".stripMargin
     }) { (s, dir) =>
-      graft.expressions.Hilbert62.register(s)
-      graft.expressions.ZOrder62.register(s)
       val li = t(s, dir, "lineitem")
       val ranges = Seq(
         (1, lit(100L), lit(300L), lit(10L), lit(30L)),

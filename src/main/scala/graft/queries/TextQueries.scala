@@ -234,7 +234,6 @@ object TextQueries {
          |FROM (SELECT doc_id, lang, $mx AS __mx, text FROM documents)
          |ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      graft.expressions.TextScore.register(s)
       t(s, dir, "documents")
         .selectExpr("doc_id", "lang AS labeled_lang",
           "lang_id(text) AS detected_lang")
@@ -262,7 +261,6 @@ object TextQueries {
          |FROM cell c JOIN tot t USING (truth)
          |ORDER BY truth, detected""".stripMargin
     }) { (s, dir) =>
-      graft.expressions.TextScore.register(s)
       val pred = t(s, dir, "documents")
         .selectExpr("lang AS truth", "lang_id(text) AS detected")
       val cell = pred.groupBy("truth", "detected")
@@ -279,7 +277,6 @@ object TextQueries {
     Q("q_text_quality",
       s"""SELECT doc_id, $sqlQuality AS quality
          |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      graft.expressions.TextScore.register(s)
       t(s, dir, "documents")
         .selectExpr("doc_id", "quality_score(text) AS quality")
         .orderBy("doc_id")
@@ -316,7 +313,6 @@ object TextQueries {
          |       length(nfc_normalize(raw)) AS n_nfc, length(raw) AS n_raw
          |FROM aug ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      graft.expressions.UnicodeNorm.register(s)
       val accented = " cafe\u0301 n\u0303ino u\u0308ber"
       t(s, dir, "documents")
         .withColumn("raw",
@@ -911,7 +907,6 @@ object TextQueries {
     // over. Output exploded to (doc_id, dim, value) — dense, zero dims
     // included — and hash-matched against the full per-token replay.
     Q("q_text_hash_embed", SketchReplay.hashEmbedSql) { (s, dir) =>
-      graft.expressions.HashEmbed.register(s)
       t(s, dir, "documents")
         .select(col("doc_id"), posexplode(
           expr("hash_embed(split(trim(lower(text)), '\\\\s+'), 16)")))
@@ -929,7 +924,6 @@ object TextQueries {
     // curation-pipeline shape the embedder exists for: any text table
     // becomes ANN input inline, in the same scan.
     Q("q_text_ann_e2e", SketchReplay.textAnnE2eSql) { (s, dir) =>
-      graft.expressions.HashEmbed.register(s)
       val docs = t(s, dir, "documents")
         .selectExpr("doc_id AS vec_id",
           "hash_embed(split(trim(lower(text)), '\\\\s+'), 64) AS embedding")
@@ -1033,7 +1027,6 @@ object TextQueries {
       // HOFs dominate its cost, and paying them once into the cache
       // measured ~1.7x faster than recomputing the probe side (column
       // pruning spares the aggregate branch either way)
-      graft.expressions.TextScore.register(s)
       val scored = graft.operators.StagingCaches.cache(
         t(s, dir, "documents").select(
           col("doc_id"),
@@ -1169,7 +1162,6 @@ object TextQueries {
          |SELECT doc_id, round(z, 4) AS logit, z > 0 AS keep
          |FROM lg ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      graft.expressions.LinearTextScore.register(s)
       val z = graft.expressions.LinearTextScore
         .logitCol(col("text"), classifierWeightsPath)
       t(s, dir, "documents")
@@ -1328,7 +1320,6 @@ object TextQueries {
         |       (h, c) -> (h * 257 + c) % 2305843009213693951) AS BIGINT)
         |    AS fingerprint
         |FROM documents ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      graft.expressions.RollingHash64.register(s)
       t(s, dir, "documents")
         .selectExpr("doc_id", "rolling_hash64(text) AS fingerprint")
         .orderBy("doc_id")

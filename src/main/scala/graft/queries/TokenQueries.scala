@@ -165,7 +165,6 @@ object TokenQueries {
 
   /** Spark side shared by both gates: doc_id, ids, w. */
   private def encoded(s: org.apache.spark.sql.SparkSession, dir: String) = {
-    Bpe.register(s)
     t(s, dir, "documents").select(col("doc_id"),
         Bpe.encodeIds(col("text"), mergesPath, vocabPath).as("ids"))
       .withColumn("w", size(col("ids")).cast("long"))
@@ -207,7 +206,6 @@ object TokenQueries {
          |       md5(array_to_string(list_transform(ids,
          |             i -> CAST(i AS VARCHAR)), ' ')) AS ids_md5
          |FROM doc_ids ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      Bpe.register(s)
       val ids = call_function("bpe_encode_ls", col("text"),
         lit(mergesLsPath), lit(vocabLsPath))
       t(s, dir, "documents")
@@ -263,7 +261,6 @@ object TokenQueries {
          |       md5(array_to_string(list_transform(ids,
          |             i -> CAST(i AS VARCHAR)), ' ')) AS ids_md5
          |FROM doc_ids ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      Bpe.register(s)
       val ids = Bpe.encodeIds(col("text"), mergesPath, vocabHolesPath)
       val nOov = size(filter(col("ids"), _ === -1))
       t(s, dir, "documents")
@@ -392,7 +389,6 @@ object TokenQueries {
          |FROM dec d JOIN expd e ON d.doc_id = e.doc_id
          |ORDER BY d.doc_id""".stripMargin
     }) { (s, dir) =>
-      Bpe.register(s)
       val n = fixtureVocabLs.size
       val vlist = array(fixtureVocabLs.map(lit): _*)
       val ids = call_function("bpe_encode_ls", col("text"),
@@ -526,7 +522,6 @@ object TokenQueries {
         |FROM a ORDER BY doc_id""".stripMargin) { (s, dir) =>
       import s.implicits._
       import graft.expressions.MaxMatch
-      MaxMatch.register(s)
       val text = t(s, dir, "documents").select(col("doc_id")).as[Long]
         .map { id =>
           val m = (id % 17 + 3).toInt
@@ -583,7 +578,6 @@ object TokenQueries {
         |FROM a ORDER BY doc_id""".stripMargin) { (s, dir) =>
       import s.implicits._
       import graft.expressions.Unigram
-      Unigram.register(s)
       val text = t(s, dir, "documents").select(col("doc_id")).as[Long]
         .map { id =>
           val m = (id % 19 + 2).toInt

@@ -2212,7 +2212,6 @@ object VectorQueries {
         |       round(avg(CAST(embedding[j] AS DOUBLE)), 4) AS m
         |FROM embeddings, unnest(generate_series(1, 64)) AS t(j)
         |GROUP BY label, j ORDER BY label, j""".stripMargin) { (s, dir) =>
-      graft.expressions.VecMean.register(s)
       t(s, dir, "embeddings")
         .groupBy("label")
         .agg(expr("vec_mean(embedding)").as("centroid"))

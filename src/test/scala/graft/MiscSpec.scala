@@ -76,7 +76,7 @@ class TextFunctionsSpec extends SparkSpec {
     val w = Array.tabulate(d)(i => (i - 7) * 0.125)
     val p = java.nio.file.Files.createTempFile("cls_w", ".txt").toString
     LinearTextScore.writeWeights(p, 0.5, w)
-    LinearTextScore.register(spark)
+    graft.Functions.ensure(spark)
     val texts = Seq("The Quick  brown FOX", "", "one", "a b c d e f g")
     val got = texts.toDF("t")
       .select(LinearTextScore.logitCol(col("t"), p)).as[Double]
@@ -105,7 +105,7 @@ class TextFunctionsSpec extends SparkSpec {
     val (bias, w) = LinearTextScore.learnWeights(sample, d = 64)
     val p = java.nio.file.Files.createTempFile("cls_l", ".txt").toString
     LinearTextScore.writeWeights(p, bias, w)
-    LinearTextScore.register(spark)
+    graft.Functions.ensure(spark)
     val logits = (good ++ bad).toDF("t")
       .select(LinearTextScore.logitCol(col("t"), p)).as[Double]
       .collect().toSeq
@@ -2191,7 +2191,7 @@ class UnicodeNormSpec extends SparkSpec {
   private val decomposed = "cafe\u0301 n\u0303ino u\u0308ber"
 
   test("nfc_norm composes combining sequences; strip_accents flattens both") {
-    graft.expressions.UnicodeNorm.register(spark)
+    graft.Functions.ensure(spark)
     val df = Seq((1L, composed), (2L, decomposed), (3L, "plain"))
       .toDF("id", "s")
     val out = df.selectExpr("id", "nfc_norm(s) AS n", "strip_accents(s) AS a")
@@ -2209,7 +2209,7 @@ class UnicodeNormSpec extends SparkSpec {
   }
 
   test("nfkc_norm folds compatibility forms; strip_invisible is separate") {
-    graft.expressions.UnicodeNorm.register(spark)
+    graft.Functions.ensure(spark)
     val df = Seq(
       ("ﬁle Ａ１ ①", "file A1 1"),  // ligature/fullwidth/circled
       ("ｶﾀｶﾅ ㎒", "カタカナ MHz"), // halfwidth kana, unit square

@@ -39,7 +39,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("minhash signatures are a scan-local projection (no exchange)") {
-    graft.expressions.MinHash.register(spark)
+    graft.Functions.ensure(spark)
     val sigs = t(spark, sf001, "documents")
       .selectExpr("doc_id", "minhash_sig(word_shingles(text, 5), 8) AS sig")
     val plan = physical(sigs)
@@ -51,7 +51,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("hyperplane sketch is scan-local and codegen'd") {
-    graft.expressions.HyperplaneSig64.register(spark)
+    graft.Functions.ensure(spark)
     val sigs = t(spark, sf001, "embeddings")
       .selectExpr("vec_id",
         "hyperplane_sig64(CAST(embedding AS ARRAY<DOUBLE>)) AS sig")
@@ -124,7 +124,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("zorder key is scan-local and codegen'd") {
-    graft.expressions.ZOrder62.register(spark)
+    graft.Functions.ensure(spark)
     val keyed = t(spark, sf001, "lineitem")
       .selectExpr("l_orderkey", "zorder62(l_partkey, l_suppkey) AS zkey")
     val plan = physical(keyed)
@@ -430,7 +430,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("winnowed fingerprints are a scan-local codegen'd projection") {
-    graft.expressions.Winnow.register(spark)
+    graft.Functions.ensure(spark)
     val plan = physical(t(spark, sf001, "documents")
       .selectExpr("doc_id", "winnow_fingerprints(text, 12, 8) AS fps"))
     assert(!plan.contains("Exchange"),
@@ -441,7 +441,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("bpe_encode is a scan-local codegen'd projection") {
-    graft.expressions.Bpe.register(spark)
+    graft.Functions.ensure(spark)
     val mp = java.nio.file.Files.createTempFile("plan_merges", ".txt")
     java.nio.file.Files.writeString(mp, "t h\nth e\n")
     val vp = java.nio.file.Files.createTempFile("plan_vocab", ".txt")
@@ -476,7 +476,7 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("vec_mean aggregates partially below the exchange") {
-    graft.expressions.VecMean.register(spark)
+    graft.Functions.ensure(spark)
     val plan = physical(t(spark, sf001, "embeddings")
       .groupBy("label").agg(expr("vec_mean(embedding)").as("c")))
     assert(plan.contains("partial_vec_mean"),
@@ -709,7 +709,7 @@ class PlanShapeSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin") &&
       !plan.contains("CartesianProduct"),
       s"ADC pass must be a broadcast equi-join on the cell id:\n$plan")
-    graft.expressions.Hilbert62.register(spark)
+    graft.Functions.ensure(spark)
     val hp = physical(t(spark, sf001, "lineitem")
       .selectExpr("hilbert62(l_partkey, l_suppkey) AS h"))
     assert(!hp.contains("Exchange") && hp.contains("*("),

@@ -266,7 +266,7 @@ class PropertiesSpec extends SparkSpec {
   }
 
   test("vec_mean equals the scalar mean per dimension, any partitioning") {
-    graft.expressions.VecMean.register(spark)
+    graft.Functions.ensure(spark)
     val rows = sample(Gen.listOfN(4, Gen.chooseNum(-100, 100)), 90)
       .zipWithIndex.map { case (v, i) => (i % 5, v.map(_.toFloat)) }
     val df = rows.toDF("g", "v")

@@ -4,8 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs (one JVM-wide session, UTC, small
-  * shuffle fan-out, nanos-tolerant parquet reads). */
+/** Shared local SparkSession for specs: one JVM-wide [[Sessions.local]]
+  * session. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSpec.session
@@ -14,14 +14,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-    .getOrCreate()
+  lazy val session: SparkSession = Sessions.local(4)
 }

@@ -19,7 +19,7 @@ class BpeSpec extends SparkSpec {
   }
 
   private def counts(texts: Seq[String], path: String): Seq[Int] = {
-    Bpe.register(spark)
+    graft.Functions.ensure(spark)
     texts.toDF("t")
       .select(expr(s"bpe_token_count(t, '$path')").as("n"))
       .as[Int].collect().toSeq
@@ -59,7 +59,7 @@ class BpeSpec extends SparkSpec {
     val merges = Bpe.learnMerges(docs, 300)
     assert(merges.size > 50, s"corpus too small to learn (${merges.size})")
     val path = mergesFile(merges)
-    Bpe.register(spark)
+    graft.Functions.ensure(spark)
     val drift = graft.engine.Tables.t(spark, sf001, "documents")
       .select(expr(s"bpe_token_count(text, '$path')").as("bpe"),
         graft.functions.TextFunctions.bpeTokenCount(col("text")).as("heur"))
@@ -87,7 +87,7 @@ class BpeSpec extends SparkSpec {
     // vocab line number = id: l=0 o=1 w=2 e=3 r=4 n=5 lo=6 low=7 er=8
     val mp = mergesFile(Seq(("l", "o"), ("lo", "w"), ("e", "r")))
     val vp = vocabFile(Seq("l", "o", "w", "e", "r", "n", "lo", "low", "er"))
-    Bpe.register(spark)
+    graft.Functions.ensure(spark)
     def ids(t: String): Seq[Int] =
       Seq(t).toDF("t")
         .select(expr(s"bpe_encode(t, '$mp', '$vp')").as("ids"))
@@ -107,7 +107,7 @@ class BpeSpec extends SparkSpec {
     // ids: t=0 h=1 e=2 w=3 Ġ=4 th=5 the=6 Ġt=7 Ġth=8 Ġthe=9 Ġw=10 Ġwe=11
     val vp = vocabFile(Seq("t", "h", "e", "w", "Ġ", "th", "the", "Ġt",
       "Ġth", "Ġthe", "Ġw", "Ġwe"))
-    Bpe.register(spark)
+    graft.Functions.ensure(spark)
     def ids(t: String): Seq[Int] =
       Seq(t).toDF("t")
         .select(expr(s"bpe_encode_ls(t, '$mp', '$vp')").as("ids"))
@@ -134,7 +134,7 @@ class BpeSpec extends SparkSpec {
     // for the length invariant — unknowns encode as -1, not dropped)
     val vp = vocabFile((33 to 126).map(_.toChar.toString) ++
       merges.map { case (a, b) => a + b })
-    Bpe.register(spark)
+    graft.Functions.ensure(spark)
     val mismatches = graft.engine.Tables.t(spark, sf001, "documents")
       .select(expr(s"size(bpe_encode(text, '$mp', '$vp'))").as("n_ids"),
         expr(s"bpe_token_count(text, '$mp')").as("n_tok"))
@@ -144,7 +144,7 @@ class BpeSpec extends SparkSpec {
 
   test("null text propagates, bad path fails loudly") {
     val path = mergesFile(Seq(("e", "r")))
-    Bpe.register(spark)
+    graft.Functions.ensure(spark)
     val r = Seq[(Integer, String)]((1, "er"), (2, null)).toDF("id", "t")
       .select(expr(s"bpe_token_count(t, '$path')").as("n"))
       .collect()

@@ -11,7 +11,7 @@ class RollingHashSpec extends SparkSpec {
   private val M = (1L << 61) - 1
 
   private def rh(s: String): Long = {
-    RollingHash64.register(spark)
+    graft.Functions.ensure(spark)
     Seq(s).toDF("s").selectExpr("rolling_hash64(s)").head.getLong(0)
   }
 
@@ -44,7 +44,7 @@ class SimHash64ExprSpec extends SparkSpec {
   import spark.implicits._
 
   test("simhash64 is usable from SQL after registration and is codegen'd") {
-    SimHash64.register(spark)
+    graft.Functions.ensure(spark)
     val out = Seq(Seq("a", "b", "c"), Seq("a", "b", "c"), Seq("x", "y"))
       .toDF("toks").selectExpr("simhash64(toks) AS sig")
       .as[Long].collect()
@@ -53,7 +53,7 @@ class SimHash64ExprSpec extends SparkSpec {
   }
 
   test("null array → null signature") {
-    SimHash64.register(spark)
+    graft.Functions.ensure(spark)
     val out = Seq(Option.empty[Seq[String]]).toDF("toks")
       .selectExpr("simhash64(toks)").head
     assert(out.isNullAt(0))
@@ -65,7 +65,7 @@ class MinHashUnionSpec extends SparkSpec {
   import spark.implicits._
 
   test("aggregate equals per-position min across many partitions") {
-    MinHashUnion.register(spark)
+    graft.Functions.ensure(spark)
     val rows = (1 to 200).map { i =>
       ("g" + (i % 3), Seq(f"$i%03d-a", f"${300 - i}%03d-b", null))
     }
@@ -83,7 +83,7 @@ class MinHashUnionSpec extends SparkSpec {
   }
 
   test("all-null positions stay null; null input rows are skipped") {
-    MinHashUnion.register(spark)
+    graft.Functions.ensure(spark)
     val df = Seq(
       ("g", Some(Seq[String]("b", null))),
       ("g", Some(Seq[String]("a", null))),
@@ -130,7 +130,7 @@ class ZOrder62Spec extends SparkSpec {
   }
 
   test("result is non-negative (valid plain sort key) and SQL-callable") {
-    ZOrder62.register(spark)
+    graft.Functions.ensure(spark)
     val out = Seq((0x7fffffffL, 0x7fffffffL), (1L, 2L))
       .toDF("x", "y").selectExpr("zorder62(x, y) AS z").as[Long].collect()
     assert(out.forall(_ >= 0))
@@ -151,7 +151,7 @@ class HashEmbedSpec extends SparkSpec {
   import org.apache.spark.sql.functions.col
 
   private def embed(toks: Seq[String], d: Int): Seq[Double] = {
-    HashEmbed.register(spark)
+    graft.Functions.ensure(spark)
     Seq(toks).toDF("toks").selectExpr(s"hash_embed(toks, $d)")
       .as[Seq[Double]].head
   }
@@ -187,7 +187,7 @@ class HashEmbedSpec extends SparkSpec {
 
   test("bridges text into the vector stack: near-identical documents " +
       "embed near-identically and retrieve each other via hammingTopK") {
-    HashEmbed.register(spark)
+    graft.Functions.ensure(spark)
     val docs = graft.engine.Tables.t(spark, sf001, "documents")
       .limit(50)
       .selectExpr("doc_id AS vec_id",
@@ -206,7 +206,7 @@ class HashEmbedSpec extends SparkSpec {
   }
 
   test("wrong argument shapes fail loudly") {
-    HashEmbed.register(spark)
+    graft.Functions.ensure(spark)
     intercept[Exception] {
       Seq(Seq("a")).toDF("toks").selectExpr("hash_embed(toks)").collect()
     }

@@ -63,7 +63,7 @@ class HilbertSpec extends SparkSpec {
 
   test("registered expression matches the static helper through codegen") {
     import spark.implicits._
-    Hilbert62.register(spark)
+    graft.Functions.ensure(spark)
     val got = Seq((3L, 0L), (1L, 1L), (123456L, 654321L),
         (0x7fffffffL, 42L))
       .toDF("x", "y")
@@ -76,8 +76,7 @@ class HilbertSpec extends SparkSpec {
 
   test("wrong argument count is a descriptive analysis-time error, " +
       "never IndexOutOfBounds or a silently dropped argument") {
-    Hilbert62.register(spark)
-    ZOrder62.register(spark)
+    graft.Functions.ensure(spark)
     for ((sql, want) <- Seq(
         "SELECT hilbert62(1L)" -> "hilbert62 expects exactly 2 arguments, got 1",
         "SELECT hilbert62(1L, 2L, 3L)" -> "hilbert62 expects exactly 2 arguments, got 3",

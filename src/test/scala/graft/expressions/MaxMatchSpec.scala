@@ -17,7 +17,7 @@ class MaxMatchSpec extends SparkSpec {
   }
 
   private def encode(texts: Seq[String], path: String): Seq[Seq[Int]] = {
-    MaxMatch.register(spark)
+    graft.Functions.ensure(spark)
     texts.toDF("t")
       .select(expr(s"max_match_encode(t, '$path')").as("ids"))
       .as[Seq[Int]].collect().toSeq
@@ -39,7 +39,7 @@ class MaxMatchSpec extends SparkSpec {
     assert(encode(Seq("zzz"), path) == Seq(Seq(-1, -1, -1)))
     assert(encode(Seq(""), path) == Seq(Seq()))
     // count agrees with encode length, null propagates
-    MaxMatch.register(spark)
+    graft.Functions.ensure(spark)
     val got = Seq(Some("axb"), None).toDF("t")
       .select(expr(s"max_match_count(t, '$path')").as("n"))
       .collect().map(r => if (r.isNullAt(0)) -99 else r.getInt(0))
@@ -53,7 +53,7 @@ class MaxMatchSpec extends SparkSpec {
     assert(encode(Seq("abc"), mm) == Seq(Seq(2)))
     val merges = Files.createTempFile("graft_mm_merges", ".txt")
     Files.writeString(merges, "b c\n")
-    Bpe.register(spark)
+    graft.Functions.ensure(spark)
     val bpe = Seq("abc").toDF("t")
       .select(expr(s"bpe_token_count(t, '${merges.toString}')").as("n"))
       .as[Int].head()
@@ -62,7 +62,7 @@ class MaxMatchSpec extends SparkSpec {
 
   test("expression stays codegen'd and scan-local") {
     val path = vocabFile(Seq("a", "ab"))
-    MaxMatch.register(spark)
+    graft.Functions.ensure(spark)
     // a real scan, not a literal Seq — the latter constant-folds into a
     // LocalTableScan and no codegen span exists to assert on
     val df = graft.engine.Tables.t(spark, sf001, "documents")

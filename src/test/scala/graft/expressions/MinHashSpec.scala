@@ -23,7 +23,7 @@ class MinHashSpec extends SparkSpec {
   private def df = docs.toDF("id", "text")
 
   test("word_shingles matches the HOF shingles formulation exactly") {
-    MinHash.register(spark)
+    graft.Functions.ensure(spark)
     val both = df.selectExpr("id", "text", "word_shingles(text, 5) AS fast")
       .join(df.select(col("id"),
         TextFunctions.shingles(col("text"), 5).as("hof")), "id")
@@ -36,7 +36,7 @@ class MinHashSpec extends SparkSpec {
   }
 
   test("minhash_sig matches the HOF md5-min signature exactly") {
-    MinHash.register(spark)
+    graft.Functions.ensure(spark)
     val both = df
       .select(col("id"), TextFunctions.shingles(col("text"), 5).as("sh"))
       .select(col("id"),
@@ -52,7 +52,7 @@ class MinHashSpec extends SparkSpec {
   }
 
   test("signatures are stable identifiers: equal docs, equal sigs") {
-    MinHash.register(spark)
+    graft.Functions.ensure(spark)
     val sigs = df.selectExpr("id",
         "minhash_sig(word_shingles(text, 5), 8) AS sig")
       .as[(Long, Seq[String])].collect().toMap

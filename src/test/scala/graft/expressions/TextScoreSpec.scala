@@ -14,7 +14,7 @@ class TextScoreSpec extends SparkSpec {
   import spark.implicits._
 
   test("lang_id and quality_score match the HOF formulations on the corpus") {
-    TextScore.register(spark)
+    graft.Functions.ensure(spark)
     val docs = graft.engine.Tables.t(spark, sf001, "documents")
     val both = docs
       .select(col("doc_id"),
@@ -32,7 +32,7 @@ class TextScoreSpec extends SparkSpec {
   }
 
   test("edge shapes: empty, whitespace-only, ties, multi-language") {
-    TextScore.register(spark)
+    graft.Functions.ensure(spark)
     val docs = Seq(
       (1L, ""), (2L, "   "), (3L, "\t\n mixed \t whitespace "),
       (4L, "the la der le zh"),          // cross-language stopwords

@@ -18,7 +18,7 @@ class UnigramSpec extends SparkSpec {
   }
 
   private def encode(texts: Seq[String], path: String): Seq[Seq[Int]] = {
-    Unigram.register(spark)
+    graft.Functions.ensure(spark)
     texts.toDF("t")
       .select(expr(s"unigram_encode(t, '$path')").as("ids"))
       .as[Seq[Int]].collect().toSeq
@@ -38,7 +38,7 @@ class UnigramSpec extends SparkSpec {
     val path = vocabFile(Seq("a" -> 5L, "b" -> 5L, "ab" -> 10L))
     // [ab]=10 (1 token) vs [a,b]=10 (2 tokens): fewer tokens wins
     assert(encode(Seq("ab"), path) == Seq(Seq(2)))
-    Unigram.register(spark)
+    graft.Functions.ensure(spark)
     val costs = Seq("ab", "aab", "xy").toDF("t")
       .select(expr(s"unigram_cost(t, '$path')").as("c"))
       .as[Long].collect().toSeq
@@ -68,7 +68,7 @@ class UnigramSpec extends SparkSpec {
 
   test("expression stays codegen'd and scan-local") {
     val path = vocabFile(Seq("a" -> 5L))
-    Unigram.register(spark)
+    graft.Functions.ensure(spark)
     val df = graft.engine.Tables.t(spark, sf001, "documents")
       .select(expr(s"unigram_cost(text, '$path')").as("c"))
     val plan = df.queryExecution.executedPlan.toString

@@ -56,7 +56,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhashPairs recall is exact at every radius (pigeonhole banding)") {
-    graft.expressions.SimHash64.register(spark)
+    graft.Functions.ensure(spark)
     val sigs = docs.selectExpr("doc_id",
         "simhash64(split(trim(lower(text)), '\\\\s+')) AS sig")
       .as[(Long, Long)].collect()
@@ -72,7 +72,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash distance orders near-dup below unrelated") {
-    graft.expressions.SimHash64.register(spark)
+    graft.Functions.ensure(spark)
     import org.apache.spark.sql.functions.expr
     val sigs = docs.selectExpr("doc_id",
         "simhash64(split(trim(lower(text)), '\\\\s+')) AS sig")

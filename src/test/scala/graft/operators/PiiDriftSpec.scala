@@ -153,7 +153,7 @@ class MultiMatchSpec extends SparkSpec {
     }.sum
 
   test("multi_match_count equals brute force incl. overlaps and suffixes") {
-    graft.expressions.MultiMatch.register(spark)
+    graft.Functions.ensure(spark)
     val phrases = Seq("aba", "ba", "a", "abab")
     val path = phraseFile("graft_mm_spec.txt", phrases)
     val texts = Seq("ababa", "aaaa", "", "xyz", "abababab", "ba",
@@ -173,7 +173,7 @@ class MultiMatchSpec extends SparkSpec {
   }
 
   test("multi_match_count stays inside whole-stage codegen") {
-    graft.expressions.MultiMatch.register(spark)
+    graft.Functions.ensure(spark)
     val path = phraseFile("graft_mm_spec2.txt", Seq("the", "batch"))
     val df = graft.engine.Tables.t(spark, sf001, "documents")
       .select(graft.expressions.MultiMatch.countCol(lower(col("text")),
