@@ -24,7 +24,11 @@ import graft.functions.TextFunctions.tokens
   * gate uses 2-term queries, and 2-addend IEEE sums are order-exact);
   * final scores round to 4 dp BEFORE ranking, doc id breaks ties.
   */
-object Bm25 {
+object Bm25 extends PersistedIndex {
+
+  val kind = "bm25"
+  protected val deleteIdCol = "doc_id"
+  protected val storedIdCol = "doc_id"
 
   /** Top-`k` documents per query. `queries`: (query_id, term) rows —
     * multi-term queries contribute one row per term. Returns
@@ -95,15 +99,7 @@ object Bm25 {
     * exact over live documents). */
   def writeIndex(docs: DataFrame, dir: String): Unit = {
     writeDatasets(docs, dir, "overwrite")
-    // a full rebuild resets the deletion ledger AND the streaming batch
-    // dirs (pre-rebuild tombstones/batches refer to the old corpus, and
-    // the fresh postings dir carries no compaction marker, so stale
-    // batch dirs would otherwise resurrect as live — same contract as
-    // the other indexes)
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      docs.sparkSession.sparkContext.hadoopConfiguration)
-    TombstoneLedger.reset(fs, s"$dir/tombstones")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/batches"), true)
+    resetLifecycle(docs.sparkSession, dir)
   }
 
   /** Append a document batch into a standing [[writeIndex]] layout —
@@ -183,123 +179,30 @@ object Bm25 {
       .write.mode("overwrite").parquet(s"$batchRoot/doclens")
   }
 
-  /** Fold live streaming batch directories into the base layout.
+  /** The kind's layout: doclens folds flat with doc_id dedup (tiny — no
+    * repartition), postings folds under the term-bucket layout with
+    * (term, doc_id) dedup and carries the high-water marker
+    * (staged/swapped last).
     *
     * Two datasets cannot swap atomically, so no ordering alone closes
     * the window where one has folded the batches and the other's
-    * liveness decision (the marker in POSTINGS) hasn't committed —
-    * whichever order, a crash inside it would leave stats permanently
-    * double-counting or missing the batch. The contract that survives
-    * EVERY interleaving is idempotence by natural key instead: a
-    * document's (doc_id, dl) row and a term's (term, doc_id, dl, tf)
-    * row are identical wherever they appear, so folding DEDUPLICATES on
-    * those keys, and [[searchIndex]] applies the same dedup whenever
-    * live batch dirs exist — a batch counted in both the base and a
-    * still-live dir collapses back to one row. Order here (doclens
-    * folds first, postings+marker commit last) just minimizes the
-    * dedup-covered window; a half-crashed pass re-runs to the same
-    * result because the folds are dedup-idempotent. */
-  def compactIndexBatches(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Unit = {
-    val live = IndexBatches.live(spark, dir, "postings")
-    if (live.isEmpty) return
-    IndexBatches.foldAndPurge(spark, dir, "bm25", live, None, Nil,
-      fusedDatasets)
-  }
-
-  /** The kind's [[IndexBatches.foldAndPurge]] parameters: doclens folds
-    * flat with doc_id dedup (tiny — no repartition), postings folds
-    * under the term-bucket layout with (term, doc_id) dedup and
-    * carries the high-water marker (staged/swapped last). */
-  private val fusedDatasets = Seq(
+    * liveness decision (the marker in POSTINGS) hasn't committed. The
+    * contract that survives EVERY interleaving is idempotence by natural
+    * key instead: a document's (doc_id, dl) row and a term's
+    * (term, doc_id, dl, tf) row are identical wherever they appear, so
+    * folding DEDUPLICATES on those keys, and [[searchIndex]] applies the
+    * same dedup whenever live batch dirs exist. Vacuum stays consistent
+    * under any crash ordering too: the corpus constants derive from
+    * doclens∖ledger and postings read as postings∖ledger, so whichever
+    * dataset swapped first, a search still scores the live corpus
+    * exactly. */
+  private[operators] def fusedDatasets = Seq(
     IndexBatches.FusedDataset("doclens", Seq("doc_id", "dl"),
-      Seq("doc_id"), None, 0, "doc_id"),
+      Seq("doc_id"), None, (_, _) => 0, "doc_id"),
     IndexBatches.FusedDataset("postings",
       Seq("term", "doc_id", "dl", "tf", "term_bucket"),
-      Seq("term", "doc_id"), Some("term_bucket"), IndexBuckets,
+      Seq("term", "doc_id"), Some("term_bucket"), (_, _) => IndexBuckets,
       "doc_id"))
-
-  /** Append-only deletion (right-to-be-forgotten for the BM25 index):
-    * `ids` (a `doc_id` column) land in the tombstone ledger; postings
-    * stay on disk until [[vacuumIndex]], but [[searchIndex]] masks them
-    * immediately AND corrects the corpus statistics — n_docs, avgdl,
-    * and df are all computed over LIVE documents only, so post-delete
-    * scores equal a fresh index over the filtered corpus exactly. One
-    * tiny parquet append regardless of index size. */
-  def deleteFromIndex(ids: DataFrame, dir: String): Unit =
-    TombstoneLedger.append(ids.select(col("doc_id")), s"$dir/tombstones")
-
-  /** Test seam: runs after [[vacuumIndex]] snapshots the ledger file
-    * list — the race window a concurrent [[deleteFromIndex]] lands in.
-    * Production no-op. */
-  private[graft] var vacuumAfterSnapshotHook: () => Unit = () => ()
-
-  /** Physically remove tombstoned documents from BOTH index datasets,
-    * then clear exactly the consumed ledger files. With no live
-    * streaming batch dirs: postings via [[SelectiveVacuum]] — only the
-    * term buckets CONTAINING a tombstoned document's postings are
-    * rewritten and leaf-swapped (O(affected buckets), not O(index)) —
-    * and the small doclens dataset behind a full staged swap. With
-    * live batch dirs the fold already forces a full staged rewrite of
-    * both datasets, so the purge FUSES into it — (base ∪ batches)
-    * dedup ∖ ledger, ONE rewrite per dataset, each byte written once
-    * ([[IndexBatches.foldAndPurge]]; a streamed-then-deleted doc still
-    * resolves DELETED because the ledger snapshot covers the folded
-    * batches). Any crash ordering stays consistent: the corpus
-    * constants derive from doclens∖ledger and postings read as
-    * postings∖ledger, so whichever dataset swapped first, a search
-    * still scores the live corpus exactly. Returns postings rows
-    * removed (POST-DEDUP logical rows on the fused path — a
-    * re-ingested document's duplicate postings collapse in the fold
-    * regardless of the purge). */
-  def vacuumIndex(spark: org.apache.spark.sql.SparkSession,
-                  dir: String): Long = {
-    val root = s"$dir/tombstones"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val consumed = TombstoneLedger.files(fs, root)
-    val ts = TombstoneLedger.dfFrom(spark, consumed, "doc_id")
-      .getOrElse(return 0L)
-    vacuumAfterSnapshotHook()
-    val live = IndexBatches.live(spark, dir, "postings")
-    val removed = if (live.isEmpty) {
-      // the two datasets' independent job chains run concurrently
-      // through the shared harness (wall-clock max, not sum); either
-      // may commit first — reads stay exact throughout because every
-      // corpus constant derives from doclens∖ledger and postings read
-      // as postings∖ledger (the crash-ordering argument above).
-      IndexBatches.concurrently[Long](spark, "bm25-vacuum", Seq(
-        // postings: partition-selective — only the term buckets
-        // CONTAINING a tombstoned document's postings are rewritten
-        // and leaf-swapped (the compaction marker at the postings root
-        // is untouched)
-        "postings" -> { () =>
-          SelectiveVacuum(spark,
-            new org.apache.hadoop.fs.Path(s"$dir/postings"),
-            "term_bucket", "doc_id", ts, slices = math.max(1,
-              spark.sparkContext.defaultParallelism / IndexBuckets))
-        },
-        "doclens" -> { () =>
-          val dlPath = new org.apache.hadoop.fs.Path(s"$dir/doclens")
-          val tmpD = new org.apache.hadoop.fs.Path(s"$dir/.doclens.vacuum")
-          val dlKeep = spark.read.parquet(dlPath.toString)
-            .join(ts, Seq("doc_id"), "left_anti")
-          // full purge: coalesce(1) so the unpartitioned write emits
-          // one schema-preserving zero-row file (empty multi-partition
-          // writes emit nothing and brick later reads)
-          (if (dlKeep.isEmpty) dlKeep.coalesce(1) else dlKeep)
-            .write.mode("overwrite").parquet(tmpD.toString)
-          graft.sources.Formats.swapInto(fs, tmpD, dlPath)
-          spark.catalog.refreshByPath(dlPath.toString)
-          0L
-        })).apply("postings")
-    } else {
-      IndexBatches.foldAndPurge(spark, dir, "bm25", live, Some(ts),
-        Seq("doc_id"), fusedDatasets)
-    }
-    TombstoneLedger.clear(fs, root, consumed)
-    removed
-  }
 
   /** Search a persisted [[writeIndex]] index — result-identical to
     * running [[topK]] over the original corpus (Bm25Spec pins it), but
@@ -320,27 +223,18 @@ object Bm25 {
                   k1: Double = 1.2, b: Double = 0.75,
                   maxTerms: Int = 65536): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val ledger = TombstoneLedger.df(spark, s"$dir/tombstones", "doc_id")
     // live streaming batch dirs union in transparently; whenever any
     // exist, BOTH datasets deduplicate on their natural keys — a batch
     // present in the base AND a still-live dir (the compaction crash
     // window) collapses back to one row, so statistics never
     // double-count under any swap interleaving
-    val liveDirs = IndexBatches.live(spark, dir, "postings")
+    val liveDirs = liveBatchDirs(spark, dir)
     // corpus constants from doclens MINUS the ledger — the same mask
     // the postings get, so deletions correct n_docs/avgdl/df exactly
     // and post-delete scores equal a fresh index over the live corpus
-    val dCols = Seq("doc_id", "dl").map(col)
-    val doclens0raw = liveDirs.foldLeft(
-        spark.read.parquet(s"$dir/doclens").select(dCols: _*)) { (acc, p) =>
-      acc.union(spark.read.parquet(s"$p/doclens").select(dCols: _*))
-    }
-    val doclens0 =
-      if (liveDirs.isEmpty) doclens0raw
-      else doclens0raw.dropDuplicates("doc_id")
-    val doclens = ledger
-      .map(ts => doclens0.join(ts, Seq("doc_id"), "left_anti"))
-      .getOrElse(doclens0)
+    val ts = ledger(spark, dir)
+    val doclens =
+      masked(readLive(spark, dir, "doclens", liveDirs, mask = false), ts)
     // INLINE since r19 (same move as [[topK]]): the corpus-constant agg
     // rides the scoring job as a one-row broadcast cross-join instead
     // of a separate collect() action — one job fewer per search, no
@@ -366,9 +260,7 @@ object Bm25 {
         spark.read.parquet(s"$dir/postings").select(pCols: _*)) { (acc, p) =>
       acc.union(spark.read.parquet(s"$p/postings").select(pCols: _*))
     }
-    val postings = ledger
-      .map(ts => raw.join(ts, Seq("doc_id"), "left_anti"))
-      .getOrElse(raw)
+    val postings = masked(raw, ts)
     val pruned =
       if (smallQ) {
         val qTerms = qTermProbe.map(_.getString(0))

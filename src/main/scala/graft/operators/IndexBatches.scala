@@ -122,16 +122,30 @@ object IndexBatches {
     *     core writes while the layout stays at `slices` files per leaf;
     *     flat layouts repartition to `fanout` files (`fanout <= 0` =
     *     leave the plan's partitioning as-is, for tiny datasets like
-    *     BM25 doclens);
+    *     BM25 doclens). The fanout is a function of the session and the
+    *     index dir, evaluated only by a rewrite: a cell-partitioned
+    *     layout reads it from the centroids' footer
+    *     ([[centroidFanout]]), which a search never needs;
     *   - `batchNested`: whether a batch dir carries this dataset as a
     *     SUBDIRECTORY (multi-dataset kinds) or IS the dataset
     *     (single-dataset kinds, whose [[writeBatch]] wrote rows at the
     *     batch root). */
   final case class FusedDataset(name: String, columns: Seq[String],
                                 dedupKeys: Seq[String],
-                                partitionCol: Option[String], fanout: Int,
+                                partitionCol: Option[String],
+                                fanout: (SparkSession, String) => Int,
                                 sliceKey: String,
                                 batchNested: Boolean = true)
+
+  /** The fanout of a cell-partitioned dataset: one partition per
+    * centroid, counted from the centroids' parquet footers. */
+  private[operators] def centroidFanout(spark: SparkSession,
+                                        dir: String): Int =
+    math.max(1, footerRows(spark, s"$dir/centroids").toInt)
+
+  /** The bound on one [[concurrently]] pass: 6 h covers any plausible
+    * rewrite. */
+  private val TimeoutSec = 21600L
 
   /** Run independent Spark job chains concurrently — the staging
     * harness every fused vacuum shares (first written inline in MaxSim;
@@ -140,16 +154,13 @@ object IndexBatches {
     * task count (blocking Spark actions on ExecutionContext.global
     * starve unrelated callers of the shared pool), a BOUNDED await (a
     * hung Spark job must not hang the maintenance pass forever —
-    * `graft.vacuum.timeoutSec`, default 6 h, covers any plausible
-    * rewrite), and fail-fast sibling CANCELLATION via per-pass job
-    * groups (a failure in one task cancels the others' running jobs
+    * [[TimeoutSec]]), and fail-fast sibling CANCELLATION via per-pass
+    * job groups (a failure in one task cancels the others' running jobs
     * instead of letting them burn the cluster). A single task runs
     * inline — no pool, no job-group ceremony. */
   private[operators] def concurrently[A](spark: SparkSession, kind: String,
       tasks: Seq[(String, () => A)]): Map[String, A] = {
     if (tasks.size == 1) return Map(tasks.head._1 -> tasks.head._2())
-    val timeoutSec = spark.conf.getOption("graft.vacuum.timeoutSec")
-      .map(_.toLong).getOrElse(21600L)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       tasks.size,
       (r: Runnable) => {
@@ -170,7 +181,7 @@ object IndexBatches {
       }
       try scala.concurrent.Await.result(
         scala.concurrent.Future.sequence(futures),
-        scala.concurrent.duration.Duration(timeoutSec,
+        scala.concurrent.duration.Duration(TimeoutSec,
           java.util.concurrent.TimeUnit.SECONDS)).toMap
       catch { case e: Throwable =>
         tasks.foreach { case (name, _) =>
@@ -181,19 +192,26 @@ object IndexBatches {
   }
 
   /** The fused fold∖ledger maintenance rewrite every persisted index
-    * kind shares — ONE implementation of the shape SketchIndex, IvfPq
-    * and MaxSim each hand-copied before round 19, now also serving the
-    * IVF-flat, BM25 and phrase kinds' debt paths:
+    * kind shares ([[PersistedIndex]] is its only caller):
     *
     *   - with `ts = None` this is batch COMPACTION: fold live batch
     *     dirs into each base dataset ((base ∪ batches), deduped on the
     *     kind's natural key) behind crash-safe staged swaps;
-    *   - with `ts = Some(ledger)` it is the vacuum-with-debt path: the
-    *     purge FUSES into the same fold — (base ∪ batches) dedup ∖
-    *     ledger, ONE staged rewrite per dataset, each byte written once
-    *     (the old compact-then-vacuum shape rewrote both datasets twice
-    *     back to back — ~45% of a maintenance gate's cost when
-    *     profiled).
+    *   - with `ts = Some(ledger)` it is the vacuum: the purge FUSES into
+    *     the same fold — (base ∪ batches) dedup ∖ ledger, ONE staged
+    *     rewrite per dataset, each byte written once (the old
+    *     compact-then-vacuum shape rewrote both datasets twice back to
+    *     back — ~45% of a maintenance gate's cost when profiled). The
+    *     ledger frame has one column, the stored id column the purge
+    *     matches on. With no live batch dirs the fold is a purge of the
+    *     base alone, and each PARTITIONED dataset is purged in place by
+    *     [[SelectiveVacuum]] instead (only the partitions holding a
+    *     tombstoned id are rewritten), concurrently with the staging of
+    *     the flat ones; it is neither staged nor swapped here.
+    *
+    * The natural-key dedup runs only while live batch dirs exist, as the
+    * searches' does: the base alone never holds the crash-window
+    * duplicates it collapses.
     *
     * Removed-row counting never adds wall-clock. (The tempting
     * alternative — `Dataset.observe` metrics riding the keep write
@@ -206,15 +224,16 @@ object IndexBatches {
     * registered observation found in `qe.logical` with `Row.empty` when
     * `qe.observedMetrics` lacks it.) Instead:
     *
-    *   - kinds WITHOUT read-side dedup get a genuinely job-free count:
+    *   - a dataset purged in place returns its own count;
+    *   - a staged rewrite WITHOUT dedup gets a genuinely job-free count:
     *     removed = physical merged rows − staged keep rows, both from
     *     parquet FOOTER sums — base ∪ batch footers driver-side (the
     *     same metadata-only discipline as
     *     [[TombstoneLedger.pendingExceeds]]), staged footers bounded by
     *     the write fanout this pass itself chose;
-    *   - kinds WITH dedup need the post-dedup distinct count, which no
-    *     footer can give — that one id-column-pruned count job runs
-    *     CONCURRENTLY with the staging rewrites, so its wall-clock
+    *   - a staged rewrite WITH dedup needs the post-dedup distinct count,
+    *     which no footer can give — that one id-column-pruned count job
+    *     runs CONCURRENTLY with the staging rewrites, so its wall-clock
     *     hides entirely under max(rewrites) (the rewrites read strictly
     *     more bytes). The returned count is POST-DEDUP logical rows
     *     removed from the last dataset — when a re-ingested id left
@@ -242,12 +261,14 @@ object IndexBatches {
     * forms the kinds already use. */
   def foldAndPurge(spark: SparkSession, dir: String, kind: String,
                    live: Seq[String], ts: Option[DataFrame],
-                   tsKeys: Seq[String],
                    datasets: Seq[FusedDataset]): Long = {
-    require(datasets.nonEmpty && live.nonEmpty,
-      "foldAndPurge needs at least one dataset and one live batch dir")
+    require(datasets.nonEmpty && (live.nonEmpty || ts.isDefined),
+      "foldAndPurge needs a dataset, and a live batch dir or a ledger")
     val hConf = spark.sparkContext.hadoopConfiguration
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(hConf)
+    val tsKeys = ts.fold(Seq.empty[String])(_.columns.toSeq)
+    def fanout(d: FusedDataset) = d.fanout(spark, dir)
+    def dedupKeys(d: FusedDataset) = if (live.isEmpty) Nil else d.dedupKeys
     def rawMergedOf(d: FusedDataset): DataFrame = {
       val sel = d.columns.map(col)
       live.foldLeft(
@@ -271,20 +292,20 @@ object IndexBatches {
         case Some(t) => merged0.join(t, tsKeys, "left_anti")
       }
       val keep =
-        if (d.dedupKeys.nonEmpty) purged.dropDuplicates(d.dedupKeys)
+        if (dedupKeys(d).nonEmpty) purged.dropDuplicates(dedupKeys(d))
         else purged
       val tmp = new org.apache.hadoop.fs.Path(s"$dir/.${d.name}.compact")
       d.partitionCol match {
         case Some(part) =>
-          val fanout = math.max(1, d.fanout)
-          val slices = math.max(1,
-            spark.sparkContext.defaultParallelism / fanout)
-          keep.repartition(fanout * slices, col(part),
+          val n = math.max(1, fanout(d))
+          val slices = IndexBatches.slices(spark, n)
+          keep.repartition(n * slices, col(part),
               pmod(hash(col(d.sliceKey)), lit(slices)))
             .write.mode("overwrite").partitionBy(part)
             .parquet(tmp.toString)
         case None =>
-          (if (d.fanout > 0) keep.repartition(d.fanout) else keep)
+          val n = fanout(d)
+          (if (n > 0) keep.repartition(n) else keep)
             .write.mode("overwrite").parquet(tmp.toString)
       }
       // full-purge edge, detected from the staged dir itself (the
@@ -307,14 +328,22 @@ object IndexBatches {
       }
       tmp
     }
+    // with no live batch dirs (so a ledger), a partitioned dataset is
+    // purged in place
+    def inPlace(d: FusedDataset) = live.isEmpty && d.partitionCol.isDefined
+    def purgeInPlace(d: FusedDataset): Long =
+      SelectiveVacuum(spark, new org.apache.hadoop.fs.Path(s"$dir/${d.name}"),
+        d.partitionCol.get, tsKeys.head, ts.get, slices(spark, fanout(d)))
+    val staged = datasets.filterNot(inPlace)
     val last = datasets.last
+    val lastStaged = !inPlace(last)
     // the count dataset is the LAST one (the marker carrier — the kinds'
-    // documented "returns rows removed" dataset). With dedup the count
-    // is a distinct-id job and joins the concurrent harness (hidden
-    // under max(rewrites)); without dedup it resolves from footers
-    // after staging, zero jobs.
+    // documented "returns rows removed" dataset). Staged with dedup, the
+    // count is a distinct-id job joining the concurrent harness (hidden
+    // under max(rewrites)); staged without dedup it resolves from
+    // footers after staging, zero jobs.
     val countTask: Seq[(String, () => Any)] =
-      if (ts.isDefined && last.dedupKeys.nonEmpty)
+      if (ts.isDefined && lastStaged && dedupKeys(last).nonEmpty)
         // semi-join BEFORE the dedup (same commuting argument as the
         // keep path: tsKeys ⊆ dedupKeys, groups are wholly tombstoned
         // or wholly live) — the post-dedup removed count is identical,
@@ -329,13 +358,16 @@ object IndexBatches {
           .count()))
       else Nil
     val results = concurrently[Any](spark, kind,
-      datasets.map(d => d.name -> (() => stage(d): Any)) ++ countTask)
+      datasets.map(d => d.name -> (() =>
+        (if (inPlace(d)) purgeInPlace(d) else stage(d)): Any)) ++
+        countTask)
     def tmpOf(d: FusedDataset) =
       results(d.name).asInstanceOf[org.apache.hadoop.fs.Path]
     val removed: Long = ts match {
       case None => 0L
-      case Some(_) if last.dedupKeys.nonEmpty =>
-        results("__removed").asInstanceOf[Long]
+      case Some(_) if !lastStaged || dedupKeys(last).nonEmpty =>
+        results(if (lastStaged) "__removed" else last.name)
+          .asInstanceOf[Long]
       case Some(_) =>
         // no read-side dedup: physical merged rows minus staged keep
         // rows, both from parquet footers (metadata-only — base and
@@ -350,9 +382,11 @@ object IndexBatches {
           }.sum
         mergedRows - parquetRowCount(fs, hConf, tmpOf(last))
     }
-    writeMarker(fs, tmpOf(last), mergedMarker(fs,
-      new org.apache.hadoop.fs.Path(s"$dir/${last.name}"), live))
-    for (d <- datasets) {
+    // an in-place rewrite leaves the marker at its dataset root untouched
+    if (lastStaged)
+      writeMarker(fs, tmpOf(last), mergedMarker(fs,
+        new org.apache.hadoop.fs.Path(s"$dir/${last.name}"), live))
+    for (d <- staged) {
       graft.sources.Formats.swapInto(fs, tmpOf(d),
         new org.apache.hadoop.fs.Path(s"$dir/${d.name}"))
       spark.catalog.refreshByPath(s"$dir/${d.name}")
@@ -361,6 +395,12 @@ object IndexBatches {
       fs.delete(new org.apache.hadoop.fs.Path(p), true))
     removed
   }
+
+  /** Per-partition file fanout of a rewrite over `fanout` partitions:
+    * every core writes while the layout stays at this many files per
+    * leaf. */
+  private[operators] def slices(spark: SparkSession, fanout: Int): Int =
+    math.max(1, spark.sparkContext.defaultParallelism / math.max(1, fanout))
 
   /** Driver-side row count of a tiny metadata dataset (centroid /
     * codebook class — one or a few files by construction) from parquet

@@ -16,34 +16,17 @@ import org.apache.spark.sql.SparkSession
   * paid on the side, which is the only shape that holds when the index
   * is 100 TB and the micro-batch is 100 MB.
   *
-  * Generic over the six index kinds via a small registry of their
-  * dataset lists and compact/vacuum entry points; thresholds come from
-  * the caller's policy. A due VACUUM subsumes a due compaction (every
-  * kind's vacuum folds live batch dirs first, by the
+  * Generic over the six index kinds: each [[PersistedIndex]] names its
+  * datasets and marker dataset and owns its compact/vacuum; thresholds
+  * come from the caller's policy. A due VACUUM subsumes a due compaction
+  * (every kind's vacuum folds live batch dirs first, by the
   * resurface-ordering contract), so the pass never runs both jobs. */
 object IndexMaintenance {
 
-  /** One kind's maintenance surface: the dataset names [[IndexStats]]
-    * lists, the marker-bearing dataset, and the kind's compact/vacuum
-    * entry points. */
-  final case class Kind(datasets: Seq[String], marker: String,
-                        compact: (SparkSession, String) => Unit,
-                        vacuum: (SparkSession, String) => Long)
-
-  /** The registry: every persisted index kind in this library. */
-  val kinds: Map[String, Kind] = Map(
-    "ivf" -> Kind(Seq("assignments"), "assignments",
-      Similarity.compactIndexBatches, Similarity.vacuumIndex),
-    "ivfpq" -> Kind(Seq("pqcodes", "vectors"), "pqcodes",
-      IvfPq.compactIndexBatches, IvfPq.vacuumIndex),
-    "sketch" -> Kind(Seq("sketches", "vectors"), "sketches",
-      SketchIndex.compactIndexBatches, SketchIndex.vacuumIndex),
-    "maxsim" -> Kind(Seq("tokens", "doctokens"), "tokens",
-      MaxSim.compactTokenIndexBatches, MaxSim.vacuumTokenIndex),
-    "bm25" -> Kind(Seq("postings", "doclens"), "postings",
-      Bm25.compactIndexBatches, Bm25.vacuumIndex),
-    "phrase" -> Kind(Seq("postings"), "postings",
-      PhraseSearch.compactIndexBatches, PhraseSearch.vacuumIndex))
+  /** The registry: every persisted index kind in this library, by name. */
+  val kinds: Map[String, PersistedIndex] =
+    Seq(Similarity, IvfPq, SketchIndex, MaxSim, Bm25, PhraseSearch)
+      .map(k => k.kind -> k).toMap
 
   /** What one pass did: which debts were due, and what was paid. */
   final case class Report(compactionDue: Boolean, vacuumDue: Boolean,
@@ -67,9 +50,9 @@ object IndexMaintenance {
       markerDataset = Some(k.marker))
     if (vacuumDue) // subsumes compaction: every vacuum folds batches first
       Report(compactionDue, vacuumDue, compacted = compactionDue,
-        vacuumedRows = k.vacuum(spark, dir))
+        vacuumedRows = k.vacuumIndex(spark, dir))
     else if (compactionDue) {
-      k.compact(spark, dir)
+      k.compactIndexBatches(spark, dir)
       Report(compactionDue, vacuumDue, compacted = true, vacuumedRows = 0L)
     } else Report(compactionDue, vacuumDue,
       compacted = false, vacuumedRows = 0L)
@@ -80,25 +63,19 @@ object IndexMaintenance {
   final case class SweepEntry(dir: String, kind: String, report: Report)
 
   /** Detect which registry kind owns the index at `path` from its
-    * dataset layout. Each kind writes a signature dataset no other kind
-    * has (`doctokens`→maxsim, `pqcodes`→ivfpq, `sketches`→sketch,
-    * `assignments`→ivf, `doclens`→bm25; bare `postings`→phrase), so
-    * detection needs only a directory listing — no marker file, no data
-    * read, and pre-existing indexes written by any version of the six
-    * builders are sweepable as-is. Returns None for a directory that is
-    * not an index (a warehouse root legitimately holds other datasets).
-    */
+    * dataset layout: the kind with the most datasets, among those whose
+    * datasets are all present (bm25's {postings, doclens} beats phrase's
+    * {postings}). Detection needs only a directory listing — no marker
+    * file, no data read, and pre-existing indexes written by any version
+    * of the six builders are sweepable as-is. Returns None for a
+    * directory that is not an index (a warehouse root legitimately
+    * holds other datasets). */
   def detectKind(fs: org.apache.hadoop.fs.FileSystem,
                  path: org.apache.hadoop.fs.Path): Option[String] = {
     val names = fs.listStatus(path).filter(_.isDirectory)
       .map(_.getPath.getName).toSet
-    if (names("doctokens")) Some("maxsim")
-    else if (names("pqcodes")) Some("ivfpq")
-    else if (names("sketches")) Some("sketch")
-    else if (names("assignments")) Some("ivf")
-    else if (names("doclens")) Some("bm25")
-    else if (names("postings")) Some("phrase")
-    else None
+    kinds.values.filter(_.datasets.forall(names))
+      .maxByOption(_.datasets.size).map(_.kind)
   }
 
   /** The warehouse janitor: one sweep over a root directory holding

@@ -90,14 +90,7 @@ object IndexStats {
       : (Boolean, Boolean) = {
     val liveBatches = IndexBatches.live(spark, dir,
       markerDataset.getOrElse(datasets.head)).size
-    val root = s"$dir/tombstones"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
-    val ledgerFiles = TombstoneLedger.files(fs, root)
-    val vacuumDue = TombstoneLedger
-      .pendingExceeds(conf, ledgerFiles, maxTombstones)
-      .getOrElse(TombstoneLedger.dfFrom(spark, ledgerFiles, "id")
-        .map(_.count()).getOrElse(0L) > maxTombstones)
-    (liveBatches > maxLiveBatches, vacuumDue)
+    (liveBatches > maxLiveBatches,
+      TombstoneLedger.exceeds(spark, s"$dir/tombstones", maxTombstones))
   }
 }

@@ -57,7 +57,11 @@ import graft.functions.VectorFunctions.asDouble
   * lowest centroid id on the 4-decimal-rounded cosine; ADC and exact
   * scores are rounded to 4 decimals before ranking with id tiebreaks.
   */
-object IvfPq {
+object IvfPq extends PersistedIndex {
+
+  val kind = "ivfpq"
+  protected val deleteIdCol = "vec_id"
+  protected val storedIdCol = "cand_id"
 
   /** The fitted model: normalized coarse centroids + residual codebooks.
     * Both tiny (k·d + m·ks·(d/m) doubles) — always broadcastable. */
@@ -345,14 +349,7 @@ object IvfPq {
         .write.mode("overwrite").partitionBy("centroid_id")
         .parquet(s"$dir/vectors")
     } finally coded.unpersist()
-    // a full rebuild resets the deletion ledger AND the streaming batch
-    // dirs (pre-rebuild state refers to the old corpus; the fresh
-    // pqcodes dir carries no compaction marker, so stale batch dirs
-    // would otherwise resurrect as live)
-    val fsRoot = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    TombstoneLedger.reset(fsRoot, s"$dir/tombstones")
-    fsRoot.delete(new org.apache.hadoop.fs.Path(s"$dir/batches"), true)
+    resetLifecycle(spark, dir)
   }
 
   /** Load a persisted index's model (centroids + codebooks — both tiny,
@@ -429,34 +426,20 @@ object IvfPq {
     } finally coded.unpersist()
   }
 
-  /** Fold live streaming batch directories into the base layout: both
-    * datasets fold with natural-key dedup (cand_id — a batch present in
-    * the base AND a still-live dir collapses to one row), staged swaps,
-    * the compaction marker committing inside the staged PQCODES dir
-    * (the dataset [[IndexBatches.live]] reads it from) — the same
-    * crash-every-interleaving contract as [[Bm25.compactIndexBatches]]. */
-  def compactIndexBatches(spark: SparkSession, dir: String): Unit = {
-    val live = IndexBatches.live(spark, dir, "pqcodes")
-    if (live.isEmpty) return
-    IndexBatches.foldAndPurge(spark, dir, "ivfpq", live, None, Nil,
-      fusedDatasets(spark, dir))
-  }
-
-  /** The kind's [[IndexBatches.foldAndPurge]] parameters: cand_id-deduped
-    * fold, both datasets cell-partitioned, vectors staged/swapped first,
-    * the high-water marker committing inside the staged PQCODES dir
-    * last. */
-  private def fusedDatasets(spark: SparkSession, dir: String) = {
-    val nClusters = math.max(1,
-      IndexBatches.footerRows(spark, s"$dir/centroids").toInt)
-    Seq(
-      IndexBatches.FusedDataset("vectors",
-        Seq("cand_id", "cand_vec", "centroid_id"), Seq("cand_id"),
-        Some("centroid_id"), nClusters, "cand_id"),
-      IndexBatches.FusedDataset("pqcodes",
-        Seq("cand_id", "codes", "centroid_id"), Seq("cand_id"),
-        Some("centroid_id"), nClusters, "cand_id"))
-  }
+  /** The kind's layout: cand_id-deduped fold (a batch present in the
+    * base AND a still-live dir collapses to one row), both datasets
+    * cell-partitioned, vectors staged/swapped first, the high-water
+    * marker committing inside the staged PQCODES dir last. Any vacuum
+    * crash ordering stays consistent: the shortlist derives from
+    * pqcodes∖ledger, so whichever dataset swapped first a search still
+    * ranks live vectors only. */
+  private[operators] def fusedDatasets = Seq(
+    IndexBatches.FusedDataset("vectors",
+      Seq("cand_id", "cand_vec", "centroid_id"), Seq("cand_id"),
+      Some("centroid_id"), IndexBatches.centroidFanout, "cand_id"),
+    IndexBatches.FusedDataset("pqcodes",
+      Seq("cand_id", "codes", "centroid_id"), Seq("cand_id"),
+      Some("centroid_id"), IndexBatches.centroidFanout, "cand_id"))
 
   /** Out-of-band model refresh — the maintenance step [[appendToIndex]]
     * and the streaming sink deliberately skip: batches encode against
@@ -536,89 +519,6 @@ object IvfPq {
     } finally coded.unpersist()
   }
 
-  /** Append-only deletion (right-to-be-forgotten for the PQ index, the
-    * fourth persisted index kind to carry the shared ledger contract):
-    * `ids` (a `vec_id` column) land in the tombstone ledger; codes and
-    * vectors stay on disk until [[vacuumIndex]], but [[searchIndex]]
-    * masks them immediately — a tombstoned vector can never enter the
-    * ADC shortlist, so it can never be retrieved. One tiny parquet
-    * append regardless of index size. */
-  def deleteFromIndex(ids: DataFrame, dir: String): Unit =
-    TombstoneLedger.append(ids.select(col("vec_id")), s"$dir/tombstones")
-
-  /** Test seam: runs after [[vacuumIndex]] snapshots the ledger file
-    * list — the race window a concurrent [[deleteFromIndex]] lands in.
-    * Production no-op. */
-  private[graft] var vacuumAfterSnapshotHook: () => Unit = () => ()
-
-  /** Physically remove tombstoned vectors from BOTH index datasets —
-    * pqcodes and vectors. With no live streaming batch dirs, each goes
-    * through [[SelectiveVacuum]]: only the centroid cells CONTAINING
-    * tombstoned vectors are rewritten and leaf-swapped (O(affected
-    * cells), not O(index); the compaction marker at the pqcodes root is
-    * untouched by leaf swaps). With live batch dirs the fold already
-    * forces a full staged rewrite of both datasets, so the purge FUSES
-    * into it — (base ∪ batches) deduped ∖ ledger, ONE rewrite per
-    * dataset instead of the old compact-then-vacuum double write (the
-    * same fusion [[SketchIndex.vacuumIndex]] shipped first; at scale
-    * the vacuum-with-debt path writes each byte once). Crash contract
-    * unchanged from compaction: vectors swaps first, the merged
-    * high-water marker commits inside the staged PQCODES dir, batch
-    * dirs are deleted only after both swaps, and the ledger clears last
-    * of all — ONE ledger enumeration feeds the anti-join and the
-    * cleanup, so a tombstone landing mid-pass is neither applied nor
-    * deleted (it survives and [[searchIndex]] keeps masking it). Any
-    * crash ordering stays consistent: the shortlist derives from
-    * pqcodes∖ledger, so whichever dataset swapped first a search still
-    * ranks live vectors only. Returns code rows removed. */
-  def vacuumIndex(spark: SparkSession, dir: String): Long = {
-    val root = s"$dir/tombstones"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val consumed = TombstoneLedger.files(fs, root)
-    val tsOpt = TombstoneLedger.dfFrom(spark, consumed, "cand_id")
-    if (tsOpt.isEmpty) {
-      // nothing to purge: pay any compaction debt and leave (folding
-      // here keeps the vacuum-subsumes-compaction maintenance contract
-      // consistent with the sketch and maxsim kinds)
-      compactIndexBatches(spark, dir)
-      return 0L
-    }
-    val ts = tsOpt.get
-    vacuumAfterSnapshotHook()
-    val live = IndexBatches.live(spark, dir, "pqcodes")
-    val removed = if (live.isEmpty) {
-      // no compaction debt: both rewrites stay partition-SELECTIVE and
-      // run as concurrent job chains (independent datasets, one reader
-      // each — wall-clock max, not sum; the shared staging harness)
-      val nClusters = IndexBatches.footerRows(spark, s"$dir/centroids").toInt
-      val slices = math.max(1,
-        spark.sparkContext.defaultParallelism / math.max(1, nClusters))
-      IndexBatches.concurrently(spark, "ivfpq-vacuum",
-        Seq("pqcodes", "vectors").map(ds => ds -> { () =>
-          SelectiveVacuum(spark,
-            new org.apache.hadoop.fs.Path(s"$dir/$ds"), "centroid_id",
-            "cand_id", ts, slices)
-        })).apply("pqcodes")
-    } else {
-      // compaction debt AND vacuum debt: the purge fuses into the fold
-      // — (base ∪ batches) dedup ∖ ledger, one staged rewrite per
-      // dataset, both staged concurrently, the removed count riding the
-      // pqcodes write job (shared [[IndexBatches.foldAndPurge]]
-      // machinery). Crash contract unchanged: vectors swaps first, the
-      // merged high-water marker commits inside the staged PQCODES dir,
-      // batch dirs are deleted only after both swaps, the ledger clears
-      // last of all. Returns POST-DEDUP logical code rows removed — a
-      // re-ingested cand_id duplicated across base and batch dirs
-      // collapses in the fold regardless of the purge, so physical rows
-      // can exceed this count.
-      IndexBatches.foldAndPurge(spark, dir, "ivfpq", live, Some(ts),
-        Seq("cand_id"), fusedDatasets(spark, dir))
-    }
-    TombstoneLedger.clear(fs, root, consumed)
-    removed
-  }
-
   /** Search a persisted [[writeIndex]] index. Result-identical to
     * running [[ivfpqTopK]] with the same parameters over the corpus
     * (asserted in IvfPqSpec): the ADC pass reads ONLY the probed cells'
@@ -652,25 +552,12 @@ object IvfPq {
     // pruning applies to them too); while any exist, both datasets
     // dedup on cand_id so the compaction crash window never
     // double-counts (same contract as Bm25.searchIndex)
-    val liveDirs = IndexBatches.live(spark, dir, "pqcodes")
-    val cCols = Seq("cand_id", "codes", "centroid_id").map(col)
-    val rawCodes0 = liveDirs.foldLeft(
-        spark.read.parquet(s"$dir/pqcodes").select(cCols: _*)
-          .where(col("centroid_id").isin(probedCells: _*))) { (acc, p) =>
-      acc.union(spark.read.parquet(s"$p/pqcodes").select(cCols: _*)
-        .where(col("centroid_id").isin(probedCells: _*)))
-    }
-    val rawCodes =
-      if (liveDirs.isEmpty) rawCodes0
-      else rawCodes0.dropDuplicates("cand_id")
-    // anti-join the deletion ledger BEFORE the ADC ranking, so a
-    // tombstoned vector can never enter the shortlist; unhinted — AQE
-    // broadcasts the ledger while it is small. Catalyst pushes the
-    // centroid_id partition filter through the anti-join's left side,
-    // so masking never widens the read.
-    val liveCodes = TombstoneLedger.df(spark, s"$dir/tombstones", "cand_id")
-      .map(ts => rawCodes.join(ts, Seq("cand_id"), "left_anti"))
-      .getOrElse(rawCodes)
+    val liveDirs = liveBatchDirs(spark, dir)
+    val probed = (df: DataFrame) =>
+      df.where(col("centroid_id").isin(probedCells: _*))
+    // the ledger anti-join lands BEFORE the ADC ranking, so a tombstoned
+    // vector can never enter the shortlist
+    val liveCodes = readLive(spark, dir, "pqcodes", liveDirs, probed)
     val shortlist = liveCodes
       .join(broadcast(probes), Seq("centroid_id"))
       .where(col("query_id") =!= col("cand_id"))
@@ -680,15 +567,7 @@ object IvfPq {
       .withColumn("__r", row_number().over(adcW))
       .where(col("__r") <= rerank)
       .select("query_id", "cand_id")
-    val vCols = Seq("cand_id", "cand_vec", "centroid_id").map(col)
-    val vecs0 = liveDirs.foldLeft(
-        spark.read.parquet(s"$dir/vectors").select(vCols: _*)
-          .where(col("centroid_id").isin(probedCells: _*))) { (acc, p) =>
-      acc.union(spark.read.parquet(s"$p/vectors").select(vCols: _*)
-        .where(col("centroid_id").isin(probedCells: _*)))
-    }
-    val vecs = (if (liveDirs.isEmpty) vecs0
-                else vecs0.dropDuplicates("cand_id"))
+    val vecs = readLive(spark, dir, "vectors", liveDirs, probed, mask = false)
       .select(col("cand_id"), col("cand_vec").as("cv"))
     rerankExact(vecs, shortlist, qRows, k)
   }

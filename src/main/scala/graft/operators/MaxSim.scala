@@ -38,7 +38,11 @@ import graft.functions.VectorFunctions.{asDouble, cosine}
   * INTEGERS — immune to partial-aggregation order — and the final score
   * is one exact integer division by 10⁴. Ties break by doc id.
   */
-object MaxSim {
+object MaxSim extends PersistedIndex {
+
+  val kind = "maxsim"
+  protected val deleteIdCol = "doc_id"
+  protected val storedIdCol = "doc_id"
 
   /** round(x·10⁴) half-away-from-zero as a long — integer-exact
     * accumulation domain for order-independent sums (the same shape as
@@ -218,15 +222,7 @@ object MaxSim {
         pmod(hash(col("tok")), lit(slices)))
       .write.mode("overwrite").partitionBy("doc_bucket")
       .parquet(s"$dir/doctokens")
-    // a full rebuild resets the deletion ledger AND the streaming batch
-    // dirs (pre-rebuild tombstones/batches refer to the old corpus —
-    // same contract as the other indexes; the fresh tokens/ overwrite
-    // above carries no high-water marker, so stale batch dirs left
-    // standing would resurrect as live)
-    val fsRoot = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    fsRoot.delete(new org.apache.hadoop.fs.Path(s"$dir/batches"), true)
-    TombstoneLedger.reset(fsRoot, s"$dir/tombstones")
+    resetLifecycle(spark, dir)
   }
 
   /** Precomputed probe assignments for [[searchTokenIndex]]: each query
@@ -334,28 +330,15 @@ object MaxSim {
     val probedCells = plan.probedCells
     val wTok = Window.partitionBy("qtid")
       .orderBy(desc("tc"), asc("tid"))
-    // anti-join the deletion ledger BEFORE candidate generation, so a
-    // tombstoned document can neither seed candidates nor be fetched;
-    // unhinted — AQE broadcasts the ledger while it is small
-    val ledger = TombstoneLedger.df(spark, s"$dir/tombstones", "doc_id")
     // live streaming batch dirs union in transparently (the probed-cell
     // partition filter prunes them too); while any exist, both layouts
     // dedup on the (doc_id, tok) natural key so the compaction crash
-    // window never double-counts (same contract as IvfPq.searchIndex)
-    val liveDirs = IndexBatches.live(spark, dir, "tokens")
-    val tCols = Seq("doc_id", "tok", "vec", "centroid_id").map(col)
-    val rawTokens0 = liveDirs.foldLeft(
-        spark.read.parquet(s"$dir/tokens").select(tCols: _*)
-          .where(col("centroid_id").isin(probedCells: _*))) { (acc, p) =>
-      acc.union(spark.read.parquet(s"$p/tokens").select(tCols: _*)
-        .where(col("centroid_id").isin(probedCells: _*)))
-    }
-    val rawTokens =
-      if (liveDirs.isEmpty) rawTokens0
-      else rawTokens0.dropDuplicates("doc_id", "tok")
-    val liveTokens = ledger
-      .map(ts => rawTokens.join(ts, Seq("doc_id"), "left_anti"))
-      .getOrElse(rawTokens)
+    // window never double-counts (same contract as IvfPq.searchIndex).
+    // The ledger anti-join lands BEFORE candidate generation, so a
+    // tombstoned document can neither seed candidates nor be fetched.
+    val liveDirs = liveBatchDirs(spark, dir)
+    val liveTokens = readLive(spark, dir, "tokens", liveDirs,
+      _.where(col("centroid_id").isin(probedCells: _*)))
     // the candidate PAIR frame stays DISTRIBUTED: one eager
     // release-tracked localCheckpoint (StagingCaches.checkpointed —
     // OperatorCaches.releaseAll unpins it after the pass is consumed)
@@ -391,22 +374,16 @@ object MaxSim {
         org.apache.spark.unsafe.hash.Murmur3_x86_32.hashLong(d, 42),
         DocBuckets))
       .distinct.toSeq
-    val dCols = Seq("doc_id", "tok", "vec", "doc_bucket").map(col)
     // candidate-document prune: the bucket list stays a literal
     // partition filter (≤ DocBuckets values), but the per-row id prune
     // is a broadcast SEMI-join against the local candidate relation —
     // an isin over candIds would embed up to |q|·tokenTopT literals in
     // the plan (driver-side analysis hazard at the documented bounds)
-    def bucketed(p: String) = spark.read.parquet(p).select(dCols: _*)
-      .where(col("doc_bucket").isin(buckets.map(Integer.valueOf): _*))
-      .join(broadcast(candDocs), Seq("doc_id"), "left_semi")
-    val fetched0 = liveDirs.foldLeft(bucketed(s"$dir/doctokens")) {
-      (acc, p) => acc.union(bucketed(s"$p/doctokens"))
-    }
-    val fetched =
-      (if (liveDirs.isEmpty) fetched0
-       else fetched0.dropDuplicates("doc_id", "tok"))
-        .select(col("doc_id"), asDouble(col("vec")).as("dv"))
+    val fetched = readLive(spark, dir, "doctokens", liveDirs,
+        _.where(col("doc_bucket").isin(buckets.map(Integer.valueOf): _*))
+          .join(broadcast(candDocs), Seq("doc_id"), "left_semi"),
+        mask = false)
+      .select(col("doc_id"), asDouble(col("vec")).as("dv"))
     val q = queryTokens.select(col("query_id"), col("tok"),
       asDouble(col("vec")).as("qv"))
     scoreAndRank(
@@ -463,8 +440,8 @@ object MaxSim {
     * partitioning (`centroid_id=` / `doc_bucket=`), so the search-path
     * probes and bucket fetches prune batch dirs exactly like the
     * standing data. */
-  def appendTokenBatchDir(docTokens: DataFrame, dir: String, tag: String,
-                          batchId: Long): Unit = {
+  def appendBatchDir(docTokens: DataFrame, dir: String, tag: String,
+                     batchId: Long): Unit = {
     val spark = docTokens.sparkSession
     val cents = spark.read.parquet(s"$dir/centroids")
     val toks = StagingCaches.cache(
@@ -496,41 +473,20 @@ object MaxSim {
     } finally toks.unpersist()
   }
 
-  /** Fold live streaming batch directories into both standing layouts:
-    * each folds with natural-key dedup on (doc_id, tok) — a token
-    * present in the base AND a still-live dir collapses to one row, so
-    * the compaction crash window never double-counts — behind staged
-    * swaps, the high-water marker committing INSIDE the staged TOKENS
-    * dir (the dataset [[IndexBatches.live]] reads it from; doctokens
-    * swaps FIRST so a crash between the two swaps leaves the marker
-    * unset and the batch dirs still live, where read-side dedup
-    * absorbs the already-folded rows). Batch-dir deletion afterwards
-    * is best-effort — the marker already suppresses survivors. */
-  def compactTokenIndexBatches(spark: org.apache.spark.sql.SparkSession,
-                               dir: String): Unit = {
-    val live = IndexBatches.live(spark, dir, "tokens")
-    if (live.isEmpty) return
-    IndexBatches.foldAndPurge(spark, dir, "maxsim", live, None, Nil,
-      fusedDatasets(spark, dir))
-  }
-
-  /** The kind's [[IndexBatches.foldAndPurge]] parameters: both layouts
-    * fold with natural-key dedup on (doc_id, tok), doctokens staged/
-    * swapped first, the high-water marker committing inside the staged
-    * TOKENS dir last (the dataset [[IndexBatches.live]] reads it
-    * from). */
-  private def fusedDatasets(spark: org.apache.spark.sql.SparkSession,
-                            dir: String) = {
-    val nClusters = math.max(1,
-      IndexBatches.footerRows(spark, s"$dir/centroids").toInt)
-    Seq(
-      IndexBatches.FusedDataset("doctokens",
-        Seq("doc_id", "tok", "vec", "doc_bucket"), Seq("doc_id", "tok"),
-        Some("doc_bucket"), DocBuckets, "doc_id"),
-      IndexBatches.FusedDataset("tokens",
-        Seq("doc_id", "tok", "vec", "centroid_id"), Seq("doc_id", "tok"),
-        Some("centroid_id"), nClusters, "doc_id"))
-  }
+  /** The kind's layout: both layouts fold with natural-key dedup on
+    * (doc_id, tok), doctokens staged/swapped first, the high-water
+    * marker committing inside the staged TOKENS dir last (the dataset
+    * [[IndexBatches.live]] reads it from). Any vacuum crash ordering
+    * stays consistent: candidates derive from tokens∖ledger and the
+    * fetch from doctokens∖ledger, so whichever layout swapped first a
+    * search still scores live documents only. */
+  private[operators] def fusedDatasets = Seq(
+    IndexBatches.FusedDataset("doctokens",
+      Seq("doc_id", "tok", "vec", "doc_bucket"), Seq("doc_id", "tok"),
+      Some("doc_bucket"), (_, _) => DocBuckets, "doc_id"),
+    IndexBatches.FusedDataset("tokens",
+      Seq("doc_id", "tok", "vec", "centroid_id"), Seq("doc_id", "tok"),
+      Some("centroid_id"), IndexBatches.centroidFanout, "doc_id"))
 
   /** Out-of-band quantizer refresh — the maintenance step
     * [[appendToTokenIndex]] deliberately skips, completing the
@@ -563,7 +519,7 @@ object MaxSim {
     // tokens, and the tokens swap below would otherwise discard the
     // compaction high-water marker stored inside the directory
     // (resurrecting folded-but-undeleted batches as duplicates)
-    compactTokenIndexBatches(spark, dir)
+    compactIndexBatches(spark, dir)
     val stored = spark.read.parquet(s"$dir/tokens")
     val dTok = stored.select(
       packedTid(col("doc_id"), col("tok")).as("tid"),
@@ -597,93 +553,6 @@ object MaxSim {
       new org.apache.hadoop.fs.Path(s"$dir/centroids"))
     spark.catalog.refreshByPath(s"$dir/tokens")
     spark.catalog.refreshByPath(s"$dir/centroids")
-  }
-
-  /** Append-only deletion (right-to-be-forgotten for the token index —
-    * the FIFTH persisted index kind carrying the shared ledger
-    * contract): `ids` (a `doc_id` column) land in the tombstone ledger;
-    * both layouts stay on disk until [[vacuumTokenIndex]], but
-    * [[searchTokenIndex]] masks them immediately — a tombstoned
-    * document can neither seed candidates nor be fetched. One tiny
-    * parquet append regardless of index size. */
-  def deleteFromTokenIndex(ids: DataFrame, dir: String): Unit =
-    TombstoneLedger.append(ids.select(col("doc_id")), s"$dir/tombstones")
-
-  /** Test seam: runs after [[vacuumTokenIndex]] snapshots the ledger
-    * file list — the race window a concurrent [[deleteFromTokenIndex]]
-    * lands in. Production no-op. */
-  private[graft] var vacuumAfterSnapshotHook: () => Unit = () => ()
-
-  /** Physically remove tombstoned documents' tokens from BOTH layouts.
-    * With no live streaming batch dirs, each goes through
-    * [[SelectiveVacuum]]: only the centroid cells (tokens/) and doc
-    * buckets (doctokens/) CONTAINING tombstoned documents are rewritten
-    * and leaf-swapped, O(affected partitions) instead of O(index); the
-    * compaction high-water marker at the tokens root is untouched by
-    * leaf swaps. With live batch dirs the fold already forces a full
-    * staged rewrite of both layouts, so the purge FUSES into it —
-    * (base ∪ batches) deduped ∖ ledger, ONE rewrite per layout instead
-    * of the old compact-then-vacuum double write (the fusion
-    * [[SketchIndex.vacuumIndex]] shipped first; at scale the
-    * vacuum-with-debt path writes each byte once). Crash contract
-    * unchanged from compaction: both rewrites stage concurrently, then
-    * doctokens swaps FIRST and the merged high-water marker commits
-    * inside the staged TOKENS dir, batch dirs are deleted only after
-    * both swaps, and the consumed ledger files clear last of all (the
-    * single-enumeration discipline: a tombstone landing mid-pass
-    * survives and keeps masking). Any crash ordering stays consistent —
-    * candidates derive from tokens∖ledger and the fetch from
-    * doctokens∖ledger, so whichever layout swapped first a search still
-    * scores live documents only. Returns token rows removed. */
-  def vacuumTokenIndex(spark: org.apache.spark.sql.SparkSession,
-                       dir: String): Long = {
-    val root = s"$dir/tombstones"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val consumed = TombstoneLedger.files(fs, root)
-    val tsOpt = TombstoneLedger.dfFrom(spark, consumed, "doc_id")
-    if (tsOpt.isEmpty) {
-      // nothing to purge: pay any compaction debt and leave (folding
-      // here keeps the vacuum-subsumes-compaction maintenance contract)
-      compactTokenIndexBatches(spark, dir)
-      return 0L
-    }
-    val ts = tsOpt.get
-    vacuumAfterSnapshotHook()
-    val live = IndexBatches.live(spark, dir, "tokens")
-    val removed = if (live.isEmpty) {
-      // no compaction debt: both rewrites stay partition-SELECTIVE and
-      // run as concurrent Spark job chains (independent datasets, one
-      // reader each — wall-clock max(tokens, doctokens), not the sum;
-      // the shared [[IndexBatches.concurrently]] harness: dedicated
-      // pool, bounded await, fail-fast sibling cancellation)
-      val nClusters = IndexBatches.footerRows(spark, s"$dir/centroids").toInt
-      IndexBatches.concurrently(spark, "maxsim-vacuum", Seq(
-        ("doctokens", DocBuckets),
-        ("tokens", math.max(1, nClusters))).map { case (ds, fanout) =>
-        ds -> { () =>
-          SelectiveVacuum(spark,
-            new org.apache.hadoop.fs.Path(s"$dir/$ds"),
-            if (ds == "tokens") "centroid_id" else "doc_bucket",
-            "doc_id", ts, slices = math.max(1,
-              spark.sparkContext.defaultParallelism / fanout))
-        }
-      }).apply("tokens")
-    } else {
-      // compaction debt AND vacuum debt: the purge fuses into the fold
-      // — (base ∪ batches) dedup ∖ ledger, ONE staged rewrite per
-      // layout, both staged concurrently then swapped sequentially in
-      // the compaction order (doctokens first, tokens + marker last),
-      // with the removed count riding the tokens write job (shared
-      // [[IndexBatches.foldAndPurge]] machinery). Returns POST-DEDUP
-      // logical token rows removed — a (doc_id, tok) row duplicated
-      // across base and a still-live batch dir collapses in the fold
-      // regardless of the purge.
-      IndexBatches.foldAndPurge(spark, dir, "maxsim", live, Some(ts),
-        Seq("doc_id"), fusedDatasets(spark, dir))
-    }
-    TombstoneLedger.clear(fs, root, consumed)
-    removed
   }
 
   /** Split one pooled vector into `m` contiguous subvector "tokens" —

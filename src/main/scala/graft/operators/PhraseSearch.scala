@@ -33,7 +33,11 @@ import graft.functions.TextFunctions.tokens
   * counts exactly once per offset because each posting row joins each
   * offset row once, at different starts.
   */
-object PhraseSearch {
+object PhraseSearch extends PersistedIndex {
+
+  val kind = "phrase"
+  protected val deleteIdCol = "doc_id"
+  protected val storedIdCol = "doc_id"
 
   /** Positional postings: one (term, doc_id, pos) row per token, pos
     * 1-based. Scan-local (one generator, no shuffle). */
@@ -85,16 +89,7 @@ object PhraseSearch {
     * postings for a k-term phrase, not the corpus. */
   def writeIndex(docs: DataFrame, dir: String): Unit = {
     writePostings(docs, dir, "overwrite")
-    // a full rebuild resets the deletion ledger AND the streaming batch
-    // dirs: standing tombstones/batches refer to the pre-rebuild corpus
-    // (the fresh postings dir carries no compaction marker, so stale
-    // batch dirs would otherwise resurrect as "live"), and the
-    // caller-provided corpus IS the post-rebuild truth (same contract
-    // as Similarity.writeIndex)
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      docs.sparkSession.sparkContext.hadoopConfiguration)
-    TombstoneLedger.reset(fs, s"$dir/tombstones")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/batches"), true)
+    resetLifecycle(docs.sparkSession, dir)
   }
 
   private def writePostings(docs: DataFrame, dir: String,
@@ -137,91 +132,16 @@ object PhraseSearch {
         .withColumn("term_bucket", pmod(hash(col("term")), lit(IndexBuckets))),
       dir, tag, batchId, "term_bucket")
 
-  /** Fold live streaming batch directories into the base postings
-    * layout: one read of base ∪ batches, one clustered rewrite behind
-    * the crash-safe staged swap carrying the compaction high-water
-    * marker (inside the staged dir — atomic with the data); batch-dir
-    * deletion afterwards is best-effort, the marker already suppresses
-    * survivors. */
-  def compactIndexBatches(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Unit = {
-    val live = IndexBatches.live(spark, dir, "postings")
-    if (live.isEmpty) return
-    IndexBatches.foldAndPurge(spark, dir, "phrase", live, None, Nil,
-      fusedDatasets)
-  }
-
-  /** The kind's [[IndexBatches.foldAndPurge]] parameters: one
-    * term-bucket-partitioned positional dataset carrying the marker; NO
-    * natural-key dedup (a position row is not unique by (term, doc_id)
-    * and id discipline is the caller's — [[appendToIndex]]'s contract),
-    * and batch dirs ARE the dataset (single-dataset
-    * [[IndexBatches.writeBatch]] layout). */
-  private val fusedDatasets = Seq(
+  /** The kind's layout: one term-bucket-partitioned positional dataset
+    * carrying the marker; NO natural-key dedup (a position row is not
+    * unique by (term, doc_id) and id discipline is the caller's —
+    * [[appendToIndex]]'s contract), and batch dirs ARE the dataset
+    * (single-dataset [[IndexBatches.writeBatch]] layout). */
+  private[operators] def fusedDatasets = Seq(
     IndexBatches.FusedDataset("postings",
       Seq("term", "doc_id", "pos", "term_bucket"), Nil,
-      Some("term_bucket"), IndexBuckets, "doc_id", batchNested = false))
-
-  /** Append-only deletion (the right-to-be-forgotten op for TEXT
-    * indexes, the twin of [[Similarity.deleteFromIndex]]): `ids` (a
-    * `doc_id` column) land in the `tombstones` ledger; the postings
-    * stay on disk until [[vacuumIndex]], but [[searchIndex]] masks them
-    * immediately — a tombstoned document can never produce a phrase
-    * hit. One tiny parquet append regardless of index size. */
-  def deleteFromIndex(ids: DataFrame, dir: String): Unit =
-    TombstoneLedger.append(ids.select(col("doc_id")), s"$dir/tombstones")
-
-  /** EXACTLY-ONCE streaming deletion: the micro-batch's doc ids land in
-    * a batch-scoped ledger dataset (overwrite by (tag, batchId) —
-    * idempotent under foreachBatch replay); [[searchIndex]] masks them
-    * immediately, [[vacuumIndex]] folds them physically. */
-  def deleteBatchDir(ids: DataFrame, dir: String, tag: String,
-                     batchId: Long): Unit =
-    TombstoneLedger.appendBatch(ids.select(col("doc_id")),
-      s"$dir/tombstones", tag, batchId)
-
-  /** Test seam: runs after [[vacuumIndex]] snapshots the ledger file
-    * list and before it rewrites/cleans up — the race window a
-    * concurrent [[deleteFromIndex]] lands in. Production no-op. */
-  private[graft] var vacuumAfterSnapshotHook: () => Unit = () => ()
-
-  /** Physically remove tombstoned documents' postings, then clear
-    * exactly the ledger files this pass consumed (a tombstone landing
-    * mid-pass survives — ONE ledger enumeration feeds both the
-    * anti-join and the cleanup). With no live streaming batch dirs the
-    * rewrite is partition-SELECTIVE via [[SelectiveVacuum]]: only the
-    * term buckets CONTAINING a tombstoned document's postings are
-    * rewritten and leaf-swapped (O(affected buckets), not O(index);
-    * the compaction marker at the postings root is untouched). With
-    * live batch dirs the fold already forces a full staged rewrite, so
-    * the purge FUSES into it — (base ∪ batches) ∖ ledger in ONE
-    * rewrite, each byte written once ([[IndexBatches.foldAndPurge]]; a
-    * delete-then-re-ingest within the epoch still resolves to DELETED —
-    * the same answer [[searchIndex]] gives — because the ledger
-    * snapshot covers the folded batches). Returns postings rows
-    * removed. */
-  def vacuumIndex(spark: org.apache.spark.sql.SparkSession,
-                  dir: String): Long = {
-    val root = s"$dir/tombstones"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val consumed = TombstoneLedger.files(fs, root)
-    val ts = TombstoneLedger.dfFrom(spark, consumed, "doc_id")
-      .getOrElse(return 0L)
-    vacuumAfterSnapshotHook()
-    val live = IndexBatches.live(spark, dir, "postings")
-    val removed = if (live.isEmpty) {
-      SelectiveVacuum(spark,
-        new org.apache.hadoop.fs.Path(s"$dir/postings"), "term_bucket",
-        "doc_id", ts, slices = math.max(1,
-          spark.sparkContext.defaultParallelism / IndexBuckets))
-    } else {
-      IndexBatches.foldAndPurge(spark, dir, "phrase", live, Some(ts),
-        Seq("doc_id"), fusedDatasets)
-    }
-    TombstoneLedger.clear(fs, root, consumed)
-    removed
-  }
+      Some("term_bucket"), (_, _) => IndexBuckets, "doc_id",
+      batchNested = false))
 
   /** Search a persisted [[writeIndex]] index — result-identical to
     * [[phraseHits]] over the original corpus (PhraseSearchSpec pins it),
@@ -247,20 +167,9 @@ object PhraseSearch {
     val smallQ = qTermProbe.length <= maxTerms
     // live streaming batch dirs union in transparently (they carry the
     // same term_bucket partitioning, so the prune below prunes them
-    // too); dirs at or below the compaction marker are already merged
-    val pCols = Seq("term", "doc_id", "pos", "term_bucket").map(col)
-    val rawBase = spark.read.parquet(s"$dir/postings").select(pCols: _*)
-    // anti-join the deletion ledger BEFORE vote counting, so a
-    // tombstoned document can never produce a phrase hit; unhinted —
-    // AQE broadcasts the ledger while it is small
-    val raw = IndexBatches.live(spark, dir, "postings")
-      .foldLeft(rawBase) { (acc, p) =>
-        acc.union(spark.read.parquet(p).select(pCols: _*))
-      }
-    val masked = TombstoneLedger.df(spark, s"$dir/tombstones", "doc_id")
-      .map(ts => raw.join(ts, Seq("doc_id"), "left_anti"))
-      .getOrElse(raw)
-    val postings = masked
+    // too); the ledger anti-join lands BEFORE vote counting, so a
+    // tombstoned document can never produce a phrase hit
+    val postings = readLive(spark, dir, "postings", liveBatchDirs(spark, dir))
       // 1-based stored positions back to the vote arithmetic's 0-based
       .select(col("term"), col("doc_id"), (col("pos") - 1).as("p0"),
         col("term_bucket"))

@@ -16,7 +16,11 @@ import graft.functions.VectorFunctions._
   * a broadcast table in both phases; the candidate side never re-shuffles
   * per query.
   */
-object Similarity {
+object Similarity extends PersistedIndex {
+
+  val kind = "ivf"
+  protected val deleteIdCol = "vec_id"
+  protected val storedIdCol = "cand_id"
 
   /** Deterministic Lloyd's k-means coarse quantizer for [[ivfTopK]].
     *
@@ -265,15 +269,7 @@ object Similarity {
           asDouble(col("embedding")).as("cand_vec")),
         cents, "cand_id", "cand_vec", 1),
       nClusters, s"$dir/assignments")
-    // a full rebuild resets the deletion ledger AND the streaming batch
-    // dirs: standing tombstones/batches refer to the pre-rebuild corpus
-    // (the fresh assignments dir carries no compaction marker, so stale
-    // batch dirs would otherwise resurrect as "live"), and the
-    // caller-provided candidate set IS the post-rebuild truth
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      candidates.sparkSession.sparkContext.hadoopConfiguration)
-    TombstoneLedger.reset(fs, s"$dir/tombstones")
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/batches"), true)
+    resetLifecycle(candidates.sparkSession, dir)
   }
 
   /** Cluster assignment rows toward their output directory before the
@@ -308,12 +304,6 @@ object Similarity {
                   filter: Option[org.apache.spark.sql.Column] = None)
       : DataFrame = {
     val cents = normalizeCentroids(spark.read.parquet(s"$dir/centroids"))
-    val assigned = spark.read.parquet(s"$dir/assignments")
-      .select(col("cand_id"), col("cand_vec"), col("centroid_id"))
-    val all0 = liveBatchDirs(spark, dir).foldLeft(assigned) { (acc, p) =>
-      acc.union(spark.read.parquet(p)
-        .select(col("cand_id"), col("cand_vec"), col("centroid_id")))
-    }
     // FILTERED search (predicate + vector search, the "within category"
     // shape): the predicate applies BEFORE ranking — candidates failing
     // it never occupy shortlist slots, so the top-k is the top-k OF THE
@@ -323,102 +313,23 @@ object Similarity {
     // probes still prune partitions first. Recall caveat is the
     // standard one: a highly selective predicate empties probed cells —
     // raise nProbe (or brute-force the filtered slice) as selectivity
-    // grows.
-    val all = filter.fold(all0)(all0.where)
-    // anti-join the deletion ledger BEFORE ranking, so a tombstoned
-    // vector can never occupy a top-k slot; unhinted — AQE broadcasts
-    // the ledger while it is small and shuffles past that (deletions
-    // are unbounded over an index's lifetime until vacuum)
-    val live = tombstoneDf(spark, dir)
-      .map(ts => all.join(ts, Seq("cand_id"), "left_anti"))
-      .getOrElse(all)
+    // grows. The ledger anti-join also lands BEFORE ranking, so a
+    // tombstoned vector can never occupy a top-k slot.
+    val live = readLive(spark, dir, "assignments", liveBatchDirs(spark, dir),
+      scan = df => filter.fold(df)(df.where))
     probeRank(live, queries, cents, k, nProbe)
   }
 
-  /** Append-only deletion (the training-data right-to-be-forgotten op):
-    * `ids` (a `vec_id` column) land in the `tombstones` ledger; the
-    * vectors stay on disk until [[vacuumIndex]], but [[searchIndex]]
-    * filters them immediately. Never rewrites corpus partitions — a
-    * delete costs one tiny parquet append regardless of index size. */
-  def deleteFromIndex(ids: DataFrame, dir: String): Unit =
-    TombstoneLedger.append(ids.select(col("vec_id")), s"$dir/tombstones")
-
-  /** EXACTLY-ONCE streaming deletion: the micro-batch's ids land in the
-    * batch-scoped ledger dataset
-    * `<dir>/tombstones/<md5(tag)>-<batchId>` with OVERWRITE, so a
-    * replayed batch (foreachBatch is at-least-once) rewrites its own
-    * location instead of accreting duplicate ledger rows — the same
-    * idempotency-by-placement contract as [[appendBatchDir]]. (Duplicate
-    * tombstones would be semantically harmless — the ledger reads
-    * distinct — but the ledger would grow with every replay.) */
-  def deleteBatchDir(ids: DataFrame, dir: String, tag: String,
-                     batchId: Long): Unit =
-    TombstoneLedger.appendBatch(ids.select(col("vec_id")),
-      s"$dir/tombstones", tag, batchId)
-
-  private def tombstoneDf(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Option[DataFrame] =
-    TombstoneLedger.df(spark, s"$dir/tombstones", "cand_id")
-
-  /** Test seam: runs after [[vacuumIndex]] snapshots the ledger file list
-    * and before it rewrites/cleans up — the race-window a concurrent
-    * [[deleteFromIndex]] lands in. Production leaves it a no-op. */
-  private[graft] var vacuumAfterSnapshotHook: () => Unit = () => ()
-
-  /** The kind's [[IndexBatches.foldAndPurge]] parameters: one
-    * cell-partitioned dataset carrying the marker; NO natural-key dedup
-    * (id discipline is the caller's — [[appendToIndex]]'s contract),
-    * and batch dirs ARE the dataset (no nested subdir — the
-    * single-dataset [[IndexBatches.writeBatch]] layout). */
-  private def fusedDatasets(spark: org.apache.spark.sql.SparkSession,
-                            dir: String) = Seq(
+  /** The kind's layout: one cell-partitioned dataset carrying the
+    * marker; NO natural-key dedup (id discipline is the caller's —
+    * [[appendToIndex]]'s contract), and batch dirs ARE the dataset (no
+    * nested subdir — the single-dataset [[IndexBatches.writeBatch]]
+    * layout). */
+  private[operators] def fusedDatasets = Seq(
     IndexBatches.FusedDataset("assignments",
       Seq("cand_id", "cand_vec", "centroid_id"), Nil,
-      Some("centroid_id"), math.max(1,
-        IndexBatches.footerRows(spark, s"$dir/centroids").toInt),
-      "cand_id", batchNested = false))
-
-  /** Physically remove tombstoned vectors, then clear exactly the
-    * ledger files this pass consumed (concurrent new tombstones
-    * survive). With no live streaming batch dirs, the rewrite is
-    * partition-SELECTIVE — only the centroid cells containing
-    * tombstoned vectors are rewritten and leaf-swapped
-    * ([[SelectiveVacuum]] — O(affected cells), not O(index); the
-    * compaction high-water marker lives at the dataset ROOT and leaf
-    * swaps never touch it). With live batch dirs the fold already
-    * forces a full staged rewrite, so the purge FUSES into it —
-    * (base ∪ batches) ∖ ledger in ONE rewrite, each byte written once,
-    * the merged marker committing inside the staged dir
-    * ([[IndexBatches.foldAndPurge]]; a delete-then-re-append within the
-    * epoch still resolves to DELETED, the same answer [[searchIndex]]
-    * gives, because the ledger snapshot covers the folded batches).
-    * Returns the number of rows removed. */
-  def vacuumIndex(spark: org.apache.spark.sql.SparkSession,
-                  dir: String): Long = {
-    val tsPath = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = tsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // ONE ledger enumeration feeds both the anti-join and the end-of-pass
-    // cleanup: a tombstone file that lands after this snapshot is neither
-    // applied nor deleted this pass — it survives for the next one, and
-    // searchIndex keeps masking its vector in the meantime.
-    val consumed = TombstoneLedger.files(fs, s"$dir/tombstones")
-    val ts = TombstoneLedger.dfFrom(spark, consumed, "cand_id")
-      .getOrElse(return 0L)
-    vacuumAfterSnapshotHook()
-    val live = liveBatchDirs(spark, dir)
-    val removed = if (live.isEmpty) {
-      val asgPath = new org.apache.hadoop.fs.Path(s"$dir/assignments")
-      val nClusters = IndexBatches.footerRows(spark, s"$dir/centroids").toInt
-      SelectiveVacuum(spark, asgPath, "centroid_id",
-        "cand_id", ts, slices = math.max(1,
-          spark.sparkContext.defaultParallelism / math.max(1, nClusters)))
-    } else {
-      IndexBatches.foldAndPurge(spark, dir, "ivf", live, Some(ts),
-        Seq("cand_id"), fusedDatasets(spark, dir))
-    }
-    TombstoneLedger.clear(fs, s"$dir/tombstones", consumed)
-    removed
-  }
+      Some("centroid_id"), IndexBatches.centroidFanout, "cand_id",
+      batchNested = false))
 
   /** EXACTLY-ONCE streaming append: assign `newVectors` against the
     * standing centroids and write them to the batch-scoped directory
@@ -440,31 +351,6 @@ object Similarity {
         cents, "cand_id", "cand_vec", 1),
       dir, tag, batchId, "centroid_id")
   }
-
-  /** Fold every live batch directory into the base assignments layout:
-    * one read of base ∪ batches, one partitioned rewrite behind the
-    * crash-safe staging swap, with the compaction HIGH-WATER MARKER
-    * (`_compacted_batches`: tag-hash → highest folded batchId) written
-    * INSIDE the staged directory so it commits atomically with the data
-    * it describes. Batch-dir deletion afterwards is best-effort: a
-    * crash between swap and delete leaves dirs the marker already
-    * suppresses — [[searchIndex]] never double-counts. */
-  def compactIndexBatches(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): Unit = {
-    val live = liveBatchDirs(spark, dir)
-    if (live.isEmpty) return
-    IndexBatches.foldAndPurge(spark, dir, "ivf", live, None, Nil,
-      fusedDatasets(spark, dir))
-  }
-
-  private def readCompactionMarker(fs: org.apache.hadoop.fs.FileSystem,
-                                   assignments: org.apache.hadoop.fs.Path)
-      : Map[String, Long] = IndexBatches.readMarker(fs, assignments)
-
-  /** Batch directories not yet folded in by [[compactIndexBatches]]. */
-  private def liveBatchDirs(spark: org.apache.spark.sql.SparkSession,
-                            dir: String): Seq[String] =
-    IndexBatches.live(spark, dir, "assignments")
 
   /** Incremental index growth: assign a NEW batch of vectors against the
     * index's EXISTING centroids and append them into the partitioned

@@ -52,7 +52,11 @@ import graft.functions.VectorFunctions.asDouble
   * pins it), so the driver gate shares the brute pipeline's hash-exact
   * DuckDB oracle rather than a recall flag.
   */
-object SketchIndex {
+object SketchIndex extends PersistedIndex {
+
+  val kind = "sketch"
+  protected val deleteIdCol = "vec_id"
+  protected val storedIdCol = "vec_id"
 
   /** Bucket fanout of the vectors dataset (the re-rank fetch prune). */
   val Buckets = 64
@@ -91,10 +95,7 @@ object SketchIndex {
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$dir/vectors")
     } finally vs.unpersist()
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/batches"), true)
-    TombstoneLedger.reset(fs, s"$dir/tombstones")
+    resetLifecycle(spark, dir)
   }
 
   /** In-place growth: new rows land as extra files (sketches flat,
@@ -137,31 +138,16 @@ object SketchIndex {
     } finally vs.unpersist()
   }
 
-  /** The kind's [[IndexBatches.foldAndPurge]] parameters: vec_id-deduped
-    * fold, vectors staged first, the high-water marker committing inside
-    * the staged SKETCHES dir last (the deliberately-smallest dataset —
-    * 8 B/vector — so its full rewrite is the cheap one). */
-  private def fusedDatasets(spark: SparkSession) = Seq(
+  /** The kind's layout: vec_id-deduped fold, vectors staged first, the
+    * high-water marker committing inside the staged SKETCHES dir last.
+    * The flat sketches dataset is rewritten whole by every vacuum BY
+    * DESIGN: it is the deliberately-smallest dataset (8 B/vector), so
+    * its full rewrite is the cheap one. */
+  private[operators] def fusedDatasets = Seq(
     IndexBatches.FusedDataset("vectors", Seq("vec_id", "vec", "bucket"),
-      Seq("vec_id"), Some("bucket"), Buckets, "vec_id"),
+      Seq("vec_id"), Some("bucket"), (_, _) => Buckets, "vec_id"),
     IndexBatches.FusedDataset("sketches", Seq("vec_id", "sig", "bucket"),
-      Seq("vec_id"), None, sketchFanout(spark), "vec_id"))
-
-  /** Fold live streaming batch dirs into both standing datasets with
-    * vec_id dedup behind staged swaps; vectors first, the high-water
-    * marker committing inside the staged SKETCHES dir last. */
-  def compactIndexBatches(spark: SparkSession, dir: String): Unit = {
-    val live = IndexBatches.live(spark, dir, "sketches")
-    if (live.isEmpty) return
-    IndexBatches.foldAndPurge(spark, dir, "sketch", live, None, Nil,
-      fusedDatasets(spark))
-  }
-
-  /** Append-only deletion on the shared ledger: one tiny parquet
-    * append; [[searchIndex]] masks immediately, [[vacuumIndex]] makes
-    * it physical. */
-  def deleteFromIndex(ids: DataFrame, dir: String): Unit =
-    TombstoneLedger.append(ids.select(col("vec_id")), s"$dir/tombstones")
+      Seq("vec_id"), None, (spark, _) => sketchFanout(spark), "vec_id"))
 
   /** Search the persisted index — row-identical to
     * [[Similarity.hammingTopK]] over the live corpus. The first stage
@@ -197,20 +183,8 @@ object SketchIndex {
     val q = queries.select(col("vec_id").cast("long").as("query_id"),
         asDouble(col("embedding")).as("query_vec"))
       .withColumn("qsig", expr("hyperplane_sig64(query_vec)"))
-    val liveDirs = IndexBatches.live(spark, dir, "sketches")
-    val sCols = Seq("vec_id", "sig", "bucket").map(col)
-    val sketches0 = liveDirs.foldLeft(
-        spark.read.parquet(s"$dir/sketches").select(sCols: _*)) {
-      (acc, p) =>
-        acc.union(spark.read.parquet(s"$p/sketches").select(sCols: _*))
-    }
-    val sketches =
-      if (liveDirs.isEmpty) sketches0
-      else sketches0.dropDuplicates("vec_id")
-    val ledger = TombstoneLedger.df(spark, s"$dir/tombstones", "vec_id")
-    val liveSk = ledger
-      .map(ts => sketches.join(ts, Seq("vec_id"), "left_anti"))
-      .getOrElse(sketches)
+    val liveDirs = liveBatchDirs(spark, dir)
+    val liveSk = readLive(spark, dir, "sketches", liveDirs)
     val wH = Window.partitionBy("query_id")
       .orderBy(asc("hamming"), asc("cand_id"))
     // one bounded collect (≤ |Q|·shortlist rows) serves the bucket
@@ -265,17 +239,11 @@ object SketchIndex {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("vec_id",
           org.apache.spark.sql.types.LongType))))
-    val vCols = Seq("vec_id", "vec", "bucket").map(col)
-    def bucketed(p: String) = spark.read.parquet(p).select(vCols: _*)
-      .where(col("bucket").isin(buckets.map(Integer.valueOf): _*))
-      .join(broadcast(candDocs), Seq("vec_id"), "left_semi")
-    val fetched0 = liveDirs.foldLeft(bucketed(s"$dir/vectors")) {
-      (acc, p) => acc.union(bucketed(s"$p/vectors"))
-    }
-    val fetched =
-      (if (liveDirs.isEmpty) fetched0
-       else fetched0.dropDuplicates("vec_id"))
-        .select(col("vec_id").as("cand_id"), col("vec").as("cand_vec"))
+    val fetched = readLive(spark, dir, "vectors", liveDirs,
+        scan = _.where(col("bucket").isin(buckets.map(Integer.valueOf): _*))
+          .join(broadcast(candDocs), Seq("vec_id"), "left_semi"),
+        mask = false)
+      .select(col("vec_id").as("cand_id"), col("vec").as("cand_vec"))
     val wS = Window.partitionBy("query_id")
       .orderBy(desc("score"), asc("cand_id"))
     fetched.join(broadcast(pairs), "cand_id")
@@ -286,92 +254,5 @@ object SketchIndex {
       .withColumn("rank", row_number().over(wS))
       .where(col("rank") <= k)
       .select("query_id", "cand_id", "hamming", "score", "rank")
-  }
-
-  /** Test seam: runs after [[vacuumIndex]] snapshots the ledger file
-    * list — the race window a concurrent [[deleteFromIndex]] lands in.
-    * Production no-op. */
-  private[graft] var vacuumAfterSnapshotHook: () => Unit = () => ()
-
-  /** Physically remove tombstoned vectors from BOTH datasets: the
-    * bucket-partitioned vectors/ goes through [[SelectiveVacuum]]
-    * (only buckets CONTAINING tombstoned ids are rewritten and
-    * leaf-swapped — O(affected buckets), not O(index)); the flat
-    * sketches/ is a full staged-swap rewrite BY DESIGN — it is the
-    * deliberately-smallest dataset (8 B/vector) and carries the
-    * compaction marker, so its rewrite is the cheap one. Live batch
-    * dirs fold in first (vacuum clears the consumed ledger, so an
-    * unfolded batch dir would resurface a tombstoned vector once
-    * cleared), then exactly the consumed ledger files clear. Returns
-    * rows removed. */
-  def vacuumIndex(spark: SparkSession, dir: String): Long = {
-    val root = s"$dir/tombstones"
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val consumed = TombstoneLedger.files(fs, root)
-    val tsOpt = TombstoneLedger.dfFrom(spark, consumed, "vec_id")
-    if (tsOpt.isEmpty) { compactIndexBatches(spark, dir); return 0L }
-    val ts = tsOpt.get
-    vacuumAfterSnapshotHook()
-    val live = IndexBatches.live(spark, dir, "sketches")
-    val removed = if (live.isEmpty) {
-      // no compaction debt: vectors rewrite stays partition-SELECTIVE
-      // (only buckets containing tombstoned rows are touched), and the
-      // two datasets' independent job chains run concurrently through
-      // the shared harness (wall-clock max, not sum). The sketches
-      // task STAGES only; marker carry and swap stay on the caller
-      // thread after both chains finish.
-      val path = new org.apache.hadoop.fs.Path(s"$dir/sketches")
-      val res = IndexBatches.concurrently[Any](spark, "sketch-vacuum",
-        Seq(
-          "vectors" -> { () =>
-            SelectiveVacuum(spark,
-              new org.apache.hadoop.fs.Path(s"$dir/vectors"), "bucket",
-              "vec_id", ts, slices = math.max(1,
-                spark.sparkContext.defaultParallelism / Buckets)): Any
-          },
-          "sketches" -> { () =>
-            val base = spark.read.parquet(path.toString)
-            val keep = base.join(ts, Seq("vec_id"), "left_anti")
-            val keepCount = keep.count()
-            val n = base.count() - keepCount
-            val tmp =
-              new org.apache.hadoop.fs.Path(s"$dir/.sketches.vacuum")
-            if (keepCount == 0L)
-              keep.coalesce(1).write.mode("overwrite")
-                .parquet(tmp.toString)
-            else
-              keep.repartition(sketchFanout(spark))
-                .write.mode("overwrite").parquet(tmp.toString)
-            (tmp, n): Any
-          }))
-      val (tmp, n) = res("sketches")
-        .asInstanceOf[(org.apache.hadoop.fs.Path, Long)]
-      // carry the compaction marker through the sketches rewrite
-      IndexBatches.writeMarker(fs, tmp, IndexBatches.readMarker(fs, path))
-      graft.sources.Formats.swapInto(fs, tmp, path)
-      spark.catalog.refreshByPath(path.toString)
-      n
-    } else {
-      // compaction debt AND vacuum debt: the fold already forces a full
-      // staged rewrite of both datasets, so the purge FUSES into it —
-      // (base ∪ batches) deduped ∖ ledger, ONE rewrite per dataset with
-      // the removed count riding the sketches write job (the shared
-      // [[IndexBatches.foldAndPurge]] machinery; running
-      // compactIndexBatches first and purging after rewrote every byte
-      // twice back to back — ~45% of the maintenance gate when
-      // profiled). Crash contract unchanged: vectors swaps first, the
-      // merged high-water marker commits inside the staged SKETCHES dir
-      // last, batch dirs are deleted only after both swaps, and the
-      // ledger clears last of all (an interruption anywhere leaves
-      // reads correct — unfolded batch dirs still union in, the
-      // standing ledger still masks). Returns post-dedup logical rows
-      // removed (a re-ingested duplicate collapses in the fold
-      // regardless of the purge).
-      IndexBatches.foldAndPurge(spark, dir, "sketch", live, Some(ts),
-        Seq("vec_id"), fusedDatasets(spark))
-    }
-    TombstoneLedger.clear(fs, root, consumed)
-    removed
   }
 }

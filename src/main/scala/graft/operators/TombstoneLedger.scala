@@ -16,9 +16,7 @@ import org.apache.spark.sql.functions._
   * Layout: flat `*.parquet` appends under the ledger root for batch
   * deletes; streaming deletes may write batch-scoped SUBDIRECTORIES
   * (overwrite-by-placement idempotency) — one recursive enumeration
-  * serves both. [[Similarity]] predates this helper and carries the
-  * same contract inline (interleaved with its compaction markers);
-  * [[PhraseSearch]] builds on this one.
+  * serves both. Every index kind reaches it through [[PersistedIndex]].
   */
 object TombstoneLedger {
 
@@ -34,16 +32,11 @@ object TombstoneLedger {
     * OVERWRITE, so a replayed batch (foreachBatch is at-least-once)
     * rewrites its own location instead of accreting ledger rows —
     * idempotency by placement, the same contract as
-    * [[Similarity.deleteBatchDir]]. */
+    * [[IndexBatches.writeBatch]]. */
   def appendBatch(ids: DataFrame, root: String, tag: String,
                   batchId: Long): Unit =
     ids.toDF("id").distinct().coalesce(1).write.mode("overwrite")
-      .parquet(s"$root/${tagHash(tag)}-$batchId")
-
-  private def tagHash(tag: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(tag.getBytes("UTF-8")).take(8)
-      .map("%02x".format(_)).mkString
+      .parquet(s"$root/${IndexBatches.tagHash(tag)}-$batchId")
 
   /** Every parquet leaf file under the ledger — ONE enumeration, to be
     * reused for both the read and the consumed-set cleanup. */
@@ -105,6 +98,17 @@ object TombstoneLedger {
       sum += n
     }
     if (sum <= threshold) Some(false) else None
+  }
+
+  /** Whether the ledger at `root` holds more than `threshold` distinct
+    * ids: [[pendingExceeds]] from footers, and the one exact
+    * distinct-count job only when the footers cannot decide. */
+  def exceeds(spark: SparkSession, root: String, threshold: Long): Boolean = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val ledgerFiles =
+      files(new org.apache.hadoop.fs.Path(root).getFileSystem(conf), root)
+    pendingExceeds(conf, ledgerFiles, threshold).getOrElse(
+      dfFrom(spark, ledgerFiles, "id").map(_.count()).getOrElse(0L) > threshold)
   }
 
   /** Delete exactly the consumed files, then drop batch-scoped subdirs

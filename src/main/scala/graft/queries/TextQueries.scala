@@ -1645,7 +1645,7 @@ object TextQueries {
     },
 
     // STREAMING BM25-index ingestion through the driver hash
-    // (EventStreams.bm25IndexSink / Bm25.appendBatchDir): two REAL
+    // (EventStreams.indexSink / Bm25.appendBatchDir): two REAL
     // one-shot foreachBatch queries land the q_text_bm25_index_append
     // batch (split 500000-14 / 500015-29) in batch-scoped directories
     // carrying BOTH datasets — postings AND doclens — so each batch
@@ -1704,7 +1704,7 @@ object TextQueries {
         val rows = batch.where(pred).as[(Long, String)].collect().toSeq
         val src = MemoryStream[(Long, String)]
         src.addData(rows: _*)
-        graft.streaming.EventStreams.bm25IndexSink(
+        graft.streaming.EventStreams.indexSink(graft.operators.Bm25,
             src.toDF().toDF("doc_id", "text"), idxDir,
             tagOverride = Some(tag))
           .awaitTermination()
@@ -1840,7 +1840,7 @@ object TextQueries {
     },
 
     // STREAMING phrase-index ingestion through the driver hash
-    // (EventStreams.phraseIndexSink / PhraseSearch.appendBatchDir): two
+    // (EventStreams.indexSink / PhraseSearch.appendBatchDir): two
     // REAL one-shot foreachBatch queries land the q_text_phrase_index_
     // append batch (split 200000-9 / 200010-19) in batch-scoped
     // directories under the index — overwrite by (tag, batchId),
@@ -1896,7 +1896,7 @@ object TextQueries {
           .as[(Long, String)].collect().toSeq
         val src = MemoryStream[(Long, String)]
         src.addData(rows: _*)
-        graft.streaming.EventStreams.phraseIndexSink(
+        graft.streaming.EventStreams.indexSink(graft.operators.PhraseSearch,
             src.toDF().toDF("doc_id", "text"), idxDir,
             tagOverride = Some(tag))
           .awaitTermination()
@@ -1982,7 +1982,7 @@ object TextQueries {
     },
 
     // STREAMING phrase-index deletion through the driver hash
-    // (EventStreams.phraseDeleteSink — the text twin of
+    // (EventStreams.tombstoneSink — the text twin of
     // q_stream_delete_replay): two one-shot foreachBatch queries land
     // doc-id delete requests in batch-scoped ledger datasets (overwrite
     // by (tag, batchId) — exactly-once by placement), splitting the
@@ -2026,7 +2026,7 @@ object TextQueries {
           .select("doc_id").as[Long].collect().toSeq
         val src = MemoryStream[Long]
         src.addData(rows: _*)
-        graft.streaming.EventStreams.phraseDeleteSink(
+        graft.streaming.EventStreams.tombstoneSink(
             src.toDF().toDF("doc_id"), idxDir, tagOverride = Some(tag))
           .awaitTermination()
       }

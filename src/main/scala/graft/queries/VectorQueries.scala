@@ -1303,7 +1303,7 @@ object VectorQueries {
     },
 
     // STREAMING index deletion through the driver hash
-    // (EventStreams.deleteSink): two one-shot foreachBatch queries land
+    // (EventStreams.tombstoneSink): two one-shot foreachBatch queries land
     // delete requests in batch-scoped ledger datasets (overwrite by
     // (tag, batchId) — exactly-once by placement), splitting the
     // formula set (vec_id % 17 = 3) across streams; the post-stream
@@ -1331,7 +1331,7 @@ object VectorQueries {
           .select("vec_id").as[Long].collect().toSeq
         val src = MemoryStream[Long]
         src.addData(rows: _*)
-        graft.streaming.EventStreams.deleteSink(
+        graft.streaming.EventStreams.tombstoneSink(
             src.toDF().toDF("vec_id"), idxDir, tagOverride = Some(tag))
           .awaitTermination()
       }
@@ -1375,7 +1375,7 @@ object VectorQueries {
           .as[(Long, Seq[Double])].collect().toSeq
         val src = MemoryStream[(Long, Seq[Double])]
         src.addData(rows: _*)
-        graft.streaming.EventStreams.indexSink(
+        graft.streaming.EventStreams.indexSink(Similarity,
             src.toDF().toDF("vec_id", "embedding"), idxDir,
             tagOverride = Some(tag))
           .awaitTermination()
@@ -1534,7 +1534,7 @@ object VectorQueries {
     },
 
     // STREAMING PQ-index ingestion through the driver gate
-    // (EventStreams.pqIndexSink / IvfPq.appendBatchDir): two REAL
+    // (EventStreams.indexSink / IvfPq.appendBatchDir): two REAL
     // one-shot foreachBatch queries land the q_ann_index_pq_append
     // batch (split 0-9 / 10-19), each micro-batch encoding against the
     // STANDING model and landing codes AND vectors in batch-scoped
@@ -1572,7 +1572,7 @@ object VectorQueries {
             .as[(Long, Seq[Double])].collect().toSeq
           val src = MemoryStream[(Long, Seq[Double])]
           src.addData(rows: _*)
-          graft.streaming.EventStreams.pqIndexSink(
+          graft.streaming.EventStreams.indexSink(IvfPq,
               src.toDF().toDF("vec_id", "embedding"), idxDir,
               tagOverride = Some(tag))
             .awaitTermination()
@@ -1799,8 +1799,8 @@ object VectorQueries {
           .orderBy("query_id", "rank")
     },
 
-    // Streaming TOKEN-INDEX ingestion (EventStreams.maxsimIndexSink →
-    // MaxSim.appendTokenBatchDir) — the exactly-once contract on the
+    // Streaming TOKEN-INDEX ingestion (EventStreams.indexSink →
+    // MaxSim.appendBatchDir) — the exactly-once contract on the
     // FIFTH index kind, closing streaming ingestion across all five:
     // two real micro-batch streams (MemoryStream, AvailableNow) land
     // the standard perturbed batch as batch-scoped dual-layout dirs
@@ -1833,7 +1833,7 @@ object VectorQueries {
             .as[(Long, Int, Seq[Double])].collect().toSeq
           val src = MemoryStream[(Long, Int, Seq[Double])]
           src.addData(rows: _*)
-          graft.streaming.EventStreams.maxsimIndexSink(
+          graft.streaming.EventStreams.indexSink(MaxSim,
               src.toDF().toDF("doc_id", "tok", "vec"), idxDir,
               tagOverride = Some(tag))
             .awaitTermination()
@@ -1891,8 +1891,8 @@ object VectorQueries {
       maxsimUnionExact(s, dir).orderBy("query_id", "rank")
     },
 
-    // Token-index deletion lifecycle (MaxSim.deleteFromTokenIndex /
-    // vacuumTokenIndex): the shared TombstoneLedger contract on the
+    // Token-index deletion lifecycle (MaxSim.deleteFromIndex /
+    // vacuumIndex): the shared TombstoneLedger contract on the
     // FIFTH persisted index kind — tombstones mask BOTH layouts
     // immediately (a deleted doc can neither seed candidates nor be
     // fetched), vacuum rewrites both behind staged swaps from one
@@ -1916,7 +1916,7 @@ object VectorQueries {
         val qToks = maxsimQueryToks(s, dir)
         val idxDir = IndexFixtures.cloned(s, dir, "maxsim")(
           buildMaxsim(s, dir))
-        MaxSim.deleteFromTokenIndex(
+        MaxSim.deleteFromIndex(
           emb.where(dead).select(col("vec_id").as("doc_id")), idxDir)
         // one probe plan serves BOTH phases: delete and vacuum never
         // move the coarse quantizer, so the pre- and post-vacuum
@@ -1930,7 +1930,7 @@ object VectorQueries {
             .withColumn("rank", col("rank").cast("long"))
             .withColumn("phase", lit(phase))
         val before = StagingCaches.checkpointed(rows("tombstoned"))
-        MaxSim.vacuumTokenIndex(s, idxDir)
+        MaxSim.vacuumIndex(s, idxDir)
         before.unionByName(rows("vacuumed"))
           .select("phase", "query_id", "doc_id", "score", "rank")
           .orderBy("phase", "query_id", "rank")

@@ -339,35 +339,30 @@ object EventStreams {
       .start()
   }
 
-  /** Streaming embedding ingestion into a persisted IVF index
-    * ([[graft.operators.Similarity]]): each micro-batch of
-    * (vec_id, embedding) rows assigns against the index's STANDING
-    * centroids (broadcast; the quantizer is deliberately not refit —
-    * `recenterIndex` is the out-of-band refresh) and lands in a
-    * batch-scoped directory under the index
-    * (`Similarity.appendBatchDir`) — written with OVERWRITE, so
-    * foreachBatch's at-least-once replay rewrites the same location
-    * instead of double-storing the batch: exactly-once by idempotent
-    * placement, no marker needed on the hot path. `searchIndex` unions
-    * live batch dirs transparently; `compactIndexBatches` folds them
-    * into the base layout on whatever cadence suits. State is O(0) —
-    * the index IS the state. */
-  def indexSink(vectors: DataFrame, indexDir: String,
-                checkpointDir: Option[String] = None,
+  /** Streaming ingestion into any persisted index: each micro-batch
+    * lands through `index.appendBatchDir` in a batch-scoped directory
+    * under the index, written with OVERWRITE, so foreachBatch's
+    * at-least-once replay rewrites the same location instead of
+    * double-storing the batch — exactly-once by idempotent placement,
+    * no marker on the hot path. Quantized kinds encode against their
+    * STANDING model (deliberately not refit — recentering is the
+    * out-of-band refresh). The kind's search unions live batch dirs
+    * transparently; `compactIndexBatches` folds them into the base
+    * layout on whatever cadence suits. State is O(0) — the index IS
+    * the state. */
+  def indexSink(index: graft.operators.PersistedIndex, df: DataFrame,
+                indexDir: String, checkpointDir: Option[String] = None,
                 tagOverride: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    batchDirSink(vectors, checkpointDir, tagOverride)(
-      graft.operators.Similarity.appendBatchDir(_, indexDir, _, _))
+    batchDirSink(df, checkpointDir, tagOverride)(
+      index.appendBatchDir(_, indexDir, _, _))
 
-  /** The shared scaffold of every one-shot index/ledger sink: tag
-    * derivation, optional checkpoint, Append mode, AvailableNow
-    * trigger, empty-batch skip. The tag scopes batch placement:
-    * normally the checkpoint location (the identity that survives a
-    * restart); un-checkpointed callers running several one-shot
-    * queries against one target pass distinct tagOverrides so their
-    * batch-0 locations don't collide. One definition — a contract
-    * change (trigger, checkpoint handling, empty-batch policy) lands
-    * in every sink at once instead of drifting across copies. */
+  /** The shared scaffold of both index sinks: tag derivation, optional
+    * checkpoint, Append mode, AvailableNow trigger, empty-batch skip.
+    * The tag scopes batch placement: normally the checkpoint location
+    * (the identity that survives a restart); un-checkpointed callers
+    * running several one-shot queries against one target pass distinct
+    * tagOverrides so their batch-0 locations don't collide. */
   private def batchDirSink(df: DataFrame, checkpointDir: Option[String],
                            tagOverride: Option[String])
       (perBatch: (DataFrame, String, Long) => Unit)
@@ -385,47 +380,16 @@ object EventStreams {
       .start()
   }
 
-  /** Streaming index deletion (the GDPR purge feed): each micro-batch
-    * of `vec_id` delete requests lands in a batch-scoped ledger dataset
-    * ([[graft.operators.Similarity.deleteBatchDir]] — overwrite by
-    * (tag, batchId), exactly-once by placement, same contract as
-    * [[indexSink]]); `searchIndex` filters the ledger immediately and
-    * `vacuumIndex` makes removals physical out-of-band. */
-  def deleteSink(ids: DataFrame, indexDir: String,
-                 checkpointDir: Option[String] = None,
-                 tagOverride: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    batchDirSink(ids, checkpointDir, tagOverride)(
-      graft.operators.Similarity.deleteBatchDir(_, indexDir, _, _))
-
-  /** Streaming SKETCH-INDEX ingestion — [[indexSink]] for the binary-
-    * sketch layout ([[graft.operators.SketchIndex]]): each micro-batch
-    * of (vec_id, embedding) rows is sketched once and lands BOTH
-    * datasets (8-byte sketches + bucketed vectors) in a batch-scoped
-    * dir (overwrite by (tag, batchId), exactly-once by placement);
-    * `SketchIndex.searchIndex` unions live dirs with vec_id dedup,
-    * `compactIndexBatches` folds them out-of-band. No quantizer —
-    * streamed batches never drift the fixed plane table. */
-  def sketchIndexSink(vectors: DataFrame, indexDir: String,
-                      checkpointDir: Option[String] = None,
-                      tagOverride: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    batchDirSink(vectors, checkpointDir, tagOverride)(
-      graft.operators.SketchIndex.appendBatchDir(_, indexDir, _, _))
-
-  /** Streaming index deletion for ANY ledger-bearing index kind — the
-    * generic form of [[deleteSink]]/[[phraseDeleteSink]], closing
-    * streaming DELETION over all five kinds the way [[maxsimIndexSink]]
-    * closed ingestion: every persisted index (ANN, phrase, BM25, PQ,
-    * MaxSim tokens) carries its tombstone ledger at
-    * `<indexDir>/tombstones` with the shared [[graft.operators
-    * .TombstoneLedger]] contract, so one sink serves them all — each
+  /** Streaming deletion for any persisted index — every kind (IVF,
+    * IVF-PQ, sketch, MaxSim tokens, BM25, phrase) carries its tombstone
+    * ledger at `<indexDir>/tombstones` with the shared [[graft.operators
+    * .TombstoneLedger]] contract, so one sink serves all six: each
     * micro-batch of delete-request ids (a single-column frame, any
     * name — the ledger normalizes to `id` and each search path renames
     * at read) lands in a batch-scoped ledger dataset (overwrite by
-    * (tag, batchId), exactly-once by placement);
-    * the kind's search masks the ids immediately and its vacuum makes
-    * removals physical out-of-band. */
+    * (tag, batchId), exactly-once by placement); the kind's search
+    * masks the ids immediately and its vacuum makes removals physical
+    * out-of-band. */
   def tombstoneSink(ids: DataFrame, indexDir: String,
                     checkpointDir: Option[String] = None,
                     tagOverride: Option[String] = None)
@@ -433,83 +397,6 @@ object EventStreams {
     batchDirSink(ids, checkpointDir, tagOverride)(
       graft.operators.TombstoneLedger.appendBatch(
         _, s"$indexDir/tombstones", _, _))
-
-  /** Streaming PHRASE-index deletion — the text twin of [[deleteSink]]:
-    * each micro-batch of `doc_id` delete requests lands in a
-    * batch-scoped ledger dataset
-    * ([[graft.operators.PhraseSearch.deleteBatchDir]] — overwrite by
-    * (tag, batchId), exactly-once by placement);
-    * `PhraseSearch.searchIndex` masks the ids immediately and
-    * `vacuumIndex` makes removals physical out-of-band. */
-  def phraseDeleteSink(ids: DataFrame, indexDir: String,
-                       checkpointDir: Option[String] = None,
-                       tagOverride: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    batchDirSink(ids, checkpointDir, tagOverride)(
-      graft.operators.PhraseSearch.deleteBatchDir(_, indexDir, _, _))
-
-  /** Streaming PHRASE-INDEX ingestion — the text twin of [[indexSink]]:
-    * each micro-batch of (doc_id, text) documents tokenizes to
-    * positional postings and lands in a batch-scoped directory under
-    * the index ([[graft.operators.PhraseSearch.appendBatchDir]] —
-    * overwrite by (tag, batchId), exactly-once by placement; the
-    * in-place append would double-count under foreachBatch replay).
-    * `searchIndex` unions live batch dirs transparently (still
-    * term-bucket-pruned); `compactIndexBatches` folds them into the
-    * base layout on whatever cadence suits. */
-  def phraseIndexSink(docs: DataFrame, indexDir: String,
-                      checkpointDir: Option[String] = None,
-                      tagOverride: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    batchDirSink(docs, checkpointDir, tagOverride)(
-      graft.operators.PhraseSearch.appendBatchDir(_, indexDir, _, _))
-
-  /** Streaming BM25-index ingestion — the scored-index twin of
-    * [[phraseIndexSink]]: each micro-batch of (doc_id, text) documents
-    * lands BOTH index datasets (term-bucket postings AND doclens) in a
-    * batch-scoped directory ([[graft.operators.Bm25.appendBatchDir]] —
-    * overwrite by (tag, batchId), exactly-once by placement), so the
-    * batch corrects n_docs/avgdl/df the moment it commits;
-    * `Bm25.searchIndex` unions live batch dirs with natural-key dedup,
-    * `compactIndexBatches` folds them out-of-band. */
-  def bm25IndexSink(docs: DataFrame, indexDir: String,
-                    checkpointDir: Option[String] = None,
-                    tagOverride: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    batchDirSink(docs, checkpointDir, tagOverride)(
-      graft.operators.Bm25.appendBatchDir(_, indexDir, _, _))
-
-  /** Streaming PQ-INDEX ingestion — [[indexSink]] for the IVF-PQ
-    * layout: each micro-batch of (vec_id, embedding) rows encodes
-    * against the index's STANDING model (centroids + residual
-    * codebooks, deliberately not refit) and lands codes AND vectors in
-    * a batch-scoped directory ([[graft.operators.IvfPq.appendBatchDir]]
-    * — overwrite by (tag, batchId), exactly-once by placement);
-    * `IvfPq.searchIndex` unions live batch dirs with cand_id dedup,
-    * `compactIndexBatches` folds them out-of-band. */
-  def pqIndexSink(vectors: DataFrame, indexDir: String,
-                  checkpointDir: Option[String] = None,
-                  tagOverride: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    batchDirSink(vectors, checkpointDir, tagOverride)(
-      graft.operators.IvfPq.appendBatchDir(_, indexDir, _, _))
-
-  /** Streaming TOKEN-INDEX ingestion — [[pqIndexSink]] for the MaxSim
-    * dual layout (with [[sketchIndexSink]], streaming ingestion covers
-    * all six persisted index kinds): each micro-batch of (doc_id, tok, vec) token rows
-    * assigns against the index's STANDING coarse cells (quantizer
-    * deliberately not refit) and lands BOTH layouts in a batch-scoped
-    * directory ([[graft.operators.MaxSim.appendTokenBatchDir]] —
-    * overwrite by (tag, batchId), exactly-once by placement);
-    * `MaxSim.searchTokenIndex` unions live batch dirs with
-    * (doc_id, tok) dedup, `compactTokenIndexBatches` folds them
-    * out-of-band. */
-  def maxsimIndexSink(docTokens: DataFrame, indexDir: String,
-                      checkpointDir: Option[String] = None,
-                      tagOverride: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    batchDirSink(docTokens, checkpointDir, tagOverride)(
-      graft.operators.MaxSim.appendTokenBatchDir(_, indexDir, _, _))
 
   /** Streaming corpus-drift maintenance: each micro-batch of documents
     * aggregates to token counts

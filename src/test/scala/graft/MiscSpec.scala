@@ -2327,6 +2327,7 @@ class DriftSinkSpec extends SparkSpec {
       val src = MemoryStream[(Long, Seq[Double])]
       src.addData(rows: _*)
       graft.streaming.EventStreams.indexSink(
+          graft.operators.Similarity,
           src.toDF().toDF("vec_id", "embedding"), dir,
           tagOverride = Some(tag))
         .awaitTermination()

@@ -1,9 +1,12 @@
 package graft
 
-/** Session config and SQL-function registration each have one home in
-  * `src/main`: [[Sessions]] builds every session and the [[Functions]]
-  * table (read by [[GraftExtensions]]) registers every function. A second
-  * builder or registration path fails here before its config drifts. */
+/** Session config, SQL-function registration and the persisted-index
+  * lifecycle each have one home in `src/main`: [[Sessions]] builds every
+  * session, the [[Functions]] table (read by [[GraftExtensions]])
+  * registers every function, and [[graft.operators.PersistedIndex]] owns
+  * the ledger, batch-dir fold and vacuum of every index kind. A second
+  * builder, registration path or lifecycle copy fails here before it
+  * drifts. */
 class SingleSourceSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private lazy val sources: Seq[(String, String)] = {
@@ -36,5 +39,25 @@ class SingleSourceSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   test("no per-object register method remains") {
     assert(filesWith("def register(spark").isEmpty)
+  }
+
+  test("ledger, fold and vacuum helpers are called only from " +
+      "PersistedIndex.scala, the fold and their own files") {
+    for ((needle, allowed) <- Seq(
+        "TombstoneLedger.reset" -> "PersistedIndex.scala",
+        "TombstoneLedger.files" -> "PersistedIndex.scala",
+        "IndexBatches.foldAndPurge" -> "PersistedIndex.scala",
+        "SelectiveVacuum(" -> "IndexBatches.scala")) {
+      val own = needle.takeWhile(c => c != '.' && c != '(') + ".scala"
+      assert(filesWith(needle).subsetOf(Set(allowed, own)),
+        s"$needle outside ${Set(allowed, own)}: ${filesWith(needle)}")
+    }
+  }
+
+  test("the index lifecycle is defined only in PersistedIndex.scala") {
+    for (needle <- Seq("def vacuumIndex", "def compactIndexBatches",
+        "def deleteFromIndex", "var vacuumAfterSnapshotHook"))
+      assert(filesWith(needle) == Set("PersistedIndex.scala"),
+        s"$needle outside the trait: ${filesWith(needle)}")
   }
 }

@@ -123,14 +123,14 @@ class MaxSimSpec extends SparkSpec {
         k = 10, nProbe = 4, tokenTopT = 16)
       .select("doc_id").as[Long].collect().toSet
     val victim = hits().min
-    MaxSim.deleteFromTokenIndex(Seq(victim).toDF("doc_id"), dir)
+    MaxSim.deleteFromIndex(Seq(victim).toDF("doc_id"), dir)
     val masked = hits()
     assert(!masked.contains(victim), "tombstoned doc still retrieved")
     // race seam: a tombstone landing inside vacuum's window survives
     val second = masked.min
     MaxSim.vacuumAfterSnapshotHook = () =>
-      MaxSim.deleteFromTokenIndex(Seq(second).toDF("doc_id"), dir)
-    try assert(MaxSim.vacuumTokenIndex(spark, dir) > 0L)
+      MaxSim.deleteFromIndex(Seq(second).toDF("doc_id"), dir)
+    try assert(MaxSim.vacuumIndex(spark, dir) > 0L)
     finally MaxSim.vacuumAfterSnapshotHook = () => ()
     for (ds <- Seq("tokens", "doctokens"))
       assert(spark.read.parquet(s"$dir/$ds")
@@ -138,7 +138,7 @@ class MaxSimSpec extends SparkSpec {
         s"$ds still holds the vacuumed doc")
     assert(!hits().contains(second),
       "the race-window tombstone stopped masking")
-    assert(MaxSim.vacuumTokenIndex(spark, dir) > 0L,
+    assert(MaxSim.vacuumIndex(spark, dir) > 0L,
       "the surviving tombstone was not folded by the next vacuum")
   }
 
@@ -312,37 +312,37 @@ class MaxSimSpec extends SparkSpec {
         nProbe = 6, tokenTopT = 64)
       .as[(Long, Long, Double, Int)].collect().sortBy(r => (r._1, r._4))
       .toSeq
-    MaxSim.appendTokenBatchDir(nearCopies(1000000L), dir, "crawl", 0L)
+    MaxSim.appendBatchDir(nearCopies(1000000L), dir, "crawl", 0L)
     val once = rows()
     for (q <- 0L to 2L)
       assert(once.exists(r => r._1 == q && r._2 == q + 1000000 && r._4 == 1),
         s"query $q: batch-dir near-copy not at rank 1")
     // at-least-once replay: the same (tag, batchId) REWRITES its
     // batch-scoped location — search unchanged
-    MaxSim.appendTokenBatchDir(nearCopies(1000000L), dir, "crawl", 0L)
+    MaxSim.appendBatchDir(nearCopies(1000000L), dir, "crawl", 0L)
     assert(rows() == once, "replayed micro-batch double-counted")
     // compaction fold: search-identical, live dirs consumed
-    MaxSim.compactTokenIndexBatches(spark, dir)
+    MaxSim.compactIndexBatches(spark, dir)
     assert(rows() == once, "compaction changed search results")
     assert(IndexBatches.live(spark, dir, "tokens").isEmpty,
       "batch dirs still live after compaction")
     // a batch replayed AFTER its fold is suppressed by the high-water
     // marker (its rows are already in the base layout)
-    MaxSim.appendTokenBatchDir(nearCopies(1000000L), dir, "crawl", 0L)
+    MaxSim.appendBatchDir(nearCopies(1000000L), dir, "crawl", 0L)
     assert(IndexBatches.live(spark, dir, "tokens").isEmpty,
       "folded batch id resurrected as live")
     assert(rows() == once, "suppressed replay still changed results")
     // crash-window shape: rows in the base AND a still-live dir (a new
     // tag) collapse to one through the (doc_id, tok) dedup
-    MaxSim.appendTokenBatchDir(nearCopies(1000000L), dir, "recrawl", 7L)
+    MaxSim.appendBatchDir(nearCopies(1000000L), dir, "recrawl", 7L)
     assert(rows() == once, "base∪batch duplicate rows double-counted")
-    MaxSim.compactTokenIndexBatches(spark, dir)
+    MaxSim.compactIndexBatches(spark, dir)
     // vacuum folds batches FIRST: a doc living only in a batch dir is
     // physically removed and cannot resurface once its tombstone clears
-    MaxSim.appendTokenBatchDir(nearCopies(2000000L), dir, "crawl", 1L)
-    MaxSim.deleteFromTokenIndex(Seq(2000000L, 2000001L, 2000002L)
+    MaxSim.appendBatchDir(nearCopies(2000000L), dir, "crawl", 1L)
+    MaxSim.deleteFromIndex(Seq(2000000L, 2000001L, 2000002L)
       .toDF("doc_id"), dir)
-    assert(MaxSim.vacuumTokenIndex(spark, dir) > 0L)
+    assert(MaxSim.vacuumIndex(spark, dir) > 0L)
     assert(rows() == once, "vacuumed batch docs still retrieved")
     for (ds <- Seq("tokens", "doctokens"))
       assert(spark.read.parquet(s"$dir/$ds")
@@ -391,8 +391,8 @@ class MaxSimSpec extends SparkSpec {
     assert(rows(Some(plan)) == rows(None),
       "shared probe plan diverged from per-search probing")
     val victim = rows(None).head._2
-    MaxSim.deleteFromTokenIndex(Seq(victim).toDF("doc_id"), dir)
-    MaxSim.vacuumTokenIndex(spark, dir)
+    MaxSim.deleteFromIndex(Seq(victim).toDF("doc_id"), dir)
+    MaxSim.vacuumIndex(spark, dir)
     // the pre-vacuum plan still serves: delete/vacuum never move cells
     val after = rows(Some(plan))
     assert(after == rows(None),
@@ -410,9 +410,9 @@ class MaxSimSpec extends SparkSpec {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_maxsim_purge").toString
     MaxSim.writeTokenIndex(docToks, dir, nClusters = 4)
-    MaxSim.deleteFromTokenIndex(emb.select(col("vec_id").as("doc_id")),
+    MaxSim.deleteFromIndex(emb.select(col("vec_id").as("doc_id")),
       dir)
-    assert(MaxSim.vacuumTokenIndex(spark, dir) > 0L)
+    assert(MaxSim.vacuumIndex(spark, dir) > 0L)
     for (ds <- Seq("tokens", "doctokens"))
       assert(spark.read.parquet(s"$dir/$ds").count() == 0L,
         s"purged $ds must still read (schema-carrying leaf)")
@@ -440,7 +440,7 @@ class MaxSimSpec extends SparkSpec {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_maxsim_fp").toString
     MaxSim.writeTokenIndex(docToks, dir, nClusters = 4)
-    MaxSim.appendTokenBatchDir(
+    MaxSim.appendBatchDir(
       MaxSim.subvectorTokens(
           emb.where(col("vec_id") < 3)
             .select((col("vec_id") + 1000000).as("vec_id"),
@@ -450,12 +450,12 @@ class MaxSimSpec extends SparkSpec {
       dir, "crawl", 0L)
     // tombstone EVERY doc, base and batch alike → the fused rewrite's
     // keep set is empty and must write the schema-carrying empty layout
-    MaxSim.deleteFromTokenIndex(
+    MaxSim.deleteFromIndex(
       emb.select(col("vec_id").as("doc_id"))
         .union(emb.where(col("vec_id") < 3)
           .select((col("vec_id") + 1000000).as("doc_id"))), dir)
     // 20 base + 3 batch docs × 8 tokens each
-    assert(MaxSim.vacuumTokenIndex(spark, dir) == 184L)
+    assert(MaxSim.vacuumIndex(spark, dir) == 184L)
     for (ds <- Seq("tokens", "doctokens"))
       assert(spark.read.parquet(s"$dir/$ds").count() == 0L,
         s"fused-purged $ds must still read (schema-carrying leaf)")

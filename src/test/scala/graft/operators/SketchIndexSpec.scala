@@ -74,7 +74,7 @@ class SketchIndexSpec extends SparkSpec {
       val rows = batch.as[(Long, Seq[Double])].collect().toSeq
       val src = MemoryStream[(Long, Seq[Double])]
       src.addData(rows: _*)
-      graft.streaming.EventStreams.sketchIndexSink(
+      graft.streaming.EventStreams.indexSink(SketchIndex,
           src.toDF().toDF("vec_id", "embedding"), dir,
           tagOverride = Some(tag))
         .awaitTermination()
