@@ -11,6 +11,8 @@ package graft
   * seconds are rounded to milliseconds and the `queries` map holds the
   * slowest queries that fit the byte budget; `value` is always the total
   * across ALL queries and `n_queries`/`omitted` record the coverage.
+  * `failed` counts the gates that threw (each named on stderr); the
+  * process then exits non-zero after printing the line.
   */
 /** Dev-only (see SPARK_GRAFT_BENCH_METRICS in [[Bench]]): per-gate task
   * metric sums, reset between gates. Listener events arrive async; the
@@ -93,23 +95,13 @@ object Bench {
       // dirs, so they overlap on one SparkContext (guide §2.6: submit
       // independent job chains from a small pool so the tail of one
       // build back-fills cores the others freed). Serial wall-clock was
-      // ~50 s; max(family) is the floor.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3,
-        (r: Runnable) => {
-          val t = new Thread(r, "graft-staging-warm"); t.setDaemon(true); t
-        })
-      implicit val ec: scala.concurrent.ExecutionContextExecutorService =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try {
-        val warms = Seq[() => Unit](
-          () => graft.queries.VaultQueries.warmStaging(spark, sfDir),
-          () => graft.queries.TextQueries.warmStaging(spark, sfDir),
-          () => graft.queries.VectorQueries.warmStaging(spark, sfDir))
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(
-            warms.map(f => scala.concurrent.Future(f()))),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
+      // ~50 s; max(family) is the floor. A failed warm-up cancels its
+      // siblings' jobs before the failure propagates.
+      graft.operators.IndexBatches.concurrently(spark, "staging-warm", Seq(
+        "vault" -> (() => graft.queries.VaultQueries.warmStaging(spark, sfDir)),
+        "text" -> (() => graft.queries.TextQueries.warmStaging(spark, sfDir)),
+        "vector" -> (() =>
+          graft.queries.VectorQueries.warmStaging(spark, sfDir))))
       math.round((System.nanoTime() - t0) / 1e9 * 1000) / 1000.0
     }
     // dev-only A/B filter (the driver sets no env): comma-separated query
@@ -127,80 +119,90 @@ object Bench {
     // readings) to GC / spill / fetch-wait / straggler — see
     // OPTIMIZATION_r20.md. Off by default; the timed path is unchanged
     // when the env is absent.
-    val metrics = sys.env.contains("SPARK_GRAFT_BENCH_METRICS")
-    val gm = if (metrics) Some(new BenchTaskMetrics) else None
+    val gm =
+      if (sys.env.contains("SPARK_GRAFT_BENCH_METRICS"))
+        Some(new BenchTaskMetrics) else None
     gm.foreach(spark.sparkContext.addSparkListener)
-    def gcNow(): (Long, Long) = {
-      import scala.jdk.CollectionConverters._
-      val beans = java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans.asScala
-      (beans.map(_.getCollectionCount).sum, beans.map(_.getCollectionTime).sum)
-    }
-    // whole-VM cpu ticks (user, system, idle, iowait, steal) — the box is
-    // a VM, so "host-neighbor load" shows up ONLY as steal ticks; per-gate
-    // deltas label a spike as external (steal/iowait) vs internal
-    def cpuTicks(): Array[Long] =
-      try {
-        val l = scala.io.Source.fromFile("/proc/stat").getLines().next()
-        val f = l.trim.split("\\s+").drop(1).map(_.toLong)
-        Array(f(0) + f(1), f(2), f(3), f(4), if (f.length > 7) f(7) else 0L)
-      } catch { case _: Throwable => Array(0L, 0L, 0L, 0L, 0L) }
-    // Janino compilation counter (driver-side, on the critical path the
-    // first time each codegen stage executes) — per-gate deltas plus the
-    // running mean compile time say how much of the per-gate floor is
-    // codegen compilation (the histogram is reservoir-sampled, so the
-    // mean is approximate; the count is exact)
-    def codegenStat(): (Long, Double) = {
-      val h = org.apache.spark.metrics.source.CodegenMetrics
-        .METRIC_COMPILATION_TIME
-      (h.getCount, h.getSnapshot.getMean)
-    }
     val base = SparkEntry.queries
     val selected = only match {
       case Some(names) => names.map(n => n -> base(n))
       case None => base.toSeq
     }
-    val results = selected
-      .map { case (name, fn) =>
-        val times = (1 to reps).map { _ =>
-          gm.foreach(_.reset())
-          val gc0 = if (metrics) gcNow() else (0L, 0L)
-          val ct0 = if (metrics) cpuTicks() else null
-          val cg0 = if (metrics) codegenStat() else (0L, 0.0)
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-          // released INSIDE the timed span: a query pays for its own
-          // cache cleanup, and the next query starts unburdened
-          graft.operators.OperatorCaches.releaseAll(spark)
-          val dt = (System.nanoTime() - t0) / 1e9
-          gm.foreach { g =>
-            Thread.sleep(80) // let the async listener bus drain
-            val gc1 = gcNow()
-            val ct1 = cpuTicks()
-            val cg1 = codegenStat()
-            val d = ct1.zip(ct0).map { case (a, b) => a - b }
-            val heapUsed = (Runtime.getRuntime.totalMemory -
-              Runtime.getRuntime.freeMemory) / (1 << 20)
-            System.err.println(f"[gate-metrics] $name wall=$dt%.2f ${g.line}" +
-              s" jvmGcN=${gc1._1 - gc0._1} jvmGcMs=${gc1._2 - gc0._2}" +
-              s" heapMb=$heapUsed" +
-              s" tkUser=${d(0)} tkSys=${d(1)} tkIdle=${d(2)}" +
-              s" tkIo=${d(3)} tkSteal=${d(4)}" +
-              f" cgN=${cg1._1 - cg0._1} cgMeanMs=${cg1._2}%.1f")
-          }
-          dt
+    val (results, failed) = timeGates(spark, sfDir, selected, reps, gm)
+    println(line(results, failed, stagingSec, sfDir))
+    spark.stop()
+    val status = exitStatus(failed)
+    if (status != 0) sys.exit(status)
+  }
+
+  /** Non-zero when any gate threw: a crashed gate must not read as a
+    * fast one. */
+  private[graft] def exitStatus(failed: Int): Int = if (failed > 0) 1 else 0
+
+  /** Time each gate `reps` times (the minimum is kept). A gate that
+    * throws is named on stderr with its exception and counted in the
+    * returned failure count; its time up to the throw is kept. */
+  private[graft] def timeGates(
+      spark: org.apache.spark.sql.SparkSession, sfDir: String,
+      gates: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame)],
+      reps: Int, gm: Option[BenchTaskMetrics]): (Seq[(String, Double)], Int) = {
+    var failed = 0
+    val results = gates.map { case (name, fn) =>
+      var gateFailed = false
+      val times = (1 to reps).map { _ =>
+        gm.foreach(_.reset())
+        val gc0 = if (gm.isDefined) gcNow() else (0L, 0L)
+        val ct0 = if (gm.isDefined) cpuTicks() else null
+        val cg0 = if (gm.isDefined) codegenStat() else (0L, 0.0)
+        val t0 = System.nanoTime()
+        try fn(spark, sfDir).count()
+        catch { case e: Throwable =>
+          gateFailed = true
+          System.err.println(s"[bench] gate $name FAILED: $e")
+          e.printStackTrace()
         }
-        if (reps > 1) System.err.println(
-          s"[bench] $name reps: ${times.map(t => f"$t%.2f").mkString(", ")}")
-        name -> times.min
+        // released INSIDE the timed span: a query pays for its own
+        // cache cleanup, and the next query starts unburdened
+        graft.operators.OperatorCaches.releaseAll(spark)
+        val dt = (System.nanoTime() - t0) / 1e9
+        gm.foreach { g =>
+          Thread.sleep(80) // let the async listener bus drain
+          val gc1 = gcNow()
+          val ct1 = cpuTicks()
+          val cg1 = codegenStat()
+          val d = ct1.zip(ct0).map { case (a, b) => a - b }
+          val heapUsed = (Runtime.getRuntime.totalMemory -
+            Runtime.getRuntime.freeMemory) / (1 << 20)
+          System.err.println(f"[gate-metrics] $name wall=$dt%.2f ${g.line}" +
+            s" jvmGcN=${gc1._1 - gc0._1} jvmGcMs=${gc1._2 - gc0._2}" +
+            s" heapMb=$heapUsed" +
+            s" tkUser=${d(0)} tkSys=${d(1)} tkIdle=${d(2)}" +
+            s" tkIo=${d(3)} tkSteal=${d(4)}" +
+            f" cgN=${cg1._1 - cg0._1} cgMeanMs=${cg1._2}%.1f")
+        }
+        dt
       }
+      if (gateFailed) failed += 1
+      if (reps > 1) System.err.println(
+        s"[bench] $name reps: ${times.map(t => f"$t%.2f").mkString(", ")}")
+      name -> times.min
+    }
+    (results, failed)
+  }
+
+  /** The result line: `value` sums every gate, `failed` counts the gates
+    * that threw, and `queries` holds the slowest gates that fit
+    * [[MaxLineBytes]]. */
+  private[graft] def line(results: Seq[(String, Double)], failed: Int,
+                          stagingSec: Double, sfDir: String): String = {
     val total = math.round(results.map(_._2).sum * 1000) / 1000.0
+    def json(omitted: Int, qs: String) =
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"omitted":$omitted,"failed":$failed,"staging_sec":$stagingSec,"sf":"$sfDir","queries":$qs}"""
     // slowest-first, greedily packed into the byte budget left after the
     // fixed fields; each entry costs `"name":sec,`
-    val header =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"omitted":000,"staging_sec":$stagingSec,"sf":"$sfDir","queries":{}}"""
-    var room = MaxLineBytes - header.length
-    val kept = results.toSeq
+    var room = MaxLineBytes - json(results.size, "{}").length
+    val kept = results
       .map { case (k, v) => k -> (math.round(v * 1000) / 1000.0) }
       .sortBy { case (k, v) => (-v, k) }
       .takeWhile { case (k, v) =>
@@ -209,10 +211,35 @@ object Bench {
         if (fits) room -= cost
         fits
       }
-    val qs = kept.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    println(
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"omitted":${results.size - kept.size},"staging_sec":$stagingSec,"sf":"$sfDir","queries":$qs}""")
-    spark.stop()
+    json(results.size - kept.size,
+      kept.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}"))
+  }
+
+  private def gcNow(): (Long, Long) = {
+    import scala.jdk.CollectionConverters._
+    val beans = java.lang.management.ManagementFactory
+      .getGarbageCollectorMXBeans.asScala
+    (beans.map(_.getCollectionCount).sum, beans.map(_.getCollectionTime).sum)
+  }
+
+  // whole-VM cpu ticks (user, system, idle, iowait, steal) — the box is
+  // a VM, so "host-neighbor load" shows up ONLY as steal ticks; per-gate
+  // deltas label a spike as external (steal/iowait) vs internal
+  private def cpuTicks(): Array[Long] =
+    try {
+      val l = scala.io.Source.fromFile("/proc/stat").getLines().next()
+      val f = l.trim.split("\\s+").drop(1).map(_.toLong)
+      Array(f(0) + f(1), f(2), f(3), f(4), if (f.length > 7) f(7) else 0L)
+    } catch { case _: Throwable => Array(0L, 0L, 0L, 0L, 0L) }
+
+  // Janino compilation counter (driver-side, on the critical path the
+  // first time each codegen stage executes) — per-gate deltas plus the
+  // running mean compile time say how much of the per-gate floor is
+  // codegen compilation (the histogram is reservoir-sampled, so the
+  // mean is approximate; the count is exact)
+  private def codegenStat(): (Long, Double) = {
+    val h = org.apache.spark.metrics.source.CodegenMetrics
+      .METRIC_COMPILATION_TIME
+    (h.getCount, h.getSnapshot.getMean)
   }
 }

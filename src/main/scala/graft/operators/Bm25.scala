@@ -97,86 +97,29 @@ object Bm25 extends PersistedIndex {
     * postings live entirely inside its bucket, so df computed from
     * probed buckets alone is exact (and from MASKED probed buckets,
     * exact over live documents). */
-  def writeIndex(docs: DataFrame, dir: String): Unit = {
-    writeDatasets(docs, dir, "overwrite")
-    resetLifecycle(docs.sparkSession, dir)
-  }
+  def writeIndex(docs: DataFrame, dir: String): Unit = build(docs, dir, ())
 
-  /** Append a document batch into a standing [[writeIndex]] layout —
-    * the nightly-crawl shape, O(batch) regardless of index size: the
-    * standing corpus is never re-tokenized; the batch's postings land as
-    * extra files inside the SAME term-bucket directories
-    * (dynamic-partition append) and its doclens rows append alongside.
-    * Because [[searchIndex]] DERIVES every corpus statistic — n_docs,
-    * avgdl, df — from those two datasets at search time, an append
-    * corrects all of them exactly (the mirror of how deletion corrects
-    * them through the ledger anti-join): post-append scores equal a
-    * fresh index over the grown corpus, with no stored-scalar staleness.
-    * Batch ids may collide with standing ids only if the caller
-    * re-ingests a document — the index stores postings, not doc rows, so
-    * a re-ingest double-counts and the caller owns id discipline (same
-    * contract as [[PhraseSearch.appendToIndex]]). */
-  def appendToIndex(docs: DataFrame, dir: String): Unit =
-    writeDatasets(docs, dir, "append")
+  /** No model: every corpus statistic derives from the datasets at
+    * search time, so an append (or a streamed batch) corrects n_docs,
+    * avgdl and df exactly, with no stored scalar to go stale. */
+  protected type Model = Unit
+  protected def readModel(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): Unit = ()
+  protected def modelFiles(spark: org.apache.spark.sql.SparkSession,
+                           u: Unit) = Nil
 
-  private def writeDatasets(docs: DataFrame, dir: String,
-                            mode: String): Unit = {
+  /** Each document's length, and its (term, doc_id, dl, tf) postings
+    * under their term bucket. */
+  protected def encode(docs: DataFrame, u: Unit,
+                       pin: DataFrame => DataFrame) = {
     val toks = docs.select(col("doc_id"), tokens(col("text")).as("toks"))
-    toks.select(col("doc_id"), size(col("toks")).as("dl"))
-      .write.mode(mode).parquet(s"$dir/doclens")
-    // cluster rows toward their bucket dir, but NOT on term_bucket
-    // alone — that would cap the write at IndexBuckets tasks. The
-    // second hash slice keeps every core writing while bounding the
-    // layout to `slices` files per bucket dir (same shape as
-    // Similarity's clustered index writes).
-    val slices = math.max(1,
-      docs.sparkSession.sparkContext.defaultParallelism / IndexBuckets)
-    toks
-      .select(col("doc_id"), size(col("toks")).as("dl"),
-        explode(col("toks")).as("term"))
-      .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
-      .withColumn("term_bucket",
-        pmod(hash(col("term")), lit(IndexBuckets)))
-      .repartition(IndexBuckets * slices, col("term_bucket"),
-        pmod(hash(col("doc_id")), lit(slices)))
-      .write.mode(mode).partitionBy("term_bucket")
-      .parquet(s"$dir/postings")
-  }
-
-  /** EXACTLY-ONCE streaming ingestion: one micro-batch lands under
-    * `batches/<tagHash>/<batchId>` with OVERWRITE (idempotent placement
-    * — the in-place [[appendToIndex]] would double-count under
-    * foreachBatch replay), carrying BOTH datasets the index derives
-    * everything from: `postings/` (term-bucket-partitioned, so lookups
-    * prune batch dirs too) and `doclens/` — the batch's documents
-    * correct n_docs/avgdl/df exactly the moment the batch commits,
-    * because [[searchIndex]] derives the statistics from doclens ∪
-    * batch doclens at search time. */
-  def appendBatchDir(docs: DataFrame, dir: String, tag: String,
-                     batchId: Long): Unit = {
-    val toks = docs.select(col("doc_id"), tokens(col("text")).as("toks"))
-    val batchRoot =
-      s"$dir/batches/${IndexBatches.tagHash(tag)}/$batchId"
-    // two sub-datasets inside ONE batch dir: written postings-first,
-    // doclens last — a crashed half-written batch is rewritten wholesale
-    // by the replay (overwrite), never half-counted
-    // clustered to the leaf (r19): the tf groupBy leaves the frame
-    // hash-partitioned by (term, doc_id), so an unclustered dynamic
-    // write emits up to tasks × buckets tiny files per micro-batch,
-    // each taxing every later union-read (guide §6); the doclens rows
-    // of one micro-batch are one small file by construction
-    toks
-      .select(col("doc_id"), size(col("toks")).as("dl"),
-        explode(col("toks")).as("term"))
-      .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
-      .withColumn("term_bucket",
-        pmod(hash(col("term")), lit(IndexBuckets)))
-      .repartition(col("term_bucket"))
-      .write.mode("overwrite").partitionBy("term_bucket")
-      .parquet(s"$batchRoot/postings")
-    toks.select(col("doc_id"), size(col("toks")).as("dl"))
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$batchRoot/doclens")
+    Seq("doclens" -> toks.select(col("doc_id"), size(col("toks")).as("dl")),
+      "postings" -> toks
+        .select(col("doc_id"), size(col("toks")).as("dl"),
+          explode(col("toks")).as("term"))
+        .groupBy("term", "doc_id", "dl").agg(count(lit(1)).as("tf"))
+        .withColumn("term_bucket",
+          pmod(hash(col("term")), lit(IndexBuckets))))
   }
 
   /** The kind's layout: doclens folds flat with doc_id dedup (tiny — no
@@ -232,9 +175,7 @@ object Bm25 extends PersistedIndex {
     // corpus constants from doclens MINUS the ledger — the same mask
     // the postings get, so deletions correct n_docs/avgdl/df exactly
     // and post-delete scores equal a fresh index over the live corpus
-    val ts = ledger(spark, dir)
-    val doclens =
-      masked(readLive(spark, dir, "doclens", liveDirs, mask = false), ts)
+    val doclens = readLive(spark, dir, "doclens", liveDirs)
     // INLINE since r19 (same move as [[topK]]): the corpus-constant agg
     // rides the scoring job as a one-row broadcast cross-join instead
     // of a separate collect() action — one job fewer per search, no
@@ -255,26 +196,16 @@ object Bm25 extends PersistedIndex {
     // before re-collecting the same rows for the pruning path)
     val qTermProbe = qTermDf.limit(maxTerms + 1).collect()
     val smallQ = qTermProbe.length <= maxTerms
-    val pCols = Seq("term", "doc_id", "dl", "tf", "term_bucket").map(col)
-    val raw = liveDirs.foldLeft(
-        spark.read.parquet(s"$dir/postings").select(pCols: _*)) { (acc, p) =>
-      acc.union(spark.read.parquet(s"$p/postings").select(pCols: _*))
-    }
-    val postings = masked(raw, ts)
-    val pruned =
+    // the prune applies at each scan, so the live-dirs dedup shuffle
+    // covers query-term rows only
+    val prune: DataFrame => DataFrame =
       if (smallQ) {
         val qTerms = qTermProbe.map(_.getString(0))
         val buckets = qTerms.map(TermBuckets.of(_, IndexBuckets)).distinct
-        postings
-          .where(col("term_bucket").isin(buckets.map(Integer.valueOf): _*))
+        _.where(col("term_bucket").isin(buckets.map(Integer.valueOf): _*))
           .where(col("term").isin(qTerms: _*))
-      } else {
-        postings.join(qTermDf, "term")
-      }
-    // dedup AFTER pruning — the shuffle covers query-term rows only
-    val tf =
-      if (liveDirs.isEmpty) pruned
-      else pruned.dropDuplicates("term", "doc_id")
+      } else _.join(qTermDf, "term")
+    val tf = readLive(spark, dir, "postings", liveDirs, prune)
     val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val idf = withStats(df).select(col("term"),
       log(lit(1.0) + (col("__ndocs") - col("df") + 0.5)

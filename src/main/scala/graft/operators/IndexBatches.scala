@@ -37,23 +37,51 @@ object IndexBatches {
     catch { case _: NumberFormatException => None }
   }
 
-  /** Write one micro-batch dataset into its batch-scoped directory
-    * (OVERWRITE — replays rewrite, never accrete), partitioned like the
-    * base layout so partition pruning prunes batch dirs too.
-    *
-    * The rows are CLUSTERED to their partition value first (r19,
-    * guide §6 small files): the upstream frame usually arrives hash-
-    * partitioned by id (the assignment window / groupBy), so an
-    * unclustered dynamic-partition write emits up to
-    * tasks × |values| files — hundreds of KB-sized files for one
-    * micro-batch, each charging a footer read + open cost to EVERY
-    * subsequent search that unions the live dirs. One tiny extra
-    * shuffle of the micro-batch bounds it to one file per leaf. */
-  def writeBatch(df: DataFrame, dir: String, tag: String, batchId: Long,
-                 partitionCol: String): Unit =
-    df.repartition(col(partitionCol))
-      .write.mode("overwrite").partitionBy(partitionCol)
-      .parquet(s"$dir/batches/${tagHash(tag)}/$batchId")
+  /** How [[writeDataset]] shapes and places one dataset's rows. */
+  private[operators] sealed trait Write
+
+  /** A build or a staged rewrite: overwrite, a partitioned dataset
+    * clustered to fanout·slices on (partition, hash(sliceKey) % slices)
+    * so every core writes while the layout stays at `slices` files per
+    * leaf, a flat one to `fanout` files (`fanout <= 0` = the plan's own
+    * partitioning). The fanout is read against `modelDir`, the directory
+    * holding the model files the rows were encoded with. */
+  private[operators] final case class Clustered(modelDir: String)
+      extends Write
+
+  /** A base append: new files inside the standing leaves, no shuffle — a
+    * shuffle per small batch costs more than the files it saves. */
+  private[operators] case object Append extends Write
+
+  /** An exactly-once micro-batch slot: overwrite (a replay rewrites its
+    * slot instead of accreting), each leaf clustered to one file — the
+    * upstream frame usually arrives hash-partitioned by id, and an
+    * unclustered dynamic-partition write would emit up to tasks × leaves
+    * tiny files, each charging a footer read to every later search that
+    * unions the live dirs. A flat dataset is one file. */
+  private[operators] case object Slot extends Write
+
+  /** The one write every persisted index dataset goes through — build,
+    * append, batch slot, fold and recenter staging — shaped by the
+    * dataset's [[FusedDataset]] row and partitioned like the base layout
+    * so partition pruning prunes every copy. */
+  private[operators] def writeDataset(d: FusedDataset, rows: DataFrame,
+                                      path: String, how: Write): Unit = {
+    val shaped = (how, d.partitionCol) match {
+      case (Clustered(modelDir), Some(part)) =>
+        val n = math.max(1, d.fanout(rows.sparkSession, modelDir))
+        val s = slices(rows.sparkSession, n)
+        rows.repartition(n * s, col(part), pmod(hash(col(d.sliceKey)), lit(s)))
+      case (Clustered(modelDir), None) =>
+        val n = d.fanout(rows.sparkSession, modelDir)
+        if (n > 0) rows.repartition(n) else rows
+      case (Slot, Some(part)) => rows.repartition(col(part))
+      case (Slot, None) => rows.coalesce(1)
+      case (Append, _) => rows
+    }
+    val w = shaped.write.mode(if (how == Append) "append" else "overwrite")
+    d.partitionCol.fold(w)(w.partitionBy(_)).parquet(path)
+  }
 
   /** The compaction high-water marker stored inside `base`. The marker
     * is the ONLY thing suppressing already-folded batch dirs whose
@@ -117,19 +145,15 @@ object IndexBatches {
     *     dedup — e.g. IVF-flat and phrase postings, where id discipline
     *     is the caller's);
     *   - `partitionCol`/`fanout`/`sliceKey`: the clustered-write
-    *     discipline — dynamic-partitioned layouts repartition to
-    *     fanout·slices on (partition, hash(sliceKey) % slices) so every
-    *     core writes while the layout stays at `slices` files per leaf;
-    *     flat layouts repartition to `fanout` files (`fanout <= 0` =
-    *     leave the plan's partitioning as-is, for tiny datasets like
-    *     BM25 doclens). The fanout is a function of the session and the
-    *     index dir, evaluated only by a rewrite: a cell-partitioned
-    *     layout reads it from the centroids' footer
+    *     discipline of [[writeDataset]]'s [[Clustered]] shape (`fanout
+    *     <= 0` leaves a flat dataset's plan partitioning as-is, for tiny
+    *     datasets like BM25 doclens). The fanout is a function of the
+    *     session and the model dir, evaluated only by a write: a
+    *     cell-partitioned layout reads it from the centroids' footer
     *     ([[centroidFanout]]), which a search never needs;
     *   - `batchNested`: whether a batch dir carries this dataset as a
     *     SUBDIRECTORY (multi-dataset kinds) or IS the dataset
-    *     (single-dataset kinds, whose [[writeBatch]] wrote rows at the
-    *     batch root). */
+    *     (single-dataset kinds, whose rows land at the batch root). */
   final case class FusedDataset(name: String, columns: Seq[String],
                                 dedupKeys: Seq[String],
                                 partitionCol: Option[String],
@@ -156,15 +180,17 @@ object IndexBatches {
     * hung Spark job must not hang the maintenance pass forever —
     * [[TimeoutSec]]), and fail-fast sibling CANCELLATION via per-pass
     * job groups (a failure in one task cancels the others' running jobs
-    * instead of letting them burn the cluster). A single task runs
-    * inline — no pool, no job-group ceremony. */
-  private[operators] def concurrently[A](spark: SparkSession, kind: String,
+    * instead of letting them burn the cluster, and the pool is shut down
+    * NOW so no sibling submits another job while the caller unwinds). A
+    * single task runs inline — no pool, no job-group ceremony. Bench's
+    * staging warm-ups run through it too. */
+  private[graft] def concurrently[A](spark: SparkSession, kind: String,
       tasks: Seq[(String, () => A)]): Map[String, A] = {
     if (tasks.size == 1) return Map(tasks.head._1 -> tasks.head._2())
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       tasks.size,
       (r: Runnable) => {
-        val t = new Thread(r, s"graft-$kind-vacuum")
+        val t = new Thread(r, s"graft-$kind")
         t.setDaemon(true); t
       })
     implicit val ec: scala.concurrent.ExecutionContextExecutorService =
@@ -184,6 +210,7 @@ object IndexBatches {
         scala.concurrent.duration.Duration(TimeoutSec,
           java.util.concurrent.TimeUnit.SECONDS)).toMap
       catch { case e: Throwable =>
+        pool.shutdownNow()
         tasks.foreach { case (name, _) =>
           spark.sparkContext.cancelJobGroup(s"$grp-$name") }
         throw e
@@ -295,19 +322,7 @@ object IndexBatches {
         if (dedupKeys(d).nonEmpty) purged.dropDuplicates(dedupKeys(d))
         else purged
       val tmp = new org.apache.hadoop.fs.Path(s"$dir/.${d.name}.compact")
-      d.partitionCol match {
-        case Some(part) =>
-          val n = math.max(1, fanout(d))
-          val slices = IndexBatches.slices(spark, n)
-          keep.repartition(n * slices, col(part),
-              pmod(hash(col(d.sliceKey)), lit(slices)))
-            .write.mode("overwrite").partitionBy(part)
-            .parquet(tmp.toString)
-        case None =>
-          val n = fanout(d)
-          (if (n > 0) keep.repartition(n) else keep)
-            .write.mode("overwrite").parquet(tmp.toString)
-      }
+      writeDataset(d, keep, tmp.toString, Clustered(dir))
       // full-purge edge, detected from the staged dir itself (the
       // empty-keep decision no longer needs a pre-write count job): a
       // zero-row write emits no data leaves, which would brick later

@@ -115,7 +115,7 @@ object IvfPq extends PersistedIndex {
     require(d % m == 0, s"dim $d must divide into m=$m subspaces")
     val subDim = d / m
     // residuals of the sample against each point's own nearest cell —
-    // exactly what encode() computes corpus-wide
+    // exactly what encodeCodes() computes corpus-wide
     val nCents = unitCents(cents)
     val byId = nCents.map(c => c._1 -> c._2).toMap
     val residuals = sample.map { case (id, v) =>
@@ -134,7 +134,7 @@ object IvfPq extends PersistedIndex {
   /** Encode the corpus: (cand_id, centroid_id, codes) — one scan-local
     * projection; the model rides the closure. Codes are the per-subspace
     * nearest residual-codebook entries (L2, ties to the lowest id). */
-  def encode(candidates: DataFrame, model: Model): DataFrame = {
+  def encodeCodes(candidates: DataFrame, model: Model): DataFrame = {
     val spark = candidates.sparkSession
     import spark.implicits._
     val nCents = unitCents(model.cents)
@@ -206,13 +206,26 @@ object IvfPq extends PersistedIndex {
                 codes: Option[DataFrame] = None,
                 maxQ: Int = 65536): DataFrame = {
     require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    val spark = candidates.sparkSession
-    import spark.implicits._
-    // the maxQ bound rides the query collect itself (r19 — a loud
-    // limit cap + length recheck, the planTokenProbes pattern) instead
-    // of a separate limit+count guard job before it; the collect runs
-    // BEFORE fit/encode so an oversized query table fails before paying
-    // KMeans training (ADVICE r19)
+    // collected BEFORE fit/encode so an oversized query table fails
+    // before paying KMeans training (ADVICE r19)
+    val qRows = queryRows(queries, maxQ, "ivfpqTopK")
+    val mdl = model.getOrElse(
+      fit(candidates, nClusters, m, ks, centroids = centroids))
+    val coded = codes.getOrElse(encodeCodes(candidates, mdl))
+    val probes = probeTables(candidates.sparkSession, qRows, mdl, nProbe)
+    rerankExact(candidates.select(col("vec_id").as("cand_id"),
+        asDouble(col("embedding")).as("cv")),
+      adcShortlist(coded, probes, rerank), qRows, k)
+  }
+
+  /** The unit-normalized query rows, collected under the maxQ bound: the
+    * bound rides the collect itself (r19 — a loud limit cap + length
+    * recheck, the planTokenProbes pattern) instead of a separate
+    * limit+count guard job. Probe tables are built driver-side and
+    * broadcast, so the query table must be bounded. */
+  private def queryRows(queries: DataFrame, maxQ: Int,
+                        caller: String): Array[(Long, Array[Double])] = {
+    import queries.sparkSession.implicits._
     val qRows = queries
       .select(col("vec_id").as("query_id"),
         asDouble(col("embedding")).as("vec"))
@@ -220,17 +233,18 @@ object IvfPq extends PersistedIndex {
       .as[(Long, Seq[Double])].collect()
       .map { case (id, raw) => (id, ProductQuant.l2normalize(raw.toArray)) }
     require(qRows.length <= maxQ,
-      s"ivfpqTopK query side exceeds maxQ=$maxQ rows: probe tables are " +
-        "built driver-side and broadcast, so the query table must be " +
-        "bounded — batch the queries or raise maxQ explicitly")
-    val mdl = model.getOrElse(
-      fit(candidates, nClusters, m, ks, centroids = centroids))
-    val coded = codes.getOrElse(encode(candidates, mdl))
-    val probes = probeTables(spark, qRows, mdl, nProbe)
+      s"$caller query side exceeds maxQ=$maxQ rows — batch the queries " +
+        "or raise maxQ explicitly")
+    qRows
+  }
 
+  /** Each query's `rerank` best candidates by ADC score over `codes`
+    * joined to the broadcast probe tables. */
+  private def adcShortlist(codes: DataFrame, probes: DataFrame,
+                           rerank: Int): DataFrame = {
     val adcW = Window.partitionBy("query_id")
       .orderBy(desc("adc"), asc("cand_id"))
-    val shortlist = coded.join(broadcast(probes), Seq("centroid_id"))
+    codes.join(broadcast(probes), Seq("centroid_id"))
       .where(col("query_id") =!= col("cand_id"))
       .withColumn("adc", round4(col("qmu") +
         expr("aggregate(zip_with(codes, tbl," +
@@ -238,9 +252,6 @@ object IvfPq extends PersistedIndex {
       .withColumn("__r", row_number().over(adcW))
       .where(col("__r") <= rerank)
       .select("query_id", "cand_id")
-
-    rerankExact(candidates.select(col("vec_id").as("cand_id"),
-      asDouble(col("embedding")).as("cv")), shortlist, qRows, k)
   }
 
   /** Exact-cosine re-rank of an ADC shortlist against full vectors:
@@ -280,7 +291,7 @@ object IvfPq extends PersistedIndex {
                    maxQ: Int = 65536): DataFrame = {
     val spark = candidates.sparkSession
     val mdl = fit(candidates, nClusters, m, ks, centroids = centroids)
-    val coded = StagingCaches.cache(encode(candidates, mdl))
+    val coded = StagingCaches.cache(encodeCodes(candidates, mdl))
     // distributed global rank (GlobalRank's range-repartition shape) —
     // a bare Window.orderBy would collapse the query table to one task
     val ranked = StagingCaches.cache(
@@ -310,51 +321,19 @@ object IvfPq extends PersistedIndex {
     * (both tiny, one file each), `<dir>/pqcodes` and `<dir>/vectors`
     * both PARTITIONED by centroid_id — so an `nProbe` search reads the
     * probed cells' CODE files for ADC scoring and only the probed cells'
-    * vector files (shortlist-filtered) for the exact re-rank. Same
-    * clustered-write discipline as Similarity.clusteredWrite: rows are
-    * repartitioned toward their output directory with a second hash
-    * slice keeping every core writing (tasks × clusters small-file
-    * explosion avoided, parallelism preserved). */
+    * vector files (shortlist-filtered) for the exact re-rank. Both
+    * datasets are written clustered to the layout by the trait's layout
+    * writer. */
   def writeIndex(candidates: DataFrame, dir: String, nClusters: Int = 16,
                  m: Int = 8, ks: Int = 16,
                  centroids: Option[DataFrame] = None,
-                 model: Option[Model] = None): Unit = {
-    val spark = candidates.sparkSession
-    import spark.implicits._
-    val mdl = model.getOrElse(
-      fit(candidates, nClusters, m, ks, centroids = centroids))
-    mdl.cents.toSeq.map { case (cid, v) => (cid, v.toSeq) }
-      .toDF("centroid_id", "centroid_vec")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    ProductQuant.codebooksDF(spark, mdl.cb)
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
-    // pinned for the two consumers below (the pqcodes write and the
-    // vectors routing join) — without it the whole encode projection
-    // runs twice
-    val coded = StagingCaches.cache(encode(candidates, mdl))
-    val slices = math.max(1,
-      spark.sparkContext.defaultParallelism / nClusters)
-    try {
-      coded
-        .repartition(nClusters * slices, col("centroid_id"),
-          pmod(hash(col("cand_id")), lit(slices)))
-        .write.mode("overwrite").partitionBy("centroid_id")
-        .parquet(s"$dir/pqcodes")
-      candidates
-        .select(col("vec_id").as("cand_id"),
-          asDouble(col("embedding")).as("cand_vec"))
-        .join(coded.select("cand_id", "centroid_id"), "cand_id")
-        .repartition(nClusters * slices, col("centroid_id"),
-          pmod(hash(col("cand_id")), lit(slices)))
-        .write.mode("overwrite").partitionBy("centroid_id")
-        .parquet(s"$dir/vectors")
-    } finally coded.unpersist()
-    resetLifecycle(spark, dir)
-  }
+                 model: Option[Model] = None): Unit =
+    build(candidates, dir, model.getOrElse(
+      fit(candidates, nClusters, m, ks, centroids = centroids)))
 
   /** Load a persisted index's model (centroids + codebooks — both tiny,
     * two small parquet reads). */
-  private def readModel(spark: SparkSession, dir: String): Model = {
+  protected def readModel(spark: SparkSession, dir: String): Model = {
     val cents = spark.read.parquet(s"$dir/centroids")
       .collect().map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
@@ -369,61 +348,23 @@ object IvfPq extends PersistedIndex {
       ProductQuant.Codebooks(m, books(0).length, books(0)(0).length, books))
   }
 
-  /** Incremental index growth — the production IVF-PQ contract: the
-    * batch encodes against the STANDING model (coarse cells and residual
-    * codebooks deliberately not refit; rebuild when drift warrants it,
-    * same trade as [[Similarity.appendToIndex]]), and its code/vector
-    * rows land as extra files inside the SAME centroid_id directories
-    * (dynamic-partition append) — O(batch) regardless of index size,
-    * zero search-path changes. Batch id discipline is the caller's
-    * (a re-ingested id would shadow nothing and rank twice). */
-  def appendToIndex(newVectors: DataFrame, dir: String): Unit = {
-    val spark = newVectors.sparkSession
-    val mdl = readModel(spark, dir)
-    val coded = StagingCaches.cache(encode(newVectors, mdl))
-    try {
-      // micro-batch-sized appends skip the clustered repartition — a
-      // shuffle per tiny batch costs more than the files it saves
-      coded.write.mode("append").partitionBy("centroid_id")
-        .parquet(s"$dir/pqcodes")
-      newVectors
-        .select(col("vec_id").as("cand_id"),
-          asDouble(col("embedding")).as("cand_vec"))
-        .join(coded.select("cand_id", "centroid_id"), "cand_id")
-        .write.mode("append").partitionBy("centroid_id")
-        .parquet(s"$dir/vectors")
-    } finally coded.unpersist()
+  protected def modelFiles(spark: SparkSession, mdl: Model) = {
+    import spark.implicits._
+    Seq("codebooks" -> ProductQuant.codebooksDF(spark, mdl.cb),
+      "centroids" -> mdl.cents.toSeq.map { case (cid, v) => (cid, v.toSeq) }
+        .toDF("centroid_id", "centroid_vec"))
   }
 
-  /** EXACTLY-ONCE streaming ingestion: one micro-batch encodes against
-    * the STANDING model and lands under `batches/<tagHash>/<batchId>`
-    * with OVERWRITE (idempotent placement — the in-place
-    * [[appendToIndex]] would double-count under foreachBatch replay),
-    * carrying BOTH datasets (`pqcodes/` and `vectors/`, each
-    * centroid-partitioned so probes prune batch dirs too). */
-  def appendBatchDir(newVectors: DataFrame, dir: String, tag: String,
-                     batchId: Long): Unit = {
-    val spark = newVectors.sparkSession
-    val mdl = readModel(spark, dir)
-    val coded = StagingCaches.cache(encode(newVectors, mdl))
-    val batchRoot =
-      s"$dir/batches/${IndexBatches.tagHash(tag)}/$batchId"
-    try {
-      // clustered to the leaf (r19): the encoded frame arrives hash-
-      // partitioned by id, so an unclustered dynamic write emits up to
-      // tasks × cells tiny files per micro-batch, each taxing every
-      // later union-read (guide §6)
-      coded.repartition(col("centroid_id"))
-        .write.mode("overwrite").partitionBy("centroid_id")
-        .parquet(s"$batchRoot/pqcodes")
-      newVectors
+  /** The codes, pinned for the vectors' cell routing join (without the
+    * pin the whole encode projection runs twice). */
+  protected def encode(vectors: DataFrame, mdl: Model,
+                       pin: DataFrame => DataFrame) = {
+    val coded = pin(encodeCodes(vectors, mdl))
+    Seq("pqcodes" -> coded,
+      "vectors" -> vectors
         .select(col("vec_id").as("cand_id"),
           asDouble(col("embedding")).as("cand_vec"))
-        .join(coded.select("cand_id", "centroid_id"), "cand_id")
-        .repartition(col("centroid_id"))
-        .write.mode("overwrite").partitionBy("centroid_id")
-        .parquet(s"$batchRoot/vectors")
-    } finally coded.unpersist()
+        .join(coded.select("cand_id", "centroid_id"), "cand_id"))
   }
 
   /** The kind's layout: cand_id-deduped fold (a batch present in the
@@ -441,82 +382,31 @@ object IvfPq extends PersistedIndex {
       Seq("cand_id", "codes", "centroid_id"), Seq("cand_id"),
       Some("centroid_id"), IndexBatches.centroidFanout, "cand_id"))
 
-  /** Out-of-band model refresh — the maintenance step [[appendToIndex]]
-    * and the streaming sink deliberately skip: batches encode against
-    * stale cells and codebooks, so as the corpus drifts both the coarse
+  /** Out-of-band model refresh — the maintenance step appends and the
+    * streaming sink deliberately skip: batches encode against stale
+    * cells and codebooks, so as the corpus drifts both the coarse
     * routing AND the residual quantization error degrade. Recenter
     * re-fits the WHOLE model (cells + residual codebooks) from the
     * vectors the index stores, re-encodes every vector, and swaps all
-    * four datasets in behind staged writes — live streaming batch dirs
-    * fold in first (their rows carry old-cell routing), the compaction
-    * marker carries through, standing tombstones keep masking (the
-    * ledger is untouched; a pending delete stays pending).
-    *
-    * Crash contract: four directories cannot swap atomically. The swap
-    * order (vectors, pqcodes+marker, codebooks, centroids) means an
-    * interruption leaves codes encoded under a model the reader hasn't
-    * fully switched to yet — ADC recall DEGRADES until recenter
-    * re-runs, but nothing fabricates: the exact re-rank still scores
-    * every surfaced candidate with its true cosine, and re-running
-    * recenter converges (it reads only the vectors dataset, which is
-    * model-independent). Returns (n_vectors, n_moved, n_clusters). */
+    * four datasets in through the trait's recenter commit (vectors,
+    * pqcodes + marker, codebooks, centroids). An interruption between
+    * swaps leaves codes encoded under a model the reader hasn't fully
+    * switched to: ADC recall DEGRADES until recenter re-runs, but the
+    * exact re-rank still scores every surfaced candidate with its true
+    * cosine, and re-running converges (it reads only the vectors
+    * dataset, which is model-independent). Returns (n_vectors, n_moved,
+    * n_clusters). */
   def recenterIndex(spark: SparkSession, dir: String, nClusters: Int = 16,
                     m: Int = 8, ks: Int = 16): DataFrame = {
     import spark.implicits._
     compactIndexBatches(spark, dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val old = spark.read.parquet(s"$dir/vectors")
-      .select(col("cand_id"), col("cand_vec"),
-        col("centroid_id").as("old_cid"))
-    val asEmb = old.select(col("cand_id").as("vec_id"),
-      col("cand_vec").as("embedding"))
-    val mdl = fit(asEmb, nClusters, m, ks)
-    val coded = StagingCaches.cache(encode(asEmb, mdl))
-    try {
-      val slices = math.max(1,
-        spark.sparkContext.defaultParallelism / math.max(1, nClusters))
-      val tmpV = new org.apache.hadoop.fs.Path(s"$dir/.vectors.recenter")
-      val tmpP = new org.apache.hadoop.fs.Path(s"$dir/.pqcodes.recenter")
-      val tmpB = new org.apache.hadoop.fs.Path(s"$dir/.codebooks.recenter")
-      val tmpC = new org.apache.hadoop.fs.Path(s"$dir/.centroids.recenter")
-      old.select(col("cand_id"), col("cand_vec"))
-        .join(coded.select("cand_id", "centroid_id"), "cand_id")
-        .repartition(nClusters * slices, col("centroid_id"),
-          pmod(hash(col("cand_id")), lit(slices)))
-        .write.mode("overwrite").partitionBy("centroid_id")
-        .parquet(tmpV.toString)
-      coded.repartition(nClusters * slices, col("centroid_id"),
-          pmod(hash(col("cand_id")), lit(slices)))
-        .write.mode("overwrite").partitionBy("centroid_id")
-        .parquet(tmpP.toString)
-      ProductQuant.codebooksDF(spark, mdl.cb)
-        .coalesce(1).write.mode("overwrite").parquet(tmpB.toString)
-      mdl.cents.toSeq.map { case (cid, v) => (cid, v.toSeq) }
-        .toDF("centroid_id", "centroid_vec")
-        .coalesce(1).write.mode("overwrite").parquet(tmpC.toString)
-      // drift stats from the STAGED routing, before any swap
-      val Seq((total, moved)) = coded
-        .select(col("cand_id"), col("centroid_id"))
-        .join(old.select(col("cand_id"), col("old_cid")), "cand_id")
-        .agg(count(lit(1)), sum(when(col("centroid_id") =!= col("old_cid"),
-          1L).otherwise(0L)))
-        .as[(Long, Long)].collect().toSeq
-      IndexBatches.writeMarker(fs, tmpP, IndexBatches.readMarker(fs,
-        new org.apache.hadoop.fs.Path(s"$dir/pqcodes")))
-      graft.sources.Formats.swapInto(fs, tmpV,
-        new org.apache.hadoop.fs.Path(s"$dir/vectors"))
-      graft.sources.Formats.swapInto(fs, tmpP,
-        new org.apache.hadoop.fs.Path(s"$dir/pqcodes"))
-      graft.sources.Formats.swapInto(fs, tmpB,
-        new org.apache.hadoop.fs.Path(s"$dir/codebooks"))
-      graft.sources.Formats.swapInto(fs, tmpC,
-        new org.apache.hadoop.fs.Path(s"$dir/centroids"))
-      Seq("vectors", "pqcodes", "codebooks", "centroids")
-        .foreach(ds => spark.catalog.refreshByPath(s"$dir/$ds"))
-      Seq((total, moved, nClusters.toLong))
-        .toDF("n_vectors", "n_moved", "n_clusters")
-    } finally coded.unpersist()
+      .select(col("cand_id").as("vec_id"), col("cand_vec").as("embedding"),
+        col("centroid_id"))
+    val (total, moved) = recenter(dir, fit(old, nClusters, m, ks), old)(
+      staged => Similarity.drift(staged("pqcodes"), old))
+    Seq((total, moved, nClusters.toLong))
+      .toDF("n_vectors", "n_moved", "n_clusters")
   }
 
   /** Search a persisted [[writeIndex]] index. Result-identical to
@@ -529,25 +419,12 @@ object IvfPq extends PersistedIndex {
                   k: Int = 10, nProbe: Int = 4, rerank: Int = 50,
                   maxQ: Int = 65536): DataFrame = {
     require(rerank >= k, s"rerank ($rerank) must be >= k ($k)")
-    import spark.implicits._
     val mdl = readModel(spark, dir)
-    // maxQ bound rides the query collect itself (r19 — loud limit cap
-    // + length recheck instead of a separate limit+count guard job)
-    val qRows = queries
-      .select(col("vec_id").as("query_id"),
-        asDouble(col("embedding")).as("vec"))
-      .limit(maxQ + 1)
-      .as[(Long, Seq[Double])].collect()
-      .map { case (id, raw) => (id, ProductQuant.l2normalize(raw.toArray)) }
-    require(qRows.length <= maxQ,
-      s"searchIndex query side exceeds maxQ=$maxQ rows — batch the queries")
+    val qRows = queryRows(queries, maxQ, "searchIndex")
     val probes = probeTables(spark, qRows, mdl, nProbe)
     val nCents = unitCents(mdl.cents)
     val probedCells = qRows.flatMap { case (_, qv) =>
       nearestCells(qv, nCents, nProbe) }.distinct.toSeq
-
-    val adcW = Window.partitionBy("query_id")
-      .orderBy(desc("adc"), asc("cand_id"))
     // live streaming batch dirs union in transparently (probed-cell
     // pruning applies to them too); while any exist, both datasets
     // dedup on cand_id so the compaction crash window never
@@ -557,16 +434,8 @@ object IvfPq extends PersistedIndex {
       df.where(col("centroid_id").isin(probedCells: _*))
     // the ledger anti-join lands BEFORE the ADC ranking, so a tombstoned
     // vector can never enter the shortlist
-    val liveCodes = readLive(spark, dir, "pqcodes", liveDirs, probed)
-    val shortlist = liveCodes
-      .join(broadcast(probes), Seq("centroid_id"))
-      .where(col("query_id") =!= col("cand_id"))
-      .withColumn("adc", round4(col("qmu") +
-        expr("aggregate(zip_with(codes, tbl," +
-          " (c, t) -> element_at(t, c + 1)), 0D, (acc, x) -> acc + x)")))
-      .withColumn("__r", row_number().over(adcW))
-      .where(col("__r") <= rerank)
-      .select("query_id", "cand_id")
+    val shortlist = adcShortlist(
+      readLive(spark, dir, "pqcodes", liveDirs, probed), probes, rerank)
     val vecs = readLive(spark, dir, "vectors", liveDirs, probed, mask = false)
       .select(col("cand_id"), col("cand_vec").as("cv"))
     rerankExact(vecs, shortlist, qRows, k)

@@ -44,13 +44,9 @@ object MaxSim extends PersistedIndex {
   protected val deleteIdCol = "doc_id"
   protected val storedIdCol = "doc_id"
 
-  /** round(x·10⁴) half-away-from-zero as a long — integer-exact
-    * accumulation domain for order-independent sums (the same shape as
-    * Similarity's i4). */
-  private def i4(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    val s = c * 10000.0
-    when(s >= 0, floor(s + 0.5)).otherwise(ceil(s - 0.5)).cast("long")
-  }
+  // round(x·10⁴) half-away-from-zero as a long: an integer-exact
+  // accumulation domain for order-independent sums
+  import Similarity.i4
 
   /** The largest doc id the packed token id can carry without long
     * overflow: id·1024 + tok ≤ Long.MaxValue. */
@@ -142,11 +138,7 @@ object MaxSim extends PersistedIndex {
     val qTok = queryTokens.select(
       packedTid(col("query_id"), col("tok")).as("qtid"),
       asDouble(col("vec")).as("qv"))
-    val cents = Similarity.fitCentroids(
-      dTok.select(col("tid").as("vec_id"), col("dv").as("embedding")),
-      nClusters)
-      .select(col("centroid_id").cast("int").as("centroid_id"),
-        col("centroid_vec"))
+    val cents = fitCells(dTok, "dv", nClusters)
     val assigned = Similarity.nearestCentroids(
       dTok, cents, "tid", "dv", 1)
     val probes = Similarity.nearestCentroids(
@@ -185,44 +177,57 @@ object MaxSim extends PersistedIndex {
     *     — the exact re-rank fetches ONLY the candidate documents'
     *     buckets (a doc's tokens scatter across cells, so the cell
     *     layout cannot serve the per-document fetch);
-    *   - `centroids/` — the tiny coarse quantizer.
-    *
-    * Same clustered-write discipline as every index in this library. */
+    *   - `centroids/` — the tiny coarse quantizer. */
   def writeTokenIndex(docTokens: DataFrame, dir: String,
-                      nClusters: Int = 16): Unit = {
-    val spark = docTokens.sparkSession
-    // doc_id normalized to LONG here, once, so the stored doc_bucket
-    // column (hash of doc_id) and the search-side driver-computed
-    // Murmur3.hashLong buckets agree for EVERY input id type — an
-    // IntegerType doc_id hashes via hashInt and would land candidate
-    // fetches in the wrong buckets (silently missing documents)
-    val toks = docTokens.select(col("doc_id").cast("long").as("doc_id"),
-      col("tok"), asDouble(col("vec")).as("vec"))
-    val dTok = toks.select(
-      packedTid(col("doc_id"), col("tok")).as("tid"), col("vec"))
-    val cents = Similarity.fitCentroids(
-      dTok.select(col("tid").as("vec_id"), col("vec").as("embedding")),
-      nClusters)
+                      nClusters: Int = 16): Unit =
+    build(docTokens, dir, fitCells(tids(longIds(docTokens)), "vec", nClusters))
+
+  /** The coarse cells, fit over (tid, `vec`) token rows. */
+  private def fitCells(tok: DataFrame, vec: String,
+                       nClusters: Int): DataFrame =
+    Similarity.fitCentroids(
+        tok.select(col("tid").as("vec_id"), col(vec).as("embedding")),
+        nClusters)
       .select(col("centroid_id").cast("int").as("centroid_id"),
         col("centroid_vec"))
-    cents.coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    val slices = math.max(1,
-      spark.sparkContext.defaultParallelism / math.max(1, nClusters))
-    Similarity.nearestCentroids(dTok, cents, "tid", "vec", 1)
-      .select(expr("tid div 1024").as("doc_id"),
-        (col("tid") % 1024).cast("int").as("tok"),
-        col("vec"), col("centroid_id"))
-      .repartition(nClusters * slices, col("centroid_id"),
-        pmod(hash(col("doc_id")), lit(slices)))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(s"$dir/tokens")
-    toks
-      .withColumn("doc_bucket", pmod(hash(col("doc_id")), lit(DocBuckets)))
-      .repartition(DocBuckets * slices, col("doc_bucket"),
-        pmod(hash(col("tok")), lit(slices)))
-      .write.mode("overwrite").partitionBy("doc_bucket")
-      .parquet(s"$dir/doctokens")
-    resetLifecycle(spark, dir)
+
+  /** doc_id normalized to LONG, once, so the stored doc_bucket column
+    * (hash of doc_id) and the search-side driver-computed
+    * Murmur3.hashLong buckets agree for EVERY input id type — an
+    * IntegerType doc_id hashes via hashInt and would land candidate
+    * fetches in the wrong buckets (silently missing documents). */
+  private def longIds(docTokens: DataFrame): DataFrame =
+    docTokens.select(col("doc_id").cast("long").as("doc_id"),
+      col("tok"), asDouble(col("vec")).as("vec"))
+
+  private def tids(toks: DataFrame): DataFrame =
+    toks.select(packedTid(col("doc_id"), col("tok")).as("tid"), col("vec"))
+
+  /** The coarse centroids. */
+  protected type Model = DataFrame
+
+  protected def readModel(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): DataFrame =
+    spark.read.parquet(s"$dir/centroids")
+
+  protected def modelFiles(spark: org.apache.spark.sql.SparkSession,
+                           cents: DataFrame) = Seq("centroids" -> cents)
+
+  /** Both layouts of (doc_id, tok, vec) token rows: each token under its
+    * nearest cell, and under its document's bucket (the bucket hash is
+    * over the long-normalized doc_id, so fetches route identically for
+    * standing and appended documents). Nothing is pinned: the shared
+    * frame is a projection, cheaper to recompute than to cache. */
+  protected def encode(docTokens: DataFrame, cents: DataFrame,
+                       pin: DataFrame => DataFrame) = {
+    val toks = longIds(docTokens)
+    Seq("tokens" -> Similarity.nearestCentroids(tids(toks), cents, "tid",
+          "vec", 1)
+        .select(expr("tid div 1024").as("doc_id"),
+          (col("tid") % 1024).cast("int").as("tok"),
+          col("vec"), col("centroid_id")),
+      "doctokens" -> toks
+        .withColumn("doc_bucket", pmod(hash(col("doc_id")), lit(DocBuckets))))
   }
 
   /** Precomputed probe assignments for [[searchTokenIndex]]: each query
@@ -391,88 +396,6 @@ object MaxSim extends PersistedIndex {
         .join(broadcast(q), "query_id"), k)
   }
 
-  /** Incremental token-index growth — the MaxSim analog of
-    * [[Similarity.appendToIndex]], completing the append path on the
-    * fifth index kind: the batch's tokens assign against the index's
-    * STANDING coarse cells (quantizer deliberately not refit — rebuild
-    * via [[writeTokenIndex]] when drift warrants, the same trade every
-    * append path in this library makes) and land as extra files inside
-    * the SAME `centroid_id=` directories of the `tokens/` layout, and
-    * under the standing `doc_bucket=` partitioning of `doctokens/`
-    * (the bucket hash is over the long-normalized doc_id, so fetches
-    * route identically for standing and appended documents). O(batch)
-    * regardless of index size; micro-batch-sized appends skip the
-    * clustered repartition (a shuffle per tiny batch costs more than
-    * the files it saves); zero search-path changes — candidate
-    * generation and the per-doc fetch read appended files
-    * transparently. Batch id discipline is the caller's (a re-ingested
-    * doc_id would shadow nothing and rank twice). */
-  def appendToTokenIndex(docTokens: DataFrame, dir: String): Unit = {
-    val spark = docTokens.sparkSession
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val toks = docTokens.select(col("doc_id").cast("long").as("doc_id"),
-      col("tok"), asDouble(col("vec")).as("vec"))
-    val dTok = toks.select(
-      packedTid(col("doc_id"), col("tok")).as("tid"), col("vec"))
-    Similarity.nearestCentroids(dTok, cents, "tid", "vec", 1)
-      .select(expr("tid div 1024").as("doc_id"),
-        (col("tid") % 1024).cast("int").as("tok"),
-        col("vec"), col("centroid_id"))
-      .write.mode("append").partitionBy("centroid_id")
-      .parquet(s"$dir/tokens")
-    toks
-      .withColumn("doc_bucket", pmod(hash(col("doc_id")), lit(DocBuckets)))
-      .write.mode("append").partitionBy("doc_bucket")
-      .parquet(s"$dir/doctokens")
-  }
-
-  /** EXACTLY-ONCE streaming ingestion for the token index — the MaxSim
-    * leg of the [[IndexBatches]] contract, making all FIVE persisted
-    * index kinds streaming-ingestible: one micro-batch of
-    * (doc_id, tok, vec) token rows encodes against the STANDING coarse
-    * cells (same deliberate no-refit trade as [[appendToTokenIndex]])
-    * and lands BOTH layouts under `batches/<tagHash>/<batchId>` with
-    * OVERWRITE — foreachBatch is at-least-once, and a replayed batch
-    * REWRITES its own location instead of double-appending (idempotency
-    * by placement; the in-place append would double-count every token
-    * on replay, and a doc ranked twice is a wrong answer, not a
-    * degraded one). Each batch dataset carries the base layout's own
-    * partitioning (`centroid_id=` / `doc_bucket=`), so the search-path
-    * probes and bucket fetches prune batch dirs exactly like the
-    * standing data. */
-  def appendBatchDir(docTokens: DataFrame, dir: String, tag: String,
-                     batchId: Long): Unit = {
-    val spark = docTokens.sparkSession
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val toks = StagingCaches.cache(
-      docTokens.select(col("doc_id").cast("long").as("doc_id"),
-        col("tok"), asDouble(col("vec")).as("vec")))
-    try {
-      val batchRoot =
-        s"$dir/batches/${IndexBatches.tagHash(tag)}/$batchId"
-      val dTok = toks.select(
-        packedTid(col("doc_id"), col("tok")).as("tid"), col("vec"))
-      // clustered to the leaf (r19): the assignment window leaves the
-      // frame hash-partitioned by token id, so an unclustered dynamic
-      // write emits up to tasks × leaves tiny files per micro-batch
-      // (tokens: ×cells, doctokens: ×64 buckets), each taxing every
-      // later union-read (guide §6)
-      Similarity.nearestCentroids(dTok, cents, "tid", "vec", 1)
-        .select(expr("tid div 1024").as("doc_id"),
-          (col("tid") % 1024).cast("int").as("tok"),
-          col("vec"), col("centroid_id"))
-        .repartition(col("centroid_id"))
-        .write.mode("overwrite").partitionBy("centroid_id")
-        .parquet(s"$batchRoot/tokens")
-      toks
-        .withColumn("doc_bucket",
-          pmod(hash(col("doc_id")), lit(DocBuckets)))
-        .repartition(col("doc_bucket"))
-        .write.mode("overwrite").partitionBy("doc_bucket")
-        .parquet(s"$batchRoot/doctokens")
-    } finally toks.unpersist()
-  }
-
   /** The kind's layout: both layouts fold with natural-key dedup on
     * (doc_id, tok), doctokens staged/swapped first, the high-water
     * marker committing inside the staged TOKENS dir last (the dataset
@@ -488,71 +411,31 @@ object MaxSim extends PersistedIndex {
       Seq("doc_id", "tok", "vec", "centroid_id"), Seq("doc_id", "tok"),
       Some("centroid_id"), IndexBatches.centroidFanout, "doc_id"))
 
-  /** Out-of-band quantizer refresh — the maintenance step
-    * [[appendToTokenIndex]] deliberately skips, completing the
-    * append+recenter pair on every QUANTIZED index kind (IVF, PQ,
-    * MaxSim tokens; the text kinds' maintenance is compaction instead):
-    * batches appended against stale cells land in the nearest SURVIVING
-    * cell, so as the token distribution drifts the coarse quantizer's
-    * cells stop matching the data and candidate-generation recall
-    * decays. This refits the cells from the tokens THE INDEX ALREADY
-    * STORES (no original corpus needed — the tokens layout is the
-    * model-independent store) and rewrites that layout under the new
-    * cells; `doctokens/` is untouched (bucketed by doc_id, model-free),
-    * and pending tombstones stay pending (the ledger is not consulted —
-    * deletes keep masking and vacuum stays correct).
+  /** Out-of-band quantizer refresh — the maintenance step appends
+    * deliberately skip, completing the append+recenter pair on every
+    * QUANTIZED index kind (IVF, PQ, MaxSim tokens; the text kinds'
+    * maintenance is compaction instead): batches appended against stale
+    * cells land in the nearest SURVIVING cell, so as the token
+    * distribution drifts the coarse quantizer's cells stop matching the
+    * data and candidate-generation recall decays. This refits the cells
+    * from the tokens THE INDEX ALREADY STORES (no original corpus needed
+    * — the tokens layout is the model-independent store) and rewrites
+    * that layout under the new cells through the trait's recenter
+    * commit; `doctokens/` is untouched (bucketed by doc_id, model-free).
     *
     * Equivalence contract (MaxSimSpec): after recentering, search is
     * row-identical to [[writeTokenIndex]] built fresh over the same
     * token set — the fit samples by xxhash64(tid), which depends only
-    * on the (tid, vector) set, never on which layout supplied it.
-    *
-    * Crash contract: centroids and tokens cannot swap atomically; an
-    * interruption between the two swaps degrades candidate-generation
-    * recall (probing new cells over an old layout or vice versa) but
-    * never fabricates — the exact re-rank still scores true cosines on
-    * whatever surfaces — and re-running converges (recenter reads only
-    * the model-independent token store). */
+    * on the (tid, vector) set, never on which layout supplied it. */
   def recenterTokenIndex(spark: org.apache.spark.sql.SparkSession,
                          dir: String, nClusters: Int = 16): Unit = {
     // fold live streaming batch dirs first: the refit must see their
-    // tokens, and the tokens swap below would otherwise discard the
-    // compaction high-water marker stored inside the directory
-    // (resurrecting folded-but-undeleted batches as duplicates)
+    // tokens
     compactIndexBatches(spark, dir)
     val stored = spark.read.parquet(s"$dir/tokens")
-    val dTok = stored.select(
-      packedTid(col("doc_id"), col("tok")).as("tid"),
-      asDouble(col("vec")).as("vec"))
-    val cents = Similarity.fitCentroids(
-      dTok.select(col("tid").as("vec_id"), col("vec").as("embedding")),
-      nClusters)
-      .select(col("centroid_id").cast("int").as("centroid_id"),
-        col("centroid_vec"))
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val slices = math.max(1,
-      spark.sparkContext.defaultParallelism / math.max(1, nClusters))
-    val tokTmp = new org.apache.hadoop.fs.Path(s"$dir/.tokens.recenter")
-    Similarity.nearestCentroids(dTok, cents, "tid", "vec", 1)
-      .select(expr("tid div 1024").as("doc_id"),
-        (col("tid") % 1024).cast("int").as("tok"),
-        col("vec"), col("centroid_id"))
-      .repartition(nClusters * slices, col("centroid_id"),
-        pmod(hash(col("doc_id")), lit(slices)))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(tokTmp.toString)
-    val centTmp = new org.apache.hadoop.fs.Path(s"$dir/.centroids.recenter")
-    cents.coalesce(1).write.mode("overwrite").parquet(centTmp.toString)
-    // carry the compaction marker through the tokens rewrite
-    IndexBatches.writeMarker(fs, tokTmp, IndexBatches.readMarker(fs,
-      new org.apache.hadoop.fs.Path(s"$dir/tokens")))
-    graft.sources.Formats.swapInto(fs, tokTmp,
-      new org.apache.hadoop.fs.Path(s"$dir/tokens"))
-    graft.sources.Formats.swapInto(fs, centTmp,
-      new org.apache.hadoop.fs.Path(s"$dir/centroids"))
-    spark.catalog.refreshByPath(s"$dir/tokens")
-    spark.catalog.refreshByPath(s"$dir/centroids")
+      .select(col("doc_id"), col("tok"), asDouble(col("vec")).as("vec"))
+    recenter(dir, fitCells(tids(stored), "vec", nClusters), stored,
+      rewrite = Seq("tokens"))(_ => ())
   }
 
   /** Split one pooled vector into `m` contiguous subvector "tokens" —

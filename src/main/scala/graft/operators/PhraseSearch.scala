@@ -87,56 +87,25 @@ object PhraseSearch extends PersistedIndex {
     * bucket dir. A term's postings live entirely inside its bucket, so a
     * phrase lookup reads only its terms' directories — ~k/64ths of the
     * postings for a k-term phrase, not the corpus. */
-  def writeIndex(docs: DataFrame, dir: String): Unit = {
-    writePostings(docs, dir, "overwrite")
-    resetLifecycle(docs.sparkSession, dir)
-  }
+  def writeIndex(docs: DataFrame, dir: String): Unit = build(docs, dir, ())
 
-  private def writePostings(docs: DataFrame, dir: String,
-                            mode: String): Unit = {
-    val slices = math.max(1,
-      docs.sparkSession.sparkContext.defaultParallelism / IndexBuckets)
-    positionalPostings(docs)
-      .withColumn("term_bucket",
-        pmod(hash(col("term")), lit(IndexBuckets)))
-      .repartition(IndexBuckets * slices, col("term_bucket"),
-        pmod(hash(col("doc_id")), lit(slices)))
-      .write.mode(mode).partitionBy("term_bucket")
-      .parquet(s"$dir/postings")
-  }
+  /** No model: postings are a pure function of the documents. */
+  protected type Model = Unit
+  protected def readModel(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): Unit = ()
+  protected def modelFiles(spark: org.apache.spark.sql.SparkSession,
+                           u: Unit) = Nil
 
-  /** Append a document batch's positional postings into a standing
-    * [[writeIndex]] layout — the nightly-crawl shape: the standing
-    * corpus is never re-tokenized, the batch's postings land as extra
-    * files inside the SAME term-bucket directories (dynamic-partition
-    * append), so partition-pruned lookup and the distributed fallback
-    * both see them with zero search-path changes. O(batch), regardless
-    * of index size. Batch ids may collide with standing ids only if the
-    * caller re-ingests a document — the index stores postings, not doc
-    * rows, so a re-ingest double-counts and the caller owns id
-    * discipline (same contract as Bm25's layout). */
-  def appendToIndex(docs: DataFrame, dir: String): Unit =
-    writePostings(docs, dir, "append")
-
-  /** EXACTLY-ONCE streaming ingestion: a micro-batch's positional
-    * postings land in a batch-scoped directory under the index
-    * ([[IndexBatches.writeBatch]] — overwrite by (tag, batchId), the
-    * same idempotency-by-placement contract as the ANN index's), still
-    * partitioned by term_bucket so phrase lookups prune batch dirs too.
-    * The in-place [[appendToIndex]] cannot give a stream this: a
-    * replayed foreachBatch would double-append its postings. */
-  def appendBatchDir(docs: DataFrame, dir: String, tag: String,
-                     batchId: Long): Unit =
-    IndexBatches.writeBatch(
-      positionalPostings(docs)
-        .withColumn("term_bucket", pmod(hash(col("term")), lit(IndexBuckets))),
-      dir, tag, batchId, "term_bucket")
+  /** The positional postings under their term bucket. */
+  protected def encode(docs: DataFrame, u: Unit,
+                       pin: DataFrame => DataFrame) =
+    Seq("postings" -> positionalPostings(docs)
+      .withColumn("term_bucket", pmod(hash(col("term")), lit(IndexBuckets))))
 
   /** The kind's layout: one term-bucket-partitioned positional dataset
     * carrying the marker; NO natural-key dedup (a position row is not
     * unique by (term, doc_id) and id discipline is the caller's —
-    * [[appendToIndex]]'s contract), and batch dirs ARE the dataset
-    * (single-dataset [[IndexBatches.writeBatch]] layout). */
+    * [[appendToIndex]]'s contract), and batch dirs ARE the dataset. */
   private[operators] def fusedDatasets = Seq(
     IndexBatches.FusedDataset("postings",
       Seq("term", "doc_id", "pos", "term_bucket"), Nil,

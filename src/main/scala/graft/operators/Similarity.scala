@@ -261,36 +261,27 @@ object Similarity extends PersistedIndex {
     * Fitting and assigning happen once per corpus build; every later
     * search ([[searchIndex]]) pays only its own probe. */
   def writeIndex(candidates: DataFrame, dir: String,
-                 nClusters: Int = 16): Unit = {
-    val cents = normalizeCentroids(fitCentroids(candidates, nClusters))
-    cents.coalesce(1).write.mode("overwrite").parquet(s"$dir/centroids")
-    clusteredWrite(nearestCentroids(
-        candidates.select(col("vec_id").as("cand_id"),
-          asDouble(col("embedding")).as("cand_vec")),
-        cents, "cand_id", "cand_vec", 1),
-      nClusters, s"$dir/assignments")
-    resetLifecycle(candidates.sparkSession, dir)
-  }
+                 nClusters: Int = 16): Unit =
+    build(candidates, dir,
+      normalizeCentroids(fitCentroids(candidates, nClusters)))
 
-  /** Cluster assignment rows toward their output directory before the
-    * dynamic-partitioning write: without it every upstream task writes a
-    * file into every cluster dir (tasks × nClusters small files — the
-    * classic dynamic-partition file explosion; at cluster scale that is
-    * 10⁵+ tiny files per rewrite). Clustering on centroid_id ALONE would
-    * cap write parallelism at nClusters, so a second hash slice keeps
-    * every core writing while bounding the layout to `slices` files per
-    * cluster dir. Streaming micro-batch appends skip this — a shuffle
-    * per tiny batch costs more than the files it saves. */
-  private def clusteredWrite(assigned: DataFrame, nClusters: Int,
-                             path: String): Unit = {
-    val slices = math.max(1,
-      assigned.sparkSession.sparkContext.defaultParallelism / nClusters)
-    assigned
-      .repartition(nClusters * slices, col("centroid_id"),
-        pmod(hash(col("cand_id")), lit(slices)))
-      .write.mode("overwrite").partitionBy("centroid_id")
-      .parquet(path)
-  }
+  /** The normalized centroids. */
+  protected type Model = DataFrame
+
+  protected def readModel(spark: org.apache.spark.sql.SparkSession,
+                          dir: String): DataFrame =
+    normalizeCentroids(spark.read.parquet(s"$dir/centroids"))
+
+  protected def modelFiles(spark: org.apache.spark.sql.SparkSession,
+                           cents: DataFrame) = Seq("centroids" -> cents)
+
+  /** Each vector under its nearest centroid. */
+  protected def encode(vectors: DataFrame, cents: DataFrame,
+                       pin: DataFrame => DataFrame) =
+    Seq("assignments" -> nearestCentroids(
+      vectors.select(col("vec_id").as("cand_id"),
+        asDouble(col("embedding")).as("cand_vec")),
+      cents, "cand_id", "cand_vec", 1))
 
   /** Search a persisted [[writeIndex]] index. Result-identical to running
     * [[ivfTopK]] directly over the corpus (same deterministic fit, same
@@ -321,65 +312,21 @@ object Similarity extends PersistedIndex {
   }
 
   /** The kind's layout: one cell-partitioned dataset carrying the
-    * marker; NO natural-key dedup (id discipline is the caller's —
-    * [[appendToIndex]]'s contract), and batch dirs ARE the dataset (no
-    * nested subdir — the single-dataset [[IndexBatches.writeBatch]]
-    * layout). */
+    * marker; NO natural-key dedup (id discipline is the caller's), and
+    * batch dirs ARE the dataset (no nested subdir). */
   private[operators] def fusedDatasets = Seq(
     IndexBatches.FusedDataset("assignments",
       Seq("cand_id", "cand_vec", "centroid_id"), Nil,
       Some("centroid_id"), IndexBatches.centroidFanout, "cand_id",
       batchNested = false))
 
-  /** EXACTLY-ONCE streaming append: assign `newVectors` against the
-    * standing centroids and write them to the batch-scoped directory
-    * `<dir>/batches/<md5(tag)>/<batchId>` with OVERWRITE — a replayed
-    * micro-batch (foreachBatch is at-least-once) rewrites the same
-    * location instead of double-appending, which is the idempotency the
-    * in-place [[appendToIndex]] append cannot give a stream. Each batch
-    * dir is itself partitioned by `centroid_id`, so probe pruning still
-    * prunes files; [[compactIndexBatches]] folds accumulated batch dirs
-    * into the base layout out-of-band. */
-  def appendBatchDir(newVectors: DataFrame, dir: String, tag: String,
-                     batchId: Long): Unit = {
-    val spark = newVectors.sparkSession
-    val cents = normalizeCentroids(spark.read.parquet(s"$dir/centroids"))
-    IndexBatches.writeBatch(
-      nearestCentroids(
-        newVectors.select(col("vec_id").as("cand_id"),
-          asDouble(col("embedding")).as("cand_vec")),
-        cents, "cand_id", "cand_vec", 1),
-      dir, tag, batchId, "centroid_id")
-  }
-
-  /** Incremental index growth: assign a NEW batch of vectors against the
-    * index's EXISTING centroids and append them into the partitioned
-    * assignments layout — the ANN analog of Dedup.incrementalLshPairs'
-    * batch-vs-corpus contract. A day's embeddings join a 100 TB index at
-    * O(batch) cost: centroids broadcast, one scan over the batch, an
-    * append into only the touched cluster directories; the corpus-side
-    * assignments are never read, never rewritten. The quantizer is NOT
-    * refit (by design — refitting would re-shuffle every stored vector;
-    * production IVF indexes refresh centroids out-of-band and rebuild).
-    * Post-append, [[searchIndex]] sees old and new vectors identically. */
-  def appendToIndex(newVectors: DataFrame, dir: String): Unit = {
-    val spark = newVectors.sparkSession
-    val cents = normalizeCentroids(spark.read.parquet(s"$dir/centroids"))
-    nearestCentroids(
-        newVectors.select(col("vec_id").as("cand_id"),
-          asDouble(col("embedding")).as("cand_vec")),
-        cents, "cand_id", "cand_vec", 1)
-      .write.mode("append").partitionBy("centroid_id")
-      .parquet(s"$dir/assignments")
-  }
-
-  /** Out-of-band centroid refresh — the maintenance step [[appendToIndex]]
-    * deliberately skips. Batches appended against stale centroids land in
+  /** Out-of-band centroid refresh — the maintenance step appends
+    * deliberately skip. Batches appended against stale centroids land in
     * the nearest SURVIVING cell, so as the corpus drifts the quantizer's
     * cells stop matching the data and probe recall decays; this refits the
     * quantizer from the vectors THE INDEX ALREADY STORES (no original
     * corpus needed) and rewrites the partitioned layout under the new
-    * cells.
+    * cells through the trait's recenter commit.
     *
     * Equivalence contract (SimilaritySpec): after recentering, the index
     * is bit-identical to [[writeIndex]] built fresh over the same vector
@@ -389,14 +336,11 @@ object Similarity extends PersistedIndex {
     * Scale shape: one bounded-sample fit (driver-local Lloyd's on ≤4096
     * vectors), one scan of the stored assignments to reassign against the
     * ≤k broadcast new centroids, one partitioned rewrite — O(index), no
-    * per-query cost, run on whatever cadence drift warrants. Both
-    * directories swap crash-safely ([[graft.sources.Formats.swapInto]]):
-    * a crash mid-recenter leaves the old index (or old + staging) on
-    * disk, never a torn one. Assignments swap BEFORE centroids: a search
-    * racing the swap sees matched (old, old) or — only in the
-    * between-renames window — (new assignments, old centroids), which
-    * degrades probe choice but never fabricates vectors; centroids-first
-    * would aim probes at cells the stored layout doesn't have yet.
+    * per-query cost, run on whatever cadence drift warrants. Assignments
+    * swap BEFORE centroids: a search racing the swap sees matched (old,
+    * old) or — only in the between-renames window — (new assignments, old
+    * centroids), which degrades probe choice but never fabricates
+    * vectors.
     *
     * @return one-row drift report: (n_vectors, n_moved, n_clusters) —
     *         n_moved / n_vectors is the fraction that changed cell, the
@@ -405,49 +349,30 @@ object Similarity extends PersistedIndex {
                     nClusters: Int = 16): DataFrame = {
     import spark.implicits._
     // fold live streaming batch dirs in FIRST: their rows carry cluster
-    // ids of the OLD cells, and a recenter that ignored them would
-    // leave searchIndex probing those vectors under stale routing
+    // ids of the OLD cells
     compactIndexBatches(spark, dir)
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val old = spark.read.parquet(s"$dir/assignments")
-      .select(col("cand_id"), col("cand_vec"),
-        col("centroid_id").as("old_cid"))
-    val cents = normalizeCentroids(fitCentroids(
-      old.select(col("cand_id").as("vec_id"),
-        col("cand_vec").as("embedding")), nClusters))
-    val tmpC = new org.apache.hadoop.fs.Path(s"$dir/.centroids.staging")
-    val tmpA = new org.apache.hadoop.fs.Path(s"$dir/.assignments.staging")
-    cents.coalesce(1).write.mode("overwrite").parquet(tmpC.toString)
-    clusteredWrite(
-      nearestCentroids(old.select(col("cand_id"), col("cand_vec")),
-        cents, "cand_id", "cand_vec", 1),
-      nClusters, tmpA.toString)
-    // drift stats from the STAGED layout, while the old one is still live
-    // — one join on cand_id, before either swap can disturb a reader
-    val Seq((total, moved)) = spark.read.parquet(tmpA.toString)
-      .select(col("cand_id"), col("centroid_id"))
-      .join(old.select(col("cand_id"), col("old_cid")), "cand_id")
-      .agg(count(lit(1)), sum(when(col("centroid_id") =!= col("old_cid"),
-        1L).otherwise(0L)))
-      .as[(Long, Long)].collect().toSeq
-    // carry the compaction high-water marker through the rewrite: losing
-    // it would resurface any already-folded batch dir whose best-effort
-    // delete had failed, and searchIndex would double-count those rows
-    val liveA = new org.apache.hadoop.fs.Path(s"$dir/assignments")
-    val oldMarker = new org.apache.hadoop.fs.Path(liveA,
-      "_compacted_batches")
-    if (fs.exists(oldMarker))
-      org.apache.hadoop.fs.FileUtil.copy(fs, oldMarker, fs,
-        new org.apache.hadoop.fs.Path(tmpA, "_compacted_batches"),
-        false, spark.sparkContext.hadoopConfiguration)
-    graft.sources.Formats.swapInto(fs, tmpA, liveA)
-    graft.sources.Formats.swapInto(fs,
-      tmpC, new org.apache.hadoop.fs.Path(s"$dir/centroids"))
-    spark.catalog.refreshByPath(s"$dir/assignments")
-    spark.catalog.refreshByPath(s"$dir/centroids")
+      .select(col("cand_id").as("vec_id"), col("cand_vec").as("embedding"),
+        col("centroid_id"))
+    val (total, moved) = recenter(dir,
+        normalizeCentroids(fitCentroids(old, nClusters)), old)(
+      staged => drift(staged("assignments"), old))
     Seq((total, moved, nClusters.toLong))
       .toDF("n_vectors", "n_moved", "n_clusters")
+  }
+
+  /** (vectors, vectors that changed cell) between a staged cell layout
+    * and the `old` one (vec_id, centroid_id), read while the old one is
+    * still live. */
+  private[operators] def drift(staged: DataFrame,
+                               old: DataFrame): (Long, Long) = {
+    val r = staged.select(col("cand_id"), col("centroid_id"))
+      .join(old.select(col("vec_id").as("cand_id"),
+        col("centroid_id").as("old_cid")), "cand_id")
+      .agg(count(lit(1)), sum(when(col("centroid_id") =!= col("old_cid"),
+        1L).otherwise(0L)))
+      .collect()(0)
+    (r.getLong(0), r.getLong(1))
   }
 
   /** Maximal-marginal-relevance re-ranking (Carbonell & Goldstein): from
@@ -548,7 +473,7 @@ object Similarity extends PersistedIndex {
     * downstream comparison is integer (the division back would
     * reintroduce binary representation noise). Matches DuckDB's
     * `round(x, 4) * 10000` decision-for-decision. */
-  private def i4(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+  private[operators] def i4(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val s = c * 10000.0
     when(s >= 0, floor(s + 0.5)).otherwise(ceil(s - 0.5)).cast("long")
   }

@@ -30,7 +30,8 @@ import graft.functions.VectorFunctions.asDouble
   * vec_id while live dirs exist, marker inside the staged sketches
   * dir), deletion via the [[TombstoneLedger]] (masked before the
   * shortlist, physical at [[vacuumIndex]]), in-place growth via
-  * [[appendToIndex]]. No quantizer to recenter — the plane table is
+  * [[appendToIndex]] (the fixed plane table means appends never degrade
+  * the sketch). No quantizer to recenter — the plane table is
   * fixed, so append never drifts (the trade: no data-adaptive cells
   * either; that is what the IVF kinds are for).
   *
@@ -69,85 +70,39 @@ object SketchIndex extends PersistedIndex {
       .withColumn("bucket", pmod(hash(col("vec_id")), lit(Buckets)))
   }
 
-  /** Sketch-dataset file fanout: a handful of files, written through a
-    * repartition EXCHANGE (never coalesce(1), which would propagate up
-    * and serialize the whole read+sketch pipeline into one task — at
-    * the scale the object doc claims, a single-threaded build). */
-  private def sketchFanout(spark: SparkSession): Int =
-    math.max(1, spark.sparkContext.defaultParallelism / 8)
-
   /** Build both datasets. A rebuild resets the deletion ledger and any
     * streaming batch dirs (they refer to the pre-rebuild corpus, and
     * the fresh sketches/ overwrite carries no high-water marker). */
-  def writeIndex(vectors: DataFrame, dir: String): Unit = {
-    val spark = vectors.sparkSession
-    // cached: both dataset writes consume the sketch computation
-    val vs = StagingCaches.cache(withSketch(vectors))
-    try {
-      vs.select("vec_id", "sig", "bucket")
-        .repartition(sketchFanout(spark))
-        .write.mode("overwrite").parquet(s"$dir/sketches")
-      val slices = math.max(1,
-        spark.sparkContext.defaultParallelism / Buckets)
-      vs.select(col("vec_id"), col("vec"), col("bucket"))
-        .repartition(Buckets * slices, col("bucket"),
-          pmod(hash(col("vec_id")), lit(slices)))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$dir/vectors")
-    } finally vs.unpersist()
-    resetLifecycle(spark, dir)
-  }
+  def writeIndex(vectors: DataFrame, dir: String): Unit =
+    build(vectors, dir, ())
 
-  /** In-place growth: new rows land as extra files (sketches flat,
-    * vectors inside the standing bucket dirs). O(batch); the fixed
-    * plane table means appends never degrade the sketch (nothing to
-    * recenter). Batch id discipline is the caller's. */
-  def appendToIndex(newVectors: DataFrame, dir: String): Unit = {
-    // cached: both appended datasets consume the sketch computation;
-    // coalesce(1) is right HERE — appends are micro-batch-sized by
-    // contract, and the cache boundary stops the coalesce propagating
-    // into the batch's own lineage
-    val vs = StagingCaches.cache(withSketch(newVectors))
-    try {
-      vs.select("vec_id", "sig", "bucket")
-        .coalesce(1).write.mode("append").parquet(s"$dir/sketches")
-      vs.select(col("vec_id"), col("vec"), col("bucket"))
-        .write.mode("append").partitionBy("bucket")
-        .parquet(s"$dir/vectors")
-    } finally vs.unpersist()
-  }
+  /** No model: the plane table is fixed. */
+  protected type Model = Unit
+  protected def readModel(spark: SparkSession, dir: String): Unit = ()
+  protected def modelFiles(spark: SparkSession, u: Unit) = Nil
 
-  /** EXACTLY-ONCE streaming ingestion: one micro-batch lands BOTH
-    * datasets under `batches/<tagHash>/<batchId>` with OVERWRITE —
-    * idempotency by placement, the shared [[IndexBatches]] contract. */
-  def appendBatchDir(newVectors: DataFrame, dir: String, tag: String,
-                     batchId: Long): Unit = {
-    val vs = StagingCaches.cache(withSketch(newVectors))
-    try {
-      val root = s"$dir/batches/${IndexBatches.tagHash(tag)}/$batchId"
-      vs.select("vec_id", "sig", "bucket")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/sketches")
-      // clustered to the leaf (r19): the cached frame is scan/shuffle-
-      // partitioned, not bucket-partitioned — an unclustered dynamic
-      // write emits up to tasks × buckets tiny files per micro-batch,
-      // each taxing every later union-read (guide §6)
-      vs.select(col("vec_id"), col("vec"), col("bucket"))
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$root/vectors")
-    } finally vs.unpersist()
+  /** The sketch computation, pinned: both datasets consume it. */
+  protected def encode(vectors: DataFrame, u: Unit,
+                       pin: DataFrame => DataFrame) = {
+    val vs = pin(withSketch(vectors))
+    Seq("sketches" -> vs.select("vec_id", "sig", "bucket"),
+      "vectors" -> vs.select(col("vec_id"), col("vec"), col("bucket")))
   }
 
   /** The kind's layout: vec_id-deduped fold, vectors staged first, the
     * high-water marker committing inside the staged SKETCHES dir last.
     * The flat sketches dataset is rewritten whole by every vacuum BY
     * DESIGN: it is the deliberately-smallest dataset (8 B/vector), so
-    * its full rewrite is the cheap one. */
+    * its full rewrite is the cheap one. Its build fanout is a handful of
+    * files, one per eight cores, written through a repartition EXCHANGE
+    * (never coalesce(1), which would propagate up and serialize the
+    * whole read+sketch pipeline into one task). */
   private[operators] def fusedDatasets = Seq(
     IndexBatches.FusedDataset("vectors", Seq("vec_id", "vec", "bucket"),
       Seq("vec_id"), Some("bucket"), (_, _) => Buckets, "vec_id"),
     IndexBatches.FusedDataset("sketches", Seq("vec_id", "sig", "bucket"),
-      Seq("vec_id"), None, (spark, _) => sketchFanout(spark), "vec_id"))
+      Seq("vec_id"), None, (spark, _) => IndexBatches.slices(spark, 8),
+      "vec_id"))
 
   /** Search the persisted index — row-identical to
     * [[Similarity.hammingTopK]] over the live corpus. The first stage

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Append-only deletion ledger for persisted index layouts — the
   * right-to-be-forgotten primitive shared by index kinds: a delete is
@@ -20,22 +21,36 @@ import org.apache.spark.sql.functions._
   */
 object TombstoneLedger {
 
+  /** The stored ledger row: one bigint `id`. Every index id column is an
+    * integral id, and a fixed schema lets [[dfFrom]] read the ledger
+    * without a schema-inference job. */
+  private val Schema = StructType(Seq(StructField("id", LongType)))
+
+  /** `ids` (single integral column, any name) as the stored ledger rows,
+    * distinct; any other column type fails here, before it is stored. */
+  private def rows(ids: DataFrame): DataFrame = {
+    val t = ids.schema.map(_.dataType)
+    require(t.size == 1 &&
+        Seq(ByteType, ShortType, IntegerType, LongType).contains(t.head),
+      s"ledger ids must be one integral column, got ${t.mkString(", ")}")
+    ids.toDF("id").select(col("id").cast(LongType).as("id")).distinct()
+  }
+
   /** Append `ids` (single column, any name) to the ledger at `root` as
     * one distinct-deduped parquet file, stored under the column name
     * `id`. */
   def append(ids: DataFrame, root: String): Unit =
-    ids.toDF("id").distinct()
-      .coalesce(1).write.mode("append").parquet(root)
+    rows(ids).coalesce(1).write.mode("append").parquet(root)
 
   /** EXACTLY-ONCE streaming append: the micro-batch's ids land in the
     * batch-scoped ledger dataset `<root>/<md5(tag)>-<batchId>` with
     * OVERWRITE, so a replayed batch (foreachBatch is at-least-once)
     * rewrites its own location instead of accreting ledger rows —
-    * idempotency by placement, the same contract as
-    * [[IndexBatches.writeBatch]]. */
+    * idempotency by placement, the same contract as the index batch
+    * dirs ([[PersistedIndex.appendBatchDir]]). */
   def appendBatch(ids: DataFrame, root: String, tag: String,
                   batchId: Long): Unit =
-    ids.toDF("id").distinct().coalesce(1).write.mode("overwrite")
+    rows(ids).coalesce(1).write.mode("overwrite")
       .parquet(s"$root/${IndexBatches.tagHash(tag)}-$batchId")
 
   /** Every parquet leaf file under the ledger — ONE enumeration, to be
@@ -54,11 +69,12 @@ object TombstoneLedger {
   }
 
   /** The ledger read over an EXPLICIT file list (from [[files]]),
-    * distinct ids under the caller's column name; None when empty. */
+    * distinct ids under the caller's column name; None when empty. Read
+    * with the stored [[Schema]], so building the frame starts no job. */
   def dfFrom(spark: SparkSession, fs: Seq[org.apache.hadoop.fs.Path],
              asCol: String): Option[DataFrame] =
     if (fs.isEmpty) None
-    else Some(spark.read.parquet(fs.map(_.toString): _*)
+    else Some(spark.read.schema(Schema).parquet(fs.map(_.toString): _*)
       .select(col("id").as(asCol)).distinct())
 
   /** Convenience: enumerate-and-read in one step (for READ paths that

@@ -634,7 +634,7 @@ object VectorQueries {
       * q_stream_maxsim_index_replay — streamed batch dirs serve reads
       * identically to in-place appends): the perturbed batch's tokens
       * join the SEARCH corpus while the coarse fit stays on the
-      * original tokens — exactly appendToTokenIndex's
+      * original tokens — exactly appendToIndex's
       * deliberately-no-refit trade. */
     lazy val maxsimAppendSql: String =
       maxsimTwoStageSql(batchInCorpus = true)
@@ -1731,7 +1731,7 @@ object VectorQueries {
         .orderBy("query_id", "rank")
     },
 
-    // Token-index incremental APPEND (MaxSim.appendToTokenIndex) — the
+    // Token-index incremental APPEND (MaxSim.appendToIndex) — the
     // growth path on the FIFTH index kind, completing the append
     // symmetry (ANN, PQ, BM25, phrase all have one): the batch's tokens
     // assign against the STANDING coarse cells (quantizer deliberately
@@ -1746,7 +1746,7 @@ object VectorQueries {
     // appended index's search hashes query/doc/score/rank against the
     // two-stage replay whose corpus is embeddings ∪ the perturbed
     // batch while the coarse fit stays on the ORIGINAL tokens —
-    // appendToTokenIndex's no-refit trade is itself the oracle's
+    // appendToIndex's no-refit trade is itself the oracle's
     // contract now.
     Q("q_ann_maxsim_index_append", IvfReplay.maxsimAppendSql) {
       (s, dir) =>
@@ -1754,7 +1754,7 @@ object VectorQueries {
         val emb = t(s, dir, "embeddings")
         val idxDir = IndexFixtures.cloned(s, dir, "maxsim")(
           buildMaxsim(s, dir))
-        MaxSim.appendToTokenIndex(
+        MaxSim.appendToIndex(
           MaxSim.subvectorTokens(perturbedBatch(emb),
               "vec_id", "embedding", 8)
             .withColumnRenamed("vec_id", "doc_id"),
@@ -1787,7 +1787,7 @@ object VectorQueries {
         val emb = t(s, dir, "embeddings")
         val idxDir = IndexFixtures.cloned(s, dir, "maxsim")(
           buildMaxsim(s, dir))
-        MaxSim.appendToTokenIndex(
+        MaxSim.appendToIndex(
           MaxSim.subvectorTokens(perturbedBatch(emb),
               "vec_id", "embedding", 8)
             .withColumnRenamed("vec_id", "doc_id"),

@@ -80,6 +80,19 @@ class PlanShapeSpec extends SparkSpec {
       "a multi-hundred-MB estimate must derive the full session width")
   }
 
+  test("GlobalRank ranks a LARGE-estimate frame at the default width " +
+      "across more than one partition") {
+    // the same large estimate with no numPartitions override, so the
+    // default width derivation runs on the frame actually ranked; the
+    // filter keeps Catalyst's size estimate while cutting the rows
+    val df = spark.range(0, 100000000L).selectExpr("id", "id % 97 AS v")
+      .where(col("id") < 20000)
+    val ranked = GlobalRank.withRowNumber(df, "r", Seq(desc("v"), asc("id")))
+    assert(ranked.rdd.getNumPartitions > 1,
+      "default-width ranking of a large-estimate frame collapsed to one " +
+        "partition")
+  }
+
   test("GlobalRank width adapts DOWN for tiny frames and honors an " +
       "explicit override") {
     val tiny = spark.range(0, 10000).selectExpr("id", "id % 97 AS v")

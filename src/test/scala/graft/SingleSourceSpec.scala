@@ -54,6 +54,21 @@ class SingleSourceSpec extends org.scalatest.funsuite.AnyFunSuite {
     }
   }
 
+  test("the six index kinds write no partitioned dataset and derive no " +
+      "slices themselves: both live in IndexBatches and PersistedIndex") {
+    val kinds = Set("Similarity.scala", "IvfPq.scala", "SketchIndex.scala",
+      "MaxSim.scala", "Bm25.scala", "PhraseSearch.scala")
+    val texts = sources.filter { case (name, _) => kinds(name) }
+    assert(texts.map(_._1).toSet == kinds)
+    val writerPartitionBy = """(?<!Window\.)partitionBy\(""".r
+    for ((name, text) <- texts) {
+      assert(writerPartitionBy.findFirstIn(text).isEmpty,
+        s"$name partitions a dataset write itself")
+      assert(!text.contains("defaultParallelism /"),
+        s"$name derives a write's slices itself")
+    }
+  }
+
   test("the index lifecycle is defined only in PersistedIndex.scala") {
     for (needle <- Seq("def vacuumIndex", "def compactIndexBatches",
         "def deleteFromIndex", "var vacuumAfterSnapshotHook"))

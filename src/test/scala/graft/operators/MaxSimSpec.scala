@@ -209,7 +209,7 @@ class MaxSimSpec extends SparkSpec {
       .select((col("vec_id") + 1000000).as("vec_id"),
         concat(array(element_at(v, 1) + 0.1), slice(v, 2, 63))
           .as("embedding"))
-    MaxSim.appendToTokenIndex(
+    MaxSim.appendToIndex(
       MaxSim.subvectorTokens(batch, "vec_id", "embedding", 8)
         .withColumnRenamed("vec_id", "doc_id"), dir)
     val top1 = MaxSim.searchTokenIndex(spark, dir, qToks, k = 10,
@@ -243,7 +243,7 @@ class MaxSimSpec extends SparkSpec {
     val grown = java.nio.file.Files
       .createTempDirectory("graft_maxsim_rec_a").toString
     MaxSim.writeTokenIndex(toks(base), grown, nClusters = 8)
-    MaxSim.appendToTokenIndex(toks(batch), grown)
+    MaxSim.appendToIndex(toks(batch), grown)
     MaxSim.recenterTokenIndex(spark, grown, nClusters = 8)
     val fresh = java.nio.file.Files
       .createTempDirectory("graft_maxsim_rec_b").toString
@@ -416,7 +416,7 @@ class MaxSimSpec extends SparkSpec {
     for (ds <- Seq("tokens", "doctokens"))
       assert(spark.read.parquet(s"$dir/$ds").count() == 0L,
         s"purged $ds must still read (schema-carrying leaf)")
-    MaxSim.appendToTokenIndex(docToks, dir)
+    MaxSim.appendToIndex(docToks, dir)
     val qToks = MaxSim.subvectorTokens(
         emb.where(col("vec_id") < 2), "vec_id", "embedding", 8)
       .withColumnRenamed("vec_id", "query_id")
@@ -459,7 +459,7 @@ class MaxSimSpec extends SparkSpec {
     for (ds <- Seq("tokens", "doctokens"))
       assert(spark.read.parquet(s"$dir/$ds").count() == 0L,
         s"fused-purged $ds must still read (schema-carrying leaf)")
-    MaxSim.appendToTokenIndex(docToks, dir)
+    MaxSim.appendToIndex(docToks, dir)
     val qToks = MaxSim.subvectorTokens(
         emb.where(col("vec_id") < 2), "vec_id", "embedding", 8)
       .withColumnRenamed("vec_id", "query_id")

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * once (its echo in a live batch dir included), a vacuum with and
   * without live batch dirs keeps the masked search and pays all debt, a
   * delete landing in the vacuum's race window survives and stays masked,
-  * and an empty-ledger vacuum leaves no live batch dir. */
+  * an empty-ledger vacuum leaves no live batch dir, and the two ingest
+  * paths agree: a base append searches like a batch slot compacted. */
 class PersistedIndexSpec extends SparkSpec {
 
   import spark.implicits._
@@ -86,13 +87,17 @@ class PersistedIndexSpec extends SparkSpec {
         "race-window delete, empty-ledger vacuum") {
       val c = cases.find(_.index.kind == kind).get
       val k = c.index
-      val dir = java.nio.file.Files
-        .createTempDirectory(s"graft_pidx_$kind").toString
-      c.build(dir)
-      def rows(): Seq[String] =
-        c.search(dir).collect().map(_.toString).sorted.toSeq
-      def ids(): Set[Long] =
-        c.search(dir).select(col(c.idCol).cast("long")).as[Long]
+      def fresh(): String = {
+        val d = java.nio.file.Files
+          .createTempDirectory(s"graft_pidx_$kind").toString
+        c.build(d)
+        d
+      }
+      val dir = fresh()
+      def rows(d: String = dir): Seq[String] =
+        c.search(d).collect().map(_.toString).sorted.toSeq
+      def ids(d: String = dir): Set[Long] =
+        c.search(d).select(col(c.idCol).cast("long")).as[Long]
           .collect().toSet
       def liveDirs() = IndexBatches.live(spark, dir, k.marker).size
       def noDebt() = IndexStats.due(spark, dir, k.datasets,
@@ -147,5 +152,16 @@ class PersistedIndexSpec extends SparkSpec {
       assert(k.vacuumIndex(spark, dir) == 0L)
       assert(liveDirs() == 0, "an empty-ledger vacuum left a live batch dir")
       assert(rows() == grown && noDebt())
+
+      // a base append searches like the same batch through a slot and a
+      // compaction
+      val (appended, slotted) = (fresh(), fresh())
+      k.appendToIndex(c.batch(2), appended)
+      k.appendBatchDir(c.batch(2), slotted, "feed", 2L)
+      k.compactIndexBatches(spark, slotted)
+      assert(ids(appended).exists(_ >= 3 * BatchBase),
+        "no appended id surfaced")
+      assert(rows(appended) == rows(slotted),
+        "appendToIndex and a compacted appendBatchDir searched apart")
     }
 }
