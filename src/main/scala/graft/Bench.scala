@@ -1,19 +1,5 @@
 package graft
 
-/** Driver-run benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR
-  * and prints ONE JSON line as the LAST line of stdout.
-  *
-  * SIZE CONTRACT: the driver keeps only the trailing ~2000 characters of
-  * stdout and json-parses the last line (BENCH_r01/r02 recorded
-  * `parsed:null` with a tail that starts mid-object — the 85-query
-  * full-precision map overflowed the buffer and the surviving fragment was
-  * unparseable). So the line is kept under [[MaxLineBytes]]: per-query
-  * seconds are rounded to milliseconds and the `queries` map holds the
-  * slowest queries that fit the byte budget; `value` is always the total
-  * across ALL queries and `n_queries`/`omitted` record the coverage.
-  * `failed` counts the gates that threw (each named on stderr); the
-  * process then exits non-zero after printing the line.
-  */
 /** Dev-only (see SPARK_GRAFT_BENCH_METRICS in [[Bench]]): per-gate task
   * metric sums, reset between gates. Listener events arrive async; the
   * bench sleeps briefly before reading, which is fine for attribution
@@ -58,6 +44,20 @@ private[graft] final class BenchTaskMetrics
       s"serMs=${serMs.get} schedDelayMs=${schedDelayMs.get}"
 }
 
+/** Driver-run benchmark: times every SparkEntry query at SPARK_GRAFT_SF_DIR
+  * and prints ONE JSON line as the LAST line of stdout.
+  *
+  * SIZE CONTRACT: the driver keeps only the trailing ~2000 characters of
+  * stdout and json-parses the last line (BENCH_r01/r02 recorded
+  * `parsed:null` with a tail that starts mid-object — the 85-query
+  * full-precision map overflowed the buffer and the surviving fragment was
+  * unparseable). So the line is kept under [[MaxLineBytes]]: per-query
+  * seconds are rounded to milliseconds and the `queries` map holds the
+  * slowest queries that fit the byte budget; `value` is always the total
+  * across ALL queries and `n_queries`/`omitted` record the coverage.
+  * `failed` counts the gates that threw (each named on stderr); the
+  * process then exits non-zero after printing the line.
+  */
 object Bench {
   private val MaxLineBytes = 1800
 

@@ -763,7 +763,7 @@ object Multimodal {
     // staged: the decode → hash → band derivation feeds BOTH join sides;
     // un-persisted, Spark would decode and hash every image twice (the
     // tracked persist is released by OperatorCaches.releaseAll)
-    val capped = graft.operators.StagingCaches.cache(
+    val capped = graft.operators.OperatorCaches.cache(
       bands.withColumn("__n",
           count(lit(1)).over(org.apache.spark.sql.expressions.Window
             .partitionBy("band", "v")))

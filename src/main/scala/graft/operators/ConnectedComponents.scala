@@ -31,7 +31,7 @@ import org.apache.spark.storage.StorageLevel
   * al., "Connected Components in MapReduce and Beyond") — same DataFrame
   * surface.
   */
-object ConnectedComponents extends TrackedCaches {
+object ConnectedComponents {
 
   private val CheckpointEvery = 5
 
@@ -104,7 +104,7 @@ object ConnectedComponents extends TrackedCaches {
           sym.schema.fields.forall(f => integralTypes(f.dataType)) &&
           sym.limit(localThreshold + 1).count() <= localThreshold)
         return localLabels(sym)
-      var labels = tracked(sym.select(col("a").as("id")).distinct()
+      var labels = OperatorCaches.cache(sym.select(col("a").as("id")).distinct()
         .withColumn("canonical", col("id")))
       // the frame whose persist an eager unpersist can actually reach:
       // `labels` becomes a Project (drop) OVER the persisted round below,
@@ -134,11 +134,11 @@ object ConnectedComponents extends TrackedCaches {
           if (iter % CheckpointEvery == CheckpointEvery - 1)
             // truncate the iterative lineage; release-TRACKED, because
             // Dataset.unpersist never reaches a localCheckpoint's pinned
-            // RDD — only releaseCaches (via OperatorCaches.releaseAll)
+            // RDD — only OperatorCaches.releaseAll
             // unpins these rounds. ≤ maxIter/CheckpointEvery label-sized
             // frames pinned per call, freed at release.
-            trackedCheckpoint(updated)
-          else tracked(updated)
+            OperatorCaches.checkpointed(updated)
+          else OperatorCaches.cache(updated)
         // count() (not isEmpty) fully materializes the round before the
         // previous copy is released
         converged = updated.where(col("canonical") =!= col("__prev"))
@@ -201,7 +201,7 @@ object ConnectedComponents extends TrackedCaches {
       .union(pairs.select(col(id2Col).as("id")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var edges = tracked(pairs
+    var edges = OperatorCaches.cache(pairs
       .select(least(col(id1Col), col(id2Col)).as("lo"),
         greatest(col(id1Col), col(id2Col)).as("hi"))
       .where(col("lo") =!= col("hi")) // self loops carry no connectivity
@@ -256,7 +256,7 @@ object ConnectedComponents extends TrackedCaches {
         // few, so per-round truncation costs almost nothing here.
         // Release-tracked: O(log n) shrinking edge-sized frames pinned
         // per call, unpinned by OperatorCaches.releaseAll.
-        val updated = trackedCheckpoint(
+        val updated = OperatorCaches.checkpointed(
           reattached.union(centers).distinct())
         val nUpdated = updated.count()
         // distinct sets: equal counts + empty anti-join ⇒ equal sets
@@ -316,8 +316,8 @@ object ConnectedComponents extends TrackedCaches {
     // release-tracked (OperatorCaches.releaseAll unpins them), which
     // makes the RETURNED frame consume-before-release: materialize it
     // before releasing, as the driver's gate sessions do.
-    val l = trackedCheckpoint(labels.select(col("id"), col("canonical")))
-    val p = trackedCheckpoint(
+    val l = OperatorCaches.checkpointed(labels.select(col("id"), col("canonical")))
+    val p = OperatorCaches.checkpointed(
       newPairs.select(col(id1Col).as("a"), col(id2Col).as("b")))
     val mapped = p
       .join(l.select(col("id").as("a"), col("canonical").as("ca")),
@@ -327,7 +327,7 @@ object ConnectedComponents extends TrackedCaches {
       .select(coalesce(col("ca"), col("a")).as("ca"),
         coalesce(col("cb"), col("b")).as("cb"))
     val contracted = mapped.where(col("ca") =!= col("cb"))
-    val remap = trackedCheckpoint(
+    val remap = OperatorCaches.checkpointed(
       canonicalize(contracted, "ca", "cb", maxIter)
         .select(col("id").as("old_c"), col("canonical").as("new_c")))
     val updated = l

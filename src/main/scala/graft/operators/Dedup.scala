@@ -23,12 +23,12 @@ import graft.functions.TextFunctions._
   *
   * Caching note: the LSH operators persist their signature/candidate
   * intermediates (consumed by self-joins); the frames back the lazily
-  * returned result, so they cannot unpersist eagerly. Every persist is
-  * TRACKED per session — callers running many dedup passes in one
-  * long-lived session call [[Dedup.releaseCaches]] after consuming each
-  * result (same contract as `VaultQueries.evictCaches`).
+  * returned result, so they cannot unpersist eagerly. Every persist goes
+  * through [[OperatorCaches.cache]] — callers running many dedup passes
+  * in one long-lived session call [[OperatorCaches.releaseAll]] after
+  * consuming each result.
   */
-object Dedup extends TrackedCaches {
+object Dedup {
 
   /** Exact duplicates after normalization: groups sharing a normalized-text
     * fingerprint, keeping the lowest id as canonical. Output: (dup_id,
@@ -76,9 +76,9 @@ object Dedup extends TrackedCaches {
     // verify join; signatures feed the banded self-join twice.
     val sh = df.select(col(idCol).as("id"),
         expr(s"word_shingles(${q(textCol)}, $k)").as("sh"))
-      .transform(tracked)
+      .transform(OperatorCaches.cache)
     val sigs = sh.select(col("id"), expr(s"minhash_sig(sh, $m)").as("sig"))
-      .transform(tracked)
+      .transform(OperatorCaches.cache)
     val bandedRaw = bandKeys(sigs, m, bands)
     // Hot-bucket cap: a bucket of n members yields n(n-1)/2 pairs — for
     // boilerplate-heavy corpora one bucket can go quadratic no matter how
@@ -109,7 +109,7 @@ object Dedup extends TrackedCaches {
           col("a.id") < col("b.id"))
       .select(col("a.id").as("id1"), col("b.id").as("id2"))
       .distinct()
-      .transform(tracked)
+      .transform(OperatorCaches.cache)
     val shA = sh.select(col("id").as("id1"), col("sh").as("sh1"))
     val shB = sh.select(col("id").as("id2"), col("sh").as("sh2"))
     cand.join(shA, "id1").join(shB, "id2")
@@ -150,9 +150,9 @@ object Dedup extends TrackedCaches {
       s"bands ($bands) must divide the signature size ($m)")
     require(maxBucket >= 1, s"maxBucket must be >= 1, got $maxBucket")
     val batch = signatureIndex(newDocs, idCol, textCol, k, m)
-      .transform(tracked)
+      .transform(OperatorCaches.cache)
     val batchBands = bandKeys(batch, m, bands)
-      .transform(tracked)
+      .transform(OperatorCaches.cache)
     // Prune the corpus side BEFORE any exchange: a broadcast semi join
     // against the batch's distinct band keys keeps only buckets the batch
     // can touch — a map-side filter over the index scan, so the promised
@@ -255,7 +255,7 @@ object Dedup extends TrackedCaches {
     // whole token-derivation expression inside) below any caller-side
     // repartition, collapsing the derivation onto the source's
     // partitioning — a single-file corpus then tokenizes on one core
-    val toks = graft.operators.StagingCaches.cache(
+    val toks = OperatorCaches.cache(
         df.select(col(idCol).as("id"), col(tokensCol).as("ts")))
       .where(size(col("ts")) > 0)
     val tf = toks.select(explode(col("ts")).as("tok"))
@@ -280,7 +280,7 @@ object Dedup extends TrackedCaches {
     // self-join + verify they feed is compute-dense (12.5M pair
     // intersections at sf0.1) — see substringDupPairsFromDistinctFps.
     val par = df.sparkSession.sparkContext.defaultParallelism
-    val capped = graft.operators.StagingCaches.cache(
+    val capped = OperatorCaches.cache(
       postings.repartition(par, col("tok"))
         .withColumn("__c",
           count(lit(1)).over(org.apache.spark.sql.expressions.Window
@@ -339,7 +339,7 @@ object Dedup extends TrackedCaches {
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
       .select(col("id"),
         explode(expr(s"winnow_fingerprints(__t, $k, $w)")).as("fp"))
-      .transform(tracked)
+      .transform(OperatorCaches.cache)
     substringDupPairsFromDistinctFps(fps, minShared, maxBucket)
   }
 
@@ -390,7 +390,7 @@ object Dedup extends TrackedCaches {
                         maxBucket: Int = 1000): DataFrame = {
     require(k > 0 && w > 0, s"k ($k) and w ($w) must be positive")
     substringDupSpansFromFps(
-      winnowPosFingerprints(df, idCol, textCol, k, w).transform(tracked),
+      winnowPosFingerprints(df, idCol, textCol, k, w).transform(OperatorCaches.cache),
       minShared, maxBucket)
   }
 
@@ -554,7 +554,7 @@ object Dedup extends TrackedCaches {
                             maxBucket: Int = 1000): DataFrame = {
     require(k > 0 && w > 0, s"k ($k) and w ($w) must be positive")
     substringDupPositionsFromFps(
-      winnowPosFingerprints(df, idCol, textCol, k, w).transform(tracked),
+      winnowPosFingerprints(df, idCol, textCol, k, w).transform(OperatorCaches.cache),
       minShared, maxBucket)
   }
 
@@ -690,7 +690,7 @@ object Dedup extends TrackedCaches {
     // persist: the banded self-join consumes the signatures twice
     val sigs = df.select(col(idCol).as("id"),
         expr(s"simhash64(${tokensSql(textCol)})").as("sig"))
-      .transform(tracked)
+      .transform(OperatorCaches.cache)
     sigBandPairs(sigs, maxHamming + 1)
       .where(col("hamming") <= maxHamming)
   }
@@ -785,9 +785,9 @@ object Dedup extends TrackedCaches {
     // vectors feed the sketch AND the two verify joins; sketches feed the
     // banded self-join twice
     val vecs = df.select(col(idCol).as("id"), asDouble(col(vecCol)).as("vec"))
-      .transform(tracked)
+      .transform(OperatorCaches.cache)
     val sigs = vecs.selectExpr("id", "hyperplane_sig64(vec) AS sig")
-      .transform(tracked)
+      .transform(OperatorCaches.cache)
     val cand = sigBandPairs(sigs, maxHamming + 1)
       .where(col("hamming") <= maxHamming)
     cand.join(vecs.select(col("id").as("id1"), col("vec").as("v1")), "id1")
@@ -895,7 +895,7 @@ object Dedup extends TrackedCaches {
         vectors.select(col(idCol).as("vec_id"), col(vecCol).as("embedding")),
         centroids = Some(centroids))
       .select(col("cand_id").as("id"), col("centroid_id").as("cid"))
-    val av = tracked(asg.join(
+    val av = OperatorCaches.cache(asg.join(
         vectors.select(col(idCol).as("id"), col(vecCol).as("v")), "id")
       .withColumn("__rn",
         row_number().over(Window.partitionBy("cid").orderBy("id")))

@@ -35,7 +35,7 @@ import org.apache.spark.sql.functions._
   * The ordering must be total (add a unique tiebreaker) for a deterministic
   * result — the same requirement the window form has.
   */
-object GlobalRank extends TrackedCaches {
+object GlobalRank {
 
   /** The size-adaptive rank-shuffle width `withRowNumber` defaults to:
     * one partition per ~32 MB of the optimizer's size estimate, floored
@@ -74,7 +74,7 @@ object GlobalRank extends TrackedCaches {
     // aggregation/sort/shuffle executes once for the counts pass and
     // once-cached for the ranked read, and so the assigned ids are
     // pinned. Session-tracked: long-lived sessions call
-    // [[GlobalRank.releaseCaches]] after consuming results.
+    // OperatorCaches.releaseAll after consuming results.
     // The partition coordinate is spark_partition_id() (a documented,
     // layout-free API); only the WITHIN-partition position derives from
     // monotonically_increasing_id's documented "current implementation"
@@ -82,7 +82,7 @@ object GlobalRank extends TrackedCaches {
     // assumption per partition (min 0, max n-1, and the high bits agree
     // with the partition id) so an upstream layout change fails loudly
     // instead of corrupting ranks (ADVICE r19).
-    val sorted = tracked(df.repartitionByRange(parts, order: _*)
+    val sorted = OperatorCaches.cache(df.repartitionByRange(parts, order: _*)
       .sortWithinPartitions(order: _*)
       .withColumn("__gr_mid", monotonically_increasing_id())
       .withColumn("__gr_pid", spark_partition_id().cast("long")))

@@ -28,11 +28,11 @@ import org.apache.spark.sql.functions._
   *
   * Caching note: the self-joining intermediates (canonical edges, the
   * oriented DAG, the degree-annotated adjacency) persist per call and
-  * back the lazily returned results — every persist is session-TRACKED;
-  * long-lived sessions call [[Graph.releaseCaches]] after consuming each
-  * result (same contract as [[Dedup.releaseCaches]]).
+  * back the lazily returned results — every persist goes through
+  * [[OperatorCaches.cache]]; long-lived sessions call
+  * [[OperatorCaches.releaseAll]] after consuming each result.
   */
-object Graph extends TrackedCaches {
+object Graph {
 
   /** Canonical undirected edge list: distinct (src < dst), self-loops
     * dropped. Accepts any two-column numeric frame. */
@@ -53,7 +53,7 @@ object Graph extends TrackedCaches {
   /** All triangles of the undirected graph, one row each, vertices sorted
     * by id (v1 < v2 < v3). Exact. */
   def triangles(edges: DataFrame): DataFrame =
-    trianglesOf(tracked(canonicalEdges(edges)))
+    trianglesOf(OperatorCaches.cache(canonicalEdges(edges)))
 
   /** [[triangles]] over an already-canonical (and ideally persisted)
     * edge frame — lets [[triangleStats]] share one canonical edge scan
@@ -64,7 +64,7 @@ object Graph extends TrackedCaches {
     val keyed = e
       .join(deg.select(col("v").as("src"), col("deg").as("sdeg")), "src")
       .join(deg.select(col("v").as("dst"), col("deg").as("ddeg")), "dst")
-    val oriented = tracked(keyed.select(
+    val oriented = OperatorCaches.cache(keyed.select(
       when(struct(col("sdeg"), col("src")) < struct(col("ddeg"), col("dst")),
         struct(col("src").as("u"), col("dst").as("w"), col("ddeg").as("wdeg")))
         .otherwise(
@@ -92,7 +92,7 @@ object Graph extends TrackedCaches {
     * coefficient kept as exact integers (the float ratio would not
     * hash-gate). Vertices in no triangle report n_tri = 0. */
   def triangleStats(edges: DataFrame): DataFrame = {
-    val e = tracked(canonicalEdges(edges))
+    val e = OperatorCaches.cache(canonicalEdges(edges))
     val tri = trianglesOf(e)
     val perVertex = tri
       .select(explode(array(col("v1"), col("v2"), col("v3"))).as("v"))
@@ -125,7 +125,7 @@ object Graph extends TrackedCaches {
   def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
     require(rounds >= 1 && rounds <= 64, s"rounds out of range: $rounds")
-    var e = tracked(canonicalEdges(edges))
+    var e = OperatorCaches.cache(canonicalEdges(edges))
     var stable = false
     var i = 0
     while (i < rounds && !stable) {
@@ -143,7 +143,7 @@ object Graph extends TrackedCaches {
         // redundant (a checkpoint is already materialized in the block
         // manager) and unreleasable (unpersist never reaches the
         // checkpoint RDD's pin — only the tracked seam does).
-        e = trackedCheckpoint(e
+        e = OperatorCaches.checkpointed(e
           .join(keep.select(col("v").as("src")), Seq("src"), "left_semi")
           .join(keep.select(col("v").as("dst")), Seq("dst"), "left_semi")
           .select("src", "dst"))
@@ -167,7 +167,7 @@ object Graph extends TrackedCaches {
     val dir = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
     val deg = dir.groupBy("src").agg(count(lit(1)).as("deg"))
     // (src, dst, deg) persisted once; every iteration joins ranks to it
-    val adj = tracked(dir.join(deg, "src"))
+    val adj = OperatorCaches.cache(dir.join(deg, "src"))
     val n = deg.count()
     require(n > 0, "pageRank needs a non-empty graph")
     val init = 1000000L / n
@@ -183,7 +183,7 @@ object Graph extends TrackedCaches {
           (lit(base) + expr("(85 * coalesce(s, 0L)) div 100")).as("r"))
       // lineage cadence: release-tracked, so long driver sessions do
       // not accumulate one pinned checkpoint RDD per 5 iterations
-      if (i % 5 == 0 && i < iters) ranks = trackedCheckpoint(ranks)
+      if (i % 5 == 0 && i < iters) ranks = OperatorCaches.checkpointed(ranks)
     }
     ranks.join(deg.select(col("src").as("v"), col("deg")), "v")
       .select(col("v").as("vertex"), col("deg"), col("r").as("rank_micro"))
@@ -205,7 +205,7 @@ object Graph extends TrackedCaches {
   def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 20, s"rounds out of range: $rounds")
     val e = canonicalEdges(edges)
-    val sym = tracked(
+    val sym = OperatorCaches.cache(
       e.union(e.select(col("dst").as("src"), col("src").as("dst"))))
     sym.count()
     var labels = sym.select(col("src").as("id")).distinct()
@@ -221,7 +221,7 @@ object Graph extends TrackedCaches {
           .as("best"))
         .select(col("id"), col("best.l").as("lbl"))
       // lineage cadence: release-tracked (see pageRankFixedPoint)
-      if (i % 5 == 0 && i < rounds) labels = trackedCheckpoint(labels)
+      if (i % 5 == 0 && i < rounds) labels = OperatorCaches.checkpointed(labels)
     }
     labels.select(col("id"), col("lbl").as("community"))
   }

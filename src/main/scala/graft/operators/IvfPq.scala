@@ -291,10 +291,10 @@ object IvfPq extends PersistedIndex {
                    maxQ: Int = 65536): DataFrame = {
     val spark = candidates.sparkSession
     val mdl = fit(candidates, nClusters, m, ks, centroids = centroids)
-    val coded = StagingCaches.cache(encodeCodes(candidates, mdl))
+    val coded = OperatorCaches.cache(encodeCodes(candidates, mdl))
     // distributed global rank (GlobalRank's range-repartition shape) —
     // a bare Window.orderBy would collapse the query table to one task
-    val ranked = StagingCaches.cache(
+    val ranked = OperatorCaches.cache(
       GlobalRank.withRowNumber(
           queries.select(col("vec_id"), col("embedding")),
           "__rn", Seq(asc("vec_id")))

@@ -290,7 +290,7 @@ object MaxSim extends PersistedIndex {
     * repeated searches of the same queries); the candidate PAIR frame
     * (≤ |q tokens|·tokenTopT rows by construction) stays DISTRIBUTED,
     * materialized exactly once through a release-tracked eager
-    * localCheckpoint ([[graft.operators.StagingCaches.checkpointed]])
+    * localCheckpoint ([[OperatorCaches.checkpointed]])
     * that then serves both the candidate-document semi-join and the
     * re-rank's broadcast pair relation without recompute. The driver
     * collects only the DISTINCT candidate doc ids the bucket partition
@@ -311,7 +311,7 @@ object MaxSim extends PersistedIndex {
     * byte-identical pre-mutation results must materialize the returned
     * frame before mutating the index. The checkpoint also means the
     * returned frame is NOT recomputable once
-    * [[graft.operators.OperatorCaches.releaseAll]] runs (a
+    * [[OperatorCaches.releaseAll]] runs (a
     * post-release re-read fails loudly on the missing checkpoint
     * blocks). Materialize or consume the result within the pass, then
     * release; callers that never release accumulate one pinned
@@ -345,7 +345,7 @@ object MaxSim extends PersistedIndex {
     val liveTokens = readLive(spark, dir, "tokens", liveDirs,
       _.where(col("centroid_id").isin(probedCells: _*)))
     // the candidate PAIR frame stays DISTRIBUTED: one eager
-    // release-tracked localCheckpoint (StagingCaches.checkpointed —
+    // release-tracked localCheckpoint (OperatorCaches.checkpointed —
     // OperatorCaches.releaseAll unpins it after the pass is consumed)
     // materializes the expensive probe-scored stage exactly once, and
     // it then serves the candidate semi-join AND the re-rank broadcast
@@ -361,7 +361,7 @@ object MaxSim extends PersistedIndex {
     // then the id collect re-reading the blocks). Severing still happens
     // before searchTokenIndex returns — the collect runs here, ahead of
     // any caller-side index mutation.
-    val cand = StagingCaches.checkpointedLazy(liveTokens
+    val cand = OperatorCaches.checkpointedLazy(liveTokens
       .select(packedTid(col("doc_id"), col("tok")).as("tid"),
         col("doc_id"), col("vec").as("dv"), col("centroid_id"))
       .join(broadcast(probesDf), Seq("centroid_id"))

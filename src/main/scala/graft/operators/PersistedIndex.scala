@@ -87,7 +87,7 @@ trait PersistedIndex {
 
   private def pinned[A](f: (DataFrame => DataFrame) => A): A = {
     val pins = scala.collection.mutable.Buffer.empty[DataFrame]
-    try f { df => val c = StagingCaches.cache(df); pins += c; c }
+    try f { df => val c = OperatorCaches.cache(df); pins += c; c }
     finally pins.foreach(_.unpersist())
   }
 
@@ -243,16 +243,20 @@ trait PersistedIndex {
     * the natural key while live dirs exist (a batch counted in the base
     * AND a still-live dir after a crashed compaction collapses back to
     * one row), and, when `mask`, anti-joined with the ledger. The mask is
-    * unhinted: AQE broadcasts the ledger while it is small. */
+    * unhinted: AQE broadcasts the ledger while it is small. Batch dirs
+    * are written by the same layout writer as the base, so each reads
+    * with the base's schema instead of inferring its own (one Spark job
+    * per read saved). */
   protected def readLive(spark: SparkSession, dir: String, dataset: String,
                          live: Seq[String],
                          scan: DataFrame => DataFrame = identity,
                          mask: Boolean = true): DataFrame = {
     val d = layout(dataset)
-    def read(p: String) =
-      scan(spark.read.parquet(p).select(d.columns.map(col): _*))
-    val all = live.foldLeft(read(s"$dir/$dataset")) { (acc, p) =>
-      acc.union(read(if (d.batchNested) s"$p/$dataset" else p))
+    val base = spark.read.parquet(s"$dir/$dataset")
+    def read(df: DataFrame) = scan(df.select(d.columns.map(col): _*))
+    val all = live.foldLeft(read(base)) { (acc, p) =>
+      acc.union(read(spark.read.schema(base.schema)
+        .parquet(if (d.batchNested) s"$p/$dataset" else p)))
     }
     val deduped =
       if (live.isEmpty || d.dedupKeys.isEmpty) all

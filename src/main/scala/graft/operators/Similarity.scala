@@ -399,9 +399,9 @@ object Similarity extends PersistedIndex {
     * never touched again.
     *
     * The per-round truncation checkpoints are release-tracked
-    * ([[graft.operators.StagingCaches.checkpointed]] — k+2 small pinned
+    * ([[OperatorCaches.checkpointed]] — k+2 small pinned
     * frames per call, unpinned by
-    * [[graft.operators.OperatorCaches.releaseAll]]), so the returned
+    * [[OperatorCaches.releaseAll]]), so the returned
     * frame is consume-before-release: materialize the picks before
     * releasing, as the driver's gate sessions do. */
   def mmrTopK(candidates: DataFrame, queries: DataFrame, k: Int,
@@ -413,17 +413,17 @@ object Similarity extends PersistedIndex {
     val wNum = lambdaNum.toLong
     val wPen = (lambdaDen - lambdaNum).toLong
     val wRel = Window.partitionBy("qid").orderBy(desc("rel"), asc("cid"))
-    val short = StagingCaches.checkpointed(
+    val short = OperatorCaches.checkpointed(
       mmrShortlist(candidates, queries, shortlist))
     // pairwise sims within each query's shortlist: s² rows per query
     val a = short.select(col("qid"), col("cid").as("ca"), col("cv").as("va"))
     val b = short.select(col("qid"), col("cid").as("cb"), col("cv").as("vb"))
-    val sims = StagingCaches.checkpointed(a.join(b, Seq("qid"))
+    val sims = OperatorCaches.checkpointed(a.join(b, Seq("qid"))
       .where(col("ca") =!= col("cb"))
       .select(col("qid"), col("ca"), col("cb"),
         i4(cosine(col("va"), col("vb"))).as("sim")))
     val members = short.select("qid", "cid", "rel")
-    var sel = StagingCaches.checkpointed(members
+    var sel = OperatorCaches.checkpointed(members
       .withColumn("__rn", row_number().over(wRel))
       .where(col("__rn") === 1)
       .select(col("qid"), col("cid"), col("rel"), lit(1).as("pick")))
@@ -442,7 +442,7 @@ object Similarity extends PersistedIndex {
         .withColumn("__rn", row_number().over(wS))
         .where(col("__rn") === 1)
         .select(col("qid"), col("cid"), col("rel"), lit(i).as("pick"))
-      sel = StagingCaches.checkpointed(sel.unionByName(next))
+      sel = OperatorCaches.checkpointed(sel.unionByName(next))
     }
     sel.select(col("qid").as("query_id"), col("pick"),
       col("cid").as("cand_id"), col("rel").as("rel_i4"))

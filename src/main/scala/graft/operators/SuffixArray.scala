@@ -43,7 +43,7 @@ import org.apache.spark.sql.functions._
   * distributed path (its own specs use it); equivalence of the two paths
   * is asserted in SuffixArraySpec.
   */
-object SuffixArray extends TrackedCaches {
+object SuffixArray {
 
   /** Document-count bound under which the char-count probe (a bounded
     * scan) may elect the driver-local path. */
@@ -97,7 +97,7 @@ object SuffixArray extends TrackedCaches {
     // rank_1: dense rank of the first character (alphabet-sized frame)
     val alpha = GlobalRank.withRowNumber(
       chars.select("c").distinct(), "r", Seq(asc("c")), rankPartitions)
-    var cur = tracked(chars.join(alpha, "c").select("doc", "pos", "r"))
+    var cur = OperatorCaches.cache(chars.join(alpha, "c").select("doc", "pos", "r"))
     cur.count()
     var tables = List(1 -> cur)
     var h = 1
@@ -123,8 +123,8 @@ object SuffixArray extends TrackedCaches {
         // release-tracked: unpersist never reaches a checkpoint's pinned
         // RDD, so the cadence rounds route through the seam releaseAll
         // drains (≤ rounds/3 = O(log maxlen) frames pinned per call)
-        if (round % 3 == 2) trackedCheckpoint(nxt)
-        else { val t = tracked(nxt); t.count(); t }
+        if (round % 3 == 2) OperatorCaches.checkpointed(nxt)
+        else { val t = OperatorCaches.cache(nxt); t.count(); t }
       cur = nxt
       h *= 2
       round += 1
@@ -287,7 +287,7 @@ object SuffixArray extends TrackedCaches {
         .drop("q1", "q2", "rh1", "rh2")
       // same lineage bound as the build loop: two joins nest per table
       // (release-tracked for the same reason as the build cadence)
-      if (round % 3 == 2) cur = trackedCheckpoint(cur)
+      if (round % 3 == 2) cur = OperatorCaches.checkpointed(cur)
       round += 1
     }
     // equal ranks of truncated prefixes overshoot past the string end —

@@ -1678,7 +1678,7 @@ object CurationQueries {
       import graft.functions.TextFunctions
       // tracked (not raw .persist): released with the operator caches
       // after each Verify/Bench gate, so 200+-gate sessions don't pin it
-      val scored = graft.operators.StagingCaches.cache(
+      val scored = graft.operators.OperatorCaches.cache(
         t(s, dir, "documents").select(
           col("doc_id"), col("text"),
           expr("lang_id(text)").as("lang"),

@@ -571,7 +571,7 @@ object EventQueries {
         val w = Window.partitionBy("user_id").orderBy("session_start")
         // eager checkpoint (release-tracked): the temp view is dropped
         // in the finally, so the result must sever from it here
-        graft.operators.StagingCaches.checkpointed(
+        graft.operators.OperatorCaches.checkpointed(
           s2.table(name).where(col("user_id") >= 0)
             .withColumn("session_id",
               (row_number().over(w) - 1).cast("long"))

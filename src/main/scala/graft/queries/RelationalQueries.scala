@@ -892,15 +892,15 @@ object RelationalQueries {
         |       CAST(siz.cluster_size AS BIGINT) AS cluster_size
         |FROM rec JOIN siz USING (canonical)
         |ORDER BY rec.id""".stripMargin) { (s, dir) =>
-      import graft.operators.{ConnectedComponents, FuzzyJoin, StagingCaches}
+      import graft.operators.{ConnectedComponents, FuzzyJoin, OperatorCaches}
       val cust = t(s, dir, "customer")
       // staged: the two filtered record sets are re-read by every fuzzy
       // blocking branch, the closure's symmetric union, AND the final
       // all-records frame — ~10 table scans without the cache, 1 with
       // (the r9 plan audit's 10 s was repeated parquet scans, not CC)
-      val left = StagingCaches.cache(cust.where(col("c_custkey") < 200)
+      val left = OperatorCaches.cache(cust.where(col("c_custkey") < 200)
         .select(col("c_custkey").as("id"), col("c_name").as("name")))
-      val right = StagingCaches.cache(cust.where(col("c_custkey") < 50)
+      val right = OperatorCaches.cache(cust.where(col("c_custkey") < 50)
         .select((col("c_custkey") + 1000000).as("id"),
           when(col("c_custkey") % 2 === 0,
             concat(lit("X"), expr("substring(c_name, 2)")))
@@ -910,7 +910,7 @@ object RelationalQueries {
       // staged: the closure probes/validates/propagates over the edge
       // set several times — materialize the (tiny) match pairs once
       // instead of re-running the blocked fuzzy chain per action
-      val pairs = StagingCaches.cache(
+      val pairs = OperatorCaches.cache(
         FuzzyJoin.byEditDistance(left, right, "id", "name",
             "id", "name", maxDist = 1, blockLen = 4)
           .select(col("l_id").as("id1"), col("r_id").as("id2")))

@@ -21,16 +21,6 @@ object TextQueries {
   /** DuckDB fragment: lowercased whitespace tokens. */
   private[queries] val sqlToks = "string_split_regex(trim(lower(text)), '\\s+')"
 
-  /** Memoize+persist the prefix-copy substring-dup SPANS frame shared by
-    * q_dedup_spans and q_dedup_span_removal (identical aug, identical
-    * winnow parameters) — the vault family's staging-table pattern: the
-    * first gate pays the winnow + bucket join once per (session, dir),
-    * the second reuses the pinned result. Tracked and releasable via
-    * [[evictCaches]]. */
-  private val spansCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
-
   /** Memoize+persist the winnowed (k=12, w=8) fingerprints of the BASE
     * `documents` table — the corpus-side staging frame. ~99% of every
     * substring-dup aug IS the base corpus, and winnowing it is the
@@ -40,28 +30,18 @@ object TextQueries {
     * ([[basePairRows]]); this uncapped frame remains the staging input
     * for the distinct-fp pair gate (q_dedup_substring), whose cap orders
     * by id alone. */
-  private val baseFpsCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
-
   private def baseFps(s: org.apache.spark.sql.SparkSession,
                       dir: String): org.apache.spark.sql.DataFrame =
-    baseFpsCache.getOrElseUpdate((s, dir),
+    SessionMemo.frame(s, dir, "base_fps")(
       Dedup.winnowPosFingerprints(t(s, dir, "documents"), "doc_id",
-          "text", k = 12, w = 8)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        "text", k = 12, w = 8))
 
   /** Memoized hot-value-capped view of [[baseFps]] — the frame every
     * per-analysis delta join scans ([[Dedup.spanPairRowsDelta]]). */
-  private val cappedBaseFpsCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
-
   private def cappedBaseFps(s: org.apache.spark.sql.SparkSession,
                             dir: String): org.apache.spark.sql.DataFrame =
-    cappedBaseFpsCache.getOrElseUpdate((s, dir),
-      Dedup.capPosFps(baseFps(s, dir))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    SessionMemo.frame(s, dir, "capped_base_fps")(
+      Dedup.capPosFps(baseFps(s, dir)))
 
   /** Memoized CORPUS-INTERNAL qualified-pair spans — the aggregated
     * output of the corpus fingerprint self-join (the expensive half of
@@ -73,16 +53,11 @@ object TextQueries {
     * into the aggregation (never cached: 9.6M co-occurrence rows at
     * sf0.1 versus 2.4M aggregated pairs). At 100 TB this is the "join
     * the corpus against itself once, reuse across analyses" shape. */
-  private val baseSpansCache = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, String),
-      org.apache.spark.sql.DataFrame]
-
   private def baseSpans(s: org.apache.spark.sql.SparkSession,
                         dir: String): org.apache.spark.sql.DataFrame =
-    baseSpansCache.getOrElseUpdate((s, dir),
+    SessionMemo.frame(s, dir, "base_spans")(
       Dedup.spansFromPairRows(
-          Dedup.spanPairRows(cappedBaseFps(s, dir)), minShared = 2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        Dedup.spanPairRows(cappedBaseFps(s, dir)), minShared = 2))
 
   /** Capped winnow fingerprints of a gate's synthetic extra docs — the
     * delta side of [[Dedup.spanPairRowsDelta]]. */
@@ -103,11 +78,17 @@ object TextQueries {
       .select((col("doc_id") + 100000).as("doc_id"),
         substring(col("text"), 1, 120).as("text"))
 
+  /** Memoize+persist the prefix-copy substring-dup SPANS frame shared by
+    * q_dedup_spans and q_dedup_span_removal (identical aug, identical
+    * winnow parameters) — the vault family's staging-table pattern: the
+    * first gate pays the winnow + bucket join once per (session, dir),
+    * the second reuses the pinned result. Like the corpus-side frames
+    * above, it lives in [[SessionMemo]] and [[SessionMemo.evict]]
+    * releases it. */
   private def prefixDupSpans(s: org.apache.spark.sql.SparkSession,
                              dir: String): org.apache.spark.sql.DataFrame =
-    spansCache.getOrElseUpdate((s, dir),
-      buildPrefixDupSpans(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    SessionMemo.frame(s, dir, "prefix_dup_spans")(
+      buildPrefixDupSpans(s, dir))
 
   private def buildPrefixDupSpans(s: org.apache.spark.sql.SparkSession,
                                   dir: String): org.apache.spark.sql.DataFrame =
@@ -148,15 +129,6 @@ object TextQueries {
     IndexFixtures.shared(s, dir, "bm25")(buildBm25(s, dir))
     IndexFixtures.shared(s, dir, "phrase")(buildPhrase(s, dir))
   }
-
-  /** Drop the memoized spans frames held for `s` (all dirs). */
-  def evictCaches(s: org.apache.spark.sql.SparkSession): Unit =
-    Seq(spansCache, baseFpsCache, cappedBaseFpsCache, baseSpansCache)
-      .foreach { cache =>
-        cache.keys.filter(_._1 eq s).foreach { k =>
-          cache.remove(k).foreach(_.unpersist(blocking = false))
-        }
-      }
 
   /** Fixture model for q_text_classifier: 64 hashed-bucket weights from a
     * deterministic formula (6-dp values round-trip exactly through both
@@ -969,15 +941,15 @@ object TextQueries {
     Q("q_dedup_simhash_recall", graft.queries.SketchReplay
         .simhashBruteSql) { (s, dir) =>
       val subset = t(s, dir, "documents").orderBy("doc_id").limit(300)
-      val banded = graft.operators.StagingCaches.cache(
+      val banded = graft.operators.OperatorCaches.cache(
         Dedup.simhashPairs(subset, "doc_id", "text", maxHamming = 6)
           .select("id1", "id2"))
-      val brute = graft.operators.StagingCaches.cache(
+      val brute = graft.operators.OperatorCaches.cache(
         Dedup.simhashBrutePairs(subset, "doc_id", "text",
             maxHamming = 6, maxDocs = 300)
           .select(col("id1"), col("id2"),
             col("hamming").cast("long").as("hamming")))
-      // both frames are StagingCaches-tracked: releaseAll unpins them
+      // both frames are OperatorCaches-tracked: releaseAll unpins them
       // after the driver consumes the result — no per-invocation
       // localCheckpoint (it pins an RDD releaseAll never sees) and no
       // eager unpersist (the consumer would recompute `brute` cold)
@@ -1027,7 +999,7 @@ object TextQueries {
       // HOFs dominate its cost, and paying them once into the cache
       // measured ~1.7x faster than recomputing the probe side (column
       // pruning spares the aggregate branch either way)
-      val scored = graft.operators.StagingCaches.cache(
+      val scored = graft.operators.OperatorCaches.cache(
         t(s, dir, "documents").select(
           col("doc_id"),
           expr("lang_id(text)").as("lang"),
@@ -1356,7 +1328,7 @@ object TextQueries {
       // the repartition spreads the shingle derivation: one parquet
       // split would otherwise run the whole (interpreted-HOF) shingle
       // scan on a single core before the cache materializes
-      val sh = graft.operators.StagingCaches.cache(
+      val sh = graft.operators.OperatorCaches.cache(
         t(s, dir, "documents")
           .repartition(s.sparkContext.defaultParallelism)
           .select(col("doc_id"),
@@ -1402,7 +1374,7 @@ object TextQueries {
       // tf already holds one row per (doc, term) — document frequency is a
       // plain count over it, saving a second tokenize+explode pass AND
       // turning count(DISTINCT doc_id) into a cheap count
-      val tf = graft.operators.StagingCaches.cache(
+      val tf = graft.operators.OperatorCaches.cache(
         tok.groupBy("doc_id", "term").agg(count(lit(1)).as("tf")))
       val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
       val n = docs.count() // corpus size: one scalar, computed once
@@ -1579,7 +1551,7 @@ object TextQueries {
       def search(phase: String) =
         graft.operators.Bm25.searchIndex(s, idxDir, queries, k = 10)
           .withColumn("phase", lit(phase))
-      val before = graft.operators.StagingCaches.checkpointed(
+      val before = graft.operators.OperatorCaches.checkpointed(
         search("tombstoned"))
       graft.operators.Bm25.vacuumIndex(s, idxDir)
       before.unionByName(search("vacuumed"))
@@ -1973,7 +1945,7 @@ object TextQueries {
       def search(phase: String) =
         graft.operators.PhraseSearch.searchIndex(s, idxDir, phrases)
           .withColumn("phase", lit(phase))
-      val before = graft.operators.StagingCaches.checkpointed(
+      val before = graft.operators.OperatorCaches.checkpointed(
         search("tombstoned"))
       graft.operators.PhraseSearch.vacuumIndex(s, idxDir)
       before.unionByName(search("vacuumed"))

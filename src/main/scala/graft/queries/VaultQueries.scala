@@ -65,28 +65,14 @@ object VaultQueries {
 
   // ---- derivation: raw actor tables from lineitem ⋈ part ---------------
 
-  /** Memoized+persisted per (session, dir, mod): the actor derivation joins
-    * lineitem, and four vault queries re-derive the same frame — the same
-    * reason the reference materializes temp staging tables (A11). */
-  private val actorCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int),
-      DataFrame]
-
+  /** Memoized+persisted per (session, dir, mod) in [[SessionMemo]]: the
+    * actor derivation joins lineitem, and four vault queries re-derive
+    * the same frame — the same reason the reference materializes temp
+    * staging tables (A11). Hubs, links and satellites memoize the same
+    * way. */
   private[graft] def rawActors(s: SparkSession, dir: String, mod: Int): DataFrame =
-    actorCache.getOrElseUpdate((s, dir, mod),
-      rawActorsUncached(s, dir, mod)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  /** Memoize+persist any derived frame shared across vault queries (hubs,
-    * links) — the catalog-level analog of a materialized staging table. */
-  private val frameCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String),
-      DataFrame]
-
-  private def cachedFrame(s: SparkSession, dir: String, name: String)
-                         (build: => DataFrame): DataFrame =
-    frameCache.getOrElseUpdate((s, dir, name),
-      build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    SessionMemo.frame(s, dir, s"raw_actors_$mod")(
+      rawActorsUncached(s, dir, mod))
 
   /** Materialize every CROSS-GATE staging frame (hubs, links,
     * satellites, the actor derivations) — the vault analog of "load the
@@ -106,48 +92,35 @@ object VaultQueries {
       satC(s, dir), lnkC(s, dir), esatC(s, dir)).foreach(_.count())
   }
 
-  /** Drop every memoized frame held for `s` (all dirs): unpersist the
-    * blocks and forget the entries, so a long-lived session doesn't pin
-    * executor storage after a vault catalog sweep. Subsequent vault
-    * queries simply re-derive (and re-memoize) what they need. */
-  def evictCaches(s: SparkSession): Unit = {
-    actorCache.keys.filter(_._1 eq s).foreach { k =>
-      actorCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-    frameCache.keys.filter(_._1 eq s).foreach { k =>
-      frameCache.remove(k).foreach(_.unpersist(blocking = false))
-    }
-  }
-
   private def hubC(s: SparkSession, dir: String): DataFrame =
-    cachedFrame(s, dir, "movie_hub")(
+    SessionMemo.frame(s, dir, "movie_hub")(
       CoreQueries.movieHub(rawMovies(s, dir, 2), rawMovies(s, dir, 3)))
 
   private def ehubC(s: SparkSession, dir: String): DataFrame =
-    cachedFrame(s, dir, "employee_hub")(
+    SessionMemo.frame(s, dir, "employee_hub")(
       CoreQueries.employeeHub(rawActors(s, dir, 2), rawActors(s, dir, 3)))
 
   private def melC(s: SparkSession, dir: String): DataFrame =
-    cachedFrame(s, dir, "movie_emp_link")(
+    SessionMemo.frame(s, dir, "movie_emp_link")(
       CoreQueries.movieEmpLink(rawActors(s, dir, 2), rawActors(s, dir, 3),
         ehubC(s, dir), hubC(s, dir)))
 
   private def ghubC(s: SparkSession, dir: String): DataFrame =
-    cachedFrame(s, dir, "genre_hub")(
+    SessionMemo.frame(s, dir, "genre_hub")(
       CoreQueries.genreHub(rawMovies(s, dir, 2), rawMovies(s, dir, 3)))
 
   private def satC(s: SparkSession, dir: String): DataFrame =
-    cachedFrame(s, dir, "movie_info_sat")(
+    SessionMemo.frame(s, dir, "movie_info_sat")(
       CoreQueries.movieInfoSat(rawMovies(s, dir, 2), rawMovies(s, dir, 3),
         hubC(s, dir)))
 
   private def lnkC(s: SparkSession, dir: String): DataFrame =
-    cachedFrame(s, dir, "movie_genre_link")(
+    SessionMemo.frame(s, dir, "movie_genre_link")(
       CoreQueries.movieGenreLink(rawMovies(s, dir, 2), rawMovies(s, dir, 3),
         hubC(s, dir), ghubC(s, dir)))
 
   private def esatC(s: SparkSession, dir: String): DataFrame =
-    cachedFrame(s, dir, "emp_movie_l_sat")(
+    SessionMemo.frame(s, dir, "emp_movie_l_sat")(
       CoreQueries.empMovieLSat(rawActors(s, dir, 2), rawActors(s, dir, 3),
         melC(s, dir)))
 
@@ -484,8 +457,8 @@ object VaultQueries {
       // the leaderboards consume the satellite four ways (loads scan, two
       // semi joins, two aggregations) — materialize once, like the
       // reference's temp_ staging table; load 1 reuses the memoized satC.
-      // Held in frameCache so evictCaches() can release it.
-      val sat = cachedFrame(s, dir, "rating_slide_sat")(
+      // Held in SessionMemo so SessionMemo.evict can release it.
+      val sat = SessionMemo.frame(s, dir, "rating_slide_sat")(
         Scd2.stamp(satC(s, dir), "2024-01-01 00:00:00")
           .unionByName(Scd2.stamp(CQ.movieInfoSat(i2, m2, hub),
             "2024-02-01 00:00:00")))

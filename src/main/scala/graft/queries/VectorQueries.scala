@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables.t
-import graft.operators.{Dedup, Similarity, StagingCaches}
+import graft.operators.{Dedup, OperatorCaches, Similarity}
 
 /** Driver-gated queries for similarity search over the `embeddings` table.
   *
@@ -997,7 +997,7 @@ object VectorQueries {
           shortlist = 50)
         .withColumn("hamming", col("hamming").cast("long"))
         .withColumn("rank", col("rank").cast("long"))
-      val pre = StagingCaches.checkpointed(
+      val pre = OperatorCaches.checkpointed(
         search().withColumn("phase", lit("debt")))
       val rep = IndexMaintenance.maintain(s, idxDir, "sketch",
         maxLiveBatches = 1, maxTombstones = 1)
@@ -1295,7 +1295,7 @@ object VectorQueries {
           .withColumn("phase", lit(phase))
       val tombstoned = search("tombstoned")
       // materialize pre-vacuum, release-tracked
-      val before = StagingCaches.checkpointed(tombstoned)
+      val before = OperatorCaches.checkpointed(tombstoned)
       Similarity.vacuumIndex(s, idxDir)
       before.unionByName(search("vacuumed"))
         .select("phase", "query_id", "cand_id", "score", "rank")
@@ -1616,7 +1616,7 @@ object VectorQueries {
             rerank = 300)
           .withColumn("rank", col("rank").cast("long"))
           .withColumn("phase", lit(phase))
-      val before = StagingCaches.checkpointed(rows("tombstoned"))
+      val before = OperatorCaches.checkpointed(rows("tombstoned"))
       IvfPq.vacuumIndex(s, idxDir)
       before.unionByName(rows("vacuumed"))
         .select("phase", "query_id", "cand_id", "score", "rank")
@@ -1929,7 +1929,7 @@ object VectorQueries {
               nProbe = 6, tokenTopT = 64, probes = Some(probePlan))
             .withColumn("rank", col("rank").cast("long"))
             .withColumn("phase", lit(phase))
-        val before = StagingCaches.checkpointed(rows("tombstoned"))
+        val before = OperatorCaches.checkpointed(rows("tombstoned"))
         MaxSim.vacuumIndex(s, idxDir)
         before.unionByName(rows("vacuumed"))
           .select("phase", "query_id", "doc_id", "score", "rank")
@@ -2137,15 +2137,15 @@ object VectorQueries {
     Q("q_dedup_embed_lsh_recall", SketchReplay.embedBruteSql) {
       (s, dir) =>
         val aug = augmentedEmbeddings(s, dir)
-        val lsh = StagingCaches.cache(
+        val lsh = OperatorCaches.cache(
           Dedup.embeddingNearDupLsh(aug, "vec_id", "v",
               threshold = 0.99, maxHamming = 10)
             .select("id1", "id2"))
-        val exact = StagingCaches.cache(
+        val exact = OperatorCaches.cache(
           Dedup.embeddingNearDupPairs(aug, "vec_id", "v",
             threshold = 0.99, maxDocs = 1000))
         // no eager unpersist and no localCheckpoint here: both frames
-        // are StagingCaches-tracked, so OperatorCaches.releaseAll owns
+        // are OperatorCaches-tracked, so OperatorCaches.releaseAll owns
         // them AFTER the driver consumes the returned result — a
         // per-invocation checkpoint pinned an RDD releaseAll never saw
         // (the r16 514/515 leak), and a `finally` unpersist would force
@@ -2320,47 +2320,24 @@ object VectorQueries {
       .orderBy("query_id")
   }
 
-  /** Session-scoped memo for DETERMINISTIC derived values keyed by SF
-    * dir (fits, exact baselines). Keyed WEAKLY by the session object —
-    * a DataFrame is bound to the session that built it, and serving one
-    * to a different (or restarted) session would fail or mix catalogs;
-    * the weak key also lets a dead session's entries (and the frames
-    * pinning it) be collected instead of accumulating in a long-lived
-    * JVM. Memoizing is exact because every builder below is
-    * deterministic over (session, dir). */
-  private final class SessionMemo[V] {
-    private val cache = new java.util.WeakHashMap[
-      org.apache.spark.sql.SparkSession,
-      scala.collection.mutable.Map[String, V]]
-    def apply(s: org.apache.spark.sql.SparkSession, dir: String)
-             (build: => V): V = cache.synchronized {
-      var per = cache.get(s)
-      if (per == null) {
-        per = scala.collection.mutable.Map.empty
-        cache.put(s, per)
-      }
-      per.getOrElseUpdate(dir, build)
-    }
-  }
-
   /** One k-means fit per (session, SF dir), shared by q_ann_ivf and
-    * q_ann_ivf_recall — a driver-local LocalRelation (k×dim doubles). */
-  private val centCache = new SessionMemo[org.apache.spark.sql.DataFrame]
+    * q_ann_ivf_recall — a driver-local LocalRelation (k×dim doubles).
+    * This fit, the PQ model and the five exact baselines below live in
+    * [[SessionMemo]]; each builder owns its materialization. */
   private def centroids(s: org.apache.spark.sql.SparkSession,
                         dir: String): org.apache.spark.sql.DataFrame =
-    centCache(s, dir)(
+    SessionMemo(s, dir, "centroids")(
       Similarity.fitCentroids(t(s, dir, "embeddings"), k = 16))
 
   /** One IVF-PQ model fit per (session, SF dir) — the PQ twin of the
-    * centroid cache below, shared by the six q_ann_*pq* gates: the fit
+    * centroid memo above, shared by the six q_ann_*pq* gates: the fit
     * is deterministic over the full embeddings table with the shared
     * coarse centroids, so every gate's own fit would produce the
     * identical model; memoizing it is exact and saves a bounded sample
     * collect + driver Lloyd per gate (plain arrays, no DataFrame). */
-  private val pqModelCache = new SessionMemo[graft.operators.IvfPq.Model]
   private def pqModel(s: org.apache.spark.sql.SparkSession,
                       dir: String): graft.operators.IvfPq.Model =
-    pqModelCache(s, dir)(
+    SessionMemo(s, dir, "pq_model")(
       graft.operators.IvfPq.fit(t(s, dir, "embeddings"),
         nClusters = 16, centroids = Some(centroids(s, dir))))
 
@@ -2374,11 +2351,9 @@ object VectorQueries {
     * validated per query at use). Deterministic, so the memo is exact.
     * The memoized frame is a localCheckpoint (session-lifetime, tiny:
     * queries×30 rows). */
-  private val maxsimExactCache =
-    new SessionMemo[org.apache.spark.sql.DataFrame]
   private def maxsimExact(s: org.apache.spark.sql.SparkSession,
                           dir: String): org.apache.spark.sql.DataFrame =
-    maxsimExactCache(s, dir) {
+    SessionMemo(s, dir, "maxsim_exact30") {
       import graft.operators.MaxSim
       val emb = t(s, dir, "embeddings")
       val docToks = MaxSim.subvectorTokens(emb, "vec_id", "embedding", 8)
@@ -2401,11 +2376,9 @@ object VectorQueries {
     * [[perturbedBatch]]) — the baseline the token-index APPEND contract
     * measures against; memoized like [[maxsimExact]] and
     * oracle-checked by q_ann_maxsim_union_baseline30. */
-  private val maxsimUnionCache =
-    new SessionMemo[org.apache.spark.sql.DataFrame]
   private def maxsimUnionExact(s: org.apache.spark.sql.SparkSession,
                                dir: String): org.apache.spark.sql.DataFrame =
-    maxsimUnionCache(s, dir) {
+    SessionMemo(s, dir, "maxsim_union_exact30") {
       import graft.functions.VectorFunctions.asDouble
       import graft.operators.MaxSim
       val emb = t(s, dir, "embeddings")
@@ -2429,11 +2402,9 @@ object VectorQueries {
     * independently oracle-checked by q_ann_brute_baseline30 so the
     * frame every contract trusts can FAIL on its own. Deterministic,
     * tiny (queries×30 rows), session-lifetime localCheckpoint. */
-  private val bruteExactCache =
-    new SessionMemo[org.apache.spark.sql.DataFrame]
   private def bruteExact30(s: org.apache.spark.sql.SparkSession,
                            dir: String): org.apache.spark.sql.DataFrame =
-    bruteExactCache(s, dir) {
+    SessionMemo(s, dir, "brute_exact30") {
       val emb = t(s, dir, "embeddings")
       Similarity.bruteForceTopK(emb, emb.where(col("vec_id") < 5),
           k = 30)
@@ -2465,11 +2436,9 @@ object VectorQueries {
     * [[perturbedBatch]]) — the baseline the three PQ growth contracts
     * (append / recenter / streamed ingest) share; memoized like
     * [[bruteExact30]] and oracle-checked by q_ann_union_baseline30. */
-  private val bruteUnionCache =
-    new SessionMemo[org.apache.spark.sql.DataFrame]
   private def bruteUnion30(s: org.apache.spark.sql.SparkSession,
                            dir: String): org.apache.spark.sql.DataFrame =
-    bruteUnionCache(s, dir) {
+    SessionMemo(s, dir, "brute_union30") {
       import graft.functions.VectorFunctions.asDouble
       val emb = t(s, dir, "embeddings")
       val union = emb.select(col("vec_id"),
@@ -2484,11 +2453,9 @@ object VectorQueries {
   /** Exact brute top-10 over the vec_id % 3 = 1 slice — the baseline
     * the filtered-search contract measures against; memoized and
     * oracle-checked by q_ann_filtered_baseline10. */
-  private val filteredBruteCache =
-    new SessionMemo[org.apache.spark.sql.DataFrame]
   private def filteredBrute10(s: org.apache.spark.sql.SparkSession,
                               dir: String): org.apache.spark.sql.DataFrame =
-    filteredBruteCache(s, dir) {
+    SessionMemo(s, dir, "filtered_brute10") {
       val emb = t(s, dir, "embeddings")
       Similarity.bruteForceTopK(emb.where(col("vec_id") % 3 === 1),
           emb.where(col("vec_id") < 5), k = 10)

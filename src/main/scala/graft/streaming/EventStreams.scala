@@ -274,28 +274,6 @@ object EventStreams {
           col(rightTs) >= col(leftTs) &&
           col(rightTs) <= col(leftTs) + expr(s"INTERVAL $within"))
 
-  /** Streaming SCD2 sink: historize a stream of dimension updates into a
-    * parquet warehouse table via `foreachBatch` + the batch merge engine
-    * ([[graft.engine.Scd2.merge]]) — the streaming upsert path that turns
-    * a CDC/update feed into a versioned dimension without a rewrite job.
-    *
-    * Each micro-batch: dedup the batch to its LATEST row per key (ordered
-    * by `orderCol` — a batch can carry several updates for one key), read
-    * the current table, run the same close-out/insert merge the batch
-    * pipeline uses, swap the table directory crash-safely
-    * ([[graft.sources.Formats.swapInto]] — rename aside, rename in, drop;
-    * no delete-before-rename window that could lose the dimension). One
-    * merge per micro-batch, cost O(open ∪ batch) — history partitions are
-    * union legs, untouched (SCALE.md "SCD2 historization").
-    *
-    * `checkpointDir` persists stream progress so a restarted query resumes
-    * from the last committed batch instead of reprocessing the source;
-    * production callers should always pass it (the merge itself is
-    * idempotent per (key, loadTs), so a replayed batch converges, but the
-    * checkpoint is what bounds the replay).
-    *
-    * Returns the started query; callers own its lifecycle.
-    */
   /** Streaming duplicate-graph maintenance: a stream of near-dup PAIRS
     * (from an incremental miner — Dedup.incrementalLshPairs per batch)
     * folds into a standing (id, canonical) labels table via
@@ -310,33 +288,25 @@ object EventStreams {
   def componentsSink(pairs: DataFrame, tablePath: String,
                      checkpointDir: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    import graft.operators.ConnectedComponents
-    val writer = checkpointDir.fold(pairs.writeStream)(
-      pairs.writeStream.option("checkpointLocation", _))
-    writer.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val dir = new java.io.File(tablePath)
-          val labels =
-            if (dir.exists()) spark.read.parquet(tablePath)
-            else batch.sparkSession.emptyDataFrame
-              .select(lit(0L).as("id"), lit(0L).as("canonical")).limit(0)
-          val updated = ConnectedComponents
-            .incrementalCanonicalize(labels, batch)
-          val tmp = tablePath + ".cc"
-          updated.write.mode("overwrite").parquet(tmp)
-          val livePath = new org.apache.hadoop.fs.Path(tablePath)
-          val fs = livePath
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          graft.sources.Formats.swapInto(fs,
-            new org.apache.hadoop.fs.Path(tmp), livePath)
-          ConnectedComponents.releaseCaches(spark)
-        }
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    import graft.operators.{ConnectedComponents, OperatorCaches}
+    batchSink(pairs, checkpointDir) { (batch, _) =>
+      val spark = batch.sparkSession
+      val dir = new java.io.File(tablePath)
+      val labels =
+        if (dir.exists()) spark.read.parquet(tablePath)
+        else spark.emptyDataFrame
+          .select(lit(0L).as("id"), lit(0L).as("canonical")).limit(0)
+      val updated = ConnectedComponents.incrementalCanonicalize(labels, batch)
+      val tmp = tablePath + ".cc"
+      updated.write.mode("overwrite").parquet(tmp)
+      val livePath = new org.apache.hadoop.fs.Path(tablePath)
+      val fs = livePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      graft.sources.Formats.swapInto(fs,
+        new org.apache.hadoop.fs.Path(tmp), livePath)
+      // the batch's session is the stream's own clone, never adopted, so
+      // this releases exactly the pins this batch made
+      OperatorCaches.releaseAll(spark)
+    }
   }
 
   /** Streaming ingestion into any persisted index: each micro-batch
@@ -354,31 +324,35 @@ object EventStreams {
                 indexDir: String, checkpointDir: Option[String] = None,
                 tagOverride: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    batchDirSink(df, checkpointDir, tagOverride)(
-      index.appendBatchDir(_, indexDir, _, _))
+    batchSink(df, checkpointDir)(index.appendBatchDir(_, indexDir,
+      batchTag(checkpointDir, tagOverride), _))
 
-  /** The shared scaffold of both index sinks: tag derivation, optional
-    * checkpoint, Append mode, AvailableNow trigger, empty-batch skip.
-    * The tag scopes batch placement: normally the checkpoint location
-    * (the identity that survives a restart); un-checkpointed callers
-    * running several one-shot queries against one target pass distinct
-    * tagOverrides so their batch-0 locations don't collide. */
-  private def batchDirSink(df: DataFrame, checkpointDir: Option[String],
-                           tagOverride: Option[String])
-      (perBatch: (DataFrame, String, Long) => Unit)
+  /** The scaffold every sink runs through: optional checkpoint, Append
+    * mode, `foreachBatch` with the empty-batch skip, AvailableNow
+    * trigger. `perBatch` gets each non-empty micro-batch and its id. */
+  private def batchSink(df: DataFrame, checkpointDir: Option[String])
+      (perBatch: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val tag = tagOverride.orElse(checkpointDir).getOrElse("uncheckpointed")
     val writer = checkpointDir.fold(df.writeStream)(
       df.writeStream.option("checkpointLocation", _))
     writer.outputMode(OutputMode.Append)
       .foreachBatch {
         (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty) perBatch(batch.toDF(), tag, batchId)
+          if (!batch.isEmpty) perBatch(batch.toDF(), batchId)
           ()
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
   }
+
+  /** The tag that scopes the index sinks' batch placement: normally the
+    * checkpoint location (the identity that survives a restart);
+    * un-checkpointed callers running several one-shot queries against
+    * one target pass distinct tagOverrides so their batch-0 locations
+    * don't collide. */
+  private def batchTag(checkpointDir: Option[String],
+                       tagOverride: Option[String]): String =
+    tagOverride.orElse(checkpointDir).getOrElse("uncheckpointed")
 
   /** Streaming deletion for any persisted index — every kind (IVF,
     * IVF-PQ, sketch, MaxSim tokens, BM25, phrase) carries its tombstone
@@ -394,9 +368,8 @@ object EventStreams {
                     checkpointDir: Option[String] = None,
                     tagOverride: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    batchDirSink(ids, checkpointDir, tagOverride)(
-      graft.operators.TombstoneLedger.appendBatch(
-        _, s"$indexDir/tombstones", _, _))
+    batchSink(ids, checkpointDir)(graft.operators.TombstoneLedger.appendBatch(
+      _, s"$indexDir/tombstones", batchTag(checkpointDir, tagOverride), _))
 
   /** Streaming corpus-drift maintenance: each micro-batch of documents
     * aggregates to token counts
@@ -414,20 +387,9 @@ object EventStreams {
   def driftSink(docs: DataFrame, textCol: String,
                 slicePred: org.apache.spark.sql.Column, tablePath: String,
                 checkpointDir: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = checkpointDir.fold(docs.writeStream)(
-      docs.writeStream.option("checkpointLocation", _))
-    writer.outputMode(OutputMode.Append)
-      .foreachBatch {
-        (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-          if (!batch.isEmpty)
-            driftFold(batch.toDF(), batchId, textCol, slicePred, tablePath,
-              checkpointDir)
-          ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    batchSink(docs, checkpointDir)(
+      driftFold(_, _, textCol, slicePred, tablePath, checkpointDir))
 
   /** One [[driftSink]] micro-batch fold, idempotent under foreachBatch's
     * at-least-once contract: a `_committed_batch` marker (query tag +
@@ -495,43 +457,56 @@ object EventStreams {
     finally out.close()
   }
 
+  /** Streaming SCD2 sink: historize a stream of dimension updates into a
+    * parquet warehouse table via `foreachBatch` + the batch merge engine
+    * ([[graft.engine.Scd2.merge]]) — the streaming upsert path that turns
+    * a CDC/update feed into a versioned dimension without a rewrite job.
+    *
+    * Each micro-batch: dedup the batch to its LATEST row per key (ordered
+    * by `orderCol` — a batch can carry several updates for one key), read
+    * the current table, run the same close-out/insert merge the batch
+    * pipeline uses, swap the table directory crash-safely
+    * ([[graft.sources.Formats.swapInto]] — rename aside, rename in, drop;
+    * no delete-before-rename window that could lose the dimension). One
+    * merge per micro-batch, cost O(open ∪ batch) — history partitions are
+    * union legs, untouched (SCALE.md "SCD2 historization").
+    *
+    * `checkpointDir` persists stream progress so a restarted query resumes
+    * from the last committed batch instead of reprocessing the source;
+    * production callers should always pass it (the merge itself is
+    * idempotent per (key, loadTs), so a replayed batch converges, but the
+    * checkpoint is what bounds the replay).
+    *
+    * Returns the started query; callers own its lifecycle.
+    */
   def scd2Sink(updates: DataFrame, tablePath: String, pk: Seq[String],
                attrs: Seq[String], orderCol: String,
                checkpointDir: Option[String] = None): org.apache.spark.sql
       .streaming.StreamingQuery = {
     import graft.engine.Scd2
     import org.apache.spark.sql.expressions.Window
-    val writer = checkpointDir.fold(updates.writeStream)(
-      updates.writeStream.option("checkpointLocation", _))
-    writer.outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val spark = batch.sparkSession
-        val w = Window.partitionBy(pk.map(col): _*)
-          .orderBy(col(orderCol).desc)
-        val deduped = batch
-          .withColumn("__rn", row_number().over(w))
-          .where(col("__rn") === 1)
-        val latest = deduped.select((pk ++ attrs).map(col): _*)
-        if (!latest.isEmpty) {
-          val loadTs = deduped.agg(max(orderCol)).head.get(0).toString
-          val dir = new java.io.File(tablePath)
-          val target =
-            if (dir.exists()) spark.read.parquet(tablePath)
-            else Scd2.stamp(latest.limit(0), loadTs)
-          val merged = Scd2.merge(target, latest, pk, attrs, loadTs)
-          // materialize before the swap — merged still reads tablePath
-          val tmp = tablePath + ".merge"
-          merged.write.mode("overwrite").parquet(tmp)
-          val livePath = new org.apache.hadoop.fs.Path(tablePath)
-          val fs = livePath
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          graft.sources.Formats.swapInto(fs,
-            new org.apache.hadoop.fs.Path(tmp), livePath)
-        }
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    batchSink(updates, checkpointDir) { (batch, _) =>
+      val spark = batch.sparkSession
+      val w = Window.partitionBy(pk.map(col): _*)
+        .orderBy(col(orderCol).desc)
+      val deduped = batch
+        .withColumn("__rn", row_number().over(w))
+        .where(col("__rn") === 1)
+      val latest = deduped.select((pk ++ attrs).map(col): _*)
+      val loadTs = deduped.agg(max(orderCol)).head.get(0).toString
+      val dir = new java.io.File(tablePath)
+      val target =
+        if (dir.exists()) spark.read.parquet(tablePath)
+        else Scd2.stamp(latest.limit(0), loadTs)
+      val merged = Scd2.merge(target, latest, pk, attrs, loadTs)
+      // materialize before the swap — merged still reads tablePath
+      val tmp = tablePath + ".merge"
+      merged.write.mode("overwrite").parquet(tmp)
+      val livePath = new org.apache.hadoop.fs.Path(tablePath)
+      val fs = livePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      graft.sources.Formats.swapInto(fs,
+        new org.apache.hadoop.fs.Path(tmp), livePath)
+    }
   }
 
   /** Convenience: run a streaming DataFrame to an in-memory sink and block

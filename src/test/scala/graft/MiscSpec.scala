@@ -1964,13 +1964,13 @@ class VaultCacheSpec extends SparkSpec {
     graft.SparkEntry.queries("q_vault_movie_info_sat")(spark, sf001).count()
     assert(actors.storageLevel != StorageLevel.NONE,
       "actor derivation should be persisted while memoized")
-    VaultQueries.evictCaches(spark)
+    graft.queries.SessionMemo.evict(spark)
     assert(actors.storageLevel == StorageLevel.NONE,
-      "evictCaches must unpersist the memoized actor derivation")
+      "evict must unpersist the memoized actor derivation")
     // a fresh call re-derives and re-memoizes rather than failing
     val again = VaultQueries.rawActors(spark, sf001, 2)
     assert(again.count() == actors.count())
-    VaultQueries.evictCaches(spark)
+    graft.queries.SessionMemo.evict(spark)
   }
 }
 
@@ -1978,25 +1978,25 @@ class SpansCacheSpec extends SparkSpec {
 
   test("TextQueries.evictCaches releases the shared spans frame") {
     import org.apache.spark.storage.StorageLevel
-    import graft.queries.TextQueries
+    import graft.queries.SessionMemo
     // run one of the two sharing gates to populate the memo, then find
-    // the pinned frame via a second call (getOrElseUpdate returns it)
+    // the pinned frame via a second call (the memo returns it)
     val a = graft.SparkEntry.queries("q_dedup_spans")(spark, sf001)
     val n = a.count()
     // q_dedup_span_removal reuses the same memoized spans frame
     graft.SparkEntry.queries("q_dedup_span_removal")(spark, sf001).count()
-    TextQueries.evictCaches(spark)
+    SessionMemo.evict(spark)
     // re-running re-derives and re-memoizes rather than failing
     val again = graft.SparkEntry.queries("q_dedup_spans")(spark, sf001)
     assert(again.count() == n)
-    TextQueries.evictCaches(spark)
+    SessionMemo.evict(spark)
   }
 }
 
 object MiscSpec {
   /** Every gate whose lambda pins per-invocation state the driver's
-    * long sessions must not accumulate: StagingCaches.cache frames (the
-    * r9 sweep of raw persists) AND StagingCaches.checkpointed snapshots
+    * long sessions must not accumulate: OperatorCaches.cache frames (the
+    * r9 sweep of raw persists) AND OperatorCaches.checkpointed snapshots
     * (the r17 sweep of raw per-gate localCheckpoints — pre-mutation
     * search results, stream temp-view severing, recall baselines).
     * CheckpointHygieneSpec mechanically re-derives the checkpointed
@@ -2011,7 +2011,7 @@ object MiscSpec {
     "q_ann_maxsim_index_delete", "q_text_bm25_index_delete",
     "q_text_phrase_index_delete", "q_stream_sessionize_replay",
     // mmrTopK's k+2 per-call truncation checkpoints route through
-    // StagingCaches since r18 (they were raw eager localCheckpoints the
+    // OperatorCaches since r18 (they were raw eager localCheckpoints the
     // r17 no-arg census could not see)
     "q_ann_mmr")
 }
@@ -2020,8 +2020,8 @@ object MiscSpec {
   * closed STRUCTURALLY, not by sampling. Raw `.localCheckpoint()` pins
   * an RDD outside the CacheManager that OperatorCaches.releaseAll never
   * sees (the r16 514/515 leak) — every per-invocation checkpoint must
-  * route through the tracked seams (StagingCaches.checkpointed /
-  * TrackedCaches.trackedCheckpoint); the only exempt raw sites are the
+  * route through the registry (OperatorCaches.checkpointed /
+  * checkpointedLazy); the only exempt raw sites are the
   * session-lifetime memoized fixtures, pinned by exact count below. */
 class CheckpointHygieneSpec extends org.scalatest.funsuite.AnyFunSuite {
 
@@ -2050,8 +2050,8 @@ class CheckpointHygieneSpec extends org.scalatest.funsuite.AnyFunSuite {
       // class): pinned once per session BY DESIGN, amortized across
       // many gates — releaseAll deliberately never touches them
       "VectorQueries.scala" -> 5,
-      // the tracked seam itself (trackedCheckpoint's own call)
-      "TrackedCaches.scala" -> 1,
+      // the registry itself (OperatorCaches.checkpointed's own call)
+      "OperatorCaches.scala" -> 1,
       // pipeline-scoped temp-table materialization: pins live exactly
       // as long as the metadata pipeline run that owns the session,
       // bounded by the pipeline's table count, GC-recovered after
@@ -2073,7 +2073,7 @@ class CheckpointHygieneSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(hits == exempt,
       s"raw .localCheckpoint( drift: found $hits, exempt $exempt — " +
         "route per-invocation checkpoints through " +
-        "StagingCaches.checkpointed / trackedCheckpoint, or add an " +
+        "OperatorCaches.checkpointed, or add an " +
         "exemption WITH a justification comment above")
   }
 
@@ -2104,7 +2104,7 @@ class StagingCacheSpec extends SparkSpec {
 
   test("OperatorCaches.releaseAll unpins query-layer staging frames") {
     import org.apache.spark.storage.StorageLevel
-    val df = graft.operators.StagingCaches.cache(
+    val df = graft.operators.OperatorCaches.cache(
       graft.engine.Tables.t(spark, sf001, "documents").select(col("doc_id")))
     df.count()
     assert(df.storageLevel != StorageLevel.NONE, "cache() did not persist")
@@ -2128,7 +2128,7 @@ class StagingCacheSpec extends SparkSpec {
   test("every staged gate leaves zero pinned blocks after releaseAll " +
       "(the 239-gate driver-session contract)") {
     // every gate whose lambda stages an intermediate through
-    // StagingCaches (the r9 sweep of raw per-call persists): a pinned
+    // OperatorCaches (the r9 sweep of raw per-call persists): a pinned
     // block surviving releaseAll here is exactly the leak class the
     // driver's long sessions accumulate
     val staged = MiscSpec.stagedGates
@@ -2155,13 +2155,13 @@ class StagingCacheSpec extends SparkSpec {
     val sB = spark.newSession()
     val before = spark.sparkContext.getPersistentRDDs.keySet
     // sA pins a non-recomputable snapshot through the tracked seam
-    val dfA = graft.operators.StagingCaches.checkpointed(
+    val dfA = graft.operators.OperatorCaches.checkpointed(
       sA.range(0, 100).toDF("id"))
     assert(dfA.count() == 100)
     // a scoped child of sA (the EventQueries gate pattern) pins another
     val child = sA.newSession()
     graft.operators.OperatorCaches.adoptSession(child, sA)
-    val dfC = graft.operators.StagingCaches.checkpointed(
+    val dfC = graft.operators.OperatorCaches.checkpointed(
       child.range(0, 50).toDF("id"))
     assert(dfC.count() == 50)
     val pinned = spark.sparkContext.getPersistentRDDs.keySet -- before

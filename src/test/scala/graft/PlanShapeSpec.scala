@@ -276,7 +276,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("exact jaccard join derives the staged postings ONCE, feeding " +
       "both self-join sides from the cache") {
-    import graft.operators.{Dedup, StagingCaches}
+    import graft.operators.{Dedup, OperatorCaches}
     val docs = t(spark, sf001, "documents")
       .selectExpr("doc_id", "split(text, ' ') AS toks")
     val plan = physical(
@@ -299,7 +299,7 @@ class PlanShapeSpec extends SparkSpec {
       s"staged postings must feed both join sides ($imtsCount):\n$plan")
     assert(outerGenerates == 0,
       s"posting derivation re-derived outside the cache:\n$plan")
-    StagingCaches.releaseCaches(spark)
+    OperatorCaches.releaseAll(spark)
   }
 
   test("suffix-array distributed build stays multi-partition for a " +

@@ -4,20 +4,24 @@ package graft
   * lifecycle each have one home in `src/main`: [[Sessions]] builds every
   * session, the [[Functions]] table (read by [[GraftExtensions]])
   * registers every function, and [[graft.operators.PersistedIndex]] owns
-  * the ledger, batch-dir fold and vacuum of every index kind. A second
-  * builder, registration path or lifecycle copy fails here before it
-  * drifts. */
+  * the ledger, batch-dir fold and vacuum of every index kind,
+  * [[graft.operators.OperatorCaches]] registers every pass-scoped pin and
+  * [[graft.queries.SessionMemo]] holds every cross-gate memo. A second
+  * builder, registration path, lifecycle copy or cache seam fails here
+  * before it drifts. */
 class SingleSourceSpec extends org.scalatest.funsuite.AnyFunSuite {
 
-  private lazy val sources: Seq[(String, String)] = {
+  private def read(dir: String): Seq[(String, String)] = {
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    walk(new java.io.File("src/main/scala")).map { f =>
+    walk(new java.io.File(dir)).map { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
       try f.getName -> src.mkString finally src.close()
     }
   }
+
+  private lazy val sources = read("src/main/scala")
 
   private def filesWith(needle: String): Set[String] =
     sources.collect { case (name, text) if text.contains(needle) => name }
@@ -74,5 +78,18 @@ class SingleSourceSpec extends org.scalatest.funsuite.AnyFunSuite {
         "def deleteFromIndex", "var vacuumAfterSnapshotHook"))
       assert(filesWith(needle) == Set("PersistedIndex.scala"),
         s"$needle outside the trait: ${filesWith(needle)}")
+  }
+
+  test("pins go through OperatorCaches and cross-gate memos through " +
+      "SessionMemo: no per-object registry, release or memo remains") {
+    for (needle <- Seq("extends TrackedCaches", "def releaseCaches",
+        "def evictCaches", "class SessionMemo"))
+      assert(filesWith(needle).isEmpty,
+        s"$needle in ${filesWith(needle)}")
+    val memos = read("src/main/scala/graft/queries").collect {
+      case (name, text) if text.contains("getOrElseUpdate(") => name
+    }.toSet
+    assert(memos.subsetOf(Set("SessionMemo.scala", "IndexFixtures.scala")),
+      s"a memo map outside SessionMemo: $memos")
   }
 }

@@ -273,9 +273,9 @@ class DedupSpec extends SparkSpec {
       k = 3, m = 8, bands = 4, threshold = 0.3).count()
     assert(spark.sparkContext.getPersistentRDDs.size > before,
       "expected the LSH pass to pin intermediates")
-    Dedup.releaseCaches(spark)
+    OperatorCaches.releaseAll(spark)
     assert(spark.sparkContext.getPersistentRDDs.size <= before,
-      "releaseCaches left dedup intermediates pinned")
+      "releaseAll left dedup intermediates pinned")
   }
 
   test("incremental LSH matches a new batch against the corpus index only") {

@@ -6,20 +6,20 @@ driver's 200+-gate Verify/Bench sessions accumulate pinned blocks that
 twice for instances; this lint closes the class).
 
 Allowed regimes, checked per occurrence:
-  1. the TrackedCaches adapter itself (operators/TrackedCaches.scala) —
-     the ONE place a tracked persist is issued;
+  1. the two cache seams themselves: the pass-scoped pin registry
+     (operators/OperatorCaches.scala, released by `releaseAll`) and the
+     cross-gate memo (queries/SessionMemo.scala, released by `evict`) —
+     the ONLY places a DataFrame persist is issued;
   2. RDD-level persists (receiver `rdd`/`*Rdd`): released by the
      ContextCleaner once the result frame is collected/unreferenced,
      never pinned in the session CacheManager;
-  3. memoized cross-gate fixtures: a persist inside a
-     `getOrElseUpdate(` memo whose owner exposes `evictCaches` —
-     session-lived BY DESIGN, paying for themselves across gates;
-  4. in-function lifecycles in files on the PAIRED allowlist, where
+  3. in-function lifecycles in files on the PAIRED allowlist, where
      every raw persist has a matching unpersist in the same file
      (counted; a new unpaired persist in those files still fails).
 
 Anything else is a violation: route it through
-`graft.operators.StagingCaches.cache(...)` instead.
+`graft.operators.OperatorCaches.cache(...)` (per pass) or
+`graft.queries.SessionMemo.frame(...)` (shared across gates) instead.
 
 Usage: python3 tools/lint_persists.py   (exit 1 on any violation)
 """
@@ -28,14 +28,13 @@ import os, re, sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SRC = os.path.join(REPO, "src", "main", "scala")
 
-ADAPTER = "operators/TrackedCaches.scala"
+ADAPTERS = {"operators/OperatorCaches.scala", "queries/SessionMemo.scala"}
 # files allowed raw DF persists because every one is paired with an
 # explicit unpersist / finally-unpersist in the same function
 PAIRED = {"operators/ConnectedComponents.scala"}
 
 RDD_RECV = re.compile(r"\b(\w*[rR]dd)\s*\.persist\(")
 PERSIST = re.compile(r"\.persist\(")
-MEMO = re.compile(r"getOrElseUpdate\(")
 
 
 def lint():
@@ -52,14 +51,9 @@ def lint():
             for i, ln in enumerate(lines):
                 if not PERSIST.search(ln):
                     continue
-                if rel == ADAPTER:
+                if rel in ADAPTERS:
                     continue
                 if RDD_RECV.search(ln):
-                    continue
-                # memo regime: getOrElseUpdate on the same or the
-                # preceding three lines (the fixture-cache idiom)
-                ctx = "\n".join(lines[max(0, i - 3):i + 1])
-                if MEMO.search(ctx):
                     continue
                 raw_hits.append(i + 1)
             if not raw_hits:
@@ -77,7 +71,7 @@ def lint():
                 violations.append(
                     (rel, ln_no,
                      "raw .persist outside every audited regime — use "
-                     "graft.operators.StagingCaches.cache(...) so "
+                     "graft.operators.OperatorCaches.cache(...) so "
                      "OperatorCaches.releaseAll can unpin it"))
     return violations
 
