@@ -16,6 +16,12 @@ object Sessions {
     * 1024 dirs. */
   private val ListingThreshold = 1024
 
+  /** Generated-class cache: one warehouse load compiles about 330
+    * whole-stage classes, and Spark's default cache of 100 evicts them
+    * before the same load, or the next one, asks for them again. Sized
+    * well above one load's classes, so a repeated load compiles none. */
+  private val CodegenCacheEntries = 5000
+
   // AQE stays at Spark's defaults. Bytes-based coalescing
   // (coalescePartitions.parallelismFirst=false + a 64m advisory) was
   // A/B-tested and rejected (OPTIMIZATION_r19.md): this catalog's
@@ -35,6 +41,8 @@ object Sessions {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
         ListingThreshold.toString)
+      .config("spark.sql.codegen.cache.maxEntries",
+        CodegenCacheEntries.toString)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
       .getOrCreate()

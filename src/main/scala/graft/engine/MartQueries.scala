@@ -129,43 +129,50 @@ object MartQueries {
   }
 
   /** mart/rating_slide.sql — leaderboard of the latest load full-outer-joined
-    * against the leaderboard of the two latest loads. The reference's
-    * single-partition `row_number() over (order by ...)` is replaced by the
-    * distributed GlobalRank operator.
+    * on `movie_id` against the leaderboard of the two latest loads. The
+    * reference's single-partition `row_number() over (order by ...)` is
+    * replaced by the distributed GlobalRank operator.
+    *
+    * The two-load leaderboard feeds only its keys to the join, so one rank
+    * serves: one aggregation over the two latest loads carries the latest
+    * load's average (`avg FILTER latest`) and an in-latest flag, and one
+    * rank orders flagged movies first — their places are the latest
+    * leaderboard's. A movie only in the previous load keeps its
+    * `movie_id` and nulls elsewhere. The join's multiplicity is kept too:
+    * a latest movie appears once per hub row of its id (more than one
+    * only when two (name, duration) pairs share an md5 key), which the
+    * broadcast join on the hub's ids reproduces. No trailing sort: the
+    * mart's row order is not part of its contract, and readers that need
+    * one sort (the q_vault_rating_slide gate does).
     */
   def ratingSlide(movieHub: DataFrame, movieInfoSat: DataFrame): DataFrame = {
     import graft.operators.GlobalRank
 
     val loads = movieInfoSat.select(col(Scd2.ValidFrom)).distinct()
-    val latestTwo = loads
       .orderBy(desc(Scd2.ValidFrom)).limit(2)
-
-    def leaderboard(sat: DataFrame, rankCol: String): DataFrame = {
-      val agg = broadcast(movieHub).join(sat, Seq("movie_id"))
-        .groupBy(col("movie_nm"), col("movie_id"),
-          col("movie_duration").cast(IntegerType).as("movie_duration"))
-        .agg(avg(col("rating").cast(DoubleType)).as("rating"))
-      // PG `ORDER BY x DESC` ranks NULLS FIRST (mart/rating_slide.sql:7) —
-      // Spark desc() is nulls-last, so make the PG ordering explicit.
-      GlobalRank.withRowNumber(agg, rankCol,
-        Seq(desc_nulls_first("rating"), desc_nulls_first("movie_duration"),
-          asc("movie_id")))
-    }
-
-    val latest = movieInfoSat.join(
-      broadcast(latestTwo.limit(1)), Seq(Scd2.ValidFrom), "left_semi")
-    val latestPlusPrev = movieInfoSat.join(
-      broadcast(latestTwo), Seq(Scd2.ValidFrom), "left_semi")
-
-    val t1 = leaderboard(latest, "latest_place").alias("t1")
-    val t2 = leaderboard(latestPlusPrev, "pre_latest_place").alias("t2")
-    t1.join(t2, col("t1.movie_id") === col("t2.movie_id"), "full_outer")
-      .select(
-        coalesce(col("t1.movie_id"), col("t2.movie_id")).as("movie_id"),
-        col("t1.movie_nm").as("movie_name"),
-        col("t1.movie_duration").as("duration"),
-        col("t1.rating").as("current_rating"),
-        col("t1.latest_place").as("current_place"))
-      .orderBy(asc_nulls_last("current_place"))
+      .agg(max(Scd2.ValidFrom).as("__latest"), min(Scd2.ValidFrom).as("__prev"))
+    val latest = col(Scd2.ValidFrom) === col("__latest")
+    val perMovie = movieInfoSat.crossJoin(broadcast(loads))
+      .where(col(Scd2.ValidFrom) >= col("__prev"))
+      .groupBy("movie_id")
+      .agg(avg(when(latest, col("rating").cast(DoubleType))).as("rating"),
+        max(latest).as("__in_latest"))
+    val board = broadcast(movieHub).join(perMovie, Seq("movie_id"))
+      .select(col("movie_nm"), col("movie_id"),
+        col("movie_duration").cast(IntegerType).as("movie_duration"),
+        col("rating"), col("__in_latest"))
+    // PG `ORDER BY x DESC` ranks NULLS FIRST (mart/rating_slide.sql:7) —
+    // Spark desc() is nulls-last, so make the PG ordering explicit.
+    val ranked = GlobalRank.withRowNumber(board, "__place",
+      Seq(desc("__in_latest"), desc_nulls_first("rating"),
+        desc_nulls_first("movie_duration"), asc("movie_id")))
+    val inLatest = col("__in_latest")
+    ranked.join(broadcast(movieHub.select(col("movie_id").as("__id"))),
+        col("movie_id") === col("__id") && inLatest, "left_outer")
+      .select(col("movie_id"),
+        when(inLatest, col("movie_nm")).as("movie_name"),
+        when(inLatest, col("movie_duration")).as("duration"),
+        when(inLatest, col("rating")).as("current_rating"),
+        when(inLatest, col("__place")).as("current_place"))
   }
 }

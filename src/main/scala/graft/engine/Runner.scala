@@ -8,6 +8,8 @@ import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable
 
+import graft.operators.OperatorCaches
+
 /** Metadata-driven warehouse runner — the Spark re-expression of the
   * reference's `meta.etl_tab_script` / `meta.etl_col` registries plus the
   * `stg_checker` dispatch loop (ddl.py:54-65,463-558;
@@ -46,6 +48,22 @@ object Runner {
       inputs: Seq[String],          // warehouse tables `transform` reads
       transform: Warehouse => DataFrame)
 
+  /** Raised by a load once one of its specs has failed. A spec still
+    * running checks it before it materializes a table and again before it
+    * publishes one (the swap into place, or the in-memory update), and
+    * stops there: a spec caught between two jobs changes no table. The
+    * load rethrows the first failure, not this stop. */
+  final class Abort {
+    @volatile private var raised = false
+    private[engine] def raise(): Unit = raised = true
+    def check(): Unit = if (raised)
+      throw new IllegalStateException("another spec of this load failed")
+  }
+  object Abort {
+    /** For writes outside a load: never raised. */
+    val Never: Abort = new Abort
+  }
+
   /** The warehouse: named tables, in memory or parquet-backed. Plays the
     * role of the stg/data_mart schemas. Safe for concurrent loads: specs
     * running side by side read and replace entries of the one table map. */
@@ -61,7 +79,8 @@ object Runner {
     private def update(name: String, df: DataFrame): Unit =
       tables.synchronized(tables(name) = df)
 
-    def put(name: String, df: DataFrame): Unit = persistDir match {
+    def put(name: String, df: DataFrame,
+            abort: Abort = Abort.Never): Unit = persistDir match {
       case Some(dir) =>
         // Pipeline breaker, like the reference's CREATE TEMP TABLE temp_
         // (ddl.py:559-570): materialize so both merge legs and downstream
@@ -75,7 +94,9 @@ object Runner {
         val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
         val tmp = new org.apache.hadoop.fs.Path(s"$dir/.$name.staging")
         val dst = new org.apache.hadoop.fs.Path(s"$dir/$name")
+        abort.check()
         df.write.mode("overwrite").parquet(tmp.toString)
+        abort.check()
         // swapInto checks both rename return values — FileSystem.rename
         // reports most failures by returning false, and an unchecked false
         // here would either delete the only surviving copy or silently
@@ -86,31 +107,52 @@ object Runner {
         spark.catalog.refreshByPath(dst.toString)
         // read back with the schema just written: no footer-inference job
         update(name, spark.read.schema(df.schema).parquet(dst.toString))
-      case None =>
-        update(name, df.localCheckpoint(eager = true))
+      case None => updateInMemory(name, df, abort)
+    }
+
+    private def updateInMemory(name: String, df: DataFrame,
+                               abort: Abort): Unit = {
+      abort.check()
+      val materialized = df.localCheckpoint(eager = true)
+      abort.check()
+      update(name, materialized)
     }
 
     /** SCD2 leg of `put`: history partitioned by the `valid_to` DATE, so
       * closed history freezes into immutable partitions and an incremental
-      * load rewrites ONLY the partitions the merge can touch — the open
-      * sentinel partition (`valid_to_date=9999-12-31`, rows still open or
-      * newly inserted) and the loadTs close-date partition (rows the run
-      * just closed, plus any closed earlier the same day — dynamic
-      * partition overwrite replaces whole partitions, so the slice keeps
-      * them). At 100 TB this turns the SCD2 write from O(table) into
+      * load rewrites ONLY `affectedDates`, the partitions the merge can
+      * touch — the open sentinel partition (`valid_to_date=9999-12-31`,
+      * rows still open or newly inserted) and the loadTs close-date
+      * partition (rows the run just closed, plus any closed earlier the
+      * same day — each affected partition is replaced whole, so the slice
+      * keeps them). At 100 TB this turns the SCD2 write from O(table) into
       * O(open + changed): years of closed history are never rewritten —
       * PipelineSpec asserts the frozen partition's files are untouched
-      * across a later load. Partition-grain commit atomicity (per-partition
-      * swap by Spark's dynamic overwrite) replaces `put`'s whole-dir swap;
-      * a lakehouse table format upgrades it to table-grain unchanged.
+      * across a later load.
+      *
+      * The incremental slice is written once, to `.<name>.staging`; each
+      * affected partition is then swapped in over its live copy
+      * ([[graft.sources.Formats.swapInto]]), and an affected partition
+      * the slice left empty is deleted — an open partition whose every row
+      * this load closed must not stay behind. Each swap is atomic-enough
+      * on its own; the table is not. A crash between two swaps leaves a
+      * mix of old and new partitions, so the open partition swaps last:
+      * the table then reads as the previous load's, with the rows this
+      * load closed showing twice (closed, and still open in the old open
+      * partition) and its new versions not yet in — no earlier row is
+      * lost. A restarted process, whose fresh Warehouse holds no merge
+      * target, rewrites the table in full. A lakehouse table format
+      * upgrades this to a table-grain commit unchanged.
       */
-    def putScd2(name: String, df: DataFrame,
-                affectedDates: Seq[String]): Unit = persistDir match {
+    def putScd2(name: String, df: DataFrame, affectedDates: Seq[String],
+                abort: Abort = Abort.Never): Unit = persistDir match {
       case Some(dir) =>
+        import org.apache.hadoop.fs.Path
         import org.apache.spark.sql.functions.{col, lit, to_date}
-        val conf = spark.sparkContext.hadoopConfiguration
-        val dst = new org.apache.hadoop.fs.Path(s"$dir/$name")
-        val fs = dst.getFileSystem(conf)
+        import graft.sources.Formats.swapInto
+        val dst = new Path(s"$dir/$name")
+        val tmp = new Path(s"$dir/.$name.staging")
+        val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val withPart = df.withColumn("valid_to_date",
           to_date(col(Scd2.ValidTo)))
         // Incremental ONLY when THIS process holds the merge target: the
@@ -119,33 +161,31 @@ object Runner {
         // process wrote), the merge treated the snapshot as all-new and a
         // partition-scoped write would leave the previous process's closed
         // partitions on disk as orphaned history. Full rewrite heals that.
-        if (get(name).isEmpty || !fs.exists(dst)) {
-          val tmp = new org.apache.hadoop.fs.Path(s"$dir/.$name.staging")
-          withPart.write.partitionBy("valid_to_date")
-            .mode("overwrite").parquet(tmp.toString)
-          graft.sources.Formats.swapInto(fs, tmp, dst)
-        } else {
-          // localCheckpoint breaks lineage: the slice derives from a scan
-          // of dst, and Spark (rightly) refuses to overwrite a path its
-          // write plan still reads. Eager materialization is O(changed
-          // partitions), not O(table) — the frozen history is filtered out
-          // BEFORE the checkpoint.
-          val slice = withPart.where(affectedDates
-              .map(d => col("valid_to_date") === to_date(lit(d)))
-              .reduce(_ || _))
-            .localCheckpoint(eager = true)
-          slice.write.partitionBy("valid_to_date")
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(dst.toString)
-        }
+        val incremental = get(name).nonEmpty && fs.exists(dst)
+        // the slice derives from a scan of dst; it is written beside it,
+        // so no write plan reads the path it replaces
+        val out = if (incremental) withPart.where(col("valid_to_date")
+          .isin(affectedDates.map(d => to_date(lit(d))): _*)) else withPart
+        abort.check()
+        out.write.partitionBy("valid_to_date")
+          .mode("overwrite").parquet(tmp.toString)
+        abort.check()
+        if (incremental) {
+          // the open partition last: see the crash note above
+          affectedDates.distinct.sortBy(_ == Scd2.OpenEndDate).foreach { d =>
+            val staged = new Path(tmp, s"valid_to_date=$d")
+            val live = new Path(dst, s"valid_to_date=$d")
+            if (fs.exists(staged)) swapInto(fs, staged, live)
+            else fs.delete(live, true)
+          }
+          fs.delete(tmp, true)
+        } else swapInto(fs, tmp, dst)
         spark.catalog.refreshByPath(dst.toString)
         // the written schema also reads a table whose rows all fell away:
         // a zero-row partitioned write leaves no part file to infer from
         update(name, spark.read.schema(withPart.schema)
           .parquet(dst.toString).drop("valid_to_date"))
-      case None =>
-        update(name, df.localCheckpoint(eager = true))
+      case None => updateInMemory(name, df, abort)
     }
   }
 
@@ -207,10 +247,15 @@ object Runner {
     *
     * On the first failure no further spec starts. The Spark jobs running
     * at that moment are cancelled through a job tag of this load
-    * (callers' job groups are left alone); a sibling that is between jobs
-    * runs on to its end. Once every started spec has stopped, the
-    * original exception is rethrown. Tables the load did not reach keep
-    * their previous version.
+    * (callers' job groups are left alone), and the load's [[Abort]] is
+    * raised, so a sibling that is between jobs stops before its next table
+    * write or swap. Once every started spec has stopped, the original
+    * exception is rethrown. Tables the load did not reach keep their
+    * previous version.
+    *
+    * Each spec releases the operator pins it took
+    * ([[graft.operators.OperatorCaches.releasing]]) once its table is
+    * written; pins the caller took before the load survive it.
     *
     * @param loadTs frozen once per run — PG current_timestamp is
     *               transaction-stable (SURVEY.md H49)
@@ -239,6 +284,7 @@ object Runner {
                        deps: Seq[Set[Int]], loadTs: String): Unit = {
     val sc = wh.spark.sparkContext
     val tag = s"graft-load-${java.util.UUID.randomUUID()}"
+    val abort = new Abort
     val finished =
       new java.util.concurrent.LinkedBlockingQueue[(Int, Option[Throwable])]
     val threads = mutable.ArrayBuffer.empty[Thread]
@@ -251,7 +297,7 @@ object Runner {
         waiting = blocked
         ready.foreach { i =>
           val t = new Thread(() => finished.put(i -> (
-            try { sc.addJobTag(tag); loadSpec(wh, specs(i), loadTs); None }
+            try { sc.addJobTag(tag); loadSpec(wh, specs(i), loadTs, abort); None }
             catch { case e: Throwable => Some(e) })),
             s"graft-load-${specs(i).name}")
           t.setDaemon(true)
@@ -263,14 +309,17 @@ object Runner {
         failure = err
       }
     } finally {
-      if (failure.nonEmpty || done.size < specs.size)
+      if (failure.nonEmpty || done.size < specs.size) {
+        abort.raise()
         sc.cancelJobsWithTag(tag)
+      }
       threads.foreach(_.join())
     }
     failure.foreach(throw _)
   }
 
-  private def loadSpec(wh: Warehouse, spec: TableSpec, loadTs: String): Unit = {
+  private def loadSpec(wh: Warehouse, spec: TableSpec, loadTs: String,
+                       abort: Abort): Unit = OperatorCaches.releasing {
     val snapshot = Scd2.reconcile(spec.transform(wh), spec.schema)
     spec.mode match {
       case Scd2Merge =>
@@ -282,13 +331,13 @@ object Runner {
         // partition of rows it closes at loadTs — everything else is
         // frozen history (see Warehouse.putScd2)
         wh.putScd2(spec.name, merged,
-          Seq(loadTs.take(10), "9999-12-31"))
+          Seq(loadTs.take(10), Scd2.OpenEndDate), abort)
       case InsertOnlyNew =>
         val merged = wh.get(spec.name) match {
           case Some(target) => Scd2.insertOnlyNew(target, snapshot, spec.pk)
           case None => snapshot
         }
-        wh.put(spec.name, merged)
+        wh.put(spec.name, merged, abort)
     }
   }
 

@@ -12,7 +12,8 @@ import org.apache.spark.sql.types._
   * deterministic table rebuild from exactly one shuffle:
   *
   *   history (closed rows)                              — untouched, unioned back
-  *   open ⟗ snapshot (full outer on pk)                 — one join classifies every row:
+  *   open ⟗ snapshot (full outer on pk)                 — one join classifies every row,
+  *   and each joined row yields one or two versions:
   *     pk only in open              → close out (valid_to := loadTs)   [ddl.py:537-542]
   *     both sides, attrs changed    → close out + insert new version   [ddl.py:537-549]
   *     both sides, attrs unchanged  → keep open row as-is
@@ -22,10 +23,12 @@ import org.apache.spark.sql.types._
   *  - `history` never joins — it is a pure union leg, so cost is O(changed),
   *    not O(table). The storage side delivers the same bound:
   *    [[Runner.Warehouse.putScd2]] partitions history by the `valid_to`
-  *    date and dynamic-overwrites only the open + close-date partitions
+  *    date and swaps in only the open + close-date partitions
   *    (PipelineSpec asserts closed partitions are file-level untouched).
-  *  - The single full-outer join shuffles on pk; AQE skew-join splits hot
-  *    keys. Both legs are pre-projected to pk+attrs (column pruning).
+  *  - The single full-outer join shuffles on pk, and the plan refers to it
+  *    once: each joined row explodes into its one or two versions, so the
+  *    join runs once per merge. AQE skew-join splits hot keys. Both legs
+  *    are pre-projected to pk+attrs (column pruning).
   *
   * Null semantics of the change predicate (SURVEY.md J59): the reference
   * builds `l.c1 != t.c1 or ...` which is null-hostile — a NULL on either side
@@ -34,8 +37,10 @@ import org.apache.spark.sql.types._
   */
 object Scd2 {
 
-  /** Open-row sentinel (ddl.py:527). */
-  val OpenEnd: Column = lit("9999-12-31 00:00:00").cast(TimestampType)
+  /** Open-row sentinel (ddl.py:527), and its date: the name of the
+    * partition that holds every open row of a persisted SCD2 table. */
+  val OpenEndDate = "9999-12-31"
+  val OpenEnd: Column = lit(s"$OpenEndDate 00:00:00").cast(TimestampType)
 
   val ValidFrom = "valid_from"
   val ValidTo = "valid_to"
@@ -57,6 +62,12 @@ object Scd2 {
     * sharing a pk would multiply through the full-outer join (as they
     * would corrupt the reference's UPDATE/INSERT legs); exact duplicate
     * rows are dropped defensively below.
+    *
+    * Output: `history` unioned with one pass over the join. A row with an
+    * open side yields that version, kept open when the snapshot carries
+    * it unchanged and closed at `loadTs` otherwise; a row with a snapshot
+    * side that is new or changed also yields the snapshot's version, open
+    * from `loadTs`.
     *
     * @param target   current table incl. validity columns (may be empty)
     * @param snapshot freshly computed rows, pk + attrs only (no validity)
@@ -86,24 +97,20 @@ object Scd2 {
       else coalesce(attrs.map(a => col(s"o.$a") =!= col(s"s.$a"))
         .reduce(_ || _), lit(false))
 
-    val oCols = outCols.map(c => col(s"o.$c").as(c))
-    val sCols = outCols.map(c => col(s"s.$c").as(c))
+    val closedAtLoad = lit(loadTs).cast(TimestampType)
+    val oVersion = struct(outCols.map {
+      case ValidTo => when(inSnap && !changed, col(s"o.$ValidTo"))
+        .otherwise(closedAtLoad).as(ValidTo)
+      case c => col(s"o.$c").as(c)
+    }: _*)
+    val sVersion = struct(outCols.map(c => col(s"s.$c").as(c)): _*)
+    val isNew = inSnap && (!inOpen || changed)
+    val versions = joined
+      .select(explode(filter(array(when(inOpen, oVersion), when(isNew, sVersion)),
+        _.isNotNull)).as("v"))
+      .select("v.*")
 
-    val closedOut = joined
-      .filter(inOpen && (!inSnap || changed))
-      .select(oCols: _*)
-      .withColumn(ValidTo, lit(loadTs).cast(TimestampType))
-    val keptOpen = joined
-      .filter(inOpen && inSnap && !changed)
-      .select(oCols: _*)
-    val inserted = joined
-      .filter(inSnap && (!inOpen || changed))
-      .select(sCols: _*)
-
-    history.select(outCols.map(col): _*)
-      .unionByName(closedOut)
-      .unionByName(keptOpen)
-      .unionByName(inserted)
+    history.select(outCols.map(col): _*).unionByName(versions)
   }
 
   /** Insert-only-new branch for hubs and marts (ddl.py:551-556): append

@@ -37,11 +37,12 @@ private[operators] object SessionLineage {
   * frames a pipeline re-reads, pre-mutation search snapshots — goes
   * through [[cache]], [[checkpointed]] or [[checkpointedLazy]], which
   * register it under the ROOT session, and [[releaseAll]] unpins all of
-  * it. These intermediates back lazily returned results, so they cannot
-  * unpersist eagerly; long-lived sessions running many independent
-  * passes — the driver's Verify/Bench sessions run 300+ gates back to
-  * back — call [[releaseAll]] after consuming each pass, or the
-  * CacheManager's pinned blocks crowd the executors' storage memory
+  * it — or, inside a [[releasing]] block, under that block, which unpins
+  * it when the block ends. These intermediates back lazily returned
+  * results, so they cannot unpersist eagerly; long-lived sessions running
+  * many independent passes — the driver's Verify/Bench sessions run 300+
+  * gates back to back — call [[releaseAll]] after consuming each pass, or
+  * the CacheManager's pinned blocks crowd the executors' storage memory
   * (MEMORY_AND_DISK degrades to disk churn under that pressure, read as
   * random straggler queries). Cached frames recompute if re-used after
   * release; checkpointed snapshots do NOT — they are pass-scoped.
@@ -52,24 +53,61 @@ object OperatorCaches {
 
   private type Queue[A] = java.util.concurrent.ConcurrentLinkedQueue[A]
 
+  /** One set of pins: persisted frames, and checkpoint RDDs held by
+    * WeakReference — the set must not be the thing keeping a checkpoint
+    * RDD alive: a caller that never releases (an external library user)
+    * drops their result frame, the RDD becomes unreachable, and
+    * ContextCleaner reclaims its blocks on GC exactly as if the tracking
+    * were absent. [[release]] unpins whatever is still alive, eagerly. */
+  private final class Pins {
+    val frames = new Queue[DataFrame]()
+    val rdds =
+      new Queue[java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]]]()
+
+    def release(): Unit = {
+      var df = frames.poll()
+      while (df != null) { df.unpersist(blocking = false); df = frames.poll() }
+      var ref = rdds.poll()
+      while (ref != null) {
+        val rdd = ref.get()
+        if (rdd != null) rdd.unpersist(blocking = false)
+        ref = rdds.poll()
+      }
+    }
+  }
+
   // keyed by ROOT SparkSession (SessionLineage): gates may checkpoint
   // under a scoped child session (s.newSession() for a low-fan-out
   // SQLConf, registered via adoptSession), and releaseAll on the parent
   // must still reach those pins — but two INDEPENDENT root sessions on
   // one SparkContext must never release each other's in-flight
   // non-recomputable snapshots.
-  private val persisted = scala.collection.concurrent.TrieMap
-    .empty[SparkSession, Queue[DataFrame]]
+  private val sessions = scala.collection.concurrent.TrieMap
+    .empty[SparkSession, Pins]
 
-  // Entries are WeakReferences: the queue must not be the thing keeping
-  // a checkpoint RDD alive — a caller that never releases (an external
-  // library user) drops their result frame, the RDD becomes
-  // unreachable, and ContextCleaner reclaims its blocks on GC exactly
-  // as if the tracking were absent. releaseAll unpins whatever is still
-  // alive, eagerly.
-  private val checkpoints = scala.collection.concurrent.TrieMap
-    .empty[SparkSession,
-      Queue[java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]]]]
+  // the pins of the [[releasing]] block running on this thread, if any
+  private val scope = new ThreadLocal[Pins]
+
+  private def pinsOf(s: SparkSession): Pins = Option(scope.get).getOrElse(
+    sessions.getOrElseUpdate(SessionLineage.rootOf(s), new Pins))
+
+  /** Runs `body` and then unpins exactly what it pinned on this thread:
+    * its [[cache]], [[checkpointed]] and [[checkpointedLazy]] calls
+    * register with this block, not with the session, so pins taken
+    * earlier by the caller — or concurrently by other threads — survive
+    * it, and [[releaseAll]] does not reach into it. For work whose
+    * results are fully materialized elsewhere once `body` returns (a
+    * warehouse load writes each table before its block ends). */
+  def releasing[A](body: => A): A = {
+    val outer = scope.get
+    val pins = new Pins
+    scope.set(pins)
+    try body
+    finally {
+      scope.set(outer)
+      pins.release()
+    }
+  }
 
   /** Register a `newSession()` CHILD as releasing with `root`: caches
     * and checkpoints the child's queries pin are unpinned by
@@ -86,8 +124,7 @@ object OperatorCaches {
     * never release it; release-then-reuse recomputes. */
   def cache(df: DataFrame): DataFrame = {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-    persisted.getOrElseUpdate(SessionLineage.rootOf(df.sparkSession),
-      new Queue[DataFrame]()).add(p)
+    pinsOf(df.sparkSession).frames.add(p)
     p
   }
 
@@ -124,9 +161,7 @@ object OperatorCaches {
         "localCheckpoint no longer yields a LogicalRDD plan — the " +
           s"tracked-checkpoint release seam cannot unpin it: $other")
     }
-    checkpoints.getOrElseUpdate(SessionLineage.rootOf(cp.sparkSession),
-      new Queue[java.lang.ref.WeakReference[org.apache.spark.rdd.RDD[_]]]())
-      .add(new java.lang.ref.WeakReference(rdd))
+    pinsOf(cp.sparkSession).rdds.add(new java.lang.ref.WeakReference(rdd))
     cp
   }
 
@@ -134,19 +169,6 @@ object OperatorCaches {
     * session — a scoped child's pins release with the parent; an
     * independent sibling session's never do). Safe at any point AFTER a
     * pass's results are consumed. */
-  def releaseAll(s: SparkSession): Unit = {
-    val root = SessionLineage.rootOf(s)
-    persisted.remove(root).foreach { q =>
-      var df = q.poll()
-      while (df != null) { df.unpersist(blocking = false); df = q.poll() }
-    }
-    checkpoints.remove(root).foreach { q =>
-      var ref = q.poll()
-      while (ref != null) {
-        val rdd = ref.get()
-        if (rdd != null) rdd.unpersist(blocking = false)
-        ref = q.poll()
-      }
-    }
-  }
+  def releaseAll(s: SparkSession): Unit =
+    sessions.remove(SessionLineage.rootOf(s)).foreach(_.release())
 }

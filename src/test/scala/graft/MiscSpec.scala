@@ -1954,7 +1954,7 @@ class StreamingSpec extends SparkSpec {
 
 class VaultCacheSpec extends SparkSpec {
 
-  test("evictCaches releases every memoized vault frame") {
+  test("SessionMemo.evict releases every memoized vault frame") {
     import org.apache.spark.storage.StorageLevel
     import graft.queries.VaultQueries
     // populate both memo caches: the raw-actor derivation directly, and
@@ -1976,7 +1976,7 @@ class VaultCacheSpec extends SparkSpec {
 
 class SpansCacheSpec extends SparkSpec {
 
-  test("TextQueries.evictCaches releases the shared spans frame") {
+  test("SessionMemo.evict releases the shared spans frame") {
     import org.apache.spark.storage.StorageLevel
     import graft.queries.SessionMemo
     // run one of the two sharing gates to populate the memo, then find
@@ -2052,10 +2052,11 @@ class CheckpointHygieneSpec extends org.scalatest.funsuite.AnyFunSuite {
       "VectorQueries.scala" -> 5,
       // the registry itself (OperatorCaches.checkpointed's own call)
       "OperatorCaches.scala" -> 1,
-      // pipeline-scoped temp-table materialization: pins live exactly
-      // as long as the metadata pipeline run that owns the session,
-      // bounded by the pipeline's table count, GC-recovered after
-      "Runner.scala" -> 3,
+      // in-memory warehouse tables (put and putScd2 without a persist
+      // dir share one materialization): pins live exactly as long as the
+      // warehouse that holds them, bounded by the pipeline's table count,
+      // GC-recovered after
+      "Runner.scala" -> 1,
       // per-merge-round lineage truncation, up to nMerges (≤10k)
       // vocab-sized rounds per call: tracking would hold strong refs
       // that BLOCK ContextCleaner GC of superseded rounds mid-call;
@@ -2077,7 +2078,7 @@ class CheckpointHygieneSpec extends org.scalatest.funsuite.AnyFunSuite {
         "exemption WITH a justification comment above")
   }
 
-  test("every gate that snapshots via StagingCaches.checkpointed is in " +
+  test("every gate that snapshots via OperatorCaches.checkpointed is in " +
       "the leak-contract staged list") {
     val gateRe = """Q\("([^"]+)"""".r
     val usingSeam = sources("src/main/scala/graft/queries").flatMap { f =>

@@ -805,4 +805,51 @@ class PlanShapeSpec extends SparkSpec {
     assert(!pushed.contains("In(doc_id"),
       s"candidate ids leaked back into a pushed literal list: $pushed")
   }
+
+  test("the SCD2 merge plans its full outer join once") {
+    import graft.engine.Scd2
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val target = Scd2.stamp(spark.range(0, 100).selectExpr("id", "id % 7 AS v"),
+      "2024-01-01 00:00:00")
+    val merged = Scd2.merge(target,
+      spark.range(50, 150).selectExpr("id", "id % 5 AS v"), Seq("id"),
+      Seq("v"), "2024-02-01 00:00:00")
+    val joins = merged.queryExecution.optimizedPlan.collect { case j: Join => j }
+    assert(joins.size == 1,
+      s"expected one join, planned ${joins.size}:\n${physical(merged)}")
+  }
+
+  test("rating_slide ranks once: one range exchange in its plan") {
+    import graft.engine.MartQueries
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeExec}
+    import spark.implicits._
+    val hub = Seq(("m1", "A", 100), ("m2", "B", 90), ("m3", "C", 80))
+      .toDF("movie_id", "movie_nm", "movie_duration")
+    val sat = Seq(("m1", "7", "2024-01-01"), ("m2", "8", "2024-01-01"),
+        ("m1", "6", "2024-02-01"), ("m3", "9", "2024-02-01"))
+      .toDF("movie_id", "rating", "valid_from")
+      .withColumn("valid_from", col("valid_from").cast("timestamp"))
+    val slide = MartQueries.ratingSlide(hub, sat)
+    // every node, the rank's cached sorted frame and adaptive stages included
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case _ => p.children.flatMap(nodes)
+    })
+    // a range exchange, or the rank's repartitionByRange at width 1, which
+    // plans as a single-partition repartition
+    val ranges = nodes(slide.queryExecution.executedPlan).count {
+      case e: ShuffleExchangeExec =>
+        e.outputPartitioning.isInstanceOf[RangePartitioning] ||
+          e.shuffleOrigin == REPARTITION_BY_NUM
+      case _ => false
+    }
+    assert(ranges == 1,
+      s"expected one range exchange, found $ranges:\n${physical(slide)}")
+  }
 }

@@ -207,4 +207,48 @@ class LoadGraphSpec extends SparkSpec {
     }
     assert(schedulerThreads.isEmpty)
   }
+
+  test("a sibling held between jobs when a spec fails writes and swaps no table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_abort").toString
+    val wh = new Warehouse(spark, Some(dir))
+    val caller = Thread.currentThread()
+    val boom = new IllegalStateException("boom")
+    val ran = new ConcurrentLinkedQueue[String]()
+    val holding = new java.util.concurrent.CountDownLatch(2)
+    // true once runLoad has seen the failure and waits for the specs still
+    // running: it raises the load's abort before it joins them
+    def loadIsJoining: Boolean =
+      caller.getStackTrace.exists(f =>
+        f.getClassName == "java.lang.Thread" && f.getMethodName == "join")
+    def held(name: String, mode: Runner.LoadMode) =
+      TableSpec(name, StructType(Seq(StructField("id", LongType))),
+        pk = Seq("id"), attrs = Nil, mode, Nil, { w =>
+          w.spark.range(3).count() // a first job, then the hold
+          holding.countDown()
+          val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+          while (!loadIsJoining && System.nanoTime() < deadline)
+            Thread.sleep(10)
+          ran.add(name)
+          w.spark.range(3).toDF("id")
+        })
+    val specs = Seq(held("held_insert", InsertOnlyNew),
+      held("held_scd2", Runner.Scd2Merge),
+      TableSpec("fails", StructType(Seq(StructField("id", LongType))),
+        pk = Seq("id"), attrs = Nil, InsertOnlyNew, Nil, { _ =>
+          holding.await(60, java.util.concurrent.TimeUnit.SECONDS)
+          throw boom
+        }))
+    val thrown = intercept[IllegalStateException](
+      Runner.runLoad(wh, specs, loads.head._2))
+    assert(thrown eq boom, s"expected the spec's own exception, got $thrown")
+    assert(ran.asScala.toSet == Set("held_insert", "held_scd2"),
+      s"the held specs did not resume: ${ran.asScala}")
+    for (n <- Seq("held_insert", "held_scd2")) {
+      assert(wh.get(n).isEmpty, s"$n was published after the failure")
+      assert(!new java.io.File(s"$dir/$n").exists() &&
+        !new java.io.File(s"$dir/.$n.staging").exists(),
+        s"$n was written after the failure")
+    }
+    assert(schedulerThreads.isEmpty, s"live scheduler threads: $schedulerThreads")
+  }
 }

@@ -203,4 +203,53 @@ class PipelineSpec extends SparkSpec {
         s"${sp.name}: persisted run diverged from the in-memory run")
     }
   }
+
+  test("a persisted load that closes every open SCD2 row leaves no open partition behind") {
+    // load 2 has no actors, so it closes every open movie_emp_link and
+    // emp_movie_l_sat row: the open sentinel partition must go with them
+    val dir = java.nio.file.Files.createTempDirectory("graft_scd2_close_all")
+      .toString
+    val w = new Warehouse(spark, Some(dir))
+    val mem = new Warehouse(spark)
+    for (wh <- Seq(w, mem)) {
+      land(wh, "8.7")
+      Pipeline.runLoad(wh, "2024-01-01 00:00:00")
+      land(wh, "8.8", withActors = false)
+      Pipeline.runLoad(wh, "2024-02-01 00:00:00")
+    }
+    for (n <- Seq("movie_emp_link", "emp_movie_l_sat")) {
+      assert(w(n).count() > 0L, s"$n lost its closed history")
+      assert(w(n).where(col("valid_to") === Scd2.OpenEnd).count() == 0L,
+        s"$n kept open rows the load closed")
+      assert(!new java.io.File(s"$dir/$n/valid_to_date=${Scd2.OpenEndDate}")
+        .exists(), s"$n kept its emptied open partition")
+    }
+    Pipeline.allSpecs.foreach { sp =>
+      assert(rowsOf(w(sp.name)) == rowsOf(mem(sp.name)),
+        s"${sp.name}: persisted run diverged from the in-memory run")
+    }
+  }
+
+  test("a persisted load releases the operator pins it took, and only those") {
+    import graft.operators.OperatorCaches
+    import org.apache.spark.storage.StorageLevel
+    val dir = java.nio.file.Files.createTempDirectory("graft_load_pins")
+      .toString
+    val w = new Warehouse(spark, Some(dir))
+    land(w, "8.7")
+    // the caller's own pins, taken before the load
+    val cached = OperatorCaches.cache(spark.range(10).toDF("id"))
+    cached.count()
+    val snapshot = OperatorCaches.checkpointed(spark.range(5).toDF("id"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Pipeline.runLoad(w, "2024-01-01 00:00:00")
+    // rating_slide's rank pins its sorted frame during the load
+    val after = spark.sparkContext.getPersistentRDDs.keySet
+    assert(after == before, s"the load left pinned RDDs ${after -- before}")
+    assert(cached.storageLevel != StorageLevel.NONE,
+      "the load released the caller's cached frame")
+    assert(snapshot.count() == 5L, "the load released the caller's checkpoint")
+    OperatorCaches.releaseAll(spark)
+    assert(cached.storageLevel == StorageLevel.NONE)
+  }
 }
