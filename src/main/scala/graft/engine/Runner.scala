@@ -85,26 +85,15 @@ object Runner {
         // Pipeline breaker, like the reference's CREATE TEMP TABLE temp_
         // (ddl.py:559-570): materialize so both merge legs and downstream
         // consumers read a stable snapshot instead of recomputing lineage.
-        // Write staging, rename the live dir ASIDE, rename staging into
-        // place, then delete the old copy — a crash at any point leaves
-        // either the old or the new table intact, never neither (SURVEY
-        // §7.4 "atomic-enough"; a real lakehouse commit protocol —
-        // Delta/Iceberg — slots in here unchanged).
-        val conf = spark.sparkContext.hadoopConfiguration
-        val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-        val tmp = new org.apache.hadoop.fs.Path(s"$dir/.$name.staging")
+        // The crash-safe publish (SURVEY §7.4 "atomic-enough"; a real
+        // lakehouse commit protocol — Delta/Iceberg — slots in there
+        // unchanged) leaves either the old or the new table intact.
         val dst = new org.apache.hadoop.fs.Path(s"$dir/$name")
         abort.check()
-        df.write.mode("overwrite").parquet(tmp.toString)
-        abort.check()
-        // swapInto checks both rename return values — FileSystem.rename
-        // reports most failures by returning false, and an unchecked false
-        // here would either delete the only surviving copy or silently
-        // serve the stale table
-        graft.sources.Formats.swapInto(fs, tmp, dst)
-        // the swap happened behind Spark's back — drop the shared file
-        // listing cache for the path or a later scan serves dead files
-        spark.catalog.refreshByPath(dst.toString)
+        graft.sources.Formats.publish(spark, dst) { staged =>
+          df.write.mode("overwrite").parquet(staged.toString)
+          abort.check()
+        }
         // read back with the schema just written: no footer-inference job
         update(name, spark.read.schema(df.schema).parquet(dst.toString))
       case None => updateInMemory(name, df, abort)
@@ -130,15 +119,15 @@ object Runner {
       * PipelineSpec asserts the frozen partition's files are untouched
       * across a later load.
       *
-      * The incremental slice is written once, to `.<name>.staging`; each
-      * affected partition is then swapped in over its live copy
-      * ([[graft.sources.Formats.swapInto]]), and an affected partition
-      * the slice left empty is deleted — an open partition whose every row
-      * this load closed must not stay behind. Each swap is atomic-enough
-      * on its own; the table is not. A crash between two swaps leaves a
-      * mix of old and new partitions, so the open partition swaps last:
-      * the table then reads as the previous load's, with the rows this
-      * load closed showing twice (closed, and still open in the old open
+      * The incremental slice is published leaf by leaf
+      * ([[graft.sources.Formats.publishLeaves]]): each affected partition
+      * swaps in over its live copy, and an affected partition the slice
+      * left empty is deleted — an open partition whose every row this
+      * load closed must not stay behind. Each swap is atomic-enough on
+      * its own; the table is not. A crash between two swaps leaves a mix
+      * of old and new partitions, so the open partition swaps last: the
+      * table then reads as the previous load's, with the rows this load
+      * closed showing twice (closed, and still open in the old open
       * partition) and its new versions not yet in — no earlier row is
       * lost. A restarted process, whose fresh Warehouse holds no merge
       * target, rewrites the table in full. A lakehouse table format
@@ -149,9 +138,8 @@ object Runner {
       case Some(dir) =>
         import org.apache.hadoop.fs.Path
         import org.apache.spark.sql.functions.{col, lit, to_date}
-        import graft.sources.Formats.swapInto
+        import graft.sources.Formats
         val dst = new Path(s"$dir/$name")
-        val tmp = new Path(s"$dir/.$name.staging")
         val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val withPart = df.withColumn("valid_to_date",
           to_date(col(Scd2.ValidTo)))
@@ -166,21 +154,18 @@ object Runner {
         // so no write plan reads the path it replaces
         val out = if (incremental) withPart.where(col("valid_to_date")
           .isin(affectedDates.map(d => to_date(lit(d))): _*)) else withPart
-        abort.check()
-        out.write.partitionBy("valid_to_date")
-          .mode("overwrite").parquet(tmp.toString)
-        abort.check()
-        if (incremental) {
+        def write(staged: Path): Unit = {
+          abort.check()
+          out.write.partitionBy("valid_to_date")
+            .mode("overwrite").parquet(staged.toString)
+          abort.check()
+        }
+        if (incremental) Formats.publishLeaves(spark, dst) { staged =>
+          write(staged)
           // the open partition last: see the crash note above
-          affectedDates.distinct.sortBy(_ == Scd2.OpenEndDate).foreach { d =>
-            val staged = new Path(tmp, s"valid_to_date=$d")
-            val live = new Path(dst, s"valid_to_date=$d")
-            if (fs.exists(staged)) swapInto(fs, staged, live)
-            else fs.delete(live, true)
-          }
-          fs.delete(tmp, true)
-        } else swapInto(fs, tmp, dst)
-        spark.catalog.refreshByPath(dst.toString)
+          affectedDates.distinct.sortBy(_ == Scd2.OpenEndDate)
+            .map(d => s"valid_to_date=$d")
+        } else Formats.publish(spark, dst)(write)
         // the written schema also reads a table whose rows all fell away:
         // a zero-row partitioned write leaves no part file to infer from
         update(name, spark.read.schema(withPart.schema)

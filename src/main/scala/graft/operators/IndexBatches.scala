@@ -321,7 +321,8 @@ object IndexBatches {
       val keep =
         if (dedupKeys(d).nonEmpty) purged.dropDuplicates(dedupKeys(d))
         else purged
-      val tmp = new org.apache.hadoop.fs.Path(s"$dir/.${d.name}.compact")
+      val tmp = graft.sources.Formats.stage(fs,
+        new org.apache.hadoop.fs.Path(s"$dir/${d.name}"))
       writeDataset(d, keep, tmp.toString, Clustered(dir))
       // full-purge edge, detected from the staged dir itself (the
       // empty-keep decision no longer needs a pre-write count job): a
@@ -333,14 +334,7 @@ object IndexBatches {
         val n = st.getPath.getName
         !n.startsWith("_") && !n.startsWith(".")
       }
-      if (!hasData) d.partitionCol match {
-        case Some(part) =>
-          graft.sources.Formats.writeEmptyPartitioned(keep, part, fs, tmp)
-        case None =>
-          fs.delete(tmp, true)
-          keep.where(lit(false)).coalesce(1)
-            .write.mode("overwrite").parquet(tmp.toString)
-      }
+      if (!hasData) graft.sources.Formats.writeEmpty(keep, tmp, d.partitionCol)
       tmp
     }
     // with no live batch dirs (so a ledger), a partitioned dataset is
@@ -401,11 +395,8 @@ object IndexBatches {
     if (lastStaged)
       writeMarker(fs, tmpOf(last), mergedMarker(fs,
         new org.apache.hadoop.fs.Path(s"$dir/${last.name}"), live))
-    for (d <- staged) {
-      graft.sources.Formats.swapInto(fs, tmpOf(d),
-        new org.apache.hadoop.fs.Path(s"$dir/${d.name}"))
-      spark.catalog.refreshByPath(s"$dir/${d.name}")
-    }
+    graft.sources.Formats.commit(spark, staged.map(d =>
+      tmpOf(d) -> new org.apache.hadoop.fs.Path(s"$dir/${d.name}")))
     live.foreach(p =>
       fs.delete(new org.apache.hadoop.fs.Path(p), true))
     removed

@@ -128,12 +128,12 @@ trait PersistedIndex {
     * its index stores (`input`; live batch dirs must be compacted first,
     * their rows carry the old model's routing). Stages the model files
     * (first: a cell layout's fanout reads the staged centroids) and the
-    * `rewrite` datasets re-encoded under `<dir>/.recenter`, runs
-    * `beforeSwap` over the staged datasets while the old ones are still
-    * live, carries the compaction marker into the staged marker dataset,
-    * then swaps the datasets in layout order and the model files last,
-    * and refreshes. The ledger is untouched: pending deletes stay
-    * pending and keep masking.
+    * `rewrite` datasets re-encoded under one stage root beside `dir`,
+    * runs `beforeSwap` over the staged datasets while the old ones are
+    * still live, carries the compaction marker into the staged marker
+    * dataset, then commits the datasets in layout order and the model
+    * files last ([[graft.sources.Formats.commit]]: swap, refresh). The
+    * ledger is untouched: pending deletes stay pending and keep masking.
     *
     * Crash contract: the directories cannot swap atomically. A crash
     * between swaps leaves data encoded under a model the reader has not
@@ -145,8 +145,7 @@ trait PersistedIndex {
                            (beforeSwap: (String => DataFrame) => A): A = {
     val spark = input.sparkSession
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = s"$dir/.recenter"
-    fs.delete(new Path(stage), true)
+    val stage = graft.sources.Formats.stage(fs, new Path(dir)).toString
     val models = modelFiles(spark, model)
     models.foreach { case (n, df) => writeModel(df, s"$stage/$n") }
     val out = pinned { pin =>
@@ -160,11 +159,9 @@ trait PersistedIndex {
       IndexBatches.writeMarker(fs, new Path(s"$stage/$marker"),
         IndexBatches.readMarker(fs, new Path(s"$dir/$marker")))
     val swapped = datasets.filter(rewrite.contains) ++ models.map(_._1)
-    swapped.foreach(n =>
-      graft.sources.Formats.swapInto(fs, new Path(s"$stage/$n"),
-        new Path(s"$dir/$n")))
+    graft.sources.Formats.commit(spark,
+      swapped.map(n => new Path(s"$stage/$n") -> new Path(s"$dir/$n")))
     fs.delete(new Path(stage), true)
-    swapped.foreach(n => spark.catalog.refreshByPath(s"$dir/$n"))
     out
   }
 

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *      tombstoned ids themselves) and writes them to a staging dir in
   *      the dataset's own layout;
   *   3. each affected partition LEAF swaps individually
-  *      ([[graft.sources.Formats.swapInto]] per leaf — rename-aside,
+  *      ([[graft.sources.Formats.publishLeaves]] — rename-aside,
   *      rename-in, drop); a partition whose every row was tombstoned
   *      has no staged leaf and is deleted outright. Untouched
   *      partitions' files are never opened, never moved.
@@ -42,13 +42,11 @@ import org.apache.spark.sql.functions._
   * A fully-purged dataset (no partition leaf survives) is left with one
   * zero-row schema-carrying file inside a literal `part=0/` leaf — the
   * same readable-AND-appendable empty layout the full-purge rewrite
-  * uses ([[graft.sources.Formats.writeEmptyPartitioned]]). That empty
-  * leaf is staged BEFORE the first live leaf is removed, so at every
-  * instant (including after a crash at any point) at least one
+  * uses ([[graft.sources.Formats.writeEmpty]]). That empty leaf is
+  * staged and published FIRST, before any live leaf is removed, so at
+  * every instant (including after a crash at any point) at least one
   * schema-carrying leaf exists — reads and the next vacuum never hit a
-  * schema-inference failure. Leaf rename-asides are dot-prefixed
-  * (see [[graft.sources.Formats.swapInto]]) so partition discovery
-  * never parses an in-flight or crashed swap's aside directory.
+  * schema-inference failure.
   */
 object SelectiveVacuum {
 
@@ -62,7 +60,6 @@ object SelectiveVacuum {
             slices: Int): Long = {
     val fs = dsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val base = spark.read.parquet(dsPath.toString)
-    val schema = base.schema
     // one column-pruned scan serves the affected-partition list AND the
     // removed count (per-partition counts, bounded by the fanout)
     val perPart = base.select(col(part), col(idCol))
@@ -71,80 +68,35 @@ object SelectiveVacuum {
     if (perPart.isEmpty) return 0L
     val affected = perPart.map(_.get(0)).toSeq
     val removed = perPart.map(_.getLong(1)).sum
-    val tmp = new org.apache.hadoop.fs.Path(
-      dsPath.getParent, s".${dsPath.getName}.vacuum")
-    fs.delete(tmp, true)
-    base.where(col(part).isin(affected: _*))
-      .join(ts, Seq(idCol), "left_anti")
-      .repartition(math.max(1, affected.size * slices), col(part),
-        pmod(hash(col(idCol)), lit(slices)))
-      .write.mode("overwrite").partitionBy(part).parquet(tmp.toString)
-    // full-purge crash safety: if this pass deletes EVERY live leaf and
-    // stages none back (all rows tombstoned), a crash after the last
-    // delete but before the empty-leaf restore would leave a dataset
-    // with only root metadata — schema inference then fails for readers
-    // AND for the next vacuum, so it never converges. Stage the
-    // zero-row schema-carrying `part=0` leaf BEFORE any leaf is
-    // removed: at every instant at least one schema-carrying leaf
-    // exists on disk.
-    def leafName(v: Any) = s"$part=$v"
-    val stagedLeaves =
-      if (fs.exists(tmp))
-        fs.listStatus(tmp).filter(_.isDirectory)
-          .map(_.getPath.getName).filter(_.startsWith(s"$part=")).toSet
-      else Set.empty[String]
-    val liveLeaves = fs.listStatus(dsPath).filter(_.isDirectory)
-      .map(_.getPath.getName).filter(_.startsWith(s"$part=")).toSet
-    val fullPurge =
-      stagedLeaves.isEmpty && liveLeaves.subsetOf(affected.map(leafName).toSet)
-    if (fullPurge) {
-      val tmpEmpty = new org.apache.hadoop.fs.Path(
-        dsPath.getParent, s".${dsPath.getName}.vacuumempty")
-      val empty = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      graft.sources.Formats.writeEmptyPartitioned(empty, part, fs, tmpEmpty)
-      val emptyLeaf = new org.apache.hadoop.fs.Path(tmpEmpty, s"$part=0")
-      if (liveLeaves.contains(s"$part=0")) {
-        // a live part=0 leaf is being purged: hand the empty leaf to the
-        // swap loop as its staged replacement — swapInto keeps a leaf
-        // standing across the swap, and part=0 is processed FIRST below
-        // so every other live leaf still exists during its swap window
-        if (!fs.rename(emptyLeaf,
-            new org.apache.hadoop.fs.Path(tmp, s"$part=0")))
-          throw new java.io.IOException(
-            s"could not stage the empty leaf for $dsPath")
-      } else if (!fs.rename(emptyLeaf,
-          new org.apache.hadoop.fs.Path(dsPath, s"$part=0")))
-        throw new java.io.IOException(
-          s"could not pre-place the empty leaf under $dsPath")
-      fs.delete(tmpEmpty, true)
+    def leaves(dir: org.apache.hadoop.fs.Path): Set[String] =
+      if (!fs.exists(dir)) Set.empty
+      else fs.listStatus(dir).filter(_.isDirectory)
+        .map(_.getPath.getName).filter(_.startsWith(s"$part=")).toSet
+    val touched = affected.map(v => s"$part=$v")
+    val emptyLeaf = s"$part=0"
+    graft.sources.Formats.publishLeaves(spark, dsPath) { staged =>
+      base.where(col(part).isin(affected: _*))
+        .join(ts, Seq(idCol), "left_anti")
+        .repartition(math.max(1, affected.size * slices), col(part),
+          pmod(hash(col(idCol)), lit(slices)))
+        .write.mode("overwrite").partitionBy(part).parquet(staged.toString)
+      // full purge (every live leaf deleted, none staged back): stage the
+      // empty layout and publish its leaf first, so every other live leaf
+      // still exists during its swap window
+      if (leaves(staged).nonEmpty || !leaves(dsPath).subsetOf(touched.toSet))
+        touched
+      else {
+        graft.sources.Formats.writeEmpty(base, staged, Some(part))
+        emptyLeaf +: touched.filterNot(_ == emptyLeaf)
+      }
     }
-    val ordered =
-      if (fullPurge) affected.sortBy(v => if (leafName(v) == s"$part=0") 0 else 1)
-      else affected
-    for (v <- ordered) {
-      val staged = new org.apache.hadoop.fs.Path(tmp, leafName(v))
-      val live = new org.apache.hadoop.fs.Path(dsPath, leafName(v))
-      if (fs.exists(staged))
-        graft.sources.Formats.swapInto(fs, staged, live)
-      else fs.delete(live, true) // every row of the partition tombstoned
-    }
-    fs.delete(tmp, true)
     // converging fallback (e.g. a pre-existing broken state from older
     // layouts): if no leaf survived, restore the empty layout
-    val anyLeaf = fs.exists(dsPath) && fs.listStatus(dsPath).exists(st =>
-      st.isDirectory && st.getPath.getName.startsWith(s"$part="))
-    if (!anyLeaf) {
-      val empty = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      graft.sources.Formats.writeEmptyPartitioned(empty, part, fs, tmp)
-      if (!fs.rename(new org.apache.hadoop.fs.Path(tmp, s"$part=0"),
-          new org.apache.hadoop.fs.Path(dsPath, s"$part=0")))
-        throw new java.io.IOException(
-          s"could not restore the empty leaf under $dsPath")
-      fs.delete(tmp, true)
-    }
-    spark.catalog.refreshByPath(dsPath.toString)
+    if (leaves(dsPath).isEmpty)
+      graft.sources.Formats.publishLeaves(spark, dsPath) { staged =>
+        graft.sources.Formats.writeEmpty(base, staged, Some(part))
+        Seq(emptyLeaf)
+      }
     removed
   }
 }

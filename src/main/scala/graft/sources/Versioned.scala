@@ -12,9 +12,11 @@ import java.io.IOException
   * the pointer or an explicit version.
   *
   * Commit protocol: data first, pointer last. The snapshot directory is
-  * fully written before the pointer moves (pointer swap = write
-  * `_latest.tmp`, rename over `_latest` — a single-file rename, atomic
-  * on HDFS-like stores), so a crash at ANY point leaves the table
+  * fully written before the pointer moves (pointer swap = the
+  * whole-path [[Formats.publish]]: stage, rename `_latest` aside, rename
+  * the stage in — single-file renames, atomic on HDFS-like stores; a
+  * crash between the two renames leaves the aside, which
+  * [[latestVersion]] reads), so a crash at ANY point leaves the table
   * readable at its previous version; a half-written `v=N` dir that never
   * got the pointer is invisible to readers and reclaimed by the next
   * write to the same number. Concurrent READERS are safe throughout
@@ -50,17 +52,16 @@ object Versioned {
       .sorted
   }
 
-  /** The pointer's version, if the table has ever committed. */
+  /** The pointer's version, if the table has ever committed — read from
+    * the pointer's aside when a crash hit between its swap's renames. */
   def latestVersion(spark: SparkSession, dir: String): Option[Int] = {
     val f = fs(spark, dir)
-    val p = new Path(dir, Pointer)
-    if (!f.exists(p)) None
-    else {
+    Formats.lastCommitted(f, new Path(dir, Pointer)).map { p =>
       val in = f.open(p)
       try {
         val buf = new Array[Byte](64)
         val n = in.read(buf)
-        Some(new String(buf, 0, math.max(n, 0), "UTF-8").trim.toInt)
+        new String(buf, 0, math.max(n, 0), "UTF-8").trim.toInt
       } finally in.close()
     }
   }
@@ -75,13 +76,10 @@ object Versioned {
     // a crashed previous attempt at this number is dead weight: reclaim
     f.delete(snap, true)
     df.write.parquet(snap.toString)
-    val tmp = new Path(dir, s"$Pointer.tmp")
-    val out = f.create(tmp, true)
-    try out.write(next.toString.getBytes("UTF-8")) finally out.close()
-    val live = new Path(dir, Pointer)
-    f.delete(live, false) // rename-over is not portable; delete then move
-    if (!f.rename(tmp, live))
-      throw new IOException(s"could not commit pointer for $dir v=$next")
+    Formats.publish(spark, new Path(dir, Pointer)) { staged =>
+      val out = f.create(staged, true)
+      try out.write(next.toString.getBytes("UTF-8")) finally out.close()
+    }
     spark.catalog.refreshByPath(dir)
     next
   }

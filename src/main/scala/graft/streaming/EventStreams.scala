@@ -297,12 +297,9 @@ object EventStreams {
         else spark.emptyDataFrame
           .select(lit(0L).as("id"), lit(0L).as("canonical")).limit(0)
       val updated = ConnectedComponents.incrementalCanonicalize(labels, batch)
-      val tmp = tablePath + ".cc"
-      updated.write.mode("overwrite").parquet(tmp)
-      val livePath = new org.apache.hadoop.fs.Path(tablePath)
-      val fs = livePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.sources.Formats.swapInto(fs,
-        new org.apache.hadoop.fs.Path(tmp), livePath)
+      graft.sources.Formats.publish(spark,
+        new org.apache.hadoop.fs.Path(tablePath))(staged =>
+        updated.write.mode("overwrite").parquet(staged.toString))
       // the batch's session is the stream's own clone, never adopted, so
       // this releases exactly the pins this batch made
       OperatorCaches.releaseAll(spark)
@@ -422,12 +419,10 @@ object EventStreams {
       if (live) DriftMonitor.mergeCounts(spark.read.parquet(tablePath),
         counts)
       else counts
-    val tmp = tablePath + ".drift"
-    merged.write.mode("overwrite").parquet(tmp)
-    writeBatchMarker(fs, new org.apache.hadoop.fs.Path(tmp),
-      queryTag.getOrElse(""), batchId)
-    graft.sources.Formats.swapInto(fs,
-      new org.apache.hadoop.fs.Path(tmp), livePath)
+    graft.sources.Formats.publish(spark, livePath) { staged =>
+      merged.write.mode("overwrite").parquet(staged.toString)
+      writeBatchMarker(fs, staged, queryTag.getOrElse(""), batchId)
+    }
   }
 
   /** `_committed_batch` sits behind Spark's hidden-file convention
@@ -465,11 +460,14 @@ object EventStreams {
     * Each micro-batch: dedup the batch to its LATEST row per key (ordered
     * by `orderCol` — a batch can carry several updates for one key), read
     * the current table, run the same close-out/insert merge the batch
-    * pipeline uses, swap the table directory crash-safely
-    * ([[graft.sources.Formats.swapInto]] — rename aside, rename in, drop;
-    * no delete-before-rename window that could lose the dimension). One
-    * merge per micro-batch, cost O(open ∪ batch) — history partitions are
-    * union legs, untouched (SCALE.md "SCD2 historization").
+    * pipeline uses, and publish the whole table directory crash-safely
+    * ([[graft.sources.Formats.publish]] — stage, rename aside, rename in,
+    * drop; no delete-before-rename window that could lose the
+    * dimension). One merge per micro-batch, and each micro-batch writes
+    * the WHOLE merged table to the stage before the swap: cost O(table),
+    * not O(open ∪ batch). The partition-incremental path, which rewrites
+    * only the open and the closing partitions, is the batch
+    * pipeline's `Warehouse.putScd2`.
     *
     * `checkpointDir` persists stream progress so a restarted query resumes
     * from the last committed batch instead of reprocessing the source;
@@ -500,12 +498,9 @@ object EventStreams {
         else Scd2.stamp(latest.limit(0), loadTs)
       val merged = Scd2.merge(target, latest, pk, attrs, loadTs)
       // materialize before the swap — merged still reads tablePath
-      val tmp = tablePath + ".merge"
-      merged.write.mode("overwrite").parquet(tmp)
-      val livePath = new org.apache.hadoop.fs.Path(tablePath)
-      val fs = livePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.sources.Formats.swapInto(fs,
-        new org.apache.hadoop.fs.Path(tmp), livePath)
+      graft.sources.Formats.publish(spark,
+        new org.apache.hadoop.fs.Path(tablePath))(staged =>
+        merged.write.mode("overwrite").parquet(staged.toString))
     }
   }
 

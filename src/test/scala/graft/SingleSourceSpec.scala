@@ -6,9 +6,10 @@ package graft
   * registers every function, and [[graft.operators.PersistedIndex]] owns
   * the ledger, batch-dir fold and vacuum of every index kind,
   * [[graft.operators.OperatorCaches]] registers every pass-scoped pin and
-  * [[graft.queries.SessionMemo]] holds every cross-gate memo. A second
-  * builder, registration path, lifecycle copy or cache seam fails here
-  * before it drifts. */
+  * [[graft.queries.SessionMemo]] holds every cross-gate memo, and
+  * [[graft.sources.Formats]] publishes every staged rewrite (stage name,
+  * swap, refresh). A second builder, registration path, lifecycle copy,
+  * cache seam or publish step fails here before it drifts. */
 class SingleSourceSpec extends org.scalatest.funsuite.AnyFunSuite {
 
   private def read(dir: String): Seq[(String, String)] = {
@@ -91,5 +92,14 @@ class SingleSourceSpec extends org.scalatest.funsuite.AnyFunSuite {
     }.toSet
     assert(memos.subsetOf(Set("SessionMemo.scala", "IndexFixtures.scala")),
       s"a memo map outside SessionMemo: $memos")
+  }
+
+  test("every staged rewrite publishes through Formats: no swap call or " +
+      "stage-dir name outside Formats.scala") {
+    for (needle <- Seq("swapInto(", ".staging\"", ".compact\"",
+        ".vacuum\"", ".vacuumempty\"", ".recenter\"", "\".cc\"",
+        "\".drift\"", "\".merge\""))
+      assert(filesWith(needle).subsetOf(Set("Formats.scala")),
+        s"$needle outside Formats.scala: ${filesWith(needle)}")
   }
 }

@@ -108,6 +108,74 @@ class FormatsSpec extends SparkSpec {
         "distinguish from live data")
   }
 
+  private def hPath(p: String) = new org.apache.hadoop.fs.Path(p)
+
+  test("publish stays invisible to a scan of the parent until it swaps, " +
+      "then serves the new rows and leaves no stage behind") {
+    val root = Files.createTempDirectory("graft-publish").toString
+    Seq((1L, 1), (2L, 2)).toDF("id", "part")
+      .write.partitionBy("part").parquet(root + "/t")
+    def scan() = spark.read.parquet(root + "/t").as[(Long, Int)].collect().toSet
+    // the published directory is a partition leaf, so its parent is a
+    // dataset root that partition discovery parses
+    val during = Formats.publish(spark, hPath(s"$root/t/part=1")) { staged =>
+      Seq(7L).toDF("id").write.parquet(staged.toString)
+      scan()
+    }
+    assert(during == Set((1L, 1), (2L, 2)),
+      "a scan of the parent saw the stage")
+    assert(scan() == Set((7L, 1), (2L, 2)))
+    assert(new java.io.File(s"$root/t").list().toSet
+      .filterNot(n => n.startsWith("_") || n.endsWith(".crc")) ==
+      Set("part=1", "part=2"),
+      "the publish left a stage or aside behind")
+  }
+
+  test("publishLeaves on an int partition column swaps the staged leaves " +
+      "in, deletes a listed leaf the stage lacks, and ignores a stale " +
+      "stage from a crashed run") {
+    val root = Files.createTempDirectory("graft-leaves").toString
+    val live = s"$root/t"
+    Seq((1L, 1), (2L, 2), (3L, 3)).toDF("id", "part")
+      .write.partitionBy("part").parquet(live)
+    // a crashed earlier publish left its stage holding a part=3 leaf
+    Seq((99L, 3)).toDF("id", "part")
+      .write.partitionBy("part").parquet(s"$root/.t.staging")
+    Formats.publishLeaves(spark, hPath(live)) { staged =>
+      Seq((10L, 1)).toDF("id", "part")
+        .write.mode("append").partitionBy("part").parquet(staged.toString)
+      Seq("part=1", "part=3")
+    }
+    val back = spark.read.parquet(live)
+    assert(back.schema("part").dataType == IntegerType)
+    assert(back.as[(Long, Int)].collect().toSet == Set((10L, 1), (2L, 2)),
+      "part=3 survived, or the stale stage leaked into the publish")
+    assert(new java.io.File(root).list().toSet == Set("t"))
+    assert(new java.io.File(live).list().toSet
+      .filterNot(n => n.startsWith("_") || n.startsWith(".")) ==
+      Set("part=1", "part=2"))
+  }
+
+  test("publishLeaves swaps leaves in the caller's order") {
+    val root = Files.createTempDirectory("graft-order").toString
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.rec.impl", classOf[RecordingFs].getName)
+    Seq("part=1", "part=2", "part=3").foreach(l =>
+      new java.io.File(s"$root/t/$l").mkdirs())
+    RecordingFs.renames.clear()
+    Formats.publishLeaves(spark, hPath(s"rec://$root/t")) { staged =>
+      Seq("part=1", "part=2").foreach(l =>
+        new java.io.File(s"${staged.toUri.getPath}/$l").mkdirs())
+      Seq("part=2", "part=3", "part=1")
+    }
+    val swappedIn = RecordingFs.renames.toSeq.collect {
+      case (from, to) if from.getParent.getName == ".t.staging" => to.getName
+    }
+    assert(swappedIn == Seq("part=2", "part=1"))
+    assert(new java.io.File(s"$root/t").list().toSet == Set("part=1", "part=2"))
+    assert(new java.io.File(root).list().toSet == Set("t"))
+  }
+
   test("compact with a sort key clusters files by that key") {
     val dir = Files.createTempDirectory("graft-compact2").toString + "/t"
     Formats.overwrite(
@@ -196,6 +264,20 @@ class FormatsSpec extends SparkSpec {
   }
 }
 
+/** The local file system under the `rec` scheme, recording each rename. */
+class RecordingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("rec:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+                      dst: org.apache.hadoop.fs.Path): Boolean = {
+    RecordingFs.renames.synchronized(RecordingFs.renames += src -> dst)
+    super.rename(src, dst)
+  }
+}
+object RecordingFs {
+  val renames = scala.collection.mutable.ArrayBuffer
+    .empty[(org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path)]
+}
+
 /** Versioned table directory: commit protocol, time travel, vacuum. */
 class VersionedSpec extends SparkSpec {
 
@@ -232,6 +314,27 @@ class VersionedSpec extends SparkSpec {
     assert(Versioned.write(Seq((2, "b")).toDF("id", "s"), dir) == 2)
     assert(Versioned.read(spark, dir).as[(Int, String)].collect().toSeq
       == Seq((2, "b")))
+  }
+
+  test("a crash between the pointer swap's renames keeps the previous " +
+      "version readable, and the next commit numbers past it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ver4")
+    val d = dir.toString
+    Versioned.write(Seq((1, "a")).toDF("id", "s"), d)
+    Versioned.write(Seq((2, "b")).toDF("id", "s"), d)
+    // the pointer went aside, the new one never came in
+    java.nio.file.Files.move(dir.resolve("_latest"),
+      dir.resolve("._latest.old"))
+    java.nio.file.Files.writeString(dir.resolve("_latest.tmp"), "3")
+    assert(Versioned.latestVersion(spark, d).contains(2))
+    assert(Versioned.read(spark, d).as[(Int, String)].collect().toSeq
+      == Seq((2, "b")))
+    assert(Versioned.write(Seq((3, "c")).toDF("id", "s"), d) == 3)
+    assert(Versioned.versions(spark, d) == Seq(1, 2, 3))
+    assert(Versioned.read(spark, d, Some(1))
+      .as[(Int, String)].collect().toSeq == Seq((1, "a")))
+    assert(Versioned.read(spark, d).as[(Int, String)].collect().toSeq
+      == Seq((3, "c")))
   }
 
   test("prune drops old versions, keeps the live one, and pruned reads " +
